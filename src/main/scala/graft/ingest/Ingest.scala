@@ -84,6 +84,41 @@ object Ingest {
     splitParsed(parsed, rawCol)
   }
 
+  /** Error type of a schema-valid record whose TRANSPORT tenant key is
+    * null (C3): it cannot be partition-keyed, so it goes to the error
+    * prefix (the analog of a Firehose partition-extraction failure),
+    * never to a `__HIVE_DEFAULT_PARTITION__` directory. */
+  val MissingTenantKey = "missing-tenant-key"
+
+  /** The whole sink-side stage chain in ONE frame: parse the envelope
+    * once, classify ([[ErrorTypeCol]]: parse error, then validation
+    * error, then [[MissingTenantKey]]), project, enrich and derive the
+    * partition columns for every row. Valid rows are those with a null
+    * [[ErrorTypeCol]]; [[splitStaged]] turns the frame into the same
+    * (enriched, errors) pair that `validateAndSplit` → `enrich` →
+    * `derivePartitions` produce, in the same column order. A sink that
+    * observes this frame while writing it sees each row's partition
+    * columns from the same evaluation of `ingestEpochSeconds` as the row
+    * it writes, so it registers exactly the hours it wrote. */
+  def stage(df: DataFrame, rawCol: String, tenantId: Column,
+            ingestEpochSeconds: Column): DataFrame = {
+    val parsed = df.withColumn("__env", parse(col(rawCol)))
+      .withColumn(ErrorTypeCol, coalesce(errorTypeOf(col("__env")),
+        when(tenantId.isNull, lit(MissingTenantKey))))
+      .withColumn("device", col("__env.Data.device"))
+      .withColumn("event", col("__env.Data.event"))
+      .withColumn("region", col("__env.Data.region"))
+      .drop("__env")
+    derivePartitions(enrich(parsed, tenantId, ingestEpochSeconds))
+  }
+
+  /** (enriched valid rows without `rawCol`, errors as raw + error_type)
+    * of a [[stage]]d frame. */
+  def splitStaged(staged: DataFrame, rawCol: String): (DataFrame, DataFrame) =
+    (staged.filter(col(ErrorTypeCol).isNull).drop(rawCol, ErrorTypeCol),
+      staged.filter(col(ErrorTypeCol).isNotNull)
+        .select(col(rawCol).as("raw"), col(ErrorTypeCol)))
+
   /** S3/P4: enrichment. Tenant comes from the SERVER-side context (C3 —
     * never from the payload: clients cannot spoof another tenant), timestamp
     * is ingest-time epoch seconds. */

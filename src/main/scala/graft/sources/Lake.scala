@@ -167,7 +167,12 @@ object Lake {
     if (!fresh) spark.catalog.refreshTable(tbl)
   }
 
-  private def sqlLit(v: String): String = "'" + v.replace("'", "''") + "'"
+  /** A SQL string literal for `v`. Backslash is the parser's escape
+    * character, so it is escaped along with the quote: a tenant id like
+    * `back\slash` or `trail\` must name its own partition, not a
+    * de-escaped one or a syntax error. */
+  private def sqlLit(v: String): String =
+    "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
   /** The INCREMENTAL crawler analog, for per-micro-batch catalog
     * maintenance: ensure `table` exists over `path`, then register exactly

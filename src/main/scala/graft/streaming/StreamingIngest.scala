@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.ingest.Ingest
 import graft.model.Schemas
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.sources.Lake
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -43,11 +44,19 @@ object StreamingIngest {
     * `table`: when set, the sink maintains the catalog TRANSACTIONALLY per
     * micro-batch (SURVEY §3.2) — after each commit it registers exactly the
     * batch's partition tuples (incremental ADD PARTITION, O(batch
-    * partitions)) so the streamed data is queryable through
-    * `spark.table`/`TenantQueries` immediately, with zero crawler lag (the
-    * reference needs a 5-min Glue crawl, multi-tenant-glue-stack.ts:41-43).
-    * The per-batch `.distinct().collect()` is metadata-scale (tenants ×
-    * hours in one batch), never data-scale. */
+    * partitions), one statement per batch) so the streamed data is
+    * queryable through `spark.table`/`TenantQueries` immediately, with
+    * zero crawler lag (the reference needs a 5-min Glue crawl,
+    * multi-tenant-glue-stack.ts:41-43).
+    *
+    * One pass per batch: [[Ingest.stage]] parses, classifies and enriches
+    * each record once, and the valid rows' write carries an `observe`
+    * that collects the batch's partition tuples and error types inside
+    * the write's own job. Registration and the dead-letter branch read
+    * those observed sets (metadata-scale: tenants × hours, error types),
+    * so the partitions registered are exactly the partitions written, and
+    * the only other Spark job is the dead-letter write itself — none runs
+    * for an error-free batch. */
   def start(spark: SparkSession, raw: DataFrame, rawCol: String,
             tenantCol: String, lakeRoot: String, checkpoint: String,
             trigger: Trigger = Trigger.ProcessingTime("60 seconds"),
@@ -58,56 +67,51 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val cached = batch.persist()
-        try {
-          val (valid, errors) = Ingest.validateAndSplit(cached, rawCol)
-          // C3: a record whose TRANSPORT tenant key is null cannot be
-          // partition-keyed — route it to the error prefix (the analog of
-          // a Firehose partition-extraction failure), never to a
-          // __HIVE_DEFAULT_PARTITION__ directory.
-          val noTenant = valid.filter(col(tenantCol).isNull)
-            .select(col(rawCol).as("raw"),
-              lit("missing-tenant-key").as(Ingest.ErrorTypeCol))
-          val enriched = Ingest.derivePartitions(
-            Ingest.enrich(valid.filter(col(tenantCol).isNotNull),
-              col(tenantCol), ingestTs))
-            .drop(rawCol)
-          // saltFiles > 1: a batch concentrated on few (tenant, hour)
-          // partitions otherwise serializes behind that many writer
-          // tasks (writeValid's hash distribution leaves the rest idle)
-          val path = graft.sources.Lake.writeValid(enriched, lakeRoot,
-            saltFiles = saltFiles)
-          table.foreach { t =>
-            val pcols = Schemas.partitionCols
-            val parts = enriched.select(pcols.map(col): _*).distinct()
-              .collect()
-              .map(r => pcols.zipWithIndex.map { case (c, i) => c -> r.getString(i) }.toMap)
-              .toSeq
-            // catalog ops run on the CALLER's session, not batch
-            // .sparkSession: foreachBatch hands a cloned session whose
-            // relation cache is isolated — refreshing the clone would
-            // leave the session users actually query through stale.
-            graft.sources.Lake.registerPartitions(spark, t, path, parts,
-              schema = Some(enriched.schema))
-          }
-          val allErrors = errors.unionByName(noTenant)
-          if (!allErrors.isEmpty) {
-            graft.sources.Lake.writeErrors(allErrors, lakeRoot)
-            // dead letters are SQL-queryable like the data (the crawler
-            // indexes the whole bucket in the reference). INCREMENTAL
-            // registration of the batch's error types only — a full
-            // re-crawl here would DROP+CREATE `<table>_errors` on every
-            // errored batch (transient missing-table window mid-stream)
-            // and pay O(error-prefix partitions) per batch. The distinct
-            // collect is metadata-scale (error types in one batch).
-            table.foreach { t =>
-              val types = allErrors.select(Ingest.ErrorTypeCol).distinct()
-                .collect().map(_.getString(0)).toSeq
-              graft.sources.Lake.registerErrorPartitions(spark, t, lakeRoot, types)
-            }
-          }
-          ()
-        } finally { cached.unpersist(); () }
+        val pcols = Schemas.partitionCols
+        val partSet = collect_set(when(col(Ingest.ErrorTypeCol).isNull,
+          struct(pcols.map(col): _*))).as("parts")
+        val errorTypeSet = collect_set(col(Ingest.ErrorTypeCol)).as("error_types")
+        val written = new Observation()
+        // the observation also fences the stage: a filter on error_type
+        // cannot be pushed below it, so each side's plan parses the
+        // envelope once instead of inlining from_json into the filter
+        val staged = Ingest.stage(batch, rawCol, col(tenantCol), ingestTs)
+        val (valid, errors) = Ingest.splitStaged(
+          staged.observe(written, partSet, errorTypeSet), rawCol)
+        // saltFiles > 1: a batch concentrated on few (tenant, hour)
+        // partitions otherwise serializes behind that many writer
+        // tasks (writeValid's hash distribution leaves the rest idle)
+        val path = Lake.writeValid(valid, lakeRoot, saltFiles = saltFiles)
+        // the write returned, so its job completed and delivers the
+        // observation; a failed write threw above instead. When no row is
+        // valid, AQE replaces the emptied shuffle stage, and the metrics
+        // observed in it are lost: aggregate the same sets over the batch.
+        val observed = written.get match {
+          case m if m.nonEmpty => m
+          case _ => staged.agg(partSet, errorTypeSet).head()
+            .getValuesMap[Any](Seq("parts", "error_types"))
+        }
+        table.foreach { t =>
+          val parts = observed("parts").asInstanceOf[collection.Seq[Row]].toSeq
+            .map(r => pcols.map(c => c -> r.getAs[String](c)).toMap)
+          // catalog ops run on the CALLER's session, not batch
+          // .sparkSession: foreachBatch hands a cloned session whose
+          // relation cache is isolated — refreshing the clone would
+          // leave the session users actually query through stale.
+          Lake.registerPartitions(spark, t, path, parts, schema = Some(valid.schema))
+        }
+        val errorTypes = observed("error_types").asInstanceOf[collection.Seq[String]].toSeq
+        if (errorTypes.nonEmpty) {
+          Lake.writeErrors(errors, lakeRoot)
+          // dead letters are SQL-queryable like the data (the crawler
+          // indexes the whole bucket in the reference). INCREMENTAL
+          // registration of the batch's error types only — a full
+          // re-crawl here would DROP+CREATE `<table>_errors` on every
+          // errored batch (transient missing-table window mid-stream)
+          // and pay O(error-prefix partitions) per batch.
+          table.foreach(Lake.registerErrorPartitions(spark, _, lakeRoot, errorTypes))
+        }
+        ()
       }
       .start()
 
@@ -121,7 +125,12 @@ object StreamingIngest {
     * path (diagnostics: replay may re-log an error, it cannot corrupt
     * the data). Catalog registration is the reader's `readCommitted`
     * view rather than per-partition ALTERs — epoch dirs come and go with
-    * the replay window, the manifest is the source of truth. */
+    * the replay window, the manifest is the source of truth.
+    *
+    * Same [[Ingest.stage]]d frame as [[start]], cached, and the
+    * dead-letter branch keeps an `isEmpty` probe: `commitEpoch` may run
+    * more than one action on the valid rows, and an observation reports
+    * only the first. */
   def startTransactional(spark: SparkSession, raw: DataFrame, rawCol: String,
                          tenantCol: String, lakeRoot: String, checkpoint: String,
                          trigger: Trigger = Trigger.ProcessingTime("60 seconds"),
@@ -132,29 +141,19 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val cached = batch.persist()
+        val staged = Ingest.stage(batch, rawCol, col(tenantCol), ingestTs).persist()
         try {
-          val (valid, errors) = Ingest.validateAndSplit(cached, rawCol)
-          val noTenant = valid.filter(col(tenantCol).isNull)
-            .select(col(rawCol).as("raw"),
-              lit("missing-tenant-key").as(Ingest.ErrorTypeCol))
-          val enriched = Ingest.derivePartitions(
-            Ingest.enrich(valid.filter(col(tenantCol).isNotNull),
-              col(tenantCol), ingestTs))
-            .drop(rawCol)
-          graft.sources.TransactionalLake.commitEpoch(enriched, lakeRoot, epochId)
+          val (valid, errors) = Ingest.splitStaged(staged, rawCol)
+          graft.sources.TransactionalLake.commitEpoch(valid, lakeRoot, epochId)
           // post-commit hook — e.g. MaterializedView.refresh for
           // continuous incremental view maintenance. Runs AFTER the
           // epoch is durable; a crash between commit and hook replays
           // the epoch as a no-op and re-fires the hook, so the hook
           // must be (and MaterializedView.refresh is) idempotent.
           onEpochCommitted(batch.sparkSession, epochId)
-          val allErrors = errors.unionByName(noTenant)
-          if (!allErrors.isEmpty) {
-            graft.sources.Lake.writeErrors(allErrors, lakeRoot); ()
-          }
+          if (!errors.isEmpty) { Lake.writeErrors(errors, lakeRoot); () }
           ()
-        } finally { cached.unpersist(); () }
+        } finally { staged.unpersist(); () }
       }
       .start()
 

@@ -1,7 +1,50 @@
 package graft
 
 import graft.streaming.StreamingIngest
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
+import scala.jdk.CollectionConverters._
+
+/** An ingest-time stamp that moves one hour forward per call. */
+object HourTicker {
+  private val stamp = new java.util.concurrent.atomic.AtomicLong(1704067200L)
+  def next(): Long = stamp.getAndAdd(3600L)
+}
+
+/** Counts Spark jobs per (streaming query id, micro-batch id). Listener
+  * events arrive asynchronously, so [[of]] first runs a marker job and
+  * waits until the listener has seen it: every earlier job has then been
+  * delivered too. */
+final class JobsByBatch(spark: SparkSession) extends SparkListener {
+  private val counts = new java.util.concurrent.ConcurrentHashMap[(String, String), Int]()
+  private val markers = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  spark.sparkContext.addSparkListener(this)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = {
+    val p = e.properties
+    Option(p.getProperty("spark.jobGroup.id")).filter(_.startsWith("marker-"))
+      .foreach(markers.add)
+    for (q <- Option(p.getProperty("sql.streaming.queryId"));
+         b <- Option(p.getProperty("streaming.sql.batchId")))
+      counts.merge((q, b), 1, _ + _)
+  }
+
+  def of(queryId: String): Map[String, Int] = {
+    val marker = s"marker-${java.util.UUID.randomUUID()}"
+    val sc = spark.sparkContext
+    sc.setJobGroup(marker, marker)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.currentTimeMillis() + 30000
+    while (!markers.contains(marker)) {
+      assert(System.currentTimeMillis() < deadline, "listener never saw the marker job")
+      Thread.sleep(20)
+    }
+    counts.asScala.collect { case ((q, b), n) if q == queryId => b -> n }.toMap
+  }
+
+  def close(): Unit = spark.sparkContext.removeSparkListener(this)
+}
 
 /** Streaming parity (SURVEY §2.1 S2-S6): file-source micro-batch ingest
   * through the SAME stage functions as batch, with checkpointing, dynamic
@@ -125,6 +168,109 @@ class StreamingSpec extends SparkSpec {
     // with no missing-table window
     assert(createTime == created1,
       "errors table must never be DROP+CREATEd mid-stream")
+  }
+
+  test("tenant ids with quotes and backslashes register and read back in full") {
+    val in = tmpDir("esc_in")
+    val lake = tmpDir("esc_lake")
+    val ckpt = tmpDir("esc_ckpt")
+    val tenants = Seq("o'brien", "back\\slash", "trail\\")
+    tenants.map(t => ("""{"Data":{"event":"e1","region":"US","device":"TV"}}""", t))
+      .toDF("value", "tenant_key").write.mode("append").json(in)
+    spark.sql("DROP TABLE IF EXISTS esc_tbl")
+    val q = StreamingIngest.fromJsonDir(spark, in, "tenant_key", lake, ckpt,
+      Trigger.AvailableNow(), table = Some("esc_tbl"))
+    assert(q.awaitTermination(120000), "stream must finish within the timeout")
+    assert(spark.sql("SHOW PARTITIONS esc_tbl").count() == 3)
+    tenants.foreach { t =>
+      assert(spark.table("esc_tbl").where($"tenant" === t).count() == 1,
+        s"tenant $t must read its row through the table")
+    }
+    assert(spark.table("esc_tbl").count() == 3)
+  }
+
+  test("registered partitions equal written partitions when ingest time advances per record") {
+    import org.apache.spark.sql.functions.udf
+    val in = tmpDir("hourtick_in")
+    val lake = tmpDir("hourtick_lake")
+    val ckpt = tmpDir("hourtick_ckpt")
+    Seq(
+      ("""{"Data":{"event":"e1","region":"US","device":"TV"}}""", "acme"),
+      ("""{"Data":{"event":"e2","region":"EU","device":"web"}}""", "acme"),
+      ("""{"Data":{"event":"e3","region":"US","device":"app"}}""", "globex"),
+      ("""{"Data":{"event":"e4","region":"EU","device":"TV"}}""", "globex"),
+      ("broken", "acme"))
+      .toDF("value", "tenant_key").repartition(1).write.mode("append").json(in)
+    // every call is one hour later than the last, so any second
+    // evaluation of the enriched rows sees hours the write never saw
+    val tick = udf(() => HourTicker.next()).asNondeterministic()
+    spark.sql("DROP TABLE IF EXISTS hourtick_tbl")
+    val raw = spark.readStream.schema("value STRING, tenant_key STRING").json(in)
+    val q = StreamingIngest.start(spark, raw, "value", "tenant_key", lake, ckpt,
+      Trigger.AvailableNow(), ingestTs = tick(), table = Some("hourtick_tbl"))
+    assert(q.awaitTermination(120000), "stream must finish within the timeout")
+    val root = java.nio.file.Paths.get(s"$lake/data")
+    val onDisk = {
+      val walk = java.nio.file.Files.walk(root, 5)
+      try walk.iterator().asScala
+        .filter(p => root.relativize(p).getNameCount == 5 &&
+          p.getFileName.toString.startsWith("hour="))
+        .map(p => root.relativize(p).toString).toSet
+      finally walk.close()
+    }
+    val registered = spark.sql("SHOW PARTITIONS hourtick_tbl").as[String].collect().toSet
+    assert(onDisk.size >= 2, s"the ticking stamp must spread rows over hours: $onDisk")
+    assert(registered == onDisk)
+    val written = spark.read.parquet(s"$lake/data").count()
+    assert(written == 4)
+    assert(spark.table("hourtick_tbl").count() == written)
+  }
+
+  test("sink job budget: 3 jobs with dead letters, 2 without; a failed write surfaces") {
+    val jobs = new JobsByBatch(spark)
+    try {
+      def run(tag: String, rows: Seq[(String, String)]): Int = {
+        val in = tmpDir(s"budget_${tag}_in")
+        rows.toDF("value", "tenant_key").repartition(1).write.mode("append").json(in)
+        spark.sql(s"DROP TABLE IF EXISTS budget_$tag")
+        val q = StreamingIngest.fromJsonDir(spark, in, "tenant_key",
+          tmpDir(s"budget_${tag}_lake"), tmpDir(s"budget_${tag}_ckpt"),
+          Trigger.AvailableNow(), table = Some(s"budget_$tag"))
+        assert(q.awaitTermination(120000), "stream must finish within the timeout")
+        assert(spark.table(s"budget_$tag").count() == rows.count(_._1.startsWith("{")))
+        val perBatch = jobs.of(q.id.toString)
+        assert(perBatch.size == 1, s"one micro-batch expected: $perBatch")
+        perBatch.values.head
+      }
+      val mixed = run("mixed", Seq(
+        ("""{"Data":{"event":"e1","region":"US","device":"TV"}}""", "acme"),
+        ("""{"Data":{"event":"e2","region":"EU","device":"web"}}""", "globex"),
+        ("broken", "acme")))
+      assert(mixed >= 1 && mixed <= 3, s"a batch with dead letters ran $mixed jobs")
+      val clean = run("clean", Seq(
+        ("""{"Data":{"event":"e1","region":"US","device":"TV"}}""", "acme"),
+        ("""{"Data":{"event":"e2","region":"EU","device":"web"}}""", "globex")))
+      assert(clean >= 1 && clean <= 2, s"an error-free batch ran $clean jobs")
+      info(s"jobs per micro-batch: $mixed with dead letters, $clean without")
+    } finally jobs.close()
+
+    // a write that fails must fail the query, not wait for an
+    // observation that its job never delivered
+    import org.apache.spark.sql.functions.udf
+    val in = tmpDir("budget_fail_in")
+    Seq(("""{"Data":{"event":"e1","region":"US","device":"TV"}}""", "acme"))
+      .toDF("value", "tenant_key").write.mode("append").json(in)
+    val boom = udf[Long](() => throw new IllegalStateException("planted write failure"))
+      .asNondeterministic()
+    val raw = spark.readStream.schema("value STRING, tenant_key STRING").json(in)
+    val q = StreamingIngest.start(spark, raw, "value", "tenant_key",
+      tmpDir("budget_fail_lake"), tmpDir("budget_fail_ckpt"), Trigger.AvailableNow(),
+      ingestTs = boom())
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.awaitTermination(120000)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => Option(c.getMessage).exists(_.contains("planted write failure"))), e)
   }
 
   test("scheduled refresh picks up externally-written partitions (crawler cadence)") {
