@@ -1639,7 +1639,7 @@ object Dedup {
 
   /** SemDeDup (Abbas et al. 2023): semantic dedup by CLUSTER-BLOCKED
     * cosine — assign every embedding to its nearest centroid
-    * (broadcast-argmin, the IVF assignment pass), then WITHIN each cell
+    * (the IVF assignment pass, a per-row kernel), then WITHIN each cell
     * drop every item that has a lower-id neighbor at cosine >= `tau`.
     * Returns the DROP LIST (vec_id, cell, max_cos_prior).
     *

@@ -1,7 +1,13 @@
 package graft.operators
 
 import graft.functions.{VectorFunctions => VF}
-import org.apache.spark.sql.DataFrame
+import graft.plans.{IvfPqExpressions => K}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, Literal, SortOrder}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -186,43 +192,39 @@ object Similarity {
   }
 
   /** Lloyd-refined IVF centroids: start from the deterministic seed
-    * (first `nCells` vectors by id) and run `iters` k-means rounds —
-    * assign each corpus vector to its max-cosine centroid (broadcast
-    * argmin, corpus never shuffles for assignment), recompute each cell's
-    * elementwise mean (posexplode → per-(cell,dim) avg → re-assemble; the
-    * shuffle carries nCells×dim rows after partial aggregation), keep the
-    * old centroid for a cell that lost all members. Balanced cells =
-    * bounded per-probe scan cost at 100 TB; on clustered real embeddings
-    * this also concentrates neighbors into fewer probed cells. */
+    * (first `nCells` vectors by id, one ordered collect) and run `iters`
+    * k-means rounds. Each round is ONE aggregate collected to the
+    * driver: assign every corpus vector to its max-cosine centroid
+    * ([[assignedNormed]], a narrow projection), take the per-(cell, pos)
+    * `avg` of the members' elements, and collect those nCells × dim
+    * means — centroids are metadata-scale, like the probed-cell collect
+    * of [[ivfTopKCellPartitioned]]. A cell that lost all members keeps
+    * its old centroid. Every generation, the returned one included, is a
+    * local relation, so nothing is checkpointed, released or copied out,
+    * and the result pins zero executor storage (BlockRetentionSpec).
+    * Float means depend on the partial-aggregation order, so refined
+    * centroids are spec-pinned Spark-vs-Spark, not oracle-gated. Balanced
+    * cells = bounded per-probe scan cost at 100 TB; on clustered real
+    * embeddings this also concentrates neighbors into fewer probed cells. */
   def ivfCentroidsRefined(corpus: DataFrame, idCol: String, vecCol: String,
                           nCells: Int = 16, iters: Int = 2): DataFrame = {
-    var cents = seedCentroids(corpus, idCol, vecCol, nCells)
-    var held: Option[DataFrame] = None // the round's localCheckpoint to free
+    val seeds = corpus.select(col(idCol).as("cent_id"), VF.toDouble(col(vecCol)).as("cent_e"))
+      .orderBy(col("cent_id")).limit(nCells)
+    def generation(rows: Seq[Row]): DataFrame =
+      corpus.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), seeds.schema)
+        .withColumn("cent_nrm", VF.norm(col("cent_e")))
+    var gen = seeds.collect().toSeq
     (1 to iters).foreach { _ =>
       // the ONE assignment implementation (assignedNormed) serves k-means,
       // search, and the stored index — the tiebreak can never drift apart
-      val assigned = assignedNormed(cents, corpus, idCol, vecCol)
-        .select(col("cell"), col("c_e"))
-      val means = assigned
+      val means = assignedNormed(generation(gen), corpus, idCol, vecCol)
         .select(col("cell"), posexplode(col("c_e")))
         .groupBy(col("cell"), col("pos")).agg(avg(col("col")).as("m"))
-        .groupBy(col("cell"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          x => x.getField("m")).as("mean_e"))
-      val next = cents.join(means, col("cent_id") === col("cell"), "left")
-        .select(col("cent_id"),
-          coalesce(col("mean_e"), col("cent_e")).as("cent_e"))
-        .withColumn("cent_nrm", VF.norm(col("cent_e")))
-        .localCheckpoint(true) // truncate the per-iteration lineage
-      held.foreach(Blocks.release) // the PREVIOUS round is now dead
-      held = Some(next)
-      cents = next
+        .collect().groupBy(_.get(0))
+        .map { case (cell, ms) => cell -> ms.sortBy(_.getInt(1)).map(_.get(2)).toSeq }
+      gen = gen.map(r => means.get(r.get(0)).fold(r)(m => Row(r.get(0), m)))
     }
-    // final centroids leave the block manager (tiny artifact): the
-    // returned frame pins zero executor storage (BlockRetentionSpec)
-    held.fold(cents) { last =>
-      val out = Blocks.copyOut(cents); Blocks.release(last); out
-    }
+    generation(gen)
   }
 
   /** Deterministic seed centroids: the first `nCells` corpus vectors by
@@ -237,26 +239,43 @@ object Similarity {
     * PERSISTED artifact of the IVF index lifecycle (build once per
     * centroid generation, store next to the embeddings — ideally
     * cluster/partition the lake by `cell` so each probe's scan
-    * row-group-skips to its cells). Broadcast-argmin: the corpus never
-    * shuffles for assignment. */
+    * row-group-skips to its cells). A narrow projection (the
+    * nearest_centroid kernel against the collected centroids): the
+    * corpus never shuffles for assignment. */
   def ivfAssignments(cents: DataFrame, corpus: DataFrame, idCol: String,
                      vecCol: String): DataFrame =
     assignedNormed(cents, corpus, idCol, vecCol)
       .select(col("c_id").as("id"), col("cell"))
 
-  /** Broadcast-argmin cell assignment carrying the normed vectors:
-    * (c_id, c_e, c_nrm, cell). */
+  /** Cell assignment carrying the normed vectors: (c_id, c_e, c_nrm,
+    * cell). The corpus never shuffles for assignment: the centroid
+    * generation is collected to the driver (one small job, none for a
+    * local relation) and each row's cell is a per-row kernel call, so the
+    * plan is one projection over the corpus scan, with no join, window or
+    * exchange. */
   private[operators] def assignedNormed(cents: DataFrame, corpus: DataFrame,
-                                        idCol: String, vecCol: String): DataFrame = {
-    val assignW = Window.partitionBy(col("c_id"))
-      .orderBy(col("cent_cos").desc, col("cent_id"))
-    withNormed(corpus, idCol, vecCol, "c")
-      .crossJoin(broadcast(cents))
-      .withColumn("cent_cos",
-        VF.cosineWithNorms(col("c_e"), col("cent_e"), col("c_nrm"), col("cent_nrm")))
-      .withColumn("cent_rank", row_number().over(assignW))
-      .filter(col("cent_rank") === 1)
-      .select(col("c_id"), col("c_e"), col("c_nrm"), col("cent_id").as("cell"))
+                                        idCol: String, vecCol: String): DataFrame =
+    withCell(withNormed(corpus, idCol, vecCol, "c"), col("c_e"), col("c_nrm"), cents)
+
+  /** `df` plus a `cell` column: the `cent_id` of each row's max-cosine
+    * centroid in `cents` (cosine desc, then lowest cent_id; a null vector
+    * takes the lowest cent_id), computed by the nearest_centroid kernel
+    * against the generation collected as ONE literal
+    * array<struct<cent_id, cent_e, cent_nrm>> sorted by cent_id — the
+    * same metadata-scale collect as the probed cells of
+    * [[ivfTopKCellPartitioned]]. No centroids, no rows. */
+  private def withCell(df: DataFrame, e: Column, nrm: Column, cents: DataFrame): DataFrame = {
+    val c = cents.select(col("cent_id"), col("cent_e").cast("array<double>"),
+      col("cent_nrm").cast("double"))
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(c.schema)
+    val byId = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(0, c.schema.head.dataType, nullable = true), Ascending)))
+    val rows = c.collect().map(r => toCatalyst(r).asInstanceOf[InternalRow]).sorted(byId)
+    val arr = ColumnBridge.column(
+      Literal(new GenericArrayData(rows.toArray[Any]), ArrayType(c.schema)))
+    val out = df.withColumn("cell",
+      arr.getItem(K.nearestCentroid(e, nrm, arr)).getField("cent_id"))
+    if (rows.isEmpty) out.filter(lit(false)) else out
   }
 
   /** IVF top-k against a PREASSIGNED corpus: the per-query assignment
@@ -413,24 +432,18 @@ object Similarity {
     * build-once artifact of the index lifecycle: rewrite it when the
     * centroid generation is regenerated. nCells ≈ √n keeps the
     * directory count in the same range as a tenant×hour event lake.
-    * One argmin pass over the corpus (broadcast centroids, the same
-    * assignment expression as [[ivfAssignments]] — the tiebreak can
-    * never drift) and one partitioned write; the corpus shuffles once,
-    * on `cell`, which ALSO bin-packs each cell's rows together. */
+    * One argmin pass over the corpus (the same assignment kernel as
+    * [[ivfAssignments]] — the tiebreak can never drift) and one
+    * partitioned write; the corpus shuffles once, on `cell`, which ALSO
+    * bin-packs each cell's rows together. */
   def writeCellPartitioned(cents: DataFrame, corpus: DataFrame, idCol: String,
                            vecCol: String, path: String): Unit = {
-    val w = Window.partitionBy(col(idCol)).orderBy(col("cent_cos").desc, col("cent_id"))
     val n = corpus.sparkSession.sessionState.conf.numShufflePartitions
-    corpus
+    val normed = corpus
       .withColumn("__e", VF.toDouble(col(vecCol)))
       .withColumn("__n", VF.norm(col("__e")))
-      .crossJoin(broadcast(cents))
-      .withColumn("cent_cos",
-        VF.cosineWithNorms(col("__e"), col("cent_e"), col("__n"), col("cent_nrm")))
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") === 1)
-      .withColumn("cell", col("cent_id"))
-      .drop("__e", "__n", "__rk", "cent_id", "cent_e", "cent_nrm", "cent_cos")
+    withCell(normed, col("__e"), col("__n"), cents)
+      .drop("__e", "__n")
       .repartition(n, col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(path)
   }
@@ -484,130 +497,93 @@ object Similarity {
   /** PRODUCT-QUANTIZATION codebooks: the vector space split into `nSub`
     * contiguous sub-vectors, each with its own `nCodes`-entry codebook —
     * here seeded deterministically from the lowest-id corpus vectors
-    * (the same build-once seed discipline as [[seedCentroids]]; Lloyd
-    * refinement per sub-space composes the same way as IVF's). One row:
-    * `cb` = the nSub·nCodes code vectors ordered by (sub, code), plus
-    * the geometry, broadcastable to every encoder/searcher. */
+    * (the same build-once seed discipline as [[seedCentroids]];
+    * [[pqCodebooksRefined]] Lloyd-refines per sub-space). One row, a
+    * local relation: `cb` = the nSub·nCodes code vectors ordered by
+    * (sub, code), plus the geometry, broadcastable to every
+    * encoder/searcher. */
   def pqCodebooks(embeddings: DataFrame, idCol: String, vecCol: String,
-                  nSub: Int = 8, nCodes: Int = 16): DataFrame = {
-    val seeds = embeddings
-      .select(col(idCol).as("sid"), VF.toDouble(col(vecCol)).as("e"))
-      .orderBy("sid").limit(nCodes)
-      // constant partition key: input is the nCodes seed rows (bounded);
-      // the single-partition window is deliberate, and keying it keeps
-      // WindowExec's no-partition warning meaningful for real
-      // regressions. sid*0 rather than lit(0): a foldable key is
-      // constant-folded out of the window spec and the warning returns
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("sid") * 0).orderBy(col("sid"))) - 1)
-    // geometry guard (one metadata-scale action at build time — codebooks
-    // are built once per corpus): a dim count not divisible by nSub would
-    // silently misalign every sub-vector slice, and fewer than nCodes
-    // seed rows would leave `cb` short while n_codes still claims nCodes,
-    // indexing past the end at encode
-    val probe = seeds.agg(count(lit(1)).as("n"),
-      min(size(col("e"))).as("dlo"), max(size(col("e"))).as("dhi")).head()
-    require(probe.getLong(0) == nCodes.toLong,
-      s"PQ needs >= $nCodes corpus vectors to seed codebooks, found ${probe.getLong(0)}")
-    require(probe.getInt(1) == probe.getInt(2) && probe.getInt(1) % nSub == 0,
-      s"embedding dims ${probe.getInt(1)}..${probe.getInt(2)} must be uniform " +
-        s"and divisible by nSub=$nSub")
-    val dSub = size(col("e")) / nSub
-    seeds
-      .select(explode(sequence(lit(0), lit(nSub - 1))).as("sub"),
-        col("rank"), col("e"), dSub.as("ds"))
-      .select(col("sub"), col("rank"),
-        slice(col("e"), col("sub") * col("ds") + 1, col("ds")).as("cv"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("sub"), col("rank"), col("cv")))),
-        s => s.getField("cv")).as("cb"))
-      .select(col("cb"), lit(nSub).as("n_sub"), lit(nCodes).as("n_codes"))
+                  nSub: Int = 8, nCodes: Int = 16): DataFrame =
+    codebookFrame(embeddings.sparkSession,
+      pqSeedBooks(embeddings, idCol, vecCol, nSub, nCodes), nSub, nCodes)
+
+  /** The seed codebook entries, (sub, code)-major, from ONE ordered
+    * collect of the `nCodes` lowest-id vectors. The geometry is checked
+    * on those rows, on the driver: a dim count not divisible by nSub
+    * would misalign every sub-vector slice, and fewer than nCodes seed
+    * rows would leave `cb` short while n_codes still claims nCodes. */
+  private def pqSeedBooks(embeddings: DataFrame, idCol: String, vecCol: String,
+                          nSub: Int, nCodes: Int): Seq[Seq[Any]] = {
+    val seeds = embeddings.select(col(idCol).as("sid"), VF.toDouble(col(vecCol)).as("e"))
+      .orderBy(col("sid")).limit(nCodes).collect()
+      .map(r => if (r.isNullAt(1)) Seq.empty[Any] else r.getSeq[Any](1))
+    require(seeds.length == nCodes,
+      s"PQ needs >= $nCodes corpus vectors to seed codebooks, found ${seeds.length}")
+    val (dlo, dhi) = (seeds.map(_.length).min, seeds.map(_.length).max)
+    require(dlo == dhi && dlo % nSub == 0,
+      s"embedding dims $dlo..$dhi must be uniform and divisible by nSub=$nSub")
+    val ds = dlo / nSub
+    for (s <- 0 until nSub; e <- seeds.toSeq) yield e.slice(s * ds, (s + 1) * ds)
   }
 
-  /** Squared-L2 between two equal-length double arrays as ONE sequential
-    * fold — deterministic bit-for-bit in any engine. */
-  private def l2sq(a: org.apache.spark.sql.Column,
-                   b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, d) => acc + d)
+  private def codebookFrame(spark: SparkSession, cb: Seq[Seq[Any]], nSub: Int,
+                            nCodes: Int): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row(cb, nSub, nCodes)), StructType(Seq(
+      StructField("cb", ArrayType(ArrayType(DoubleType))),
+      StructField("n_sub", IntegerType, nullable = false),
+      StructField("n_codes", IntegerType, nullable = false))))
 
-  /** PQ-ENCODE the corpus: each vector becomes `nSub` code ids (its
-    * nearest codebook entry per sub-space, ties to the lowest code via
-    * first-minimum). 64 floats → 8 small ints here (a production lake
-    * packs them into nSub bytes — 32× smaller than float32). Encoding
-    * is a per-row expression against the broadcast codebooks: the
-    * corpus streams once, nothing shuffles. The argmin materializes each
-    * (distance, code) pair ONCE in a transform and takes `array_min` over
-    * the struct array (lexicographic: min distance, tie → lowest code) —
-    * interpreted HOFs get no common-subexpression reuse, so the earlier
-    * array_position(dists, array_min(dists)) form paid the nCodes
-    * distance scan twice per sub-vector. */
+  /** PQ-ENCODE the corpus: each vector becomes `nSub` code ids, its
+    * nearest codebook entry per sub-space (squared L2 as one sequential
+    * fold, ties to the lowest code). 64 floats → 8 small ints here (a
+    * production lake packs them into nSub bytes — 32× smaller than
+    * float32). Encoding is the pq_encode kernel, one generated call per
+    * row against the broadcast codebooks: the corpus streams once,
+    * nothing shuffles. A vector whose dimension differs from the
+    * codebooks', a null vector or a null element fails the query with
+    * the dimensions named (an interpreted `zip_with` form encoded those
+    * silently as code 0). */
   def pqEncode(embeddings: DataFrame, idCol: String, vecCol: String,
                codebooks: DataFrame): DataFrame =
     embeddings.crossJoin(broadcast(codebooks))
-      .select(col(idCol), VF.toDouble(col(vecCol)).as("e"),
-        col("cb"), col("n_sub"), col("n_codes"))
-      .withColumn("ds", size(col("e")) / col("n_sub"))
-      .select(col(idCol),
-        transform(sequence(lit(0), col("n_sub") - 1), s => {
-          val sv = slice(col("e"), s * col("ds") + 1, col("ds"))
-          val dc = transform(sequence(lit(0), col("n_codes") - 1),
-            c => struct(
-              l2sq(sv, element_at(col("cb"), s * col("n_codes") + c + 1)).as("d"),
-              c.cast("int").as("c")))
-          array_min(dc).getField("c")
-        }).as("codes"))
+      .select(col(idCol), K.pqEncode(VF.toDouble(col(vecCol)), col("cb"), col("n_sub"),
+        col("n_codes")).as("codes"))
 
   /** Lloyd-refined PQ codebooks: per sub-space k-means over the encode
-    * assignments — each iteration re-encodes against the current books
-    * and replaces every code with the MEAN of its assigned sub-vectors
-    * (codes with no members keep their previous entry). Same discipline
-    * as [[ivfCentroidsRefined]]: the ONE encode implementation serves
-    * refinement and search (tiebreaks can never drift apart), per-round
-    * lineage truncates via local checkpoints, and the final small
-    * artifact leaves the block manager. Float means are summation-order
-    * dependent, so refinement (like IVF's) is spec-pinned Spark-vs-Spark
-    * rather than oracle-gated; total distortion is non-increasing by
-    * Lloyd's argument. */
+    * assignments. Seeds come from [[pqCodebooks]]' one ordered collect;
+    * each round encodes the corpus against the current books (the ONE
+    * encode kernel serves refinement and search, so tiebreaks can never
+    * drift apart), takes the per-(sub, code, pos) `avg` of the assigned
+    * elements as one aggregate collected to the driver, and replaces
+    * every code with that mean (codes with no members keep their
+    * previous entry). Books are metadata-scale and every generation is a
+    * local relation, so nothing is checkpointed or copied out. Float
+    * means are summation-order dependent, so refinement (like IVF's) is
+    * spec-pinned Spark-vs-Spark rather than oracle-gated; total
+    * distortion is non-increasing by Lloyd's argument. */
   def pqCodebooksRefined(embeddings: DataFrame, idCol: String, vecCol: String,
                          nSub: Int = 8, nCodes: Int = 16,
                          iters: Int = 2): DataFrame = {
-    var cb = pqCodebooks(embeddings, idCol, vecCol, nSub, nCodes)
-    var held: Option[DataFrame] = None
+    val spark = embeddings.sparkSession
+    var books = pqSeedBooks(embeddings, idCol, vecCol, nSub, nCodes)
+    val ds = books.head.length
     (1 to iters).foreach { _ =>
-      val enc = pqEncode(embeddings, idCol, vecCol, cb)
-      val sv = embeddings
-        .select(col(idCol), VF.toDouble(col(vecCol)).as("e"))
-        .join(enc, idCol)
-        .withColumn("ds", size(col("e")) / nSub)
-        .select(posexplode(col("codes")).as(Seq("sub", "code")),
-          col("e"), col("ds"))
-        .select(col("sub"), col("code"),
-          slice(col("e"), col("sub") * col("ds") + 1, col("ds")).as("sv"))
-      val means = sv
-        .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy(col("sub"), col("code"), col("pos")).agg(avg(col("x")).as("m"))
-        .groupBy(col("sub"), col("code"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("cv"))
-      val next = cb
-        .select(posexplode(col("cb")).as(Seq("idx", "cv_prev")))
-        .withColumn("sub", (col("idx") / nCodes).cast("int"))
-        .withColumn("code", col("idx") % nCodes)
-        .join(means, Seq("sub", "code"), "left")
-        .select(col("idx"), coalesce(col("cv"), col("cv_prev")).as("cv"))
-        .agg(transform(array_sort(collect_list(struct(col("idx"), col("cv")))),
-          s => s.getField("cv")).as("cb"))
-        .select(col("cb"), lit(nSub).as("n_sub"), lit(nCodes).as("n_codes"))
-        .localCheckpoint(true)
-      held.foreach(graft.operators.Blocks.release)
-      held = Some(next)
-      cb = next
+      // the books ride as a literal (no broadcast job); encode in its own
+      // projection, as an expression beside a generator would be
+      // evaluated once per exploded element
+      val cb = ColumnBridge.column(Literal.create(books, ArrayType(ArrayType(DoubleType))))
+      val means = embeddings.select(VF.toDouble(col(vecCol)).as("e"))
+        .select(col("e"), K.pqEncode(col("e"), cb, lit(nSub), lit(nCodes)).as("codes"))
+        .select(posexplode(col("e")).as(Seq("i", "x")), col("codes"))
+        .withColumn("sub", (col("i") / ds).cast("int"))
+        .groupBy(col("sub"), element_at(col("codes"), col("sub") + 1).as("code"),
+          (col("i") % ds).as("pos"))
+        .agg(avg(col("x")).as("m"))
+        .collect().groupBy(r => r.getInt(0) * nCodes + r.getInt(1))
+        .map { case (k, ms) => k -> ms.sortBy(_.getInt(2)).map(_.get(3)).toSeq }
+      books = books.indices.map(k => means.getOrElse(k, books(k)))
     }
-    held.fold(cb) { last =>
-      val out = graft.operators.Blocks.copyOut(cb)
-      graft.operators.Blocks.release(last); out
-    }
+    codebookFrame(spark, books, nSub, nCodes)
   }
 
   /** Reconstruct (decode) PQ-encoded vectors: each row's codes replaced
@@ -621,25 +597,18 @@ object Similarity {
             s * col("n_codes") + element_at(col("codes"), s + 1) + 1))).as("decoded"))
 
   /** Per-probe ADC lookup table: (sub, code) squared distances flattened
-    * sub-major (same layout as `cb`) → (p_id, n_codes, ptab). */
+    * sub-major (same layout as `cb`) → (p_id, n_codes, ptab); the
+    * pq_dist_table kernel, with pq_encode's geometry checks. */
   private def pqProbeTable(probes: DataFrame, idCol: String, vecCol: String,
                            codebooks: DataFrame): DataFrame =
     probes.crossJoin(broadcast(codebooks))
-      .select(col(idCol).as("p_id"), VF.toDouble(col(vecCol)).as("p_e"),
-        col("cb"), col("n_sub"), col("n_codes"))
-      .withColumn("ds", size(col("p_e")) / col("n_sub"))
-      .select(col("p_id"), col("n_codes"),
-        flatten(transform(sequence(lit(0), col("n_sub") - 1), s =>
-          transform(sequence(lit(0), col("n_codes") - 1), c =>
-            l2sq(slice(col("p_e"), s * col("ds") + 1, col("ds")),
-              element_at(col("cb"), s * col("n_codes") + c + 1))))).as("ptab"))
+      .select(col(idCol).as("p_id"), col("n_codes"),
+        K.pqDistTable(VF.toDouble(col(vecCol)), col("cb"), col("n_sub"),
+          col("n_codes")).as("ptab"))
 
   /** ADC fold: the corpus row's approximate squared distance to a probe
-    * — one sequential lookup-sum over its codes. */
-  private def adcDist: org.apache.spark.sql.Column =
-    aggregate(sequence(lit(0), size(col("codes")) - 1), lit(0.0),
-      (acc, s) => acc + element_at(col("ptab"),
-        s * col("n_codes") + element_at(col("codes"), s + 1) + 1))
+    * — one sequential lookup-sum over its codes (the adc_dist kernel). */
+  private def adcDist: Column = K.adcDist(col("codes"), col("ptab"), col("n_codes"))
 
   private def adcRank(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("p_id"))
@@ -700,7 +669,7 @@ object Similarity {
     * id order; pass a precomputed ordering column via the id if quality-
     * ranked selection is wanted). Flattens semantic redundancy the way
     * temperature sampling flattens source redundancy — the cluster-quota
-    * step of SemDeDup-style curation pipelines. One broadcast-argmin
+    * step of SemDeDup-style curation pipelines. One per-row kernel
     * assignment + one WindowGroupLimit; nothing all-pairs. */
   def diversitySample(embeddings: DataFrame, idCol: String, vecCol: String,
                       cap: Int, nCells: Int = 16,
