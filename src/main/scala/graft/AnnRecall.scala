@@ -40,19 +40,9 @@ object AnnRecall {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
-    val outPath = if (args.length > 1) args(1) else "/root/repo/target/ann_recall.json"
+    val outPath = if (args.length > 1) args(1) else s"${GraftSession.scratchRoot}/ann_recall.json"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-mode only (same rationale as Bench): avoid parallel-listing
-      // jobs over many-small-file dirs
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     val json = run(spark, sfDir, nProbesProbe = 50, k = 10,
       includeSynth = true)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json + "\n")
@@ -97,7 +87,7 @@ object AnnRecall {
       if (per.isEmpty) 0.0 else per.sum / per.size
     }
 
-    val tmp = s"/root/repo/target/tmp/ann_recall_${sfDir.replaceAll("[^a-zA-Z0-9]", "_")}"
+    val tmp = s"${GraftSession.scratchRoot}/tmp/ann_recall_${GraftSession.tag(sfDir)}"
 
     // ---- LSH: query-directed multi-probe sweep (nBits=6, radius 2) ----
     val lsh = par(Seq(1, 2, 4, 8, 12, 16, 22)) { p =>

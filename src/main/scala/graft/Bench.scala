@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench main: one JSON line, sec per query over SPARK_GRAFT_SF_DIR.
   * Also derives ingest throughput (records/s) from the streaming
   * round-trip per BASELINE.md's records/s target. */
@@ -9,43 +7,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // parallel task-side commit of dynamic-partition files
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // local-mode only: client-side .crc checksums double the cost of
-      // many-small-file dynamic partition writes (measured 2x); real
-      // clusters rely on HDFS/S3 storage integrity instead
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      // the state-store ASYNC maintenance thread (snapshot/cleanup) fires
-      // on a wall-clock interval and can land inside a timing window of
-      // whichever stateful-streaming entry is running (measured as a
-      // 1.5-2x outlier on one of three runs); the quiesce barrier unloads
-      // providers between runs anyway, so within-run maintenance buys
-      // nothing here — push it past any plausible entry duration
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
-      // many-small-file dirs (the HTTP spool's one-file-per-record
-      // putRecord analog: ~1600 files) trip the PARALLEL listing path at
-      // the default threshold (32), turning one driver-side readdir into
-      // a 1600-task Spark job — measured 2.6 s of pure dispatch on a
-      // local FS where the sequential stat loop is milliseconds. Local
-      // mode only: on a cluster against an object store the parallel
-      // listing is the right call and the default threshold stands.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
-      // shuffle/localCheckpoint scratch on tmpfs: the container disk's
-      // writeback stalls made every ~4th run of the iterative operators
-      // ~2x slower (measured on canonicalize: [4.5..6.3]s stable on
-      // tmpfs vs periodic 10-14s spikes on disk). Real clusters put
-      // spark.local.dir on local SSDs; tmpfs is the local-mode analog.
-      .config("spark.local.dir", "/dev/shm/graft-bench-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     // warm the codegen/scan machinery once so per-query numbers measure
     // the queries, not first-touch JVM initialization
     spark.range(100000).selectExpr("sum(id)").collect()
@@ -122,54 +84,8 @@ object Bench {
     // SPARK_GRAFT_ONLY=a,b,c — time just those queries (isolated-number
     // debugging; the driver never sets it)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // SPARK_GRAFT_PROFILE=1 — per-rep stderr forensics for the spread
-    // gate: wall, GC delta, job count/coverage, and the slowest jobs
-    // with their start offsets (gaps between jobs = driver-side time:
-    // planning, AQE, broadcast builds, checkpoint bookkeeping). Used to
-    // pin WHICH rep of a spread-weak entry stalls and WHERE.
     // SPARK_GRAFT_REPS=n overrides the timed-rep count (debugging only).
-    val profiling = sys.env.contains("SPARK_GRAFT_PROFILE")
     val nReps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(3)
-    val jobLog =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, String)]()
-    val jobStarts =
-      new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    if (profiling)
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val desc = Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .orElse(js.stageInfos.lastOption.map(_.name)).getOrElse("")
-          jobStarts.put(js.jobId, (js.time, desc)); ()
-        }
-        override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          Option(jobStarts.remove(je.jobId)).foreach { case (t0, d) =>
-            jobLog.add((je.jobId, t0, je.time, d)) }; ()
-        }
-      })
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    def profileRep(name: String, wallSec: Double, gcDeltaMs: Long,
-                   repT0Ms: Long): Unit = {
-      import scala.jdk.CollectionConverters._
-      val jobs = jobLog.asScala.toSeq.sortBy(_._2)
-      val jobSec = jobs.map(j => (j._3 - j._2) / 1e3).sum
-      System.err.println(f"[prof] $name wall=$wallSec%.2f gc=${gcDeltaMs / 1e3}%.2f " +
-        f"jobs=${jobs.size} jobtime=$jobSec%.2f driverGap=${wallSec - jobSec}%.2f")
-      // guarded parse: profileRep runs inside the query try-block, so an
-      // unparseable override must degrade to the default, not record a
-      // whole-suite "query failed" for every entry
-      val topN = sys.env.get("SPARK_GRAFT_PROFILE_TOP")
-        .flatMap(_.toIntOption).getOrElse(10)
-      jobs.sortBy(j => -(j._3 - j._2)).take(topN).foreach { case (id, t0, t1, d) =>
-        System.err.println(f"[prof]   job#$id +${(t0 - repT0Ms) / 1e3}%7.2f " +
-          f"dur=${(t1 - t0) / 1e3}%6.2f  ${d.take(110)}")
-      }
-      jobLog.clear()
-    }
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     // MACHINE-HEALTH CANARY: a fixed CPU-bound probe (no I/O, no
@@ -257,7 +173,9 @@ object Bench {
           // adopting them keeps a degraded-day record from blunting
           // the trigger (r14 close: record 341 s at canary drift 3.15,
           // run C 333 s with v3 8.69 vs the record's 11.80)
-          Option(new java.io.File("/root/repo").listFiles()).toSeq.flatMap(
+          // (committed at the checkout root, the scratch root's parent)
+          Option(new java.io.File(GraftSession.scratchRoot).getParentFile
+            .listFiles()).toSeq.flatMap(
             _.filter(_.getName.matches("bench_full_r\\d+(_run[A-Z])?\\.json"))
               .sortBy(f => f.getName.replaceAll("\\D", "").toInt)
               .map(_.getPath))
@@ -343,15 +261,10 @@ object Bench {
         if (qIdx % 25 == 0) recordCanary(qIdx)
         def once(): Either[String, Double] = {
           quiesce()
-          if (profiling) jobLog.clear()
-          val gc0 = if (profiling) gcMillis() else 0L
-          val wall0 = System.currentTimeMillis()
           val t0 = System.nanoTime()
           try {
             fn(spark, sfDir).count()
-            val w = (System.nanoTime() - t0) / 1e9
-            if (profiling) profileRep(name, w, gcMillis() - gc0, wall0)
-            Right(w)
+            Right((System.nanoTime() - t0) / 1e9)
           } catch {
             case e: Throwable =>
               Left(e.getClass.getSimpleName + ": " +
@@ -670,9 +583,7 @@ object Bench {
     // partitions per micro-batch, so the only lag is the trigger+write).
     val freshness = try {
       import org.apache.spark.sql.functions.{col, lit}
-      val base = "/root/repo/target/tmp/bench_fresh"
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+      val base = GraftSession.freshDir(spark, "bench_fresh", sfDir)
       spark.sql("DROP TABLE IF EXISTS bench_fresh_tbl")
       spark.range(1000).select(
         org.apache.spark.sql.functions.concat(lit("{\"Data\":{\"event\":\"e"),
@@ -739,11 +650,11 @@ object Bench {
     // SPARK_GRAFT_ONLY debugging runs can't clobber a full-suite record;
     // bench_last.json (what the driver reads) is only written by full runs.
     val stamped = java.nio.file.Paths.get(
-      s"/root/repo/target/bench_${System.currentTimeMillis()}.json")
+      s"${GraftSession.scratchRoot}/bench_${System.currentTimeMillis()}.json")
     java.nio.file.Files.writeString(stamped, json + "\n")
     if (only.isEmpty)
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("/root/repo/target/bench_last.json"), json + "\n")
+        java.nio.file.Paths.get(s"${GraftSession.scratchRoot}/bench_last.json"), json + "\n")
     // Per-round scale evidence (VERDICT r7/r8 item): regenerate the
     // scaling-exponent and ANN recall/cost artifacts in the SAME round as
     // the bench so the 100x-scale claims are never graded off a stale
@@ -795,9 +706,9 @@ object Bench {
       // at the sweep's big scale factor.
       val knownBig =
         if (sfDir == "/root/testdata/sf0.1") medians else Map.empty[String, Double]
-      artifact("scaling", "/root/repo/target/scaling.json")(
+      artifact("scaling", s"${GraftSession.scratchRoot}/scaling.json")(
         Scaling.run(spark, knownBig = knownBig))
-      artifact("ann_recall", "/root/repo/target/ann_recall.json")(
+      artifact("ann_recall", s"${GraftSession.scratchRoot}/ann_recall.json")(
         AnnRecall.run(spark, "/root/testdata/sf0.01", nProbesProbe = 50,
           k = 10, includeSynth = true))
       // FINAL stdout statement: the identical compact line again, so the

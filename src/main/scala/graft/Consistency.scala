@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Consistency {
   def main(args: Array[String]): Unit = {
     val q = SparkEntry.queries.keySet
@@ -7,12 +6,7 @@ object Consistency {
     println(s"queries=${q.size} oracles=${o.size} rows-only=${(q -- o).toSeq.sorted.mkString(",")}")
     val orphans = o -- q
     println(if (orphans.isEmpty) "no orphan oracles" else s"ORPHAN ORACLES: $orphans")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     val n = SparkEntry.entry(spark).count()
     println(s"entry rows=$n " + (if (n > 0) "SMOKE OK" else "SMOKE FAIL"))
     spark.stop()

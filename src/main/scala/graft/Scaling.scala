@@ -104,27 +104,13 @@ object Scaling {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      // local-mode only (same rationale as Bench): avoid parallel-listing
-      // jobs over many-small-file fixture dirs
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     spark.range(100000).selectExpr("sum(id)").collect() // JVM warm
     val json = run(spark, if (args.isEmpty) None else Some(args.toSet))
     // a filtered run is an iteration aid — never clobber the artifact
     if (args.isEmpty)
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("/root/repo/target/scaling.json"), json + "\n")
+        java.nio.file.Paths.get(s"${GraftSession.scratchRoot}/scaling.json"), json + "\n")
     println(json)
     spark.stop()
   }
@@ -255,17 +241,17 @@ object Scaling {
   /** The decorrelated ×8 corpus dir, shared with [[AnnRecall]]'s
     * synth-scale recall point (both instruments must measure the SAME
     * corpus or the scale claims stop composing). */
-  private[graft] val SynthDir = "/root/repo/target/sf_synth_v2"
+  private[graft] val SynthDir = s"${GraftSession.scratchRoot}/sf_synth_v2"
 
   /** The ×16 embeddings-only synth dir — AnnRecall's THIRD recall scale
     * point (sf0.1 → ×8 → ×16), pinning that the probe-scaled rerank
     * shortlist holds recall as nCells keeps growing with √n. */
-  private[graft] val SynthX16Dir = "/root/repo/target/sf_synth_x16"
+  private[graft] val SynthX16Dir = s"${GraftSession.scratchRoot}/sf_synth_x16"
 
   /** The ×32 embeddings-only synth dir — the FOURTH recall scale point
     * (64k vectors, √n cells ≈ 253): the shift step is dim/32 = 2, still
     * decorrelating distinct replicas. */
-  private[graft] val SynthX32Dir = "/root/repo/target/sf_synth_x32"
+  private[graft] val SynthX32Dir = s"${GraftSession.scratchRoot}/sf_synth_x32"
 
   /** EMBEDDINGS-ONLY decorrelated ×`replicas` synth (the ANN third scale
     * point needs no documents): same circular-shift construction as

@@ -3,7 +3,7 @@ package graft
 import graft.queries.{Analytics, Extensions, PipelineQueries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Entry-point contract — see SURVEY.md §7.
   *
   * `queries` is the operator inventory: reference-parity pipeline semantics
   * (SURVEY §2.1/§2.2) + the extended analytical surface (§2.3) + the

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,29 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // partition cols of the lake round-trip must stay strings ("01")
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) — read as long, converted
-      // exactly in Tables.load
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // parallel task-side commit of dynamic-partition files
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // local-mode only: client-side .crc checksums double the cost of
-      // many-small-file dynamic partition writes (measured 2x); real
-      // clusters rely on HDFS/S3 storage integrity instead
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      // local-mode only (same rationale as Bench): many-small-file dirs
-      // (HTTP spool, bucketed index lakes) otherwise turn one readdir
-      // into a >1000-task parallel listing job — pure dispatch on a
-      // local FS; clusters on object stores keep the default.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=a,b,c restricts the dump (local iteration on new
     // queries — same contract as Bench's); the driver never sets it.

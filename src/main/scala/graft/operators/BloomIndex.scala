@@ -195,32 +195,15 @@ object BloomIndex {
       d
     }
     if (genDirs.isEmpty) liveEpochIndex
-    // allowMissingColumns: live epochs indexed BEFORE the key_type column
-    // existed carry a narrower schema; the legacy rows surface with a
-    // NULL key_type (the untyped case indexKeyType already handles)
-    // instead of the union throwing a column-mismatch error
-    else liveEpochIndex.unionByName(spark.read.parquet(genDirs: _*),
-      allowMissingColumns = true)
+    else liveEpochIndex.unionByName(spark.read.parquet(genDirs: _*))
   }
 
-  /** Files that MAY contain any of `values`, resolved distributed: the
-    * probe positions fold to literals, the conjunction runs as an
-    * `array_contains` filter over the index, and only surviving file
-    * names are collected. */
   /** The key DataType the index was built with, parsed from its
-    * `key_type` column. A MIXED index (legacy NULL-key_type rows
-    * unioned with typed rows, e.g. epochs indexed before the column
-    * existed plus a post-fold generation) uses the one recorded type —
-    * all rows were built from the same key column of the same lake, so
-    * the legacy rows hashed that column's natural type, exactly what
-    * the recorded DDL names — but WARNS, because that assumption is
-    * trusted, not verified: a key-column type migration between the
-    * legacy epoch and the typed one would false-negative silently. A
-    * LEGACY-ONLY index (no key_type column, or every row NULL) RAISES:
-    * "probes hash untyped and the caller owns type agreement" was the
-    * silent-false-negative contract this index exists to forbid, and
-    * every current writer stamps key_type — the only way to hold one
-    * is a pre-key_type artifact, which a rebuild fixes. None is
+    * `key_type` column. An index without the column, or with a NULL
+    * key_type on any row, RAISES: untyped probes hash by the probe
+    * value's type — the silent-false-negative contract this index
+    * exists to forbid — and every writer stamps key_type, so only a
+    * pre-key_type artifact can hold one, which a rebuild fixes. None is
     * returned ONLY for an index with zero rows, which candidateFiles'
     * empty-index guard rejects with its own message. */
   private def indexKeyType(index: DataFrame): Option[org.apache.spark.sql.types.DataType] = {
@@ -231,28 +214,23 @@ object BloomIndex {
         "negative, the one failure class this index promises away); " +
         "rebuild the index with buildIndex/appendEpochIndex (they stamp " +
         "key_type) before planning point reads against it"
-    if (!index.columns.contains("key_type"))
-      throw new IllegalArgumentException(rebuildMsg)
+    require(index.columns.contains("key_type"), rebuildMsg)
     val types = index.select(col("key_type")).distinct().collect()
       .map(r => if (r.isNullAt(0)) null else r.getString(0))
-    val typed = types.filter(_ != null)
     if (types.isEmpty) None // zero rows: candidateFiles' guard owns this
-    else if (typed.isEmpty) throw new IllegalArgumentException(rebuildMsg)
     else {
-      require(typed.length == 1,
-        s"bloom index mixes key types [${typed.mkString(", ")}] — it was " +
+      require(!types.contains(null), rebuildMsg)
+      require(types.length == 1,
+        s"bloom index mixes key types [${types.mkString(", ")}] — it was " +
           "appended with different key columns; rebuild one index per key")
-      if (types.contains(null))
-        System.err.println("WARN BloomIndex: index mixes legacy (NULL " +
-          s"key_type) rows with '${typed.head}' rows — probing both via " +
-          "the recorded type ASSUMES the legacy epochs were built from " +
-          "the same key column type; if the key column's type migrated " +
-          "since, legacy files can false-negative. Re-index the legacy " +
-          "epochs to verify rather than trust.")
-      Some(org.apache.spark.sql.types.DataType.fromDDL(typed.head))
+      Some(org.apache.spark.sql.types.DataType.fromDDL(types.head))
     }
   }
 
+  /** Files that MAY contain any of `values`, resolved distributed: the
+    * probe positions fold to literals, the conjunction runs as an
+    * `array_contains` filter over the index, and only surviving file
+    * names are collected. */
   private[graft] def candidateFiles(spark: SparkSession, index: DataFrame,
                                         values: Seq[Any]): (Array[String], Long) = {
     require(values.nonEmpty && values.forall(_ != null),

@@ -873,30 +873,17 @@ object Dedup {
     // layout — validates exactly like a fresh one; a row-order limit()
     // sample would spuriously reject it).
     val fields = corpusIndex.schema.fieldNames.toSet
-    if (fields.contains("bands") && fields.contains("rows_per_band")) {
-      val params = corpusIndex.select(col("bands"), col("rows_per_band"))
-        .distinct().collect()
-      params.foreach { r =>
+    require(fields.contains("bands") && fields.contains("rows_per_band"),
+      "corpusIndex lacks its build parameters (the bands and rows_per_band " +
+        "columns) — rebuild it with minhashBandIndex")
+    corpusIndex.select(col("bands"), col("rows_per_band")).distinct().collect()
+      .foreach { r =>
         require(r.getInt(0) == bands && r.getInt(1) == rowsPerBand,
           s"corpusIndex banding mismatch: index built with (bands=${r.getInt(0)}, " +
             s"rowsPerBand=${r.getInt(1)}), this call expects (bands=$bands, " +
             s"rowsPerBand=$rowsPerBand) — rebuild the index or pass the " +
             "parameters it was built with")
       }
-    } else {
-      // legacy index without embedded parameters: only the band count is
-      // verifiable, via the FULL max(band) (one column scan answered by
-      // parquet stats — never a row-order-dependent sample). rowsPerBand
-      // cannot be checked here — that silent hole is why the parameters
-      // are embedded now.
-      val maxBandRow = corpusIndex.agg(max(col("band"))).head()
-      if (!maxBandRow.isNullAt(0)) {
-        val maxBand = maxBandRow.getInt(0)
-        require(maxBand == bands - 1,
-          s"corpusIndex banding mismatch: max band $maxBand, expected ${bands - 1} " +
-            s"— rebuild the index or pass the (bands, rowsPerBand) it was built with")
-      }
-    }
     // the new batch is small by construction (one ingest batch); loops
     // over many batches build each index once and pass it via `newIndex`
     val newIdx = newIndex.getOrElse(
@@ -1479,32 +1466,6 @@ object Dedup {
     graft.sources.TransactionalLake.commitEpoch(
       newG.groupBy("gkey").agg(count(lit(1)).as("cnt")),
       sdfRoot(indexRoot), epochId, partitionCols = Nil)
-    // UPGRADE BACKFILL: a root whose gram epochs were committed before
-    // the df artifact existed has no df deltas for them — reading
-    // corpus df solely from the df lake would then undercount, the
-    // df>=2 gate would drop real cross-doc anchor keys, and repeat
-    // spans would be missed SILENTLY (the current batch always commits
-    // its own delta, so nothing errors). Detect the gap by comparing
-    // epoch sets and backfill each missing epoch's delta from the
-    // committed gram postings (folds preserve per-row epoch values, so
-    // the filter works on folded roots too). One-time O(missing
-    // epochs) maintenance; afterwards the sets match forever.
-    def epochSet(root: String): Set[Long] =
-      (graft.sources.TransactionalLake.committedEpochs(spark, root) ++
-        graft.sources.TransactionalLake.foldState(spark, root)
-          .map(_._2).getOrElse(Seq.empty)).toSet
-    val missingDf = epochSet(sgramsRoot(indexRoot)) -- epochSet(sdfRoot(indexRoot))
-    if (missingDf.nonEmpty) {
-      System.err.println(s"commitSubstringBatch: df artifact missing " +
-        s"${missingDf.size} gram epoch(s) [${missingDf.toSeq.sorted.mkString(",")}]" +
-        " - backfilling deltas from the committed gram postings")
-      missingDf.toSeq.sorted.foreach { e =>
-        graft.sources.TransactionalLake.commitEpoch(
-          allG.filter(col("epoch") === e)
-            .groupBy("gkey").agg(count(lit(1)).as("cnt")),
-          sdfRoot(indexRoot), e, partitionCols = Nil)
-      }
-    }
     // corpus-df >= 2 keys only (a corpus-unique gram cannot anchor a
     // cross-doc repeat); the batch-df x corpus-df product upper-bounds
     // the anchor join and refuses IN-PLAN past the budget

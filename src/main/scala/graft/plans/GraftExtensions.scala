@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * same codegen'd operators as the Column API:
   *
   *   spark.sql("SELECT graft_dot(a, b) ...")
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   <session builder>.withExtensions(new GraftExtensions) ...
   *   // or: --conf spark.sql.extensions=graft.plans.GraftExtensions
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.Tables
+import graft.{GraftSession, Tables}
+import graft.GraftSession.freshDir
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -358,10 +359,7 @@ object Analytics {
     * by FormatParitySpec; this gates that they JOIN). The two small dims
     * broadcast; the fact scan is the only distributed input. */
   def federatedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/fed_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(spark, "fed", dir)
     t(spark, dir, "nation").write.mode("overwrite").json(s"$root/nation_json")
     t(spark, dir, "region").write.mode("overwrite").orc(s"$root/region_orc")
     val nation = spark.read.json(s"$root/nation_json")
@@ -837,7 +835,7 @@ object Analytics {
     * ZERO-EXCHANGE JOIN, not the one-time write it amortizes (the
     * round-4 number conflated the two). */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
+    val tag = GraftSession.tag(dir)
     val (lt, ot) = (s"li_bkt_$tag", s"ord_bkt_$tag")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     if (!spark.catalog.tableExists(lt) || !spark.catalog.tableExists(ot)) {
@@ -882,7 +880,7 @@ object Analytics {
     * ClusteringSpec. Tables build once per JVM, like [[bucketedJoin]]:
     * the benched number is the steady-state query, not the write. */
   def clusteredJoinScan(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
+    val tag = GraftSession.tag(dir)
     val (lt, st) = (s"li_clus_$tag", s"sup_clus_$tag")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     if (!spark.catalog.tableExists(lt) || !spark.catalog.tableExists(st)) {
@@ -1334,10 +1332,7 @@ object Analytics {
     * of silently scanning everything. The oracle is the plain filtered
     * aggregate — zone maps must never change answers, only I/O. */
   def zoneMapScan(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/zmap_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(spark, "zmap", dir)
     t(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
       .repartitionByRange(8, col("l_orderkey"))
@@ -1365,10 +1360,7 @@ object Analytics {
     * plain filtered aggregate — layout and index must never change
     * answers, only I/O. */
   def zOrderZoneMapScan(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/zzmap_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(spark, "zzmap", dir)
     val li = t(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"),
         col("l_partkey"), col("l_suppkey"), col("l_quantity"))
@@ -1405,10 +1397,7 @@ object Analytics {
     * row — so the DuckDB full-scan oracle certifies the whole
     * build/probe hash agreement. */
   def bloomScan(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/bloom_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(spark, "bloom", dir)
     t(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .repartition(8, col("doc_id"))
@@ -1430,10 +1419,7 @@ object Analytics {
     * the plain filtered aggregate; ComposedScanSpec asserts the
     * intersection strictly beats each index alone at this layout. */
   def composedScan(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/cmps_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(spark, "cmps", dir)
     // layout: range-clustered on the user COHORT (zone maps serve the
     // range cut); the bloom indexes the near-unique event_id (membership
     // pruning needs key cardinality >> rows-per-file — the ~150-user

@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.Tables
+import graft.{GraftSession, Tables}
+import graft.GraftSession.freshDir
 import graft.operators.{Blocks, Dedup, Multimodal, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,12 +27,12 @@ object Extensions {
     * downstream of the hash family (Hamming-radius pair sets, cosine
     * scoring/ranking, Jaccard-estimate arithmetic). */
   private def splitDir(d: String): String =
-    s"/root/repo/target/split_phase/${new java.io.File(d).getName}"
+    s"${GraftSession.scratchRoot}/split_phase/${new java.io.File(d).getName}"
 
   /** The gate always runs at sf0.01 (TESTDATA.md contract), so the static
     * oracle SQL pins that artifact path; Bench runs at other SFs write
     * sibling dirs and never clobber the gated artifact. */
-  private val oracleSplitDir = "/root/repo/target/split_phase/sf0.01"
+  private val oracleSplitDir = s"${GraftSession.scratchRoot}/split_phase/sf0.01"
 
   // ---- dedup ----
 
@@ -129,6 +130,41 @@ object Extensions {
     } finally pool.shutdown()
   }
 
+  /** The streaming fixtures' crash-replay protocol: `start` runs to
+    * completion, the final epoch's STREAM commit vanishes (the restart
+    * re-delivers that batch) and `start` runs again; every idempotent
+    * epoch commit downstream must keep its artifact exact (no
+    * duplicates, no loss). `afterPass(replayed)` runs after each pass. */
+  private def crashReplay(s: SparkSession, base: String,
+      afterPass: Boolean => Unit = _ => ())(
+      start: () => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    graft.streaming.StreamingIngest.awaitWithRestartRetry(start)
+    afterPass(false)
+    val commits = new org.apache.hadoop.fs.Path(s"$base/ckpt/commits")
+    val fs = commits.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val last = fs.listStatus(commits).map(_.getPath.getName)
+      .filterNot(_.startsWith(".")).map(_.toLong).max
+    fs.delete(new org.apache.hadoop.fs.Path(commits, last.toString), false)
+    graft.streaming.StreamingIngest.awaitWithRestartRetry(start)
+    afterPass(true)
+  }
+
+  /** [[crashReplay]] over `rows` (doc_id, text) replayed as a three-file
+    * json stream under `base`/in — file i holds doc_id % 3 = i, passed
+    * through `shape(i, _)` — one file per trigger. */
+  private def crashReplayDocs(s: SparkSession, base: String, rows: DataFrame,
+      shape: (Int, DataFrame) => DataFrame = (_, b) => b,
+      afterPass: Boolean => Unit = _ => ())(
+      start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    (0 until 3).foreach(i => shape(i, rows.filter(col("doc_id") % 3 === i))
+      .coalesce(1).write.mode("append").json(s"$base/in"))
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    crashReplay(s, base, afterPass)(() => start(s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).json(s"$base/in")))
+  }
+
   /** STREAMING incremental dedup gate — the deployment integration the
     * batch fold (`dedup_incremental_fold`) models: the documents table
     * replayed as a 3-file json stream (≈one micro-batch per file), each
@@ -140,29 +176,11 @@ object Extensions {
     * oracle is the same plain SQL as the batch operator, now proven
     * through the streaming shape with exactly-once artifacts. */
   def dedupStreamingIndex(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/sdedup_$tag"
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val all = docs(s, d).select(col("doc_id"), col("text"))
-    (0 until 3).foreach(i => all.filter(col("doc_id") % 3 === i)
-      .coalesce(1).write.mode("append").json(s"$base/in"))
-    def run(): Unit = graft.streaming.StreamingIngest.awaitWithRestartRetry(() =>
-      graft.streaming.StreamingDedup.start(
-        s.readStream.schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-          .option("maxFilesPerTrigger", 1).json(s"$base/in"),
-        "doc_id", "text", base, s"$base/ckpt",
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    run()
-    // the crash: the final epoch's STREAM commit vanishes — restart
-    // re-delivers the batch; the idempotent epoch commits must keep the
-    // corpus, index, and pair log exact (no duplicates, no loss)
-    val commits = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits"))
-      .map(_.getPath.getName).filterNot(_.startsWith(".")).map(_.toLong).sorted
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits/${commits.last}"), false)
-    run()
+    val base = freshDir(s, "sdedup", d)
+    crashReplayDocs(s, base, docs(s, d).select(col("doc_id"), col("text"))) { in =>
+      graft.streaming.StreamingDedup.start(in, "doc_id", "text", base,
+        s"$base/ckpt", org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    }
     graft.streaming.StreamingDedup.pairLog(s, base).orderBy("id_a", "id_b")
   }
 
@@ -173,26 +191,11 @@ object Extensions {
     * must equal the one-shot whole-corpus answer — the oracle is
     * literally `text_dedup_substrings`' SQL. */
   def dedupStreamingSubstrings(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/ssub_$tag"
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val all = docs(s, d).select(col("doc_id"), col("text"))
-    (0 until 3).foreach(i => all.filter(col("doc_id") % 3 === i)
-      .coalesce(1).write.mode("append").json(s"$base/in"))
-    def run(): Unit = graft.streaming.StreamingIngest.awaitWithRestartRetry(() =>
-      graft.streaming.StreamingDedup.startSubstringIndex(
-        s.readStream.schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-          .option("maxFilesPerTrigger", 1).json(s"$base/in"),
-        "doc_id", "text", s"$base/idx", s"$base/ckpt",
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    run()
-    val commits = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits"))
-      .map(_.getPath.getName).filterNot(_.startsWith(".")).map(_.toLong).sorted
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits/${commits.last}"), false)
-    run()
+    val base = freshDir(s, "ssub", d)
+    crashReplayDocs(s, base, docs(s, d).select(col("doc_id"), col("text"))) { in =>
+      graft.streaming.StreamingDedup.startSubstringIndex(in, "doc_id", "text",
+        s"$base/idx", s"$base/ckpt", org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    }
     Dedup.longestDupSubstringsFromIndex(s, s"$base/idx").orderBy("doc_id")
   }
 
@@ -202,31 +205,13 @@ object Extensions {
     * The committed quarantine log must equal the one-shot batch
     * decontamination — same oracle as `text_decontaminate`. */
   def dedupStreamingDecon(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/sdecon_$tag"
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = freshDir(s, "sdecon", d)
     val all = docs(s, d).select(col("doc_id"), col("text"))
-    val train = all.filter(col("doc_id") % 10 =!= 0)
     val evalSet = all.filter(col("doc_id") % 10 === 0)
-    (0 until 3).foreach(i => train.filter(col("doc_id") % 3 === i)
-      .coalesce(1).write.mode("append").json(s"$base/in"))
-    def run(): Unit = graft.streaming.StreamingIngest.awaitWithRestartRetry(() =>
-      graft.streaming.StreamingDedup.startDecontaminate(
-        s.readStream.schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-          .option("maxFilesPerTrigger", 1).json(s"$base/in"),
-        evalSet, "doc_id", "text", base, s"$base/ckpt",
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    run()
-    // the crash: the final epoch's STREAM commit vanishes — restart
-    // re-delivers the batch; the idempotent epoch commit must keep the
-    // quarantine log exact (no duplicates, no loss)
-    val commits = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits"))
-      .map(_.getPath.getName).filterNot(_.startsWith(".")).map(_.toLong).sorted
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits/${commits.last}"), false)
-    run()
+    crashReplayDocs(s, base, all.filter(col("doc_id") % 10 =!= 0)) { in =>
+      graft.streaming.StreamingDedup.startDecontaminate(in, evalSet,
+        "doc_id", "text", base, s"$base/ckpt", org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    }
     graft.streaming.StreamingDedup.quarantineLog(s, base).orderBy("train_id")
   }
 
@@ -235,31 +220,13 @@ object Extensions {
     * cross-set pass per batch — the accumulated log must equal the
     * one-shot fuzzy join over the whole train corpus (the batch oracle). */
   def dedupStreamingFuzzyDecon(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/sfdecon_$tag"
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = freshDir(s, "sfdecon", d)
     val all = docs(s, d).select(col("doc_id"), col("text"))
-    val train = all.filter(col("doc_id") % 10 =!= 0)
     val evalSet = all.filter(col("doc_id") % 10 === 0)
-    (0 until 3).foreach(i => train.filter(col("doc_id") % 3 === i)
-      .coalesce(1).write.mode("append").json(s"$base/in"))
-    def run(): Unit = graft.streaming.StreamingIngest.awaitWithRestartRetry(() =>
-      graft.streaming.StreamingDedup.startDecontaminateFuzzy(
-        s.readStream.schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-          .option("maxFilesPerTrigger", 1).json(s"$base/in"),
-        evalSet, "doc_id", "text", base, s"$base/ckpt",
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    run()
-    // the crash: the final epoch's STREAM commit vanishes — restart
-    // re-delivers the batch; the idempotent epoch commit must keep the
-    // fuzzy quarantine log exact (no duplicates, no loss)
-    val commits = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits"))
-      .map(_.getPath.getName).filterNot(_.startsWith(".")).map(_.toLong).sorted
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits/${commits.last}"), false)
-    run()
+    crashReplayDocs(s, base, all.filter(col("doc_id") % 10 =!= 0)) { in =>
+      graft.streaming.StreamingDedup.startDecontaminateFuzzy(in, evalSet,
+        "doc_id", "text", base, s"$base/ckpt", org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    }
     graft.streaming.StreamingDedup.fuzzyQuarantineLog(s, base)
       .orderBy("train_id", "eval_id")
   }
@@ -275,32 +242,15 @@ object Extensions {
     * idempotent epoch commit). Output: every doc with the lake it
     * actually reached. */
   def pipeStreamingCircuit(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/scirc_$tag"
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val all = docs(s, d).select(col("doc_id"), col("text"))
-    (0 until 3).foreach { i =>
-      val b = all.filter(col("doc_id") % 3 === i)
-      val out = if (i == 1) b.withColumn("text", substring(col("text"), 1, 20))
-                else b
-      out.coalesce(1).write.mode("append").json(s"$base/in")
-    }
-    def run(): Unit = graft.streaming.StreamingIngest.awaitWithRestartRetry(() =>
-      graft.streaming.QualityGate.start(
-        s.readStream.schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-          .option("maxFilesPerTrigger", 1).json(s"$base/in"),
+    val base = freshDir(s, "scirc", d)
+    crashReplayDocs(s, base, docs(s, d).select(col("doc_id"), col("text")),
+      shape = (i, b) =>
+        if (i == 1) b.withColumn("text", substring(col("text"), 1, 20)) else b) { in =>
+      graft.streaming.QualityGate.start(in,
         violation = length(col("text")) < 40,
         maxViolationFrac = 0.5,
-        s"$base/lake", s"$base/quarantine", s"$base/ckpt",
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    run()
-    val commits = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits"))
-      .map(_.getPath.getName).filterNot(_.startsWith(".")).map(_.toLong).sorted
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits/${commits.last}"), false)
-    run()
+        s"$base/lake", s"$base/quarantine", s"$base/ckpt", org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    }
     val T = graft.sources.TransactionalLake
     T.readCommitted(s, s"$base/lake")
       .select(col("doc_id"), lit("lake").as("route"))
@@ -399,21 +349,7 @@ object Extensions {
     * Oracle: the one-shot connected-component closure joined back to
     * the documents table — per-cluster counts and total characters. */
   def dedupCanonicalChain(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/schain_$tag"
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val all = docs(s, d).select(col("doc_id"), col("text"))
-    (0 until 3).foreach(i => all.filter(col("doc_id") % 3 === i)
-      .coalesce(1).write.mode("append").json(s"$base/in"))
-    def run(): Unit = graft.streaming.StreamingIngest.awaitWithRestartRetry(() =>
-      graft.streaming.StreamingDedup.start(
-        s.readStream.schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-          .option("maxFilesPerTrigger", 1).json(s"$base/in"),
-        "doc_id", "text", base, s"$base/ckpt",
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+    val base = freshDir(s, "schain", d)
     val croot = graft.streaming.StreamingDedup.canonicalRoot(base)
     val mroot = s"$base/clusterlake"
     val vroot = s"$base/clusterview"
@@ -463,14 +399,16 @@ object Extensions {
         f"[chain] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
       r
     }
-    staged("stream-1")(run()); staged("maintain-1")(maintain())
-    val before = KeyedView.cursor(s, vroot)
-    // the crash: the final epoch's STREAM commit vanishes — restart
-    // re-delivers the batch; every chained artifact must stay exact
-    val commits = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits"))
-      .map(_.getPath.getName).filterNot(_.startsWith(".")).map(_.toLong).sorted
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits/${commits.last}"), false)
-    staged("stream-replay")(run()); staged("maintain-2")(maintain())
+    // the crash replay re-delivers the final batch; every chained
+    // artifact must stay exact and the view cursor may not advance
+    var before = -1L
+    crashReplayDocs(s, base, docs(s, d).select(col("doc_id"), col("text")),
+      afterPass = replayed =>
+        if (replayed) staged("maintain-2")(maintain())
+        else { staged("maintain-1")(maintain()); before = KeyedView.cursor(s, vroot) }) { in =>
+      graft.streaming.StreamingDedup.start(in, "doc_id", "text", base,
+        s"$base/ckpt", org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    }
     require(KeyedView.cursor(s, vroot) == before,
       "replayed chain maintenance must be a no-op")
     KeyedView.read(s, vroot)
@@ -640,10 +578,8 @@ object Extensions {
     * as `sim_topk_ivf_incremental`, so the SAME oracle SQL gates it
     * (centroids seeded from vec_id % 3 = 0, the first batch). */
   def simStreamingIndex(s: SparkSession, d: String): DataFrame = {
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/ssim_$tag"
+    val base = freshDir(s, "ssim", d)
     val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
     val e = embs(s, d).select(col("vec_id"), col("embedding"))
     // one parquet file per batch, mtimes pinned: the file source orders
     // by modification time and the centroid seed comes from the FIRST
@@ -660,20 +596,13 @@ object Extensions {
       fs.setTimes(dst, 1700000000000L + i * 60000L, -1L)
       fs.delete(new org.apache.hadoop.fs.Path(stage), true)
     }
-    def run(): Unit = graft.streaming.StreamingIngest.awaitWithRestartRetry(() =>
-      graft.streaming.StreamingSimilarity.start(
-        s.readStream.schema(e.schema).option("maxFilesPerTrigger", 1)
-          .parquet(s"$base/in"),
-        "vec_id", "embedding", base, s"$base/ckpt",
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    run()
-    // the crash: the final epoch's STREAM commit vanishes — restart
-    // re-delivers the batch; the idempotent epoch commits must keep
-    // corpus, centroid generation, and index exact
-    val commits = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits"))
-      .map(_.getPath.getName).filterNot(_.startsWith(".")).map(_.toLong).sorted
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits/${commits.last}"), false)
-    run()
+    // the crash replay must keep corpus, centroid generation, and index
+    // exact
+    crashReplay(s, base)(() => graft.streaming.StreamingSimilarity.start(
+      s.readStream.schema(e.schema).option("maxFilesPerTrigger", 1)
+        .parquet(s"$base/in"),
+      "vec_id", "embedding", base, s"$base/ckpt",
+      org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     // DELETE-THEN-QUERY (offboarding/re-canonicalization): tombstone
     // vec_id % 17 = 3, CRASH-REPLAY the delete epoch (second commit is a
     // no-op), and search — the oracle excludes the deleted ids from the
@@ -695,8 +624,7 @@ object Extensions {
     * the pruning itself is metric-asserted in DedupSimilaritySpec. */
   def simTopKIvfClustered(s: SparkSession, d: String): DataFrame = {
     val e = embs(s, d)
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val lake = s"/root/repo/target/tmp/celllake_$tag"
+    val lake = freshDir(s, "celllake", d)
     val cents = Similarity.seedCentroids(e, "vec_id", "embedding", 16)
     Similarity.writeCellPartitioned(cents, e, "vec_id", "embedding", lake)
     Similarity.ivfTopKCellPartitioned(s, lake, cents, e.filter(col("vec_id") < 10),
@@ -938,10 +866,7 @@ object Extensions {
     * must equal the one-shot — the oracle is literally
     * `text_perplexity_filter`'s SQL. */
   def textPerplexityIncremental(s: SparkSession, d: String): DataFrame = {
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/lm_$tag"
-    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(s, "lm", d)
     val all = docs(s, d)
     val ref = all.filter(col("doc_id") % 10 === 1)
     (0 until 3).foreach(i => TextAnalysis.commitLmBatch(
@@ -977,10 +902,7 @@ object Extensions {
     * corpus-scan ≡ DuckDB", with document text never read at query
     * time. */
   def textBm25Incremental(s: SparkSession, d: String): DataFrame = {
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/textidx_$tag"
-    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(s, "textidx", d)
     val all = docs(s, d)
     (0 until 3).foreach(i => graft.operators.TextIndex.commitPostings(
       all.filter(col("doc_id") % 3 === i), "doc_id", "text", root, i.toLong))
@@ -1293,10 +1215,7 @@ object Extensions {
     * enumeration — the same SQL oracle as `graph_triangles`. */
   def graphStreamingMetrics(s: SparkSession, d: String): DataFrame = {
     import graft.streaming.StreamingDedup
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/gsm_$tag"
-    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = freshDir(s, "gsm", d)
     val edges = Similarity.knnGraphIvf(embs(s, d), "vec_id", "embedding",
       k = 3, nCells = 16)
       .select(col("vec_id").as("id_a"), col("neighbor_id").as("id_b"))
@@ -1401,10 +1320,7 @@ object Extensions {
     * one-shot ≡ DuckDB" with nothing recomputed from raw text at
     * query time. */
   def textDedupSubstringsIncremental(s: SparkSession, d: String): DataFrame = {
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/ssidx_$tag"
-    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(s, "ssidx", d)
     val all = docs(s, d)
     (0 until 3).foreach(i => Dedup.commitSubstringBatch(
       all.filter(col("doc_id") % 3 === i), "doc_id", "text", root, i.toLong))
@@ -1555,10 +1471,7 @@ object Extensions {
     * oracle (the plain exact top-20 with TRUE flags) hash-matches iff
     * the sketch honors its contract through epochs and folds. */
   def textCmsIncremental(s: SparkSession, d: String): DataFrame = {
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/cmsidx_$tag"
-    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(s, "cmsidx", d)
     val all = docs(s, d)
     val C = graft.operators.CmsIndex
     (0 until 3).foreach(i => C.commitBatch(
@@ -1582,10 +1495,7 @@ object Extensions {
     * is answered from posting-list position intersections alone — the
     * oracle scans tokens for the adjacency directly. */
   def textPhraseSearch(s: SparkSession, d: String): DataFrame = {
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/phraseidx_$tag"
-    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(s, "phraseidx", d)
     val all = docs(s, d)
     (0 until 3).foreach(i => graft.operators.TextIndex.commitPostings(
       all.filter(col("doc_id") % 3 === i), "doc_id", "text", root, i.toLong))
@@ -1835,8 +1745,7 @@ object Extensions {
     * by parquet footers; a corpus change rebuilds via `build`. */
   private def canonicalMapArtifact(s: SparkSession, d: String,
       prefix: String)(build: => DataFrame): DataFrame = {
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/${prefix}_$tag"
+    val base = s"${GraftSession.scratchRoot}/tmp/${prefix}_${GraftSession.tag(d)}"
     val all = docs(s, d)
     val key = {
       val r = all.agg(count(lit(1)), max(col("doc_id"))).head()
@@ -1897,11 +1806,8 @@ object Extensions {
   def tenantPurgeDerived(s: SparkSession, d: String): DataFrame = {
     import graft.operators.{BloomIndex, TextIndex, ZoneMap}
     import graft.sources.{TenantArtifacts, TransactionalLake}
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/purgederiv_$tag"
-    val fsys = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    fsys.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = freshDir(s, "purgederiv", d)
+    val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
     val all = docs(s, d).select(col("doc_id"), col("text"),
       concat(lit("t"), (col("doc_id") % 3).cast("string")).as("tenant"))
     val subBase = s"$base/substr"
@@ -2084,9 +1990,9 @@ object Extensions {
     * the PNG bytes with javax.imageio and reproduce the channel means
     * computed from the raw pixel arrays before encoding — a lossless
     * round-trip, so any codec defect breaks the hash match. */
-  private val mmFixture = "/root/repo/target/multimodal_fixture"
-  private val mmDedupFixture = "/root/repo/target/multimodal_neardup_fixture"
-  private val mmMixedFixture = "/root/repo/target/multimodal_mixed_fixture"
+  private val mmFixture = s"${GraftSession.scratchRoot}/multimodal_fixture"
+  private val mmDedupFixture = s"${GraftSession.scratchRoot}/multimodal_neardup_fixture"
+  private val mmMixedFixture = s"${GraftSession.scratchRoot}/multimodal_mixed_fixture"
 
   /** MIXED-CODEC gate ([[Multimodal.ensureMixedCodecFixture]]): PNG +
     * JPEG + planted undecodable payloads through ONE media table, the

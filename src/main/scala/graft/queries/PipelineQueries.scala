@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.Tables
+import graft.{GraftSession, Tables}
+import graft.GraftSession.freshDir
 import graft.ingest.Ingest
 import graft.model.Schemas
 import graft.operators.{TenantContext, TenantQueries}
@@ -85,10 +86,7 @@ object PipelineQueries {
     * the raw user_id column is absent from the output schema and the
     * scan pruned on the tenant partition. */
   def maskedView(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/masked_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(spark, "masked", dir)
     val planted = events(spark, dir).filter(col("event_id") <= 2000)
       .withColumn("props", concat(col("props"),
         when(col("event_id") % 3 === 0,
@@ -117,9 +115,7 @@ object PipelineQueries {
     * equivalent direct SQL; this entry proves the lake round-trip preserves
     * semantics. */
   def lakeRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val root = s"/root/repo/target/tmp/lake_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(spark, "lake", dir)
     // bounded event_id prefix: keeps a real multi-hour, multi-tenant
     // partition spread (derivation + pruning are exercised for real) while
     // capping the toy lake's partition count; full-table per-row
@@ -165,10 +161,8 @@ object PipelineQueries {
     * oracle-gated by pipe_partition_derive and pipe_lake_roundtrip. */
   def streamingRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/stream_$tag"
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val tag = GraftSession.tag(dir)
+    val base = freshDir(spark, "stream", dir)
     val (inDir, lake, ckpt) = (s"$base/in", s"$base/lake", s"$base/ckpt")
     // `error`-typed events carry an unparsable payload → they must be
     // routed to error/, exercising the S6 split through the stream
@@ -230,12 +224,10 @@ object PipelineQueries {
   /** Shared crash-replay fixture for the delivery-semantics gates: the
     * bounded events prefix (error rows excluded — the duplicate-epoch
     * mechanics are identical and S6 is gated elsewhere) as envelope JSON
-    * under `base`/in; returns the stream-reader factory. */
+    * under the fresh `base`/in; returns the stream-reader factory. */
   private def replayFixture(spark: SparkSession, dir: String,
                             base: String): () => DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
     val inDir = s"$base/in"
     events(spark, dir)
       .filter(col("event_id") <= 5000 && col("event_type") =!= "error")
@@ -256,8 +248,7 @@ object PipelineQueries {
   private val replayIngestEpoch = 1704067200L
 
   def streamingExactlyOnce(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/sxo_$tag"
+    val base = freshDir(spark, "sxo", dir)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val mkRaw = replayFixture(spark, dir, base)
     val (lake, ckpt) = (s"$base/lake", s"$base/ckpt")
@@ -292,8 +283,7 @@ object PipelineQueries {
     * and re-commits, and the committed view is byte-equal to the
     * no-failure run with zero dedup. */
   def streamingTransactional(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/stx_$tag"
+    val base = freshDir(spark, "stx", dir)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val mkRaw = replayFixture(spark, dir, base)
     val (lake, ckpt) = (s"$base/lake", s"$base/ckpt")
@@ -329,10 +319,8 @@ object PipelineQueries {
     * maintained batch-by-batch under a crash ≡ full recompute". */
   def streamingView(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/svw_$tag"
+    val base = freshDir(spark, "svw", dir)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
     events(spark, dir)
       .filter(col("event_id") <= 5000 && col("event_type") =!= "error")
       .select(
@@ -389,10 +377,7 @@ object PipelineQueries {
     * duplicates, nor re-tenants a single record. */
   def httpIngestRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/http_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = freshDir(spark, "http", dir)
     // producer side: a signed token per tenant, every record POSTed
     val b64e = java.util.Base64.getUrlEncoder.withoutPadding()
     def enc(s: String) = b64e.encodeToString(s.getBytes("UTF-8"))
@@ -473,10 +458,7 @@ object PipelineQueries {
     * preserved every row and every partition value (epoch included). */
   def epochFoldRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.TransactionalLake
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/efold_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(spark, "efold", dir)
     val enriched = Ingest.derivePartitions(
       Ingest.enrich(
         events(spark, dir).filter(col("user_id") % 3 === 1 && col("event_id") <= 2000),
@@ -513,10 +495,8 @@ object PipelineQueries {
     * proves the dynamic-overwrite rewrite preserved every row while
     * `SkewLakeSpec` separately proves the file count drops. */
   def compactRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/compact_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val tag = GraftSession.tag(dir)
+    val root = freshDir(spark, "compact", dir)
     val tbl = s"compact_events_$tag"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     // deterministic event_id prefix: bounds the toy lake's partition
@@ -541,10 +521,8 @@ object PipelineQueries {
     * storage half (files/bytes — not SQL-derivable by the oracle) is
     * require-guarded here and spec-checked in LakePurgeSpec. */
   def tenantUsage(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/usage_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val tag = GraftSession.tag(dir)
+    val root = freshDir(spark, "usage", dir)
     val tbl = s"usage_events_$tag"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     val enriched = Ingest.derivePartitions(
@@ -569,10 +547,7 @@ object PipelineQueries {
     * The oracle derives the same rows from `events` by the batch
     * predicate. */
   def timeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/ttravel_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(spark, "ttravel", dir)
     val cols = Seq("event_id", "event_type", "value",
       "tenant", "year", "month", "day", "hour")
     val enriched = Ingest.derivePartitions(
@@ -597,13 +572,8 @@ object PipelineQueries {
     * directly from `events`, so the gate is "incrementally maintained
     * state ≡ full recompute". */
   def incrementalView(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/ivmlake_$tag"
-    val view = s"/root/repo/target/tmp/ivmview_$tag"
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    f.delete(new org.apache.hadoop.fs.Path(root), true)
-    f.delete(new org.apache.hadoop.fs.Path(view), true)
+    val root = freshDir(spark, "ivmlake", dir)
+    val view = freshDir(spark, "ivmview", dir)
     val T = graft.sources.TransactionalLake
     val V = graft.sources.MaterializedView
     val cols = Seq("event_id", "event_type", "value",
@@ -645,13 +615,8 @@ object PipelineQueries {
     * recomputes the aggregate from the resolved final state, so the gate
     * is "key-indexed incremental maintenance ≡ full recompute". */
   def keyedView(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/kvlake_$tag"
-    val view = s"/root/repo/target/tmp/kvview_$tag"
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    f.delete(new org.apache.hadoop.fs.Path(root), true)
-    f.delete(new org.apache.hadoop.fs.Path(view), true)
+    val root = freshDir(spark, "kvlake", dir)
+    val view = freshDir(spark, "kvview", dir)
     val T = graft.sources.TransactionalLake
     val K = graft.sources.KeyedView
     val base = events(spark, dir).filter(col("event_id") <= 3000)
@@ -709,13 +674,8 @@ object PipelineQueries {
     * state, so the gate is "buffered incremental extrema ≡ full
     * recompute". */
   def extremaView(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/exlake_$tag"
-    val view = s"/root/repo/target/tmp/exview_$tag"
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    f.delete(new org.apache.hadoop.fs.Path(root), true)
-    f.delete(new org.apache.hadoop.fs.Path(view), true)
+    val root = freshDir(spark, "exlake", dir)
+    val view = freshDir(spark, "exview", dir)
     val T = graft.sources.TransactionalLake
     val K = graft.sources.KeyedView
     val base = events(spark, dir).filter(col("event_id") <= 3000)
@@ -767,13 +727,8 @@ object PipelineQueries {
     * PRIOR resolved placement. Identical oracle as the keyed variant —
     * two maintenance strategies, one recompute ground truth. */
   def mergedView(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/mvlake_$tag"
-    val view = s"/root/repo/target/tmp/mvview_$tag"
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    f.delete(new org.apache.hadoop.fs.Path(root), true)
-    f.delete(new org.apache.hadoop.fs.Path(view), true)
+    val root = freshDir(spark, "mvlake", dir)
+    val view = freshDir(spark, "mvview", dir)
     val T = graft.sources.TransactionalLake
     val V = graft.sources.MaterializedView
     val base = events(spark, dir).filter(col("event_id") <= 3000)
@@ -890,11 +845,9 @@ object PipelineQueries {
     * that NULL pattern, so a crawler that dropped either generation (or
     * failed to merge schemas) hash-mismatches. */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/sevo_$tag"
+    val tag = GraftSession.tag(dir)
+    val root = freshDir(spark, "sevo", dir)
     val tbl = s"sevo_tbl_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     val enriched = Ingest.derivePartitions(
       Ingest.enrich(events(spark, dir).filter(col("event_id") <= 2000),
@@ -923,11 +876,8 @@ object PipelineQueries {
     * re-scanned for index maintenance — the property that matters at
     * 100 TB, where rebuilding file stats per batch would be O(lake). */
   def zoneMapIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/zmi_$tag"
+    val root = freshDir(spark, "zmi", dir)
     val statsRoot = s"$root/stats"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
     val base = events(spark, dir).filter(col("event_id") <= 2000)
       .select(col("event_id"), col("event_type"), col("value"))
     val T = graft.sources.TransactionalLake
@@ -952,11 +902,8 @@ object PipelineQueries {
     * a no-op, and an IN-list probe spanning all three epoch parities
     * prunes at the file level (asserted) while answering exactly. */
   def bloomIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/bli_$tag"
+    val root = freshDir(spark, "bli", dir)
     val indexRoot = s"$root/bloom"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
     val base = events(spark, dir).filter(col("event_id") <= 2000)
       .select(col("event_id"), col("event_type"), col("value"))
     val T = graft.sources.TransactionalLake
@@ -985,11 +932,8 @@ object PipelineQueries {
     * IN-probe at the file level. Same probe set, same oracle as the
     * pre-fold gate: retention must be invisible to answers. */
   def bloomRefold(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/blr_$tag"
+    val root = freshDir(spark, "blr", dir)
     val indexRoot = s"$root/bloom"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
     val base = events(spark, dir).filter(col("event_id") <= 2000)
       .select(col("event_id"), col("event_type"), col("value"))
     val T = graft.sources.TransactionalLake
@@ -1024,11 +968,8 @@ object PipelineQueries {
     * Same selective range, same oracle as the pre-fold gate: retention
     * must be invisible to answers. */
   def zoneMapRefold(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/zmr_$tag"
+    val root = freshDir(spark, "zmr", dir)
     val statsRoot = s"$root/stats"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
     val base = events(spark, dir).filter(col("event_id") <= 2000)
       .select(col("event_id"), col("event_type"), col("value"))
     val T = graft.sources.TransactionalLake
@@ -1059,10 +1000,8 @@ object PipelineQueries {
     * fresh uncommitted epoch under a real horizon is the
     * concurrent-writer case, covered in `VacuumSpec`. */
   def vacuumGate(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/vac_$tag"
+    val root = freshDir(spark, "vac", dir)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
     val cols = Seq("event_id", "event_type", "value",
       "tenant", "year", "month", "day", "hour")
     val enriched = Ingest.derivePartitions(
@@ -1103,10 +1042,7 @@ object PipelineQueries {
     * 'error' and the value ceiling is deliberately tight, so real
     * violation counts flow per epoch (not a vacuous all-zeros report). */
   def dqEpochs(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/dqep_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(spark, "dqep", dir)
     val enriched = Ingest.derivePartitions(
       Ingest.enrich(events(spark, dir).filter(col("event_id") <= 2000),
         tenantCol, unix_timestamp(col("ts"))))
@@ -1174,10 +1110,7 @@ object PipelineQueries {
     * re-inserting deleted keys). Epochs <= 1 are then FOLDED. */
   private def mergeFixture(spark: SparkSession, dir: String,
                            kind: String): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/${kind}_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshDir(spark, kind, dir)
     val T = graft.sources.TransactionalLake
     val base = events(spark, dir).filter(col("event_id") <= 3000)
       .select("event_id", "event_type", "value")
@@ -1209,11 +1142,9 @@ object PipelineQueries {
     * REPLAYED epoch commit after the purge staying a no-op (the purged
     * tenant must not resurrect from crash replay). */
   def tenantPurge(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = s"/root/repo/target/tmp/purge_$tag"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val tag = GraftSession.tag(dir)
+    val root = freshDir(spark, "purge", dir)
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val tbl = s"purge_events_$tag"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     val cols = Seq("event_id", "event_type", "value",
@@ -1295,10 +1226,8 @@ object PipelineQueries {
     * batch equals the batch join, which is the oracle. */
   def streamingStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val in = s"/root/repo/target/tmp/ssenrich_$tag/in"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(s"/root/repo/target/tmp/ssenrich_$tag"), true)
+    val tag = GraftSession.tag(dir)
+    val in = s"${freshDir(spark, "ssenrich", dir)}/in"
     events(spark, dir).filter(col("event_id") <= 20000)
       .select(col("event_id"), col("user_id"))
       .write.mode("overwrite").json(in)
@@ -1341,10 +1270,8 @@ object PipelineQueries {
     * double cast keeps it bit-exact. */
   def streamingWindowAgg(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val in = s"/root/repo/target/tmp/swin_$tag/in"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(s"/root/repo/target/tmp/swin_$tag"), true)
+    val tag = GraftSession.tag(dir)
+    val in = s"${freshDir(spark, "swin", dir)}/in"
     // all files present before start + no maxFilesPerTrigger → ONE
     // micro-batch under AvailableNow (and complete-mode output equals
     // the batch aggregate regardless of batching); parallel files keep
@@ -1379,10 +1306,8 @@ object PipelineQueries {
     * DISTINCT, which is the oracle. */
   def streamingDedup(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val in = s"/root/repo/target/tmp/sdedup_$tag/in"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(s"/root/repo/target/tmp/sdedup_$tag"), true)
+    val tag = GraftSession.tag(dir)
+    val in = s"${freshDir(spark, "pdedup", dir)}/in"
     // single BATCH (not single file) is what makes the kept key set equal
     // batch DISTINCT: all files land before start and AvailableNow has no
     // file cap, so dedup state sees everything in one pass; bounded
@@ -1395,7 +1320,7 @@ object PipelineQueries {
         StructField("user_id", LongType), StructField("event_type", StringType),
         StructField("ts", TimestampType))))
       .json(in)
-    val qn = s"sdedup_$tag"
+    val qn = s"pdedup_$tag"
     withShufflePartitions(spark, 8) {
       val q = graft.streaming.StreamingAggregates
         .dedupWithinWatermark(raw, "ts", Seq("user_id", "event_type"))
@@ -1415,10 +1340,8 @@ object PipelineQueries {
     * join, which is the oracle. */
   def streamingJoin(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/sjoin_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(base), true)
+    val tag = GraftSession.tag(dir)
+    val base = freshDir(spark, "sjoin", dir)
     // bounded prefix: join-state cost scales with rows buffered per
     // watermark window; the correctness proof doesn't need the full toy SF
     val ev = events(spark, dir).filter(col("event_id") <= 20000)
@@ -1460,10 +1383,8 @@ object PipelineQueries {
     * rather than fixture-luck. */
   def streamingOuterJoin(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/sojoin_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(base), true)
+    val tag = GraftSession.tag(dir)
+    val base = freshDir(spark, "sojoin", dir)
     val ev = events(spark, dir).filter(col("event_id") <= 20000)
       .withColumn("ts", date_trunc("second", col("ts")))
     ev.filter(col("event_type") === "click")
@@ -1506,10 +1427,8 @@ object PipelineQueries {
     * epoch bounds are not. */
   def streamingSessions(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"/root/repo/target/tmp/ssess_$tag"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(base), true)
+    val tag = GraftSession.tag(dir)
+    val base = freshDir(spark, "ssess", dir)
     // whole-second timestamps: a sub-second component on the MAX event ts
     // shifts the final watermark by that fraction, which flips the
     // timeout rule's boundary case (endEpoch == maxTs-3600) — truncation

@@ -196,41 +196,24 @@ object TransactionalLake {
     * references — each generation a (data-dir id, sorted epoch ids) pair.
     * Readers take the HIGHEST view file — pointer files are never mutated
     * in place, so this is race-free. View file format: one line per
-    * generation, `<genId>:<epochId,epochId,...>`; a bare id list (no ':')
-    * is the pre-tiering single-generation format, whose data dir id IS
-    * the view number. */
-  def foldView(spark: SparkSession, root: String): Option[(Long, Seq[(Long, Seq[Long])])] = {
-    val dir = new Path(foldPointerDir(root))
-    val f = fs(spark, root)
-    if (!f.exists(dir)) return None
-    val views = f.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith("gen-")).map(_.stripPrefix("gen-").toLong)
-    if (views.isEmpty) return None
-    val v = views.max
-    val in = f.open(new Path(s"${foldPointerDir(root)}/gen-$v"))
-    val content =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def ids(s: String): Seq[Long] = s.trim match {
-      case "" => Seq.empty[Long]
-      case t  => t.split(",").map(_.trim.toLong).toSeq.sorted
+    * generation, `<genId>:<epochId,epochId,...>`, plus '#' metadata lines
+    * (the compaction horizon). */
+  def foldView(spark: SparkSession, root: String): Option[(Long, Seq[(Long, Seq[Long])])] =
+    viewFile(spark, root).map { case (v, content) =>
+      val gens = content.split("\n").toSeq.map(_.trim)
+        .filter(l => l.nonEmpty && !l.startsWith("#"))
+        .map { line =>
+          require(line.contains(':'), s"fold view gen-$v of $root holds " +
+            s"'$line', not a '<genId>:<epochIds>' generation line")
+          val Array(g, es) = line.split(":", 2): @unchecked
+          (g.trim.toLong,
+            es.split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq.sorted)
+        }.sortBy(_._1)
+      (v, gens)
     }
-    val gens = content.trim match {
-      case "" => Seq.empty[(Long, Seq[Long])]
-      case c if c.contains(':') =>
-        c.split("\n").toSeq.map(_.trim)
-          .filter(l => l.nonEmpty && !l.startsWith("#")) // '#' = metadata lines (e.g. the compaction horizon)
-          .map { line =>
-            val Array(g, rest@_*) = line.split(":", 2): @unchecked
-            (g.trim.toLong, ids(rest.headOption.getOrElse("")))
-          }.sortBy(_._1)
-      case c => Seq((v, ids(c)))
-    }
-    Some((v, gens))
-  }
 
-  /** Raw content of the highest fold-view file, if any. */
-  private def viewFileContent(spark: SparkSession, root: String): Option[String] = {
+  /** Number and raw content of the highest fold-view file, if any. */
+  private def viewFile(spark: SparkSession, root: String): Option[(Long, String)] = {
     val dir = new Path(foldPointerDir(root))
     val f = fs(spark, root)
     if (!f.exists(dir)) return None
@@ -238,7 +221,7 @@ object TransactionalLake {
       .filter(_.startsWith("gen-")).map(_.stripPrefix("gen-").toLong)
     if (views.isEmpty) return None
     val in = f.open(new Path(s"${foldPointerDir(root)}/gen-${views.max}"))
-    try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+    try Some((views.max, scala.io.Source.fromInputStream(in, "UTF-8").mkString))
     finally in.close()
   }
 
@@ -250,8 +233,8 @@ object TransactionalLake {
     * `#compact:<epoch>` metadata line inside the fold-view file, so it
     * flips atomically with the data view and survives later folds. */
   def compactionHorizon(spark: SparkSession, root: String): Long =
-    viewFileContent(spark, root).flatMap {
-      _.split("\n").map(_.trim).find(_.startsWith("#compact:"))
+    viewFile(spark, root).flatMap {
+      _._2.split("\n").map(_.trim).find(_.startsWith("#compact:"))
         .map(_.stripPrefix("#compact:").trim.toLong)
     }.getOrElse(-1L)
 

@@ -95,37 +95,29 @@ class BloomIndexSpec extends SparkSpec {
     assert(viaDouble === Seq(21L), "exactly-representable Double probe")
   }
 
-  test("legacy rows without key_type union and probe via the recorded type") {
-    // epochs indexed before the key_type column existed surface with a
-    // NULL key_type after the fold-aware union — the index must neither
-    // throw a column-mismatch nor a mixed-type error, and probes use the
-    // one recorded type (all rows came from the same key column)
+  test("legacy rows without key_type fail loud: legacy-only, all-NULL, mixed") {
+    // an index written before the key_type column existed cannot say
+    // which type its probes must hash as — every shape of it RAISES with
+    // a rebuild message instead of silently hashing untyped
     val root = tmpDir("bl_legacy")
     writeScattered(root)
     val typed = BloomIndex.buildIndex(spark, root, "k")
     val legacy = typed.drop("key_type")
-    // disjoint file subsets, as a real live-epochs ∪ fold-generation is
+    def rejected(idx: org.apache.spark.sql.DataFrame): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        BloomIndex.prunedPointRead(spark, idx, "k", 777L).count()
+      }
+      assert(e.getMessage.contains("rebuild"), e.getMessage)
+    }
+    // legacy-ONLY index (every row pre-key_type)
+    rejected(legacy)
+    // an index that HAS the column but only NULL values in it
+    rejected(legacy.withColumn("key_type", lit(null).cast("string")))
+    // MIXED: legacy NULL-key_type rows unioned with typed rows over
+    // disjoint file subsets, as a live-epochs ∪ fold-generation would be
     val f0 = typed.select("file").head.getString(0)
-    val mixed = typed.filter(col("file") === f0)
-      .unionByName(legacy.filter(col("file") =!= f0),
-        allowMissingColumns = true)
-    val got = BloomIndex.prunedPointRead(spark, mixed, "k", 777L)
-      .select("v").as[Long].collect().toSeq
-    assert(got === Seq(777L * 3))
-    // legacy-ONLY index (every row pre-key_type): RAISES with a rebuild
-    // message instead of silently hashing untyped — "caller owns type
-    // agreement" was the silent-false-negative contract r10 flagged
-    val e = intercept[IllegalArgumentException] {
-      BloomIndex.prunedPointRead(spark, legacy, "k", 777L).count()
-    }
-    assert(e.getMessage.contains("rebuild"), e.getMessage)
-    // same for an index that HAS the column but only NULL values in it
-    val allNull = legacy.withColumn("key_type",
-      lit(null).cast("string"))
-    val e2 = intercept[IllegalArgumentException] {
-      BloomIndex.prunedPointRead(spark, allNull, "k", 777L).count()
-    }
-    assert(e2.getMessage.contains("rebuild"), e2.getMessage)
+    rejected(typed.filter(col("file") === f0)
+      .unionByName(legacy.filter(col("file") =!= f0), allowMissingColumns = true))
   }
 
   test("string keys: same build/probe expression, same guarantee") {

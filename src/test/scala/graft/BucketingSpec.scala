@@ -15,7 +15,7 @@ class BucketingSpec extends SparkSpec {
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     Seq("li_bucketed", "ord_bucketed").foreach { t =>
       fs.delete(new org.apache.hadoop.fs.Path(
-        s"/root/repo/target/spark-warehouse/$t"), true)
+        s"${spark.sessionState.conf.warehousePath}/$t"), true)
     }
     Tables.load(spark, sf0001, "lineitem")
       .write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")

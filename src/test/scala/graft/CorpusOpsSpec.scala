@@ -321,7 +321,7 @@ class CorpusOpsSpec extends SparkSpec {
     // warm call reuses the artifact — same output, no rebuild (marker
     // mtime unchanged proves the fold did not re-run)
     val marker = java.nio.file.Paths.get(
-      s"/root/repo/target/tmp/canon_map_${sf0001.replaceAll("[^a-zA-Z0-9]", "_")}/_OK")
+      s"${GraftSession.scratchRoot}/tmp/canon_map_${GraftSession.tag(sf0001)}/_OK")
     val t0 = java.nio.file.Files.getLastModifiedTime(marker)
     val v4warm = graft.queries.Extensions.queries("train_corpus_prep_v4")(spark, sf0001)
       .as[(String, Long, Long, Long)].collect().toSeq

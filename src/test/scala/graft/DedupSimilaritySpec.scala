@@ -456,8 +456,7 @@ class DedupSimilaritySpec extends SparkSpec {
       Dedup.minhashBandIndex(corpus, "doc_id", "text"), "doc_id", "text")
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(viaPersisted == viaFresh)
-    // legacy index (no embedded parameters): band-count mismatch is still
-    // caught by the full max(band) fallback even when band-0 rows lead
+    // an index without its embedded parameters is refused outright
     val legacyNarrow = Dedup.minhashBandIndex(corpus, "doc_id", "text",
       bands = 8, rowsPerBand = 8).drop("bands", "rows_per_band")
       .orderBy("band", "bucket")

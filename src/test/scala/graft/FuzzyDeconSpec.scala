@@ -58,7 +58,7 @@ class FuzzyDeconSpec extends SparkSpec {
   }
 
   test("streamed quarantine log equals the one-shot fuzzy pass") {
-    val base = "/root/repo/target/tmp/fuzzy_decon_spec"
+    val base = s"${GraftSession.scratchRoot}/tmp/fuzzy_decon_spec"
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(base), true)

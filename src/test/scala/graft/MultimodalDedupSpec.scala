@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * hash is bit-stable under PNG re-encode. */
 class MultimodalDedupSpec extends SparkSpec {
 
-  private val dir = "/root/repo/target/tmp/mm_dedup_spec_fixture"
+  private val dir = s"${GraftSession.scratchRoot}/tmp/mm_dedup_spec_fixture"
 
   private lazy val codes = {
     org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)

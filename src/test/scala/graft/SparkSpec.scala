@@ -3,18 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole test run. */
+/** One shared local session for the whole test run, under the timed
+  * config. */
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
@@ -22,7 +14,8 @@ abstract class SparkSpec extends AnyFunSuite {
   val sf0001 = "/root/testdata/sf0.001"
   def tmpDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), prefix)
+      java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(GraftSession.scratchRoot)), prefix)
     d.toString
   }
 }

@@ -137,4 +137,12 @@ class StreamingDedupSpec extends SparkSpec {
     assert(StreamingDedup.maintainCanonical(spark, base, "doc_id").isEmpty,
       "folded pair epochs must stay applied in the maintenance done-set")
   }
+
+  test("dedup_streaming_index's pair log survives a later pipe_streaming_dedup run") {
+    // the entry's frame reads its committed pair log lazily; another
+    // entry's fixture must never delete that directory underneath it
+    val pairs = graft.queries.Extensions.queries("dedup_streaming_index")(spark, sf0001)
+    graft.queries.PipelineQueries.queries("pipe_streaming_dedup")(spark, sf0001).collect()
+    assert(pairs.collect().nonEmpty)
+  }
 }

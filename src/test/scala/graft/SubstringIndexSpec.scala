@@ -124,32 +124,31 @@ class SubstringIndexSpec extends SparkSpec {
     assert(got("sB") === expect(Seq(9L, 10L)))
   }
 
-  test("pre-upgrade root (gram epochs without df deltas) is backfilled") {
+  test("a crash between the gram and df commits of an epoch recovers on replay") {
     val root = freshRoot()
-    // build epoch 0 (docs 3, 6, 9 — the same-batch `shared` pairs),
-    // then simulate a root committed by the pre-df-artifact version:
-    // delete the df lake entirely
-    Dedup.commitSubstringBatch(corpus.filter(col("doc_id") % 3 === 0),
-      "doc_id", "text", root, 0L)
+    commitAll(root)
+    // the crash window: epoch 2's gram postings are committed, its df
+    // delta and best delta are not (neither manifest entry nor data)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$root/df"), true))
-    // epoch 1 carries doc 1, whose only repeat partners live in epoch
-    // 0: its anchor keys need CORPUS df >= 2, and the batch's own df
-    // delta alone reads df = 1 for them — without the backfill the
-    // gate would silently drop doc 1's repeat and served() would
-    // diverge from the one-shot
-    (1 until 3).foreach(i => Dedup.commitSubstringBatch(
-      corpus.filter(col("doc_id") % 3 === i), "doc_id", "text", root,
-      i.toLong))
+    Seq("df", "best").foreach { lake =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$root/$lake/_manifest/2"), false)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$root/$lake/data/epoch=2"), true)
+    }
+    assert(graft.sources.TransactionalLake.isCommitted(spark, s"$root/grams", 2L))
+    assert(!graft.sources.TransactionalLake.isCommitted(spark, s"$root/df", 2L))
+    // replay epoch 2: the gram commit is a no-op, the df delta is
+    // recounted from the committed postings
+    Dedup.commitSubstringBatch(corpus.filter(col("doc_id") % 3 === 2),
+      "doc_id", "text", root, 2L)
+    val T = graft.sources.TransactionalLake
+    val dfLake = T.readCommitted(spark, s"$root/df").groupBy("gkey")
+      .agg(sum(col("cnt")).as("n")).as[(Long, Long)].collect().toMap
+    val recount = T.readCommitted(spark, s"$root/grams").groupBy("gkey")
+      .agg(count(lit(1)).as("n")).as[(Long, Long)].collect().toMap
+    assert(recount.nonEmpty)
+    assert(dfLake === recount)
     assert(served(root) === oneShot)
-    assert(served(root).contains(1L))
-    // df lake now covers every gram epoch again
-    val gramEpochs = graft.sources.TransactionalLake
-      .committedEpochs(spark, s"$root/grams").toSet
-    val dfEpochs = graft.sources.TransactionalLake
-      .committedEpochs(spark, s"$root/df").toSet
-    assert(gramEpochs === dfEpochs)
   }
 
   test("anchor budget refuses loudly at commit time") {

@@ -191,32 +191,20 @@ class TransactionalSpec extends SparkSpec {
     assert((0L to 4L).forall(TransactionalLake.isCommitted(spark, lake, _)))
   }
 
-  test("tiered folds build on a legacy single-generation pointer") {
-    val lake = tmpDir("tx_legacy")
+  test("a bare fold pointer (no generation lines) fails loud") {
+    val lake = tmpDir("tx_bareptr")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     (0L to 2L).foreach(e => TransactionalLake.commitEpoch(epochFrame(e), lake, e))
-    val before = TransactionalLake.readCommitted(spark, lake)
-      .select("event_id", "payload", "epoch").orderBy("event_id").collect().toSeq
     assert(TransactionalLake.foldCommittedEpochs(spark, lake, upTo = 1L) == 2)
-    // rewrite the pointer in the PRE-TIERING format (bare id list, no
-    // generation lines) — lakes folded before the tiering change look
-    // exactly like this
+    // a bare epoch-id list where the `<gen>:<epochs>` lines belong
     val ptr = new org.apache.hadoop.fs.Path(s"$lake/_fold/gen-1")
     val out = fs.create(ptr, true)
     try out.write("0,1".getBytes("UTF-8")) finally out.close()
-    assert(TransactionalLake.foldView(spark, lake) ==
-      Some((1L, Seq((1L, Seq(0L, 1L))))), "legacy pointer must parse")
-    assert(TransactionalLake.readCommitted(spark, lake)
-      .select("event_id", "payload", "epoch").orderBy("event_id")
-      .collect().toSeq == before)
-    // the next (tiered) fold keeps the legacy generation as-is and adds
-    // a new one; the view is unchanged throughout
-    assert(TransactionalLake.foldCommittedEpochs(spark, lake, upTo = 2L) == 1)
-    assert(TransactionalLake.foldView(spark, lake).get._2 ==
-      Seq((1L, Seq(0L, 1L)), (2L, Seq(2L))))
-    assert(TransactionalLake.readCommitted(spark, lake)
-      .select("event_id", "payload", "epoch").orderBy("event_id")
-      .collect().toSeq == before)
+    val e = intercept[IllegalArgumentException](TransactionalLake.foldView(spark, lake))
+    assert(e.getMessage.contains("generation line"), e.getMessage)
+    assert(intercept[IllegalArgumentException] {
+      TransactionalLake.readCommitted(spark, lake).count()
+    }.getMessage.contains("generation line"))
   }
 
   test("an uncommitted fold stage is invisible; a crashed fold resumes correctly") {
