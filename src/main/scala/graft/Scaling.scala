@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   *    construction and any super-linear time is the plan's fault, not
   *    the data's.
   *
-  * Exponent = ln(t_big/t_small) / ln(rows_big/rows_small), median-of-3
-  * timings. O(n) → 1.0; O(n log n) at these sizes → ≈1.08; the gate in
+  * Exponent = ln(t_big/t_small) / ln(rows_big/rows_small), each leg
+  * timed to the full result (min-of-2, or the bench's median). O(n) →
+  * 1.0; O(n log n) at these sizes → ≈1.08; the gate in
   * tools/check_bench.py flags > 1.35 (noise margin) for queries whose
   * large-scale time is big enough to measure. Artifact:
   * `target/scaling.json`.
@@ -121,10 +122,9 @@ object Scaling {
     * `only`: optional query-name filter (CLI args) for fast iteration on
     * one operator's exponent without the full ~20 min sweep.
     * `knownBig`: already-measured sf0.1 medians from the SAME session
-    * (Bench passes its per-entry medians — median-of-3 with warm-up and
-    * retry adjudication, a strictly stronger measurement than this
-    * sweep's bare median-of-3) — entries present there skip the sf0.1
-    * re-timing leg. Standalone runs pass nothing and measure all legs. */
+    * (Bench passes its per-entry medians — median-of-3 after a warm-up,
+    * by the same full-result timer) — entries present there skip the
+    * sf0.1 re-timing leg. Standalone runs pass nothing and measure all legs. */
   def run(spark: SparkSession, only: Option[Set[String]] = None,
           knownBig: Map[String, Double] = Map.empty): String = {
     val sfSmall = "/root/testdata/sf0.01"
@@ -135,36 +135,12 @@ object Scaling {
     val synthDir = SynthDir
     ensureSynth(spark, sfBig, synthDir)
 
-    def quiesce(): Unit = {
-      spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => })
-      try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-      catch { case _: Throwable => }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-    // Host-state context for cross-window exponents (r16 ADVICE): the
-    // sf0.1 legs may be reused from bench medians measured up to an hour
-    // earlier, while the sf0.01/synth legs are timed NOW — under the
-    // documented hours-long contention windows the two legs can sit in
-    // different regimes. Each leg therefore records its offset from the
-    // sweep start, and a canary series (the bench's fixed CPU-bound
-    // probe, min-of-2) brackets the sweep, so a suspicious exponent is
-    // attributable to a machine window instead of guessed at.
+    // Each leg records its offset from the sweep start: the sf0.1 legs
+    // may be reused from bench medians measured up to an hour earlier,
+    // while the sf0.01/synth legs are timed NOW, so a suspicious exponent
+    // can be matched to the window its legs ran in.
     val sweepT0 = System.nanoTime()
     def offsetSec(): Double = (System.nanoTime() - sweepT0) / 1e9
-    def canaryProbe(): Double = {
-      quiesce()
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        spark.range(3000000000L)
-          .selectExpr("sum(cast(id as double) * cast(id as double))").head()
-        (System.nanoTime() - t0) / 1e9
-      }
-      math.min(once(), once())
-    }
-    val canaries = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    def recordCanary(): Unit = { canaries += ((offsetSec(), canaryProbe())); () }
     // The LSH blocker's bucket count is ITS scale knob (nBits ~ log2 n:
     // fixed buckets make within-bucket pairing quadratic by design, which
     // the operator's scaladoc documents). The synthetic ×8 point therefore
@@ -176,33 +152,21 @@ object Scaling {
           Tables.load(s, d, "embeddings"), "vec_id", "embedding",
           threshold = 0.4, nBits = 9)
       else SparkEntry.queries(name)
-    // Rep protocol (r17, disclosed in OPTIMIZATION_r17.md): the legs this
-    // sweep still times itself (sf0.01 + synth — the sf0.1 legs reuse the
-    // same session's bench medians) run MIN-OF-2 instead of median-of-3.
-    // Rationale: the standing methodology's own premise — external
-    // contention only ever inflates a timing — makes the min the robust
-    // cheap estimator, and the third rep bought ~6 min of the r16 driver
-    // wall (44 sf0.01 legs + 11 synth legs, train_corpus_prep_v2's synth
-    // leg alone 23.6 s/rep). Bias note: a min sits a few % under a
-    // median, so alpha_small (t1 in the denominator) shifts a few
-    // hundredths CONSERVATIVE (up) and alpha_large (t3 in the numerator)
-    // a few hundredths optimistic (down) — noise against the 1.35 gate
-    // with measured alphas 0.1–1.1.
+    // Rep protocol: the legs this sweep still times itself (sf0.01 +
+    // synth — the sf0.1 legs reuse the same session's bench medians) run
+    // MIN-OF-2 through Bench's quiesce and full-result timer, so every leg
+    // of an exponent is timed the same way. Bias note: a min sits a few %
+    // under a median, so alpha_small (t1 in the denominator) shifts a few
+    // hundredths CONSERVATIVE (up) and alpha_large (t3 in the numerator) a
+    // few hundredths optimistic (down) — noise against the 1.35 gate with
+    // measured alphas 0.1–1.1.
     def time(name: String, dir: String): Double = {
       val fn = fnFor(name, dir)
-      val ts = (1 to 2).map { _ =>
-        quiesce()
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      ts.min
+      Seq.fill(2) { Bench.quiesce(spark); Bench.timeToResult(fn(spark, dir)) }.min
     }
 
-    recordCanary()
     val subset = smallSubset.filter(q => only.forall(_.contains(q)))
-    val entries = subset.zipWithIndex.map { case (q, i) =>
-      if (i > 0 && i % 15 == 0) recordCanary()
+    val entries = subset.map { q =>
       val at1 = offsetSec()
       val t1 = time(q, sfSmall)
       val reused = knownBig.contains(q)
@@ -227,12 +191,8 @@ object Scaling {
         at3.map(a => s",${fmt(a)}").getOrElse("") + "]"
       s""""$q":{"t_sf001":${fmt(t1)},"t_sf01":${fmt(t2)},"alpha_small":${fmt(aSmall)}$extra$ats}"""
     }
-    recordCanary()
-    val canaryJson = canaries.map { case (at, s) => f"[${fmt(at)},${fmt(s)}]" }
-      .mkString("[", ",", "]")
     s"""{"rows_ratio_small":10,"rows_ratio_large":$SynthReplicas,""" +
       s""""reps":"min-of-2 (sf0.1 legs reuse the session's bench medians)",""" +
-      s""""canary":$canaryJson,""" +
       s""""queries":{${entries.mkString(",")}}}"""
   }
 

@@ -1,16 +1,22 @@
 #!/usr/bin/env python3
 """Round-over-round bench regression gate + scaling gate.
 
-Usage: check_bench.py <new_bench.json> <prev_BENCH_rNN.json> [threshold]
+Usage: check_bench.py <new_bench.json> <prev_bench.json> [threshold]
        check_bench.py --scaling <scaling.json> [alpha_threshold]
        check_bench.py --recall <ann_recall.json>
 
 <new_bench.json>: the bench's own JSON line (e.g. target/bench_last.json)
   or a driver BENCH_r{N}.json wrapper.
-<prev_BENCH_rNN.json>: same formats accepted.
+<prev_bench.json>: one previous record, same formats accepted (the full
+  record, bench_full_*.json, carries the spreads and fingerprints).
 threshold: per-query slowdown alarm factor (default 2.0). Queries faster
-  than 1 s in the baseline are exempt — sub-second queries at local[32]
-  show ~2x run-to-run jitter, so gating them only produces false alarms.
+  than 1 s in the baseline are exempt — sub-second queries show ~2x
+  run-to-run jitter, so gating them only produces false alarms.
+
+Two records compare only when they were timed the same way: a record's
+"timed_to" ("noop" = to the full result; records without the key were
+timed with .count()) must match, else exit 2. An entry whose result
+fingerprint moved between the two records prints FPRT and fails.
 
 --scaling mode reads graft.Scaling's target/scaling.json and flags any
 query whose empirical growth exponent exceeds the threshold (default
@@ -18,8 +24,9 @@ query whose empirical growth exponent exceeds the threshold (default
 headroom). Exponents measured from sub-2s large-scale times are reported
 but exempt: constant overheads dominate them.
 
-Exit 1 if any query regressed past the threshold or total regressed >1.5x
-(bench mode), or any measurable query grew super-linearly (scaling mode).
+Exit 1 if any query regressed past the threshold, changed its result
+fingerprint, or errored, or the total regressed >1.5x (bench mode), or
+any measurable query grew super-linearly (scaling mode).
 """
 import json
 import re
@@ -161,43 +168,31 @@ def main():
     new = load_bench(sys.argv[1])
     prev = load_bench(sys.argv[2])
     threshold = float(sys.argv[3]) if len(sys.argv) > 3 else 2.0
-    # optional 5th arg (r16 ADVICE): a single ANCHOR record whose total
-    # the 1.5x hard-fail compares against. A cross-run-minima merge sums
-    # per-entry minima no real run can achieve simultaneously (the r16
-    # record read 1.45x the minima total on a contended host), so against
-    # a minima baseline the total gate degraded to an always-FAIL signal.
-    # Per-entry regressions still gate against `prev` (the minima).
-    anchor = load_bench(sys.argv[4]) if len(sys.argv) > 4 else None
-    # a minima merge is not a single run: GONE there means "ever present
-    # in any historical record" — merge_minima now ages entries out, but
-    # treat any residual GONE as a warning, not a failure, for merges
-    prev_is_merge = "merged_from" in prev
+    timed = [r.get("timed_to", "count") for r in (new, prev)]
+    if timed[0] != timed[1]:
+        print(f"INCOMPARABLE: {sys.argv[1]} is timed to {timed[0]}, "
+              f"{sys.argv[2]} to {timed[1]}")
+        return 2
     noise_floor = 1.0
     bad = []
     for q, old_t in sorted(prev["queries"].items()):
         new_t = new["queries"].get(q)
         if new_t is None:
-            if prev_is_merge:
-                print(f"GONE {q}: was {old_t:.2f}s in a historical record, "
-                      "missing in new run (minima baseline — warning only; "
-                      "the round-over-round gate still fails real drops)")
-            else:
-                print(f"GONE {q}: was {old_t:.2f}s, missing in new run")
-                bad.append(q)
+            print(f"GONE {q}: was {old_t:.2f}s, missing in new run")
+            bad.append(q)
             continue
         ratio = new_t / old_t if old_t > 0 else float("inf")
         flag = old_t >= noise_floor and ratio > threshold
-        mark = "SLOW" if flag else "ok  "
-        # the bench records entries it SAW elevated but deliberately did
-        # not retry (sustained-contention backoff / wasted-retry budget)
-        # — annotate so the gate output carries the machine-state
-        # evidence next to the violation; the entry still FAILS
-        skip = new.get("level_skips", {}).get(q)
-        note = f" [bench recorded contended: {skip}]" if skip else ""
-        if flag or ratio > threshold:
-            print(f"{mark} {q}: {old_t:.2f}s -> {new_t:.2f}s ({ratio:.2f}x){note}")
+        if ratio > threshold:
+            mark = "SLOW" if flag else "ok  "
+            print(f"{mark} {q}: {old_t:.2f}s -> {new_t:.2f}s ({ratio:.2f}x)")
         if flag:
             bad.append(q)
+    new_fp, prev_fp = new.get("fingerprints", {}), prev.get("fingerprints", {})
+    for q in sorted(new_fp.keys() & prev_fp.keys()):
+        if new_fp[q] != prev_fp[q]:
+            print(f"FPRT {q}: result fingerprint {prev_fp[q]} -> {new_fp[q]}")
+            bad.append(f"{q}:fingerprint")
     for q, msg in sorted(new.get("errors", {}).items()):
         print(f"ERR  {q}: {msg}")
         bad.append(q)
@@ -213,8 +208,8 @@ def main():
     # median (the SLOW check above catches that immediately). So: a
     # violation FAILS if the same entry also violated in the previous
     # record (recurrence), or if >= 3 entries violate in one run (mass
-    # jitter = contaminated run; correlate with the artifact's canary
-    # series). First-occurrence single blips print as watch items.
+    # jitter = contaminated run). First-occurrence single blips print as
+    # watch items.
     def viol(rec):
         out = {}
         for q, tsp in rec.get("spread", {}).items():
@@ -234,16 +229,6 @@ def main():
               "VAR recurrence cannot be evaluated in THIS invocation; the "
               "round gate must also run against the full bench record "
               "(bench_full_rN.json)")
-    # contention-retry transparency (r13): entries whose committed series
-    # came from the bench's canary-adjudicated retry carry both series
-    # in the artifact — print them so a retry is visible in gate output
-    for q in sorted(new.get("canary_ratio", {})):
-        raw = new.get("reps_raw", {}).get(q)
-        rtr = new.get("reps_retried", {}).get(q)
-        ratio = new["canary_ratio"][q]
-        rtxt = f"{ratio:.2f}" if isinstance(ratio, (int, float)) else "n/a"
-        kind = new.get("retry_kind", {}).get(q, "spread")
-        print(f"RTRY {q} [{kind}]: raw {raw} retried {rtr} canary_ratio {rtxt}")
     for q, (lo, med, hi) in sorted(new_viol.items()):
         recur = q in prev_viol
         mark = "VAR " if recur else "var?"
@@ -254,16 +239,10 @@ def main():
             bad.append(f"{q}:spread")
     if len(new_viol) >= 3:
         print(f"VAR  {len(new_viol)} entries violated in one run — "
-              "mass jitter; check the canary series")
+              "mass jitter")
         bad.append("spread:mass")
     tot_ratio = new["value"] / prev["value"] if prev.get("value") else 1.0
     print(f"total: {prev.get('value', 0):.1f}s -> {new.get('value', 0):.1f}s ({tot_ratio:.2f}x)")
-    if anchor is not None and anchor.get("value"):
-        anchor_ratio = new["value"] / anchor["value"]
-        print(f"total vs anchor: {anchor['value']:.1f}s -> "
-              f"{new['value']:.1f}s ({anchor_ratio:.2f}x) — the 1.5x hard "
-              "fail uses this ratio (baseline is a minima merge)")
-        tot_ratio = anchor_ratio
     if "freshness_sec" in new:
         f = new["freshness_sec"]
         print(f"freshness_sec: {f:.1f}")

@@ -1,30 +1,24 @@
 #!/bin/bash
-# Round-closing gate check: run ALL FOUR gate modes against the
-# artifacts as committed, and print one summary line whose content is
-# MECHANICAL - paste it into ROADMAP verbatim. Exists because round 10
-# closed with a hand-written "ALL OK" that the committed artifacts
-# contradicted (VERDICT r10, What's wrong #1): the claim must come from
-# the gates, not from memory of an earlier in-session run.
+# Round-closing gate check: run the bench, scaling and recall gates
+# against the artifacts as committed, and print one summary line whose
+# content is MECHANICAL - paste it into ROADMAP verbatim. The claim must
+# come from the gates, not from memory of an earlier in-session run.
 #
-# Round-12 hardening (VERDICT r11, What's wrong #3): the gate line is
-# only meaningful AT FINAL HEAD, so this script refuses a dirty work
-# tree and refuses a bench record older than the last commit - "last
-# code commit, then gates, then snapshot" is now enforced, not recalled.
-# It also diffs the FULL per-entry record (bench_full_r{N-1}.json, all
-# ~209 entries) alongside the headline diff, so a non-headline entry
-# regressing 2.15s -> 9.9s trips the gate instead of hiding
-# (VERDICT r11, What's missing #3).
+# The gate line is only meaningful AT FINAL HEAD, so this script refuses
+# a dirty work tree and refuses any artifact (bench record, scaling
+# sweep, recall curves) older than the last commit touching measured
+# code - "last code commit, then gates, then snapshot" is enforced, not
+# recalled.
 #
-# Usage: tools/close_round.sh <prev_bench_json> <prev_full_bench_json>
-#   e.g. tools/close_round.sh BENCH_r11.json bench_full_r11.json
-# The full per-entry baseline is MANDATORY (r12 ADVICE): the VAR
-# recurrence rule is vacuous against a compact BENCH_rN.json wrapper
-# (no 'spread' key), so a one-arg invocation silently lost the
-# reproducibility gate.
+# Usage: tools/close_round.sh <prev full bench record>
+#   e.g. tools/close_round.sh bench_full_pr7.json
+# The full record (not a compact BENCH_rN.json wrapper) is required: it
+# carries the per-entry spreads the VAR recurrence rule needs and the
+# fingerprints the FPRT check compares. Both records must be timed the
+# same way ("timed_to"), else check_bench exits 2 and the gate FAILs.
 set -u
 cd "$(dirname "$0")/.."
-PREV="${1:?usage: close_round.sh <prev BENCH_rN.json> <prev bench_full_rN.json>}"
-PREV_FULL="${2:?usage: close_round.sh <prev BENCH_rN.json> <prev bench_full_rN.json> - the full record is mandatory (VAR recurrence needs its spreads)}"
+PREV="${1:?usage: close_round.sh <prev full bench record, e.g. bench_full_pr7.json>}"
 
 if [ -n "$(git status --porcelain)" ]; then
   echo "REFUSED: work tree dirty - commit (or stash) everything first;"
@@ -32,57 +26,28 @@ if [ -n "$(git status --porcelain)" ]; then
   git status --porcelain | head -10
   exit 2
 fi
-# the bench record must postdate the last commit touching MEASURED
-# code (src/ + build config): docs, telemetry, and gate-script commits
-# after the bench don't change what the JVM ran, code commits do
+# each artifact must postdate the last commit touching MEASURED code
+# (src/ + build config): docs, telemetry, and gate-script commits after
+# the bench don't change what the JVM ran, code commits do
 CODE_T=$(git log -1 --format=%ct -- src build.sbt project)
-BENCH_T=$(stat -c %Y target/bench_last.json 2>/dev/null || echo 0)
 # an empty/non-numeric CODE_T would make the -le test an arithmetic
-# error whose false result fails OPEN — refuse instead (r12 ADVICE)
+# error whose false result fails OPEN - refuse instead
 case "$CODE_T" in
   ''|*[!0-9]*)
     echo "REFUSED: cannot determine last src/build commit time (git log"
-    echo "returned '$CODE_T') - bench freshness is unverifiable."
+    echo "returned '$CODE_T') - artifact freshness is unverifiable."
     exit 2;;
 esac
-if [ "$BENCH_T" -le "$CODE_T" ]; then
-  echo "REFUSED: target/bench_last.json predates the last src/build commit"
-  echo "($(git log -1 --format=%h -- src build.sbt project)) - rerun the full bench AT that code, then close."
-  exit 2
-fi
+for f in target/bench_last.json target/scaling.json target/ann_recall.json; do
+  if [ "$(stat -c %Y "$f" 2>/dev/null || echo 0)" -le "$CODE_T" ]; then
+    echo "REFUSED: $f is missing or predates the last src/build commit"
+    echo "($(git log -1 --format=%h -- src build.sbt project)) - rerun the full bench AT that code, then close."
+    exit 2
+  fi
+done
 
 python3 tools/check_bench.py target/bench_last.json "$PREV" > target/gate_bench.txt 2>&1
 B=$?
-F=0
-if [ -n "$PREV_FULL" ]; then
-  # STANDING METHODOLOGY (r15 verdict #3): the FULL gate compares
-  # against per-entry CROSS-RUN MINIMA merged over every committed full
-  # record (round closes + cross-validation runs), not a single prior
-  # record — a baseline committed from a degraded host window must not
-  # blunt the regression trigger. merge_minima.py pairs each entry's
-  # minimum with its own record's spread so the VAR/recurrence rule
-  # stays coherent. The named PREV_FULL is still required: it anchors
-  # the merge set to committed artifacts and keeps the invocation shape.
-  # r16 ADVICE hardening: remove any stale merge first (a half-written
-  # or leftover file must not silently become the baseline), pass the
-  # anchor PREV_FULL into the merge set explicitly (it may sit outside
-  # the repo-root glob), and fall back to PREV_FULL when the merge
-  # exits nonzero. The merge's stderr now lands in the gate log.
-  rm -f target/minima_full.json
-  if ! python3 tools/merge_minima.py target/minima_full.json "$PREV_FULL" \
-      > target/gate_minima.txt 2>&1; then
-    echo "WARN: merge_minima failed — falling back to $PREV_FULL" \
-      >> target/gate_minima.txt
-  fi
-  MINIMA=target/minima_full.json
-  [ -s "$MINIMA" ] || MINIMA="$PREV_FULL"
-  # per-entry gate vs the minima; the 1.5x TOTAL hard-fail vs the anchor
-  # record (r16 ADVICE medium: a minima merge sums per-entry minima no
-  # real run can achieve simultaneously, so the total gate against it
-  # was an always-FAIL signal under the documented host contention)
-  python3 tools/check_bench.py target/bench_last.json "$MINIMA" 2.0 "$PREV_FULL" > target/gate_full.txt 2>&1
-  F=$?
-fi
 python3 tools/check_bench.py --scaling target/scaling.json > target/gate_scaling.txt 2>&1
 S=$?
 python3 tools/check_bench.py --recall target/ann_recall.json > target/gate_recall.txt 2>&1
@@ -90,12 +55,9 @@ R=$?
 
 st() { if [ "$1" -eq 0 ]; then echo OK; else echo FAIL; fi; }
 RATIO=$(grep -oE 'total: .*\(([0-9.]+)x\)' target/gate_bench.txt | grep -oE '[0-9.]+x' | tail -1)
-FULLPART=""
-if [ -n "$PREV_FULL" ]; then FULLPART=", FULL $(st $F) vs cross-run minima (anchor $PREV_FULL)"; fi
-echo "gates @ $(git rev-parse --short HEAD): BENCH $(st $B) vs $PREV ${RATIO:-?}${FULLPART}, SCALING $(st $S), RECALL $(st $R)"
-for f in gate_bench gate_full gate_scaling gate_recall; do
-  [ -f "target/$f.txt" ] || continue
+echo "gates @ $(git rev-parse --short HEAD): BENCH $(st $B) vs $PREV ${RATIO:-?}, SCALING $(st $S), RECALL $(st $R)"
+for f in gate_bench gate_scaling gate_recall; do
   echo "--- $f"
-  grep -E 'REGRESS|SUPER|VAR |SLOW |GONE |LOW |MISS|RECALL OK|SCALING OK|OK$' "target/$f.txt" | tail -8
+  grep -E 'INCOMPARABLE|REGRESS|SUPER|VAR |SLOW |GONE |FPRT |ERR |LOW |MISS|RECALL OK|SCALING OK|OK$' "target/$f.txt" | tail -8
 done
-exit $(( B + F + S + R ))
+exit $(( B + S + R ))
