@@ -127,26 +127,38 @@ object Blocks {
   // ThreadLocal register: only frames explicitly enrolled by code running
   // on THIS thread are released, concurrency-safe by construction.
 
-  private val scopeReg =
-    new ThreadLocal[java.util.ArrayDeque[
-      scala.collection.mutable.ArrayBuffer[DataFrame]]] {
-      override def initialValue() =
-        new java.util.ArrayDeque[
-          scala.collection.mutable.ArrayBuffer[DataFrame]]()
-    }
+  private type Releases = scala.collection.mutable.ArrayBuffer[() => Unit]
+
+  private val scopeReg = new ThreadLocal[java.util.ArrayDeque[Releases]] {
+    override def initialValue() = new java.util.ArrayDeque[Releases]()
+  }
 
   /** Run `body` with a release scope open on the current thread: every
-    * frame [[scoped]] inside it is released (best-effort) when `body`
-    * exits, on any path. Scopes nest; each releases only its own. */
+    * frame [[scoped]] inside it is released when `body` exits, on any
+    * path. Scopes nest; each releases only its own.
+    *
+    * Fails loud: every enrolled release runs, then the first release
+    * failure is rethrown if `body` succeeded, or attached to `body`'s
+    * exception as suppressed if it threw — a leaked block is never
+    * silent, and never masks the body's own failure. */
   def scope[T](body: => T): T = {
     val stack = scopeReg.get()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    stack.push(buf)
-    try body
-    finally {
+    val releases: Releases = scala.collection.mutable.ArrayBuffer.empty
+    stack.push(releases)
+    def releaseAll(): Option[Throwable] = {
       stack.pop()
-      buf.foreach(f => try release(f) catch { case _: Throwable => () })
+      releases.foldLeft(Option.empty[Throwable]) { (first, r) =>
+        try { r(); first }
+        catch { case e: Throwable => first.orElse(Some(e)) }
+      }
     }
+    val out = try body catch {
+      case e: Throwable =>
+        releaseAll().foreach(e.addSuppressed)
+        throw e
+    }
+    releaseAll().foreach(e => throw e)
+    out
   }
 
   /** Enroll an eagerly-materialized frame with the innermost open scope
@@ -159,14 +171,17 @@ object Blocks {
     * process-wide snapshot-diff sweep used to catch). The one-line
     * stderr note makes a missing scope visible in the first local run
     * instead of as slow block-manager growth in production. */
-  def scoped(df: DataFrame): DataFrame = {
+  def scoped(df: DataFrame): DataFrame = { enroll(() => release(df)); df }
+
+  /** Enroll a release action with the innermost open scope on this
+    * thread ([[scoped]] enrolls [[release]] of its frame). */
+  private[graft] def enroll(release: () => Unit): Unit = {
     val stack = scopeReg.get()
-    if (!stack.isEmpty) stack.peek() += df
+    if (!stack.isEmpty) stack.peek() += release
     else System.err.println(
       "[blocks] WARN: Blocks.scoped called with no open scope on thread " +
         s"'${Thread.currentThread().getName}' - the enrolled frame will " +
         "NOT be auto-released; wrap the caller in Blocks.scope or release " +
         "it explicitly")
-    df
   }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
-import graft.plans.SketchExpressions
+import graft.plans.{SetExpressions, SketchExpressions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -78,45 +78,53 @@ object Dedup {
       .withColumn("sh_n", size(col("sh")))
       .filter(col("sh_n") > 0)
 
+  /** The shingle-set frame `(idCol, sh, sh_n)` as ONE eager local
+    * checkpoint enrolled in the caller's [[Blocks.scope]] — the leaf the
+    * PPJoin plan reads on its postings side and on both exact-verify
+    * sides. Materialized once, so the per-row shingle pass runs once per
+    * call instead of once per consumer (at 100 TB: two redundant
+    * full-corpus scans). A checkpoint rather than `persist`: its
+    * `LogicalRDD` leaf is the same RDD in every subtree, so AQE reuses
+    * the identical prefix-side and verify-side exchanges built over it
+    * (`ReusedExchange` in the executed plan), where the
+    * `InMemoryRelation` of a persisted frame left both sides to run in
+    * full. */
+  private def shingleSetLeaf(docs: DataFrame, idCol: String, textCol: String,
+                             k: Int): DataFrame =
+    Blocks.scoped(withShingleSets(docs, idCol, textCol, k).localCheckpoint(true))
+
   /** Exact n-gram (word k-shingle) Jaccard near-dup pairs, candidate
     * generation by shared shingle. Emits (id_a, id_b, jaccard) for
     * jaccard >= threshold, id_a < id_b. Exact: a pair at threshold > 0
     * must share a shingle, so the shingle join loses nothing.
     *
-    * The shingle-set frame is materialized ONCE (memory-with-disk-spill)
-    * and shared by its three consumers — the postings branch and both
-    * exact-verify sides — which would otherwise each re-run the per-row
-    * shingle pass over the whole corpus (at 100 TB: two redundant
-    * full-corpus scans). The SMALL verified pair set is then copied out
-    * of the block manager (disk checkpoint) and the corpus-sized sets
-    * are released before returning, so the returned frame is file-backed
-    * and pins zero executor storage (BlockRetentionSpec).
+    * The shingle sets are one checkpointed leaf ([[shingleSetLeaf]])
+    * shared by the postings branch and both verify sides. The SMALL
+    * verified pair set is copied out of the block manager (disk
+    * checkpoint) and every block this call materialized is released
+    * before it returns, so the returned frame is file-backed and pins
+    * zero executor storage (BlockRetentionSpec).
     *
-    * EAGER contract: this call MATERIALIZES at call time (the shared-scan
-    * persist and copy-out jobs run here, not at the caller's first
-    * action); the returned frame is already file-backed — callers must
-    * not re-persist or re-checkpoint it. */
+    * EAGER contract: this call MATERIALIZES at call time (the leaf
+    * checkpoints and the copy-out jobs run here, not at the caller's
+    * first action); the returned frame is already file-backed — callers
+    * must not re-persist or re-checkpoint it. [[canonicalize]] does not
+    * go through here: it collects the verified pairs once instead of
+    * copying them out. */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, threshold: Double = 0.8,
                         stopShingleFraction: Double = 0.05,
-                        maxDensePairs: Long = 10000000L): DataFrame = {
-    val sets = withShingleSets(docs, idCol, textCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the release scope frees the blocks this call materialized while
-    // building the plan (the dfreq local checkpoint inside the candidate
-    // generator, enrolled via Blocks.scoped): the copied-out result reads
-    // files, so nothing persisted here is still needed — the
-    // zero-residual contract (BlockRetentionSpec) stays intact, and ONLY
-    // this thread's enrollments are touched (a concurrent streaming
-    // micro-batch's checkpoints are safe — the earlier process-wide
-    // snapshot-diff sweep was not)
-    try Blocks.scope {
+                        maxDensePairs: Long = 10000000L): DataFrame =
+    // the release scope frees the blocks this call materialized (the
+    // shingle-set leaf and the candidate generator's dfreq): ONLY this
+    // thread's enrollments are touched, so a concurrent streaming
+    // micro-batch's checkpoints are safe
+    Blocks.scope {
       Blocks.copyOut(
-        ngramJaccardPairsFromSets(sets, idCol, threshold,
-          stopShingleFraction, maxDensePairs),
+        ngramJaccardPairsFromSets(shingleSetLeaf(docs, idCol, textCol, k),
+          idCol, threshold, stopShingleFraction, maxDensePairs),
         singleEval = true)
-    } finally { sets.unpersist(blocking = true); () }
-  }
+    }
 
   /** ⌈t·n⌉ guarded against float round-up (0.8·35 = 28.000…004 must not
     * become 29 — a too-large bound would shrink a prefix below what the
@@ -125,11 +133,10 @@ object Dedup {
   private def ceilT(t: Double, n: Column): Column =
     ceil(n * t - lit(1e-9)).cast("int")
 
-  /** Same as [[ngramJaccardPairs]] but over an ALREADY-COMPUTED shingle-set
-    * frame `(idCol, sh, sh_n)` — the caller can materialize it once and
-    * share it across the three consumers in this plan (postings + both
-    * exact-verify sides), which otherwise each re-run the per-row shingle
-    * pass over the corpus. */
+  /** The verified-pair plan of [[ngramJaccardPairs]], lazy, over an
+    * already-materialized shingle-set frame `(idCol, sh, sh_n)` — the
+    * [[shingleSetLeaf]] its three consumers (postings + both exact-verify
+    * sides) share. */
   private[operators] def ngramJaccardPairsFromSets(
       sets: DataFrame, idCol: String, threshold: Double,
       stopShingleFraction: Double = 0.05,
@@ -169,15 +176,12 @@ object Dedup {
       "thresholdSweep: thresholds must be in (0, 1]")
     val spark = docs.sparkSession
     import spark.implicits._
-    val sets = withShingleSets(docs, idCol, textCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs =
-      try Blocks.scope {
-        Blocks.copyOut(
-          ngramJaccardPairsFromSets(sets, idCol, thresholds.min,
-            stopShingleFraction, maxDensePairs),
-          singleEval = true)
-      } finally { sets.unpersist(blocking = true); () }
+    val pairs = Blocks.scope {
+      Blocks.copyOut(
+        ngramJaccardPairsFromSets(shingleSetLeaf(docs, idCol, textCol, k),
+          idCol, thresholds.min, stopShingleFraction, maxDensePairs),
+        singleEval = true)
+    }
     // everything below is arithmetic over the SMALL verified pair set —
     // and stays PAIR-SCALE regardless of sweep width: both rollups are
     // single-pass CONDITIONAL aggregations (one per-threshold sum each),
@@ -375,8 +379,10 @@ object Dedup {
     val pr = prefix.select(col("id").as("id_b"), col("n").as("n_b"),
       col("shingle"), col("rn").as("rn_b"), col("m").as("m_b"),
       col("rho").as("rho_b"))
-    // identical subplans both shuffling on `shingle` — AQE reuses the
-    // exchange, so the window pipeline evaluates once, not twice
+    // identical subplans both shuffling on `shingle` over the one
+    // checkpointed shingle-set leaf — AQE reuses the exchange
+    // (ReusedExchange), so the window pipeline evaluates once, not twice.
+    // Over a persisted leaf (InMemoryRelation) it did not: both sides ran
     val candPrefix = pl.join(pr, Seq("shingle"))
       .filter(col("id_a") < col("id_b") && lenOk && positionalOk)
       .select("id_a", "id_b")
@@ -419,12 +425,26 @@ object Dedup {
   }
 
   /** Connected components over near-dup pairs → cluster labels: each node
-    * gets the MIN id reachable in its component. Each round does (a) one
-    * hop of min-label propagation over edges and (b) a POINTER-DOUBLING
-    * shortcut (jump to the label's own label), which halves the remaining
-    * chain depth — convergence in O(log diameter) rounds, the same
-    * round-complexity family as large-star/small-star. The driver loop
-    * only checks a changed-count per round (no data collect).
+    * gets the MIN id reachable in its component, as `(id, label)` over
+    * `nodes` ∪ edge endpoints.
+    *
+    * Small graphs (long ids, at most `driverMaxEdges` distinct edges) are
+    * labeled on the driver: ONE bounded `limit(driverMaxEdges + 1)`
+    * collect of the distinct edges, union-find, and the endpoint labels
+    * returned as a local relation beside the isolated nodes — the steady
+    * state of the incremental callers (contracted label graphs are
+    * O(batch pairs), a few hundred edges per maintenance epoch), where
+    * the loop below is pure fixed overhead. Lazy: the returned frame
+    * re-reads `nodes` and holds no blocks.
+    *
+    * Past the bound (or for non-long ids) the distributed loop runs:
+    * each round does (a) one hop of min-label propagation over edges and
+    * (b) a POINTER-DOUBLING shortcut (jump to the label's own label),
+    * which halves the remaining chain depth — convergence in
+    * O(log diameter) rounds, the same round-complexity family as
+    * large-star/small-star. The driver loop only checks a changed-count
+    * per round (no data collect). Its result is copied out to a reliable
+    * checkpoint and holds no blocks either (BlockRetentionSpec).
     *
     * Throws IllegalStateException if the loop hits `maxIter` while labels
     * are still changing — a silent early exit would keep multiple
@@ -433,36 +453,44 @@ object Dedup {
     * diameter up to ~2^10; real dedup clusters converge in 2-3 rounds. */
   def connectedComponents(pairs: DataFrame, nodes: DataFrame,
                           idCol: String, maxIter: Int = 10,
-                          driverMaxEdges: Long = 100000L): DataFrame = {
-    // SMALL-GRAPH FAST PATH: the iterative loop costs ~4-6 jobs per
-    // round (join, agg, checkpoint, changed-count) regardless of data
-    // size — pure fixed overhead when the edge set is tiny, which is
-    // the STEADY STATE of the incremental callers (contracted label
-    // graphs are O(batch pairs), a few hundred edges per maintenance
-    // epoch). Under the budget, collect the distinct undirected edges
-    // once and union-find on the driver — same audited metadata-scale
-    // class as the IVF probed-cell collect, and explicitly BOUNDED:
-    // past `driverMaxEdges` (or for non-long ids) the distributed loop
-    // runs unchanged. Union roots always keep the component MIN, so the
-    // labels are exactly the distributed result. Measured ~2x on the
-    // canonical-maintenance entries (3 batches x 2-3 rounds of loop
-    // overhead replaced by one collect each).
-    val idType = pairs.schema("id_a").dataType
-    if (idType == org.apache.spark.sql.types.LongType) {
-      val undirected = pairs.select(col("id_a"), col("id_b")).distinct()
-        .persist()
-      // try/finally: the pairs lineage may carry a caller's fail-loud
-      // raise_error (e.g. canonicalizeIncremental's unlabeled-endpoint
-      // guard) that fires DURING these actions — the persist must not
-      // outlive the throw (BpeSpec's residual-blocks assert caught it)
-      val (nEdges, es) =
-        try {
-          val n = undirected.count()
-          (n, if (n <= driverMaxEdges)
-            undirected.collect().map(r => (r.getLong(0), r.getLong(1)))
-          else Array.empty[(Long, Long)])
-        } finally undirected.unpersist(blocking = true)
-      if (nEdges <= driverMaxEdges) {
+                          driverMaxEdges: Long = 100000L): DataFrame =
+    driverComponents(pairs.select(col("id_a"), col("id_b")).distinct(),
+        driverMaxEdges) match {
+      case Some((ids, labels)) =>
+        val spark = pairs.sparkSession
+        import scala.jdk.CollectionConverters._
+        val schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("id",
+            org.apache.spark.sql.types.LongType, nullable = false),
+          org.apache.spark.sql.types.StructField("label",
+            org.apache.spark.sql.types.LongType, nullable = false)))
+        val endpointLabels = spark.createDataFrame(
+          ids.indices.map(i =>
+            org.apache.spark.sql.Row(ids(i), labels(i)): org.apache.spark.sql.Row)
+            .asJava, schema)
+        // isolated nodes (no edge) are their own canonical; endpoint
+        // labels ride a local relation, so the anti-join broadcasts
+        nodes.select(col(idCol).cast("long").as("id")).distinct()
+          .join(endpointLabels.select(col("id")), Seq("id"), "left_anti")
+          .select(col("id"), col("id").as("label"))
+          .unionByName(endpointLabels)
+      case None => componentsLoop(pairs, nodes, idCol, maxIter)
+    }
+
+  /** Union-find on the driver over at most `driverMaxEdges` rows of
+    * `edges (id_a, id_b)`: the sorted endpoint ids and, index for index,
+    * their component-min labels. ONE bounded collect
+    * (`limit(driverMaxEdges + 1)`); None when the ids are not longs or
+    * the edges exceed the bound. Union roots always keep the component
+    * MIN, so the labels equal [[componentsLoop]]'s. */
+  private def driverComponents(edges: DataFrame,
+                               driverMaxEdges: Long): Option[(Array[Long], Array[Long])] =
+    if (edges.schema("id_a").dataType != org.apache.spark.sql.types.LongType) None
+    else {
+      val es = edges.limit(math.min(driverMaxEdges + 1, Int.MaxValue.toLong).toInt)
+        .collect()
+      if (es.length > driverMaxEdges) None
+      else {
         val parent = scala.collection.mutable.HashMap.empty[Long, Long]
         def find(x: Long): Long = {
           var r = x
@@ -473,31 +501,18 @@ object Dedup {
           }
           r
         }
-        es.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
+        es.foreach { e =>
+          val (ra, rb) = (find(e.getLong(0)), find(e.getLong(1)))
           if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
         }
-        val endpointIds = es.iterator.flatMap(e => Iterator(e._1, e._2))
-          .toArray.distinct
-        val spark = pairs.sparkSession
-        import scala.jdk.CollectionConverters._
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("label",
-            org.apache.spark.sql.types.LongType, nullable = false)))
-        val endpointLabels = spark.createDataFrame(
-          endpointIds.map(i =>
-            org.apache.spark.sql.Row(i, find(i)): org.apache.spark.sql.Row)
-            .toSeq.asJava, schema)
-        // isolated nodes (no edge) are their own canonical; endpoint
-        // labels ride a local relation, so the anti-join broadcasts
-        return nodes.select(col(idCol).cast("long").as("id")).distinct()
-          .join(endpointLabels.select(col("id")), Seq("id"), "left_anti")
-          .select(col("id"), col("id").as("label"))
-          .unionByName(endpointLabels)
+        val ids = es.flatMap(e => Array(e.getLong(0), e.getLong(1))).distinct.sorted
+        Some((ids, ids.map(find)))
       }
     }
+
+  /** The distributed min-label loop of [[connectedComponents]]. */
+  private def componentsLoop(pairs: DataFrame, nodes: DataFrame, idCol: String,
+                             maxIter: Int): DataFrame = {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct().persist()
@@ -561,29 +576,51 @@ object Dedup {
   /** The actual corpus dedup: every doc labeled with the canonical
     * (minimum) id of its near-dup cluster; docs with no near-dup are
     * their own canonical. Filtering `id = canonical_id` keeps one
-    * representative per cluster. */
+    * representative per cluster.
+    *
+    * EAGER contract: the pairs are computed at call time, over one
+    * [[shingleSetLeaf]] checkpoint, and (for long ids) collected ONCE by
+    * a bounded `limit(driverMaxEdges + 1)` collect; union-find labels
+    * them on the driver and the labels ride into the plan as literals
+    * (the sorted endpoint ids and their labels), looked up per doc by a
+    * binary-search kernel. The returned frame is a scan of `docs` plus
+    * one projection: no join, no pair files, and no blocks — every block
+    * the call materialized is released before it returns. Above the
+    * bound (or for non-long ids) the pairs are copied out and the
+    * distributed connected-components loop labels them, as in
+    * [[connectedComponents]]; the result is then file-backed. */
   def canonicalize(docs: DataFrame, idCol: String, textCol: String,
-                   k: Int = 3, threshold: Double = 0.8): DataFrame = {
-    // pairs come back from ngramJaccardPairs already materialized to a
-    // disk checkpoint (file-backed, lineage-free), so BOTH consumers
-    // below — the node derivation and the CC edge set — read the small
-    // pair files, never the candidate-generation pipeline
-    val pairs = ngramJaccardPairs(docs, idCol, textCol, k, threshold)
-    // CC only over the TOUCHED subgraph (nodes with >= 1 near-dup edge):
-    // dup clusters are a small fraction of any real corpus, so the
-    // iterative machinery (per-round join + checkpoint + changed-count
-    // job) runs over the dup docs only — O(rounds x dup-docs), not
-    // O(rounds x corpus). Untouched docs become their own canonical via
-    // the left join below (the small label set broadcasts).
-    val touched = pairs.select(col("id_a").as("id"))
-      .unionAll(pairs.select(col("id_b").as("id"))).distinct()
-    val labels = connectedComponents(pairs, touched, "id")
-      .withColumnRenamed("id", idCol)
-    docs.select(col(idCol))
-      .join(labels, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("label"), col(idCol)).as("canonical_id"))
-  }
+                   k: Int = 3, threshold: Double = 0.8): DataFrame =
+    canonicalizeBounded(docs, idCol, textCol, k, threshold, driverMaxEdges = 100000L)
+
+  /** [[canonicalize]] with the driver union-find bound exposed, so specs
+    * can drive the distributed path on a small corpus. */
+  private[graft] def canonicalizeBounded(docs: DataFrame, idCol: String,
+                                         textCol: String, k: Int, threshold: Double,
+                                         driverMaxEdges: Long): DataFrame =
+    Blocks.scope {
+      val pairs = ngramJaccardPairsFromSets(shingleSetLeaf(docs, idCol, textCol, k),
+        idCol, threshold)
+      driverComponents(pairs.select("id_a", "id_b"), driverMaxEdges) match {
+        case Some((ids, labels)) =>
+          docs.select(col(idCol), SetExpressions.sortedLookup(col(idCol),
+            ids, labels).as("canonical_id"))
+        case None =>
+          val filed = Blocks.copyOut(pairs, singleEval = true)
+          // CC only over the TOUCHED subgraph (nodes with >= 1 near-dup
+          // edge): O(rounds x dup-docs), not O(rounds x corpus).
+          // Untouched docs become their own canonical via the left join
+          // below (the small label set broadcasts).
+          val touched = filed.select(col("id_a").as("id"))
+            .unionAll(filed.select(col("id_b").as("id"))).distinct()
+          val labels = componentsLoop(filed, touched, "id", maxIter = 10)
+            .withColumnRenamed("id", idCol)
+          docs.select(col(idCol))
+            .join(labels, Seq(idCol), "left")
+            .select(col(idCol),
+              coalesce(col("label"), col(idCol)).as("canonical_id"))
+      }
+    }
 
   /** INCREMENTAL canonicalization — maintain the canonical-id map from a
     * batch pair stream instead of re-running [[canonicalize]] over the

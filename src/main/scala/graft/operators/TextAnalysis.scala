@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{TextFunctions => TF}
+import graft.plans.QualityExpressions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -130,67 +131,51 @@ object TextAnalysis {
     *  - duplicate 2-gram fraction under maxDupBigramFrac (boilerplate /
     *    generated spam).
     * Every signal is integer counts + one double division — bit-exact
-    * against the oracle; per-row expressions only, runs at scan speed.
+    * against the oracle. The counts come from ONE compiled pass per doc
+    * ([[graft.plans.QualityCounts]]: tokenize, count, bigram-dedup),
+    * so the whole filter is one codegen'd projection at scan speed.
     *
     * Composition note: a downstream `.filter(col("keep"))` gets pushed
-    * through this projection BY SUBSTITUTION — the optimizer inlines
-    * every rule expression (interpreted HOFs, no common-subexpression
-    * reuse across the lambda boundary) into the predicate, multiplying
-    * the per-row cost ~50×. In long pipelines, checkpoint/materialize
-    * the metrics frame before filtering on `keep` (see
-    * `Extensions.trainCorpusPrepV2`). */
+    * through this projection BY SUBSTITUTION — the optimizer inlines the
+    * counting kernel into each of the ~16 rule references in the
+    * predicate (no common-subexpression reuse in a pushed filter),
+    * measured ~8× the unfiltered pass on the sf0.001 documents. In long
+    * pipelines, materialize the metrics frame before filtering on `keep`
+    * (see `Extensions.trainCorpusPrepV2`). */
   def qualityFilter(docs: DataFrame, idCol: String, textCol: String,
                     minWords: Int = 20, maxWords: Int = 10000,
                     minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
                     maxTopWordFrac: Double = 0.2,
                     maxDupBigramFrac: Double = 0.1,
                     carryCols: Seq[String] = Nil): DataFrame = {
-    // materialize the token and bigram arrays as PROJECT-BOUNDARY columns:
-    // the rule expressions reference them ~12 times, and inlined aliases
-    // would re-tokenize the text per reference (higher-order functions
-    // evaluate interpreted, with no cross-lambda subexpression reuse).
-    // CollapseProject keeps the boundary: an expensive alias consumed
-    // more than once is not inlined.
-    val toks = col("__q_toks")
-    val sh2 = col("__q_sh2")
-    val n = size(toks)
+    // one codegen'd pass per doc yields every count the rules need; the
+    // rule columns below are the same double arithmetic on those exact
+    // integers as the declarative form (QualityKernelSpec keeps it as the
+    // reference). The counts sit behind a PROJECT BOUNDARY: the struct is
+    // read ~10 times, and CollapseProject does not inline an expensive
+    // alias consumed more than once.
+    val q = col("__q")
+    val n = q.getField("n_tokens")
     val nD = n.cast("double")
-    // top-word count as the longest run in the SORTED token array — one
-    // O(n log n) sort + one linear fold, replacing the O(n·distinct)
-    // filter-per-distinct-token scan (interpreted HOFs, so the inner
-    // eval count is the cost; measured ~2x on the corpus-prep metrics
-    // stage). Same value: max run of equal adjacent sorted tokens ==
-    // max per-token occurrence count.
-    val topCount = aggregate(
-      array_sort(toks),
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, w) => {
-        val nr = when(w === acc.getField("prev"), acc.getField("run") + 1L)
-          .otherwise(lit(1L))
-        struct(w.as("prev"), nr.as("run"),
-          greatest(acc.getField("best"), nr).as("best"))
-      },
-      acc => acc.getField("best"))
+    val nBigrams = q.getField("n_bigrams")
     // `carryCols` ride through the metrics projection so a caller can
     // fuse downstream per-row derivations (language id, the text itself)
     // into this pass instead of re-joining on id afterwards
     docs.select(col(idCol) +: carryCols.map(col) :+
-        TF.words(col(textCol)).as("__q_toks"): _*)
-      .select(col(idCol) +: carryCols.map(col) :+ toks :+
-        TF.shingles(toks, 2).as("__q_sh2"): _*)
+        QualityExpressions.qualityCounts(lower(col(textCol)),
+          TF.langMarkers.flatMap(_._2)).as("__q"): _*)
       .select((col(idCol) +: carryCols.map(col)) ++ Seq(
-        n.cast("long").as("n_words"),
-        // zero-token guard: 0/0 and array_max(empty) are null in Spark and
-        // an error in DuckDB's list_reduce — pin empty docs to 0-metrics so
-        // `keep` is deterministically false (never null) in both engines
-        when(n > 0,
-          aggregate(toks, lit(0L), (acc, w) => acc + length(w)).cast("double") / nD)
+        n.as("n_words"),
+        // zero-token guard: 0/0 is null in Spark and an error in DuckDB's
+        // list_reduce — pin empty docs to 0-metrics so `keep` is
+        // deterministically false (never null) in both engines
+        when(n > 0, q.getField("n_chars").cast("double") / nD)
           .otherwise(lit(0.0)).as("mean_word_len"),
-        (TF.markerCount(toks, TF.langMarkers.flatMap(_._2)) >= 1).as("has_stopword"),
-        when(n > 0, topCount.cast("double") / nD).otherwise(lit(0.0))
+        (q.getField("n_markers") >= 1).as("has_stopword"),
+        when(n > 0, q.getField("top_count").cast("double") / nD).otherwise(lit(0.0))
           .as("top_word_frac"),
-        (when(size(sh2) > 0,
-          lit(1.0) - size(array_distinct(sh2)).cast("double") / size(sh2).cast("double"))
+        (when(nBigrams > 0,
+          lit(1.0) - q.getField("n_distinct_bigrams").cast("double") / nBigrams.cast("double"))
           .otherwise(lit(0.0))).as("dup_bigram_frac")): _*)
       .withColumn("keep",
         col("n_words") > 0 &&

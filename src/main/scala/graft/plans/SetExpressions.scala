@@ -1,10 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Distinct-array intersection cardinality in one pass.
   *
@@ -47,9 +47,63 @@ case class ArrayIntersectCount(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+/** Label lookup in a sorted key array: the value paired with `key`, or
+  * `key` itself when absent. Binary search over primitive arrays, so a
+  * driver-computed map of up to millions of entries costs O(log n) per
+  * row and rides the plan as two compact literals. */
+object LookupUtil {
+  def labelOf(key: Long, keys: ArrayData, labels: ArrayData): Long = {
+    var lo = 0
+    var hi = keys.numElements() - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val k = keys.getLong(mid)
+      if (k < key) lo = mid + 1
+      else if (k > key) hi = mid - 1
+      else return labels.getLong(mid)
+    }
+    key
+  }
+}
+
+/** (bigint key, sorted array<bigint> keys, array<bigint> labels) → bigint
+  * label, the key itself when it has none. */
+case class SortedLookup(key: Expression, keys: Expression, labels: Expression)
+    extends TernaryExpression {
+
+  override def first: Expression = key
+  override def second: Expression = keys
+  override def third: Expression = labels
+  override def dataType: DataType = LongType
+  override def prettyName: String = "sorted_lookup"
+
+  override def nullSafeEval(k: Any, ks: Any, ls: Any): Any =
+    LookupUtil.labelOf(k.asInstanceOf[Long], ks.asInstanceOf[ArrayData],
+      ls.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (k, ks, ls) =>
+      s"${ev.value} = graft.plans.LookupUtil.labelOf($k, $ks, $ls);")
+
+  override protected def withNewChildrenInternal(a: Expression, b: Expression,
+                                                 c: Expression): Expression =
+    copy(key = a, keys = b, labels = c)
+}
+
 object SetExpressions {
   def arrayIntersectCount(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(ArrayIntersectCount(
       org.apache.spark.sql.graft.ColumnBridge.expression(a),
       org.apache.spark.sql.graft.ColumnBridge.expression(b)))
+
+  /** `key`'s label from a driver-computed map given as `keys` (sorted
+    * ascending, distinct) and `labels` (index for index); `key` itself
+    * when absent, null for a null key. */
+  def sortedLookup(key: Column, keys: Array[Long], labels: Array[Long]): Column = {
+    require(keys.length == labels.length, "sortedLookup: keys and labels differ in length")
+    def arr(a: Array[Long]) = Literal(UnsafeArrayData.fromPrimitiveArray(a),
+      ArrayType(LongType, containsNull = false))
+    org.apache.spark.sql.graft.ColumnBridge.column(SortedLookup(
+      org.apache.spark.sql.graft.ColumnBridge.expression(key), arr(keys), arr(labels)))
+  }
 }

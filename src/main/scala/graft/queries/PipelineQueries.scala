@@ -249,7 +249,6 @@ object PipelineQueries {
 
   def streamingExactlyOnce(spark: SparkSession, dir: String): DataFrame = {
     val base = freshDir(spark, "sxo", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val mkRaw = replayFixture(spark, dir, base)
     val (lake, ckpt) = (s"$base/lake", s"$base/ckpt")
     def run(): Unit = graft.streaming.StreamingIngest.awaitWithRestartRetry(() =>
@@ -261,7 +260,7 @@ object PipelineQueries {
     val n1 = spark.read.parquet(s"$lake/data").count()
     // the crash: epoch 0's data is on disk but its commit marker is not —
     // a restart re-plans and re-appends the same input files
-    fs.delete(new org.apache.hadoop.fs.Path(s"$ckpt/commits/0"), false)
+    graft.streaming.StreamingIngest.dropCommit(spark, ckpt, 0)
     run()
     val dup = spark.read.parquet(s"$lake/data")
     require(dup.count() == 2 * n1,
@@ -297,7 +296,7 @@ object PipelineQueries {
     // the crash: epoch 0 wrote data but neither its manifest entry nor
     // its checkpoint commit survived — restart replays and REWRITES
     fs.delete(new org.apache.hadoop.fs.Path(s"$lake/_manifest/0"), false)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$ckpt/commits/0"), false)
+    graft.streaming.StreamingIngest.dropCommit(spark, ckpt, 0)
     run()
     val committed = graft.sources.TransactionalLake.readCommitted(spark, lake)
     require(committed.count() == n1,
@@ -352,7 +351,7 @@ object PipelineQueries {
     require(afterFirst >= 1, s"expected multiple micro-batch epochs, got $afterFirst")
     // the crash: epoch 0's manifest entry and checkpoint commit are lost
     fs.delete(new org.apache.hadoop.fs.Path(s"$lake/_manifest/0"), false)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$ckpt/commits/0"), false)
+    graft.streaming.StreamingIngest.dropCommit(spark, ckpt, 0)
     run() // replays epoch 0: lake no-op, view refresh no-op
     require(V.cursor(spark, view) == afterFirst,
       "replay must not advance the view cursor")

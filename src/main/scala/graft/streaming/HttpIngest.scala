@@ -123,11 +123,14 @@ object HttpIngest {
       val bytes = body.getBytes(UTF_8)
       ex.getResponseHeaders.set("Content-Type", "application/json")
       ex.sendResponseHeaders(code, bytes.length.toLong)
-      val os = ex.getResponseBody
-      try os.write(bytes) finally os.close()
+      // counted before the body goes out: a client holding the full
+      // response reads a counter that already includes it (an accepted
+      // record is spooled by then). After sendResponseHeaders, so the
+      // 500 fallback for a failed body write counts nothing twice.
       if (code == 200) server.acceptedN.incrementAndGet()
       else server.rejectedN.incrementAndGet()
-      ()
+      val os = ex.getResponseBody
+      try os.write(bytes) finally os.close()
     }
 
     srv.createContext("/data", (ex: HttpExchange) =>

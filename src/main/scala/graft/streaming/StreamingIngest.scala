@@ -179,6 +179,21 @@ object StreamingIngest {
     }
   }
 
+  /** Delete checkpoint `ckpt`'s commit of `batchId` — the crash a
+    * crash-simulating harness stages — together with its `.N.crc`
+    * checksum sibling. The checkpoint writes through a checksummed
+    * FileContext while the session's `file:` FileSystem is the raw one,
+    * so deleting the commit alone left the sibling, and the restart's
+    * re-commit failed to rename its checksum onto it
+    * (FileAlreadyExistsException, retried by [[awaitWithRestartRetry]]
+    * as a "concurrently using" race). */
+  def dropCommit(spark: SparkSession, ckpt: String, batchId: Long): Unit = {
+    val commits = new org.apache.hadoop.fs.Path(s"$ckpt/commits")
+    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(batchId.toString, s".$batchId.crc").foreach(f =>
+      fs.delete(new org.apache.hadoop.fs.Path(commits, f), false))
+  }
+
   /** File-source variant: watch a directory of JSON-lines files — the test
     * and local-smoke entry point (README §1.1 payload shape). */
   def fromJsonDir(spark: SparkSession, inDir: String, tenantCol: String,

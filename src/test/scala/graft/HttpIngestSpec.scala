@@ -66,6 +66,16 @@ class HttpIngestSpec extends SparkSpec {
     } finally server.close()
   }
 
+  test("a client holding its 200 reads a counter that already includes it") {
+    val now = System.currentTimeMillis() / 1000L
+    val token = sign(s"""{"sub":"u","custom:tenantId":"acme","exp":"${now + 600}"}""")
+    val server = HttpIngest.start(tmpDir("http_count"), keys)
+    try (1 to 250).foreach { i =>
+      assert(post(server.port, s"r$i", Some(token)) == 200)
+      assert(server.accepted == i, s"POST $i answered 200 but accepted reads ${server.accepted}")
+    } finally server.close()
+  }
+
   test("authorizer decisions cache per token and expire with the TTL") {
     @volatile var clock = 1700000000L
     val token = sign(s"""{"sub":"u","custom:tenantId":"t0","exp":"${clock + 10000}"}""")

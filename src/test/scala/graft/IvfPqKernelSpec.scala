@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Similarity
 import graft.plans.{IvfPqExpressions => K}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.LambdaFunction
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -221,37 +220,6 @@ class IvfPqKernelSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs started while `f` runs, counted per job group. Listener
-    * events arrive asynchronously, so a marker job is run after `f` and
-    * awaited: every earlier job has then been delivered too. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"budget-${java.util.UUID.randomUUID()}"
-    val marker = s"marker-$group"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    @volatile var seen = false
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
-          if (g == group) n.incrementAndGet()
-          if (g == marker) seen = true
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, group)
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!seen) {
-        assert(System.currentTimeMillis() < deadline, "listener never saw the marker job")
-        Thread.sleep(20)
-      }
-      n.get
-    } finally sc.removeSparkListener(l)
-  }
-
   test("Lloyd rounds: one collected aggregate per round, far below the checkpointed loop's jobs") {
     // parquet-backed corpus, as a pipeline would read it
     val dir = tmpDir("lloyd_jobs")
@@ -259,9 +227,9 @@ class IvfPqKernelSpec extends SparkSpec {
     val corpus = spark.read.parquet(dir)
     // each count includes reading the whole result; the localCheckpoint /
     // release / copyOut loop this replaced read 19 (IVF) and 19 (PQ) here
-    val ivf = jobsOf(Similarity.ivfCentroidsRefined(corpus, "vec_id", "embedding",
+    val ivf = jobsIn(Similarity.ivfCentroidsRefined(corpus, "vec_id", "embedding",
       nCells = 16, iters = 2).collect())
-    val pq = jobsOf(Similarity.pqCodebooksRefined(corpus, "vec_id", "embedding",
+    val pq = jobsIn(Similarity.pqCodebooksRefined(corpus, "vec_id", "embedding",
       nSub = 8, nCodes = 16, iters = 2).collect())
     info(s"jobs for 2 rounds, result read included: IVF $ivf, PQ $pq")
     assert(ivf <= 5 && pq <= 5,

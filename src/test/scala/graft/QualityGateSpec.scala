@@ -57,8 +57,7 @@ class QualityGateSpec extends SparkSpec {
     val commits = fs.listStatus(
       new org.apache.hadoop.fs.Path(s"$base/ckpt/commits"))
       .map(_.getPath.getName).filterNot(_.startsWith(".")).map(_.toLong).sorted
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$base/ckpt/commits/${commits.last}"), false)
+    StreamingIngest.dropCommit(spark, s"$base/ckpt", commits.last)
     runGate(base, 0.5, ds)
     assert(TransactionalLake.readCommitted(spark, s"$base/lake").count() === 2L)
     assert(TransactionalLake.readCommitted(spark, s"$base/quar").count() === 2L)

@@ -108,7 +108,7 @@ class StreamingDedupSpec extends SparkSpec {
     // re-delivers; idempotent epoch commits keep everything exact
     val commits = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits"))
       .map(_.getPath.getName).filterNot(_.startsWith(".")).map(_.toLong).sorted
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits/${commits.last}"), false)
+    StreamingIngest.dropCommit(spark, s"$base/ckpt", commits.last)
     run()
     assert(logSet == first, "replay must not change the pair log")
     assert(TransactionalLake.readCommitted(spark, StreamingDedup.corpusRoot(base))
@@ -127,7 +127,7 @@ class StreamingDedupSpec extends SparkSpec {
     assert(TransactionalLake.readCommitted(spark, StreamingDedup.indexRoot(base))
       .drop("epoch").as[(Long, Int, Int, Int, Int)].collect().toSet == idx,
       "folding must not change the index")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits/${commits.last}"), false)
+    StreamingIngest.dropCommit(spark, s"$base/ckpt", commits.last)
     run()
     assert(logSet == first, "replay after retention must stay exactly-once")
     assert(TransactionalLake.readCommitted(spark, StreamingDedup.corpusRoot(base))

@@ -1,8 +1,6 @@
 package graft
 
 import graft.streaming.StreamingIngest
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import scala.jdk.CollectionConverters._
 
@@ -10,40 +8,6 @@ import scala.jdk.CollectionConverters._
 object HourTicker {
   private val stamp = new java.util.concurrent.atomic.AtomicLong(1704067200L)
   def next(): Long = stamp.getAndAdd(3600L)
-}
-
-/** Counts Spark jobs per (streaming query id, micro-batch id). Listener
-  * events arrive asynchronously, so [[of]] first runs a marker job and
-  * waits until the listener has seen it: every earlier job has then been
-  * delivered too. */
-final class JobsByBatch(spark: SparkSession) extends SparkListener {
-  private val counts = new java.util.concurrent.ConcurrentHashMap[(String, String), Int]()
-  private val markers = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  spark.sparkContext.addSparkListener(this)
-
-  override def onJobStart(e: SparkListenerJobStart): Unit = {
-    val p = e.properties
-    Option(p.getProperty("spark.jobGroup.id")).filter(_.startsWith("marker-"))
-      .foreach(markers.add)
-    for (q <- Option(p.getProperty("sql.streaming.queryId"));
-         b <- Option(p.getProperty("streaming.sql.batchId")))
-      counts.merge((q, b), 1, _ + _)
-  }
-
-  def of(queryId: String): Map[String, Int] = {
-    val marker = s"marker-${java.util.UUID.randomUUID()}"
-    val sc = spark.sparkContext
-    sc.setJobGroup(marker, marker)
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.currentTimeMillis() + 30000
-    while (!markers.contains(marker)) {
-      assert(System.currentTimeMillis() < deadline, "listener never saw the marker job")
-      Thread.sleep(20)
-    }
-    counts.asScala.collect { case ((q, b), n) if q == queryId => b -> n }.toMap
-  }
-
-  def close(): Unit = spark.sparkContext.removeSparkListener(this)
 }
 
 /** Streaming parity (SURVEY §2.1 S2-S6): file-source micro-batch ingest
@@ -227,8 +191,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("sink job budget: 3 jobs with dead letters, 2 without; a failed write surfaces") {
-    val jobs = new JobsByBatch(spark)
-    try {
+    {
       def run(tag: String, rows: Seq[(String, String)]): Int = {
         val in = tmpDir(s"budget_${tag}_in")
         rows.toDF("value", "tenant_key").repartition(1).write.mode("append").json(in)
@@ -238,9 +201,10 @@ class StreamingSpec extends SparkSpec {
           Trigger.AvailableNow(), table = Some(s"budget_$tag"))
         assert(q.awaitTermination(120000), "stream must finish within the timeout")
         assert(spark.table(s"budget_$tag").count() == rows.count(_._1.startsWith("{")))
-        val perBatch = jobs.of(q.id.toString)
-        assert(perBatch.size == 1, s"one micro-batch expected: $perBatch")
-        perBatch.values.head
+        val batches = q.recentProgress.map(_.batchId).distinct
+        assert(batches.length == 1, s"one micro-batch expected: ${batches.mkString(",")}")
+        // the stream's execution thread runs every job in its runId group
+        JobsByGroup.of(q.runId.toString)
       }
       val mixed = run("mixed", Seq(
         ("""{"Data":{"event":"e1","region":"US","device":"TV"}}""", "acme"),
@@ -252,7 +216,7 @@ class StreamingSpec extends SparkSpec {
         ("""{"Data":{"event":"e2","region":"EU","device":"web"}}""", "globex")))
       assert(clean >= 1 && clean <= 2, s"an error-free batch ran $clean jobs")
       info(s"jobs per micro-batch: $mixed with dead letters, $clean without")
-    } finally jobs.close()
+    }
 
     // a write that fails must fail the query, not wait for an
     // observation that its job never delivered

@@ -95,8 +95,7 @@ class SubstringIndexSpec extends SparkSpec {
     val commits = fs.listStatus(
         new org.apache.hadoop.fs.Path(s"$base/ckpt/commits"))
       .map(_.getPath.getName).filterNot(_.startsWith(".")).map(_.toLong).sorted
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$base/ckpt/commits/${commits.last}"), false)
+    graft.streaming.StreamingIngest.dropCommit(spark, s"$base/ckpt", commits.last)
     run()
     assert(served(s"$base/idx") === oneShot)
   }

@@ -49,14 +49,14 @@ class TransactionalSpec extends SparkSpec {
 
     // crash A: between manifest commit and checkpoint commit → the
     // replayed epoch is already committed and must SKIP
-    fs.delete(new org.apache.hadoop.fs.Path(s"$ckpt/commits/0"), false)
+    StreamingIngest.dropCommit(spark, ckpt, 0)
     run(in, lake, ckpt)
     assert(snapshot(lake) == baseline, "post-commit replay must skip")
 
     // crash B: between data write and manifest commit → the replayed
     // epoch REWRITES its own directory and re-commits, never appends
     fs.delete(new org.apache.hadoop.fs.Path(s"$lake/_manifest/0"), false)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$ckpt/commits/0"), false)
+    StreamingIngest.dropCommit(spark, ckpt, 0)
     run(in, lake, ckpt)
     assert(snapshot(lake) == baseline, "mid-write replay must rewrite in place")
     assert(TransactionalLake.committedEpochs(spark, lake) == Seq(0L))
