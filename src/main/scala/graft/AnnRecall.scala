@@ -25,18 +25,6 @@ object AnnRecall {
   private case class Point(knob: String, value: Int, scanned: Double,
                            recall: Double)
 
-  /** Ordered concurrent map over a small fixed pool (guide §2.6):
-    * recall points are independent metadata-scale actions dominated by
-    * driver dispatch, not executor work — a few in flight back-fill the
-    * scheduler gaps. Results keep `items` order; a failure propagates. */
-  private def par[A, B](items: Seq[A])(f: A => B): Seq[B] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    try items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
-      override def call(): B = f(a)
-    })).map(_.get())
-    finally pool.shutdown()
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
@@ -58,15 +46,13 @@ object AnnRecall {
     * per-round artifact (Bench) passes true; check_bench --recall fails
     * loud if the section is absent from that artifact.
     *
-    * r17 (guide §2.6 — overlap independent jobs): this instrument
-    * measures RECALL and SCANNED FRACTIONS, not time, so unlike the
-    * scaling sweep its points are free to run concurrently. Every
-    * sweep point is an independent small query (shared inputs — ground
-    * truth, centroids, assignments, codebooks — are materialized once
-    * up front on the calling thread), so points fan out on a small
-    * pool and each probe count's scanned fraction is computed ONCE and
-    * shared by every curve that sweeps it (it was re-derived per curve
-    * before). Same points, same values, ~3x less artifact-phase wall. */
+    * This instrument measures RECALL and SCANNED FRACTIONS, not time, so
+    * unlike the scaling sweep its points are free to run concurrently.
+    * Every sweep point is an independent small query (shared inputs —
+    * ground truth, centroids, assignments, codebooks — are built once
+    * up front on the calling thread), so each sweep is one
+    * [[Overlap.all]], and each probe count's scanned fraction is
+    * computed ONCE and shared by every curve that sweeps it. */
   def run(spark: SparkSession, sfDir: String, nProbesProbe: Int,
           k: Int, includeSynth: Boolean = false): String = {
     val e = Tables.load(spark, sfDir, "embeddings")
@@ -90,13 +76,13 @@ object AnnRecall {
     val tmp = s"${GraftSession.scratchRoot}/tmp/ann_recall_${GraftSession.tag(sfDir)}"
 
     // ---- LSH: query-directed multi-probe sweep (nBits=6, radius 2) ----
-    val lsh = par(Seq(1, 2, 4, 8, 12, 16, 22)) { p =>
+    val lsh = Overlap.all(Seq(1, 2, 4, 8, 12, 16, 22).map(p => () => {
       val sink = s"$tmp/lsh_$p"
       val r = recallOf(Similarity.lshTopK(e, probes, "vec_id", "embedding",
         k, nProbes = p, candidateSink = Some(sink)))
       val scanned = spark.read.parquet(sink).count() / allPairs
       Point("nProbes", p, scanned, r)
-    }
+    }): _*)
 
     // ---- IVF: nProbe sweep (nCells=16); assignments computed ONCE and
     //      shared with the IVF→PQ tiers below ----
@@ -107,33 +93,32 @@ object AnnRecall {
     // ivfpq_rerank sweep overlapping p values; it is a pure function of
     // (cents, probes, cellSizes, p))
     val scannedAt: Map[Int, Double] =
-      par(Seq(1, 2, 3, 4, 6, 8, 12)) { p =>
+      Overlap.all(Seq(1, 2, 3, 4, 6, 8, 12).map(p => () =>
         p -> (Similarity.probeCells(cents, probes, "vec_id", "embedding", p)
           .select(col("p_id"), col("cell")).join(cellSizes, "cell")
-          .agg(sum(col("cell_n"))).head().getLong(0) / allPairs)
-      }.toMap
-    val ivf = par(Seq(1, 2, 3, 4, 6, 8, 12)) { p =>
+          .agg(sum(col("cell_n"))).head().getLong(0) / allPairs)): _*).toMap
+    val ivf = Overlap.all(Seq(1, 2, 3, 4, 6, 8, 12).map(p => () => {
       val r = recallOf(Similarity.ivfTopKWith(cents, e, probes,
         "vec_id", "embedding", k, nProbe = p))
       Point("nProbe", p, scannedAt(p), r)
-    }
+    }): _*)
 
     // ---- PQ: codebook-size sweep (full scan over compressed codes;
     //      cost axis = bytes touched per corpus row vs 4·dim floats) ----
     val dim = e.select(size(col("embedding"))).head().getInt(0)
-    val pq = par(Seq(8, 16, 32)) { nc =>
+    val pq = Overlap.all(Seq(8, 16, 32).map(nc => () => {
       val cb = Similarity.pqCodebooks(e, "vec_id", "embedding", nSub = 8, nCodes = nc)
       val codes = Similarity.pqEncode(e, "vec_id", "embedding", cb)
       val r = recallOf(Similarity.pqTopK(codes, probes, "vec_id", "embedding", cb, k))
       Point("nCodes", nc, 8.0 / (4.0 * dim), r) // nSub byte-ish codes vs float32 vector
-    }
+    }): _*)
 
     // ---- IVF→PQ + IVF→PQ→exact rerank: nProbe sweeps at nCodes=16,
     //      shared codebook/codes/assignments, one pooled batch ----
     val cb16 = Similarity.pqCodebooks(e, "vec_id", "embedding", nSub = 8, nCodes = 16)
     val codes16 = Similarity.pqEncode(e, "vec_id", "embedding", cb16)
-    val ivfpqBoth = par(Seq(1, 2, 3, 4, 6, 8).flatMap(p =>
-      Seq((p, false), (p, true)))) { case (p, rerank) =>
+    val ivfpqBoth = Overlap.all(Seq(1, 2, 3, 4, 6, 8).flatMap(p =>
+      Seq((p, false), (p, true))).map { case (p, rerank) => () => {
       val r =
         if (rerank) recallOf(Similarity.ivfPqTopKReranked(cents, assigns,
           codes16, e, probes, "vec_id", "embedding", cb16, k, nProbe = p,
@@ -141,7 +126,7 @@ object AnnRecall {
         else recallOf(Similarity.ivfPqTopK(cents, assigns, codes16, probes,
           "vec_id", "embedding", cb16, k, nProbe = p))
       (rerank, Point("nProbe", p, scannedAt(p), r))
-    }
+    }}: _*)
     val ivfpq = ivfpqBoth.collect { case (false, pt) => pt }
     val ivfpqR = ivfpqBoth.collect { case (true, pt) => pt }
 
@@ -183,16 +168,15 @@ object AnnRecall {
       val sCellSizes = sAssigns.groupBy(col("cell")).agg(count(lit(1)).as("cell_n"))
       val sProbeSweep = sweep.filter(_ <= sCells)
       // scanned fraction once per probe count (3 curves sweep the same ps)
-      val sScanned: Map[Int, Double] = par(sProbeSweep) { p =>
+      val sScanned: Map[Int, Double] = Overlap.all(sProbeSweep.map(p => () =>
         p -> (Similarity.probeCells(sCents, sProbes, "vec_id", "embedding", p)
           .select(col("p_id"), col("cell")).join(sCellSizes, "cell")
-          .agg(sum(col("cell_n"))).head().getLong(0) / sAllPairs)
-      }.toMap
-      val ivfS = par(sProbeSweep) { p =>
+          .agg(sum(col("cell_n"))).head().getLong(0) / sAllPairs)): _*).toMap
+      val ivfS = Overlap.all(sProbeSweep.map(p => () => {
         val r = sRecallOf(Similarity.ivfTopKWith(sCents, es, sProbes,
           "vec_id", "embedding", k, nProbe = p))
         Point("nProbe", p, sScanned(p), r)
-      }
+      }): _*)
       val sCb = Similarity.pqCodebooks(es, "vec_id", "embedding", nSub = 8,
         nCodes = 16)
       val sCodes = Similarity.pqEncode(es, "vec_id", "embedding", sCb)
@@ -201,14 +185,14 @@ object AnnRecall {
       // scaled variant keeps shortlist ∝ probed cells, which should hold
       // recall flat across the sweep. Both curves in the artifact make the
       // knob's effect measurable instead of folklore.
-      val rerankBoth = par(sProbeSweep.flatMap(p =>
-        Seq((p, "fixed"), (p, "scaled")))) { case (p, curve) =>
+      val rerankBoth = Overlap.all(sProbeSweep.flatMap(p =>
+        Seq((p, "fixed"), (p, "scaled"))).map { case (p, curve) => () => {
         val sl = if (curve == "fixed") 50 else math.min(800, 50 * p)
         val r = sRecallOf(Similarity.ivfPqTopKReranked(sCents, sAssigns, sCodes,
           es, sProbes, "vec_id", "embedding", sCb, k, nProbe = p,
           shortlist = sl))
         (curve, Point("nProbe", p, sScanned(p), r))
-      }
+      }}: _*)
       val ivfpqRS = rerankBoth.collect { case ("fixed", pt) => pt }
       val ivfpqRScaled = rerankBoth.collect { case ("scaled", pt) => pt }
       s""""$key":{"corpus":$nS,"probes":$nSProbes,"n_cells":$sCells,""" +

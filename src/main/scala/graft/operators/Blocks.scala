@@ -42,12 +42,10 @@ object Blocks {
     * checkpoint-heavy iterative entries. On a cluster, callers set
     * `sc.setCheckpointDir` to shared storage (HDFS/S3) and this fallback
     * never engages. */
-  /** Synchronized: copyOut is called from concurrent driver threads (the
-    * §2.6 overlap pools in the fixture/fold entries), and the
-    * check-then-act on the session-global `setCheckpointDir` would
-    * otherwise race — benign in outcome (last set wins, all dirs exist)
-    * but a session-global mutation from concurrent threads (r16 ADVICE).
-    * One winner now creates the dir; every later caller sees it set. */
+  /** Synchronized: copyOut is called from concurrent driver threads
+    * (the tracks of [[graft.Overlap.all]]), and the check-then-act on the
+    * session-global `setCheckpointDir` would otherwise race. One winner
+    * creates the dir; every later caller sees it set. */
   private def ensureCheckpointDir(spark: SparkSession): Unit = this.synchronized {
     if (spark.sparkContext.getCheckpointDir.isEmpty) {
       // SPARK_LOCAL_DIRS is the deployment-env spelling of the same

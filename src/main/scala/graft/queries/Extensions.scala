@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftSession, Tables}
+import graft.{GraftSession, Overlap, Tables}
 import graft.GraftSession.freshDir
 import graft.operators.{Blocks, Dedup, Multimodal, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -100,34 +100,23 @@ object Extensions {
     val all = docs(s, d)
     val batches = (0 until 3).map(i => all.filter(col("doc_id") % 3 === i))
     val empty = all.filter(lit(false))
-    // guide §2.6 overlap (r17, same schedule as dedupCanonicalIncremental):
-    // per step the accumulated-index copyOut needs only (index, batchIndex)
-    // while the pair generator's eager internals need (batch, corpus,
-    // index, batchIndex) — independent of the copyOut, so it runs on a
-    // pool thread next to the pair construction. Same inputs, same pair
-    // log; only the driver-side schedule changes.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    try {
-      val (_, _, pairLog) = batches.foldLeft(
-        (empty, Dedup.minhashBandIndex(empty, "doc_id", "text"),
-          Seq.empty[DataFrame])) { case ((corpus, index, logs), batch) =>
-        // each batch's index is built ONCE (used for this round's collision
-        // join AND appended to the accumulator); the accumulated index is
-        // copied out per step like a real deployment would persist it —
-        // lineage must not re-derive every prior batch's signatures per
-        // round, and the accumulator must not pin block-manager storage
-        // across steps (Blocks.copyOut = disk-backed, zero block residency)
-        val batchIndex = Dedup.minhashBandIndex(batch, "doc_id", "text")
-        val idxF = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame =
-            Blocks.copyOut(index.unionByName(batchIndex))
-        })
-        val pairs = Dedup.incrementalNearDupPairs(batch, corpus, index,
-          "doc_id", "text", newIndex = Some(batchIndex))
-        (corpus.unionByName(batch), idxF.get(), logs :+ pairs)
-      }
-      pairLog.reduce(_ unionByName _).orderBy("id_a", "id_b")
-    } finally pool.shutdown()
+    val (_, _, pairLog) = batches.foldLeft(
+      (empty, Dedup.minhashBandIndex(empty, "doc_id", "text"),
+        Seq.empty[DataFrame])) { case ((corpus, index, logs), batch) =>
+      // each batch's index is built ONCE (used for this round's collision
+      // join AND appended to the accumulator); the accumulated index is
+      // copied out per step like a real deployment would persist it —
+      // lineage must not re-derive every prior batch's signatures per
+      // round, and the accumulator must not pin block-manager storage
+      // across steps (Blocks.copyOut = disk-backed, zero block residency)
+      val batchIndex = Dedup.minhashBandIndex(batch, "doc_id", "text")
+      val Seq(nextIndex, pairs) = Overlap.all(
+        () => Blocks.copyOut(index.unionByName(batchIndex)),
+        () => Dedup.incrementalNearDupPairs(batch, corpus, index,
+          "doc_id", "text", newIndex = Some(batchIndex)))
+      (corpus.unionByName(batch), nextIndex, logs :+ pairs)
+    }
+    pairLog.reduce(_ unionByName _).orderBy("id_a", "id_b")
   }
 
   /** The streaming fixtures' crash-replay protocol: `start` runs to
@@ -285,49 +274,33 @@ object Extensions {
     val empty = all.filter(lit(false))
     val emptyMap = all.select(col("doc_id"), col("doc_id").as("canonical_id"))
       .filter(lit(false))
-    // Guide §2.6 (overlap independent jobs) — the r15/r16 profiles show
-    // this entry job-floor-bound (124 sub-0.5 s dispatches, ~3.5 s of
-    // driver gap): per fold step the three materializations form two
-    // independent chains once the pairs exist —
-    //   pairs(i)  needs {batch i, corpus(i-1), index(i-1)}
-    //   index(i)  needs {index(i-1), batchIndex(i)}      (not pairs)
-    //   map(i)    needs {map(i-1), batch i, pairs(i)}    (not index)
-    // so the accumulated-index copyOut runs on a pool thread next to the
-    // pairs computation, and the map fold runs as a chained future that
-    // overlaps the NEXT batch's pair generation. Inputs, operators, and
-    // the folded result are IDENTICAL — only the driver-side schedule
-    // changes (each map task waits on the previous map future, which is
-    // always submitted earlier, so FIFO execution cannot deadlock).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val done = new java.util.concurrent.CompletableFuture[DataFrame]()
-      done.complete(emptyMap)
-      val (_, _, finalMapF) = batches.foldLeft(
-        (empty, Dedup.minhashBandIndex(empty, "doc_id", "text"),
-          done: java.util.concurrent.Future[DataFrame])) {
-        case ((corpus, index, prevMapF), batch) =>
-          val batchIndex = Dedup.minhashBandIndex(batch, "doc_id", "text")
-          val idxF = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-            override def call(): DataFrame =
-              Blocks.copyOut(index.unionByName(batchIndex))
-          })
+    // per step, three independent materializations overlap: the
+    // accumulated-index copyOut, this batch's pairs, and the fold of the
+    // PREVIOUS batch's pairs into the map (map(i) needs pairs(i), never
+    // index(i)); the last batch's fold runs after the loop. The map and
+    // index are copied out per step (file-backed): lineage must not
+    // re-derive every prior batch's work per round
+    def fold(map: DataFrame, step: Option[(DataFrame, DataFrame)]): DataFrame =
+      step.fold(map) { case (batch, pairs) =>
+        Blocks.copyOut(Dedup.canonicalizeIncremental(map, batch, pairs, "doc_id"))
+      }
+    val (_, _, map, last) = batches.foldLeft((empty,
+      Dedup.minhashBandIndex(empty, "doc_id", "text"), emptyMap,
+      Option.empty[(DataFrame, DataFrame)])) {
+      case ((corpus, index, map, prev), batch) =>
+        val batchIndex = Dedup.minhashBandIndex(batch, "doc_id", "text")
+        val Seq(nextIndex, pairs, nextMap) = Overlap.all(
+          () => Blocks.copyOut(index.unionByName(batchIndex)),
           // pairs file-backed before the fold step consumes them twice
           // (endpoint scan + label join) — mirrors the streaming path,
           // where the canonical maintenance reads the COMMITTED pair epoch
-          val pairs = Blocks.copyOut(Dedup.incrementalNearDupPairs(
-            batch, corpus, index, "doc_id", "text", newIndex = Some(batchIndex)),
-            singleEval = true)
-          // map and index are copied out per step (file-backed): lineage
-          // must not re-derive every prior batch's work per round
-          val mapF = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-            override def call(): DataFrame = Blocks.copyOut(
-              Dedup.canonicalizeIncremental(prevMapF.get(), batch, pairs,
-                "doc_id"))
-          })
-          (corpus.unionByName(batch), idxF.get(), mapF)
-      }
-      finalMapF.get().orderBy("doc_id")
-    } finally pool.shutdown()
+          () => Blocks.copyOut(Dedup.incrementalNearDupPairs(batch, corpus,
+            index, "doc_id", "text", newIndex = Some(batchIndex)),
+            singleEval = true),
+          () => fold(map, prev))
+        (corpus.unionByName(batch), nextIndex, nextMap, Some((batch, pairs)))
+    }
+    fold(map, last).orderBy("doc_id")
   }
 
   /** CONTINUOUS-MAINTENANCE CHAIN gate — the full derived-artifact
@@ -1182,22 +1155,15 @@ object Extensions {
       .limit(0)
     // fold the three epochs; epoch 1 is delivered TWICE (replay) — the
     // anti-join against the accumulated edge set must no-op it.
-    // guide §2.6: the per-step state/edge copyOuts are independent
-    // materializations of one incrementalTriangles call — overlap them
-    // (the next step needs both, so each step still barriers).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val (state, acc) = try {
-      (batches :+ batches(1)).foldLeft((emptyState, empty)) {
-        case ((st, ed), b) =>
-          val (st2, ed2) = Graph.incrementalTriangles(st, ed, b,
-            "vec_id", "neighbor_id")
-          val stF = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-            override def call(): DataFrame = Blocks.copyOut(st2, singleEval = true)
-          })
-          val edOut = Blocks.copyOut(ed2, singleEval = true)
-          (stF.get(), edOut)
-      }
-    } finally pool.shutdown()
+    val (state, acc) = (batches :+ batches(1)).foldLeft((emptyState, empty)) {
+      case ((st, ed), b) =>
+        val (st2, ed2) = Graph.incrementalTriangles(st, ed, b,
+          "vec_id", "neighbor_id")
+        val Seq(stOut, edOut) = Overlap.all(
+          () => Blocks.copyOut(st2, singleEval = true),
+          () => Blocks.copyOut(ed2, singleEval = true))
+        (stOut, edOut)
+    }
     Blocks.release(acc)
     Graph.triangleStateView(state)
       .select(col("id").as("vec_id"), col("degree"), col("tri_count"),
@@ -1816,117 +1782,69 @@ object Extensions {
     val lroot = s"$base/lake"
     val zroot = s"$base/zstats"
     val broot = s"$base/bloom"
-    // FIXTURE CONSTRUCTION runs as 7 INDEPENDENT tracks submitted from a
-    // small thread pool (guide §2.6 — actions are only sequential because
-    // the driver calls them sequentially): 3 tenants x 2 per-tenant index
-    // builds (disjoint roots, each internally the sequential single-writer
-    // commit protocol) + the lake/stats track (epochs stay ordered inside
-    // it; zone-map and bloom read the committed epoch and write disjoint
-    // roots). Each track's jobs back-fill executors freed by another
-    // track's driver-dispatch gaps — the entry was measured
-    // dispatch-bound, ~60% driver gap (profiles/ and OPTIMIZATION_r16.md).
-    // Thread-safety: no track mutates session conf (commitEpoch/
-    // commitSubstringBatch/commitPostings never call MaintenanceExec),
-    // and Blocks release-scopes are thread-confined by design.
-    locally {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val tracks =
-        Seq("t0", "t1", "t2").flatMap { t =>
-          val td = all.filter(col("tenant") === t)
-          Seq(
-            scala.concurrent.Future(Dedup.commitSubstringBatch(td, "doc_id",
-              "text", TenantArtifacts.tenantRoot(subBase, t), 0L)),
-            scala.concurrent.Future(TextIndex.commitPostings(td, "doc_id",
-              "text", TenantArtifacts.tenantRoot(bmBase, t), 0L)))
-        } :+ scala.concurrent.Future {
-          (0 until 2).foreach { e =>
-            TransactionalLake.commitEpoch(
-              all.filter(col("doc_id") % 2 === e)
-                .select(col("doc_id"),
-                  length(col("text")).cast("long").as("n_chars"),
-                  col("tenant")),
-              lroot, e.toLong, partitionCols = Seq("tenant"))
-            ZoneMap.appendEpochStats(s, lroot, zroot, e.toLong, "doc_id")
-            BloomIndex.appendEpochIndex(s, lroot, broot, e.toLong, "doc_id")
-          }
-        }
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(tracks),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    }
+    // fixture: 3 tenants x 2 per-tenant index builds (disjoint roots,
+    // each internally the single-writer commit protocol) + the lake/stats
+    // track (epochs stay ordered inside it; zone-map and bloom read the
+    // committed epoch and write disjoint roots). No track mutates session
+    // conf: none of these commits calls MaintenanceExec.
+    Overlap.all[Unit](Seq("t0", "t1", "t2").flatMap { t =>
+      val td = all.filter(col("tenant") === t)
+      Seq[() => Unit](
+        () => Dedup.commitSubstringBatch(td, "doc_id", "text",
+          TenantArtifacts.tenantRoot(subBase, t), 0L),
+        () => TextIndex.commitPostings(td, "doc_id", "text",
+          TenantArtifacts.tenantRoot(bmBase, t), 0L))
+    } :+ (() => (0 until 2).foreach { e =>
+      TransactionalLake.commitEpoch(
+        all.filter(col("doc_id") % 2 === e)
+          .select(col("doc_id"),
+            length(col("text")).cast("long").as("n_chars"),
+            col("tenant")),
+        lroot, e.toLong, partitionCols = Seq("tenant"))
+      ZoneMap.appendEpochStats(s, lroot, zroot, e.toLong, "doc_id")
+      BloomIndex.appendEpochIndex(s, lroot, broot, e.toLong, "doc_id")
+    }): _*)
 
-    // ---- OFFBOARD t2 across every derived artifact ----
-    // the five purge targets are DISJOINT roots — same §2.6 overlap as
-    // the fixture phase (the two row-level rewrites are the only Spark
-    // work; the subtree scrubs are filesystem-only)
-    locally {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try scala.concurrent.Await.result(scala.concurrent.Future.sequence(Seq(
-        scala.concurrent.Future(
-          require(TenantArtifacts.purgeTenant(s, subBase, "t2") > 0,
-            "substring-index purge must scrub data subtrees")),
-        scala.concurrent.Future(
-          require(TenantArtifacts.purgeTenant(s, bmBase, "t2") > 0,
-            "bm25-index purge must scrub data subtrees")),
-        scala.concurrent.Future(TransactionalLake.purgeTenant(s, lroot, "t2")),
-        scala.concurrent.Future(
-          require(ZoneMap.purgeTenantStats(s, zroot, "t2") > 0,
-            "zone-map cascade must rewrite the stats epochs")),
-        scala.concurrent.Future(
-          require(BloomIndex.purgeTenantRows(s, broot, "t2") > 0,
-            "bloom cascade must rewrite the index epochs")))),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    }
+    // ---- OFFBOARD t2 across every derived artifact: five disjoint roots ----
+    Overlap.all[Unit](
+      () => require(TenantArtifacts.purgeTenant(s, subBase, "t2") > 0,
+        "substring-index purge must scrub data subtrees"),
+      () => require(TenantArtifacts.purgeTenant(s, bmBase, "t2") > 0,
+        "bm25-index purge must scrub data subtrees"),
+      () => TransactionalLake.purgeTenant(s, lroot, "t2"),
+      () => require(ZoneMap.purgeTenantStats(s, zroot, "t2") > 0,
+        "zone-map cascade must rewrite the stats epochs"),
+      () => require(BloomIndex.purgeTenantRows(s, broot, "t2") > 0,
+        "bloom cascade must rewrite the index epochs"))
 
     // crash-replay after the purge: epoch 0 is committed in every lake,
     // so the replayed maintenance batches are TOTAL no-ops — the purged
     // tenant's derived data must neither resurrect nor crash the replay.
-    // The two replays and the post-purge assertion probes are again
-    // independent (disjoint roots / read-only actions): one overlap pool.
+    // The read-only probes do not depend on the replays.
     val t2docs = all.filter(col("tenant") === "t2")
-    locally {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val replays = Seq(
-        scala.concurrent.Future(Dedup.commitSubstringBatch(t2docs, "doc_id",
-          "text", TenantArtifacts.tenantRoot(subBase, "t2"), 0L)),
-        scala.concurrent.Future(TextIndex.commitPostings(t2docs, "doc_id",
-          "text", TenantArtifacts.tenantRoot(bmBase, "t2"), 0L)))
-      // read-only probes that do not depend on the replay no-ops
-      val probes = Seq(
-        scala.concurrent.Future(
-          require(ZoneMap.statsIndex(s, zroot)
-            .filter(col("file").contains("/tenant=t2/")).isEmpty,
-            "no zone-map row may reference a purged tenant file")),
-        scala.concurrent.Future(
-          require(BloomIndex.index(s, broot)
-            .filter(col("file").contains("/tenant=t2/")).isEmpty,
-            "no bloom row may reference a purged tenant file")),
-        scala.concurrent.Future {
-          val lakeFiles = TransactionalLake.readCommitted(s, lroot)
-            .select(input_file_name().as("file")).distinct()
-          val statFiles = ZoneMap.statsIndex(s, zroot).select("file").distinct()
-          require(statFiles.exceptAll(lakeFiles).isEmpty &&
-            lakeFiles.exceptAll(statFiles).isEmpty,
-            "zone-map rows must cover exactly the surviving lake files")
-        },
-        // survivors still serve: BM25 over t0's untouched index
-        scala.concurrent.Future(
-          require(TextIndex.bm25FromIndex(s,
-            TenantArtifacts.tenantRoot(bmBase, "t0"),
-            Seq("the"), topK = 3).count() >= 0, "survivor index must serve")))
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(replays ++ probes),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    }
+    Overlap.all[Unit](
+      () => Dedup.commitSubstringBatch(t2docs, "doc_id", "text",
+        TenantArtifacts.tenantRoot(subBase, "t2"), 0L),
+      () => TextIndex.commitPostings(t2docs, "doc_id", "text",
+        TenantArtifacts.tenantRoot(bmBase, "t2"), 0L),
+      () => require(ZoneMap.statsIndex(s, zroot)
+        .filter(col("file").contains("/tenant=t2/")).isEmpty,
+        "no zone-map row may reference a purged tenant file"),
+      () => require(BloomIndex.index(s, broot)
+        .filter(col("file").contains("/tenant=t2/")).isEmpty,
+        "no bloom row may reference a purged tenant file"),
+      () => {
+        val lakeFiles = TransactionalLake.readCommitted(s, lroot)
+          .select(input_file_name().as("file")).distinct()
+        val statFiles = ZoneMap.statsIndex(s, zroot).select("file").distinct()
+        require(statFiles.exceptAll(lakeFiles).isEmpty &&
+          lakeFiles.exceptAll(statFiles).isEmpty,
+          "zone-map rows must cover exactly the surviving lake files")
+      },
+      // survivors still serve: BM25 over t0's untouched index
+      () => require(TextIndex.bm25FromIndex(s,
+        TenantArtifacts.tenantRoot(bmBase, "t0"),
+        Seq("the"), topK = 3).count() >= 0, "survivor index must serve"))
     Seq(s"${TenantArtifacts.tenantRoot(subBase, "t2")}/grams/data",
       s"${TenantArtifacts.tenantRoot(subBase, "t2")}/best/data",
       s"${TenantArtifacts.tenantRoot(subBase, "t2")}/df/data",

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftSession, Tables}
+import graft.{GraftSession, Overlap, Tables}
 import graft.GraftSession.freshDir
 import graft.ingest.Ingest
 import graft.model.Schemas
@@ -1157,42 +1157,28 @@ object PipelineQueries {
       .select(col("event_id"), tenantCol.as("tenant_key"),
         lit("event-error").as("error_type"))
     val troot = s"$root/tx"
-    // guide §2.6 (r17, same schedule as the derived entry's r16 change):
-    // the fixture writes three DISJOINT roots ($root/data valid lake,
-    // $root/error, $root/tx 3-epoch transactional lake) and the purge
-    // phase scrubs two disjoint roots — each track is single-writer on
-    // its own root, none mutates session conf (registerExternal DOES
-    // toggle mergeSchema, so it stays outside the overlap window), and
-    // the tx track keeps its internal commit ORDER on one thread.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    def task[T](body: => T): java.util.concurrent.Future[T] =
-      pool.submit(new java.util.concurrent.Callable[T] {
-        override def call(): T = body
-      })
-    try {
-      val errTrack = task { Lake.writeErrors(errs, root) }
-      val txTrack = task {
-        (0 until 3).foreach(i => graft.sources.TransactionalLake.commitEpoch(
-          enriched.filter(col("event_id") % 3 === i), troot, i.toLong))
-      }
-      Lake.writeValid(enriched, root)
-      errTrack.get(); txTrack.get()
-      Lake.registerExternal(spark, tbl, s"$root/data")
-      val keptErrs = errs.filter(col("tenant_key") =!= "t2").count()
-
-      val txPurge = task {
+    // three disjoint fixture roots ($root/data, $root/error, $root/tx),
+    // then two disjoint purge roots. registerExternal toggles mergeSchema,
+    // so it stays outside both overlaps, and the tx track keeps its commit
+    // ORDER on one thread.
+    Overlap.all[Unit](
+      () => Lake.writeErrors(errs, root),
+      () => (0 until 3).foreach(i => graft.sources.TransactionalLake.commitEpoch(
+        enriched.filter(col("event_id") % 3 === i), troot, i.toLong)),
+      () => Lake.writeValid(enriched, root))
+    Lake.registerExternal(spark, tbl, s"$root/data")
+    val keptErrs = errs.filter(col("tenant_key") =!= "t2").count()
+    Overlap.all[Unit](
+      () => {
         graft.sources.TransactionalLake.purgeTenant(spark, troot, "t2")
         // crash-replay after the purge ON THE SAME THREAD (order is the
         // contract): the epoch is committed, so this must stay a no-op —
         // t2 must NOT resurrect from the replayed source rows
         graft.sources.TransactionalLake.commitEpoch(
           enriched.filter(col("event_id") % 3 === 0), troot, 0L)
-      }
-      Lake.purgeTenant(spark, tbl, root, "t2")
-      txPurge.get()
-
-      tenantPurgeAsserts(spark, fs, tbl, root, troot, keptErrs, cols)
-    } finally pool.shutdown()
+      },
+      () => Lake.purgeTenant(spark, tbl, root, "t2"))
+    tenantPurgeAsserts(spark, fs, tbl, root, troot, keptErrs, cols)
   }
 
   private def tenantPurgeAsserts(

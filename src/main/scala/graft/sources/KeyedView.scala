@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Overlap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -281,25 +282,12 @@ object KeyedView {
       val staging = s"$viewRoot/.staging_v$head"
       val f = fs(spark, viewRoot)
       f.delete(new Path(staging), true)
-      // the bucket staging write and the state computation+write are
-      // independent outputs of the same (checkpointed) delta — submit
-      // the staging job from a second thread so the two overlap instead
-      // of serializing two sub-second driver dispatches; the marker
-      // flip below still happens only after BOTH complete
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val stagingF = Future {
-        newBucketRows.write.partitionBy("kb").parquet(staging)
-      }
-      try {
-        stateFn(cur, head, delta, changedOld)
-      } catch { case t: Throwable =>
-        try Await.ready(stagingF, Duration.Inf)
-        catch { case _: Throwable => () }
-        throw t
-      }
-      Await.result(stagingF, Duration.Inf)
+      // the staging write and the state write are independent outputs of
+      // the same persisted delta; the marker flip below happens only after
+      // both complete
+      Overlap.all[Unit](
+        () => newBucketRows.write.partitionBy("kb").parquet(staging),
+        () => stateFn(cur, head, delta, changedOld))
       // a touched bucket whose every key tombstoned away still needs its
       // version dir (readers must not fall back to the stale older
       // version). ONE empty typed parquet write serves every such

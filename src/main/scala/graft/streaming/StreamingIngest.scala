@@ -61,8 +61,7 @@ object StreamingIngest {
             tenantCol: String, lakeRoot: String, checkpoint: String,
             trigger: Trigger = Trigger.ProcessingTime("60 seconds"),
             ingestTs: Column = unix_timestamp(),
-            table: Option[String] = None,
-            saltFiles: Int = 1): StreamingQuery =
+            table: Option[String] = None): StreamingQuery =
     raw.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -78,10 +77,7 @@ object StreamingIngest {
         val staged = Ingest.stage(batch, rawCol, col(tenantCol), ingestTs)
         val (valid, errors) = Ingest.splitStaged(
           staged.observe(written, partSet, errorTypeSet), rawCol)
-        // saltFiles > 1: a batch concentrated on few (tenant, hour)
-        // partitions otherwise serializes behind that many writer
-        // tasks (writeValid's hash distribution leaves the rest idle)
-        val path = Lake.writeValid(valid, lakeRoot, saltFiles = saltFiles)
+        val path = Lake.writeValid(valid, lakeRoot)
         // the write returned, so its job completed and delivers the
         // observation; a failed write threw above instead. When no row is
         // valid, AQE replaces the emptied shuffle stage, and the metrics
@@ -157,6 +153,8 @@ object StreamingIngest {
       }
       .start()
 
+  private val RestartAttempts = 40
+
   /** Start a query via `mk` and await termination, retrying (bounded) on
     * the one same-JVM restart race: a terminated query releases its
     * in-memory checkpoint lock asynchronously, so an immediate restart on
@@ -164,15 +162,14 @@ object StreamingIngest {
     * recovery restarts a fresh driver and never hits this; the retry
     * exists for crash-SIMULATING harnesses (the delivery-semantics gates
     * and specs) that restart within one JVM. */
-  def awaitWithRestartRetry(mk: () => StreamingQuery,
-                            maxAttempts: Int = 40): Unit = {
+  def awaitWithRestartRetry(mk: () => StreamingQuery): Unit = {
     var attempts = 0
     var done = false
     while (!done) {
       val q = mk()
       try { q.awaitTermination(); done = true }
       catch {
-        case e: Throwable if attempts < maxAttempts &&
+        case e: Throwable if attempts < RestartAttempts &&
           Option(e.getMessage).exists(_.contains("concurrently using")) =>
           attempts += 1; Thread.sleep(250)
       }
