@@ -41,11 +41,11 @@ object Blocks {
     * stalls — measured as the 1.5-2x run-to-run spread on the
     * checkpoint-heavy iterative entries. On a cluster, callers set
     * `sc.setCheckpointDir` to shared storage (HDFS/S3) and this fallback
-    * never engages. */
-  /** Synchronized: copyOut is called from concurrent driver threads
-    * (the tracks of [[graft.Overlap.all]]), and the check-then-act on the
-    * session-global `setCheckpointDir` would otherwise race. One winner
-    * creates the dir; every later caller sees it set. */
+    * never engages. Synchronized: copyOut is called from concurrent
+    * driver threads (the tracks of [[graft.Overlap.all]]), and the
+    * check-then-act on the session-global `setCheckpointDir` would
+    * otherwise race; one winner creates the dir, every later caller sees
+    * it set. */
   private def ensureCheckpointDir(spark: SparkSession): Unit = this.synchronized {
     if (spark.sparkContext.getCheckpointDir.isEmpty) {
       // SPARK_LOCAL_DIRS is the deployment-env spelling of the same
@@ -73,34 +73,19 @@ object Blocks {
     }
   }
 
-  /** Copy an eagerly-computed intermediate OUT of the block manager:
-    * reliable (disk-backed) checkpoint, lineage truncated. The returned
-    * frame reads files, not block-manager blocks, so the source local
-    * checkpoint can be [[release]]d immediately and an unpersist-all
-    * sweep cannot invalidate the result.
-    *
-    * `checkpoint(eager)` evaluates the plan TWICE (the materializing
-    * action, then the checkpoint job recomputing from lineage — Spark's
-    * documented persist-before-checkpoint hazard). Whether that matters
-    * depends on the caller:
-    *  - the iterative operators copy out of loop state that is already
-    *    localCheckpoint-backed, so the "recompute" just re-reads blocks
-    *    — the default plain checkpoint is CHEAPER there (an extra
-    *    persist pass measurably slowed every dedup loop ~15%);
-    *  - a FRESH expensive lineage (e.g. the flagship pipeline's
-    *    filtered-corpus stage) genuinely runs twice — `singleEval=true`
-    *    local-checkpoints into blocks first, writes the reliable files
-    *    from the blocks, and releases them (measured 2.3× on the
-    *    flagship v2 stage). Lost-block risk between the two steps fails
-    *    the job rather than recomputing — small end products only. */
-  def copyOut(df: DataFrame, singleEval: Boolean = false): DataFrame = {
+  /** Copy a frame OUT of the block manager: one eager reliable
+    * (disk-file) checkpoint, lineage truncated. On Spark 4.1 the eager
+    * checkpoint writes the files straight from the plan (`RDD.checkpoint`
+    * then `RDD.doCheckpoint`, no materializing action first), so the plan
+    * is evaluated exactly once in one job, whether it is a fresh lineage
+    * or loop state already held in local-checkpoint blocks — pinned by
+    * CopyOutSpec. The result reads files and holds no blocks, so it is
+    * never [[release]]d; a source local checkpoint can be released as
+    * soon as it returns, and an unpersist-all sweep cannot invalidate
+    * it. */
+  def copyOut(df: DataFrame): DataFrame = {
     ensureCheckpointDir(df.sparkSession)
-    if (!singleEval) df.checkpoint(eager = true)
-    else {
-      val local = df.localCheckpoint(eager = true)
-      try local.checkpoint(eager = true)
-      finally release(local)
-    }
+    df.checkpoint(eager = true)
   }
 
   /** Free a localCheckpointed frame's blocks. `Dataset.unpersist` is a
@@ -160,26 +145,22 @@ object Blocks {
   }
 
   /** Enroll an eagerly-materialized frame with the innermost open scope
-    * on this thread (identity no-op when none is open — callers outside
-    * a scope own release themselves) and return it.
-    *
-    * The no-scope case is LOGGED: every builder that enrolls a
-    * checkpoint expects a [[scope]] around it, and a silent no-op here
-    * leaks the checkpoint blocks permanently (the class of leak the old
-    * process-wide snapshot-diff sweep used to catch). The one-line
-    * stderr note makes a missing scope visible in the first local run
-    * instead of as slow block-manager growth in production. */
+    * on this thread and return it. Fails loud when no scope is open: the
+    * frame is released at once and an IllegalStateException names the
+    * thread — a frame enrolled nowhere would pin its blocks for the
+    * session's life. */
   def scoped(df: DataFrame): DataFrame = { enroll(() => release(df)); df }
 
   /** Enroll a release action with the innermost open scope on this
     * thread ([[scoped]] enrolls [[release]] of its frame). */
   private[graft] def enroll(release: () => Unit): Unit = {
     val stack = scopeReg.get()
-    if (!stack.isEmpty) stack.peek() += release
-    else System.err.println(
-      "[blocks] WARN: Blocks.scoped called with no open scope on thread " +
-        s"'${Thread.currentThread().getName}' - the enrolled frame will " +
-        "NOT be auto-released; wrap the caller in Blocks.scope or release " +
-        "it explicitly")
+    if (stack.isEmpty) {
+      release()
+      throw new IllegalStateException("Blocks.scoped called with no open " +
+        s"scope on thread '${Thread.currentThread().getName}' - wrap the " +
+        "caller in Blocks.scope")
+    }
+    stack.peek() += release
   }
 }

@@ -122,8 +122,7 @@ object Dedup {
     Blocks.scope {
       Blocks.copyOut(
         ngramJaccardPairsFromSets(shingleSetLeaf(docs, idCol, textCol, k),
-          idCol, threshold, stopShingleFraction, maxDensePairs),
-        singleEval = true)
+          idCol, threshold, stopShingleFraction, maxDensePairs))
     }
 
   /** ⌈t·n⌉ guarded against float round-up (0.8·35 = 28.000…004 must not
@@ -179,8 +178,7 @@ object Dedup {
     val pairs = Blocks.scope {
       Blocks.copyOut(
         ngramJaccardPairsFromSets(shingleSetLeaf(docs, idCol, textCol, k),
-          idCol, thresholds.min, stopShingleFraction, maxDensePairs),
-        singleEval = true)
+          idCol, thresholds.min, stopShingleFraction, maxDensePairs))
     }
     // everything below is arithmetic over the SMALL verified pair set —
     // and stays PAIR-SCALE regardless of sweep width: both rollups are
@@ -606,7 +604,7 @@ object Dedup {
           docs.select(col(idCol), SetExpressions.sortedLookup(col(idCol),
             ids, labels).as("canonical_id"))
         case None =>
-          val filed = Blocks.copyOut(pairs, singleEval = true)
+          val filed = Blocks.copyOut(pairs)
           // CC only over the TOUCHED subgraph (nodes with >= 1 near-dup
           // edge): O(rounds x dup-docs), not O(rounds x corpus).
           // Untouched docs become their own canonical via the left join
@@ -698,8 +696,7 @@ object Dedup {
     // prior entry the batch can touch; copied out so the consumers
     // below read the tiny artifact, not the corpus map
     val hits = Blocks.copyOut(
-      prevMap.join(broadcast(wanted), Seq(idCol), "left_semi"),
-      singleEval = true)
+      prevMap.join(broadcast(wanted), Seq(idCol), "left_semi"))
     val newEntries = newIds.join(hits, Seq(idCol), "left_anti")
       .select(col(idCol), col(idCol).as("canonical_id"))
     // endpoint → CURRENT label (component contraction): a previous
@@ -809,8 +806,7 @@ object Dedup {
             size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
               col("n_a").cast("double"))
           .filter(col("containment") >= threshold)
-          .select(col("id_a"), col("id_b"), col("containment")),
-        singleEval = true)
+          .select(col("id_a"), col("id_b"), col("containment")))
     } finally { sets.unpersist(blocking = true); () }
   }
 
@@ -877,8 +873,7 @@ object Dedup {
       val candidates = l.join(r, Seq("band", "bucket"))
         .filter(col("id_a") < col("id_b"))
         .select("id_a", "id_b").distinct()
-      Blocks.copyOut(verifyPairs(candidates, sets, idCol, threshold),
-        singleEval = true)
+      Blocks.copyOut(verifyPairs(candidates, sets, idCol, threshold))
     } finally { sets.unpersist(blocking = true); () }
   }
 
@@ -942,7 +937,7 @@ object Dedup {
     // verify join) — materialized once so the band-collision joins over
     // the corpus index run once, not per consumer
     val candidates = Blocks.copyOut(
-      newCorpus.unionAll(newNew).distinct(), singleEval = true)
+      newCorpus.unionAll(newNew).distinct())
     // fetch ONLY candidate docs for verification: the broadcast semi-join
     // filters the corpus scan map-side before any shuffle or shingling,
     // and the candidate shingle sets are materialized ONCE (copied out of
@@ -1155,7 +1150,7 @@ object Dedup {
           col("sh").as("sh_e"))), "eval_id")
         .withColumn("jaccard", TF.jaccard(col("sh_t"), col("sh_e")))
         .filter(col("jaccard") >= threshold)
-        .select("train_id", "eval_id", "jaccard"), singleEval = true)
+        .select("train_id", "eval_id", "jaccard"))
     } finally {
       tSets.unpersist(blocking = true)
       eSets.unpersist(blocking = true)
@@ -1325,7 +1320,7 @@ object Dedup {
           .select("gkey")
         // file-backed: both self-join sides below read these files, and
         // the corpus-scale kgrams persist can be dropped immediately
-        Blocks.copyOut(kgrams.join(dupKeys, Seq("gkey")), singleEval = true)
+        Blocks.copyOut(kgrams.join(dupKeys, Seq("gkey")))
       } finally { kgrams.unpersist(blocking = true); () }
     val m = anchors.select(col("gkey"), col("doc_id").as("id_a"),
         col("p").as("pa"))
@@ -1414,7 +1409,7 @@ object Dedup {
         .withColumn("jaccard", round(col("inter").cast("double") /
           (col("ta") + col("tb") - col("inter")).cast("double"), 6))
         .filter(col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard"), singleEval = true)
+        .select("id_a", "id_b", "jaccard"))
     } finally { bags.unpersist(blocking = true); () }
   }
 

@@ -179,7 +179,7 @@ object EntityResolution {
       .select(explode(col("g")).as("gram")).withColumn("side", lit("L"))
       .unionByName(rawSets(right, rightId, rightText)
         .select(explode(col("g")).as("gram")).withColumn("side", lit("R")))
-    val dfreq = Blocks.copyOut(singleEval = true, df = postAll.groupBy("gram").agg(
+    val dfreq = Blocks.copyOut(postAll.groupBy("gram").agg(
         sum(when(col("side") === "L", 1L).otherwise(0L)).as("df_l"),
         sum(when(col("side") === "R", 1L).otherwise(0L)).as("df_r"))
       .withColumn("df_total", col("df_l") + col("df_r"))

@@ -216,10 +216,10 @@ object Graph {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val outDeg = e.groupBy("src").agg(count(lit(1)).cast("long").as("out_deg"))
     // edges ⋈ out-degree is reused every round — materialize once
-    val withDeg = Blocks.copyOut(e.join(outDeg, "src"), singleEval = true)
+    val withDeg = Blocks.copyOut(e.join(outDeg, "src"))
     val nodes = Blocks.copyOut(
       e.select(col("src").as("id")).unionAll(e.select(col("dst").as("id")))
-        .distinct(), singleEval = true)
+        .distinct())
     // node count to the driver: ONE scalar (metadata-scale, justified —
     // it parameterizes the teleport term of every iteration)
     val n = nodes.count().toDouble
@@ -243,7 +243,7 @@ object Graph {
       ranks = next
     }
     val out = Blocks.copyOut(ranks)
-    Blocks.release(ranks); Blocks.release(withDeg); Blocks.release(nodes)
+    Blocks.release(ranks)
     out
   }
 
@@ -268,10 +268,10 @@ object Graph {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       round(col(weightCol), 6).cast("decimal(18,6)").as("w"))
     val outW = e.groupBy("src").agg(sum(col("w")).as("sw"))
-    val withW = Blocks.copyOut(e.join(outW, "src"), singleEval = true)
+    val withW = Blocks.copyOut(e.join(outW, "src"))
     val nodes = Blocks.copyOut(
       e.select(col("src").as("id")).unionAll(e.select(col("dst").as("id")))
-        .distinct(), singleEval = true)
+        .distinct())
     val n = nodes.count().toDouble
     val teleport = (1.0 - damping) / n
     var ranks = nodes
@@ -294,7 +294,7 @@ object Graph {
       ranks = next
     }
     val out = Blocks.copyOut(ranks)
-    Blocks.release(ranks); Blocks.release(withW); Blocks.release(nodes)
+    Blocks.release(ranks)
     out
   }
 
@@ -327,9 +327,8 @@ object Graph {
       .unionAll(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
       .filter(col("src") =!= col("dst"))
       .distinct()
-    val e = Blocks.copyOut(und, singleEval = true)
-    val nodes = Blocks.copyOut(e.select(col("src").as("id")).distinct(),
-      singleEval = true)
+    val e = Blocks.copyOut(und)
+    val nodes = Blocks.copyOut(e.select(col("src").as("id")).distinct())
     var labels = nodes.select(col("id"), col("id").as("label"))
       .localCheckpoint(true)
     val w = org.apache.spark.sql.expressions.Window
@@ -347,7 +346,7 @@ object Graph {
       labels = next
     }
     val out = Blocks.copyOut(labels.select(col("id"), col("label").as("community")))
-    Blocks.release(labels); Blocks.release(e); Blocks.release(nodes)
+    Blocks.release(labels)
     out
   }
 
@@ -371,21 +370,20 @@ object Graph {
       "personalizedPageRank: damping must be in (0,1)")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val outDeg = e.groupBy("src").agg(count(lit(1)).cast("long").as("out_deg"))
-    val withDeg = Blocks.copyOut(e.join(outDeg, "src"), singleEval = true)
+    val withDeg = Blocks.copyOut(e.join(outDeg, "src"))
     val seedSet = Blocks.copyOut(
-      seeds.select(col(seedIdCol).as("id")).distinct(), singleEval = true)
+      seeds.select(col(seedIdCol).as("id")).distinct())
     val nodes = Blocks.copyOut(
       e.select(col("src").as("id")).unionAll(e.select(col("dst").as("id")))
         .unionAll(seedSet.select(col("id")))
-        .distinct(), singleEval = true)
+        .distinct())
     val nSeeds = seedSet.count().toDouble
     require(nSeeds > 0, "personalizedPageRank: seed set is empty")
     val restart = (1.0 - damping) / nSeeds
     val withSeed = Blocks.copyOut(
       nodes.join(seedSet.withColumn("__s", lit(true)), Seq("id"), "left")
         .select(col("id"),
-          when(col("__s"), lit(restart)).otherwise(lit(0.0)).as("tele")),
-      singleEval = true)
+          when(col("__s"), lit(restart)).otherwise(lit(0.0)).as("tele")))
     var ranks = withSeed
       .select(col("id"),
         round(when(col("tele") > 0, lit(1.0) / lit(nSeeds)).otherwise(lit(0.0)),
@@ -407,8 +405,7 @@ object Graph {
       ranks = next
     }
     val out = Blocks.copyOut(ranks)
-    Blocks.release(ranks); Blocks.release(withDeg); Blocks.release(nodes)
-    Blocks.release(seedSet); Blocks.release(withSeed)
+    Blocks.release(ranks)
     out
   }
 
@@ -434,7 +431,7 @@ object Graph {
       .unionAll(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
       .filter(col("src") =!= col("dst"))
       .distinct()
-    val e = Blocks.copyOut(und, singleEval = true)
+    val e = Blocks.copyOut(und)
     // loop state is localCheckpoint-backed (memory blocks, freed per
     // level) like the pageRank ranks vector; only the FINAL dist set is
     // copied out to disk — per-level reliable checkpoints would write
@@ -458,7 +455,7 @@ object Graph {
       frontierEmpty = frontier.isEmpty
     }
     val out = Blocks.copyOut(dist)
-    Blocks.release(dist); Blocks.release(e)
+    Blocks.release(dist)
     out
   }
 
@@ -478,8 +475,7 @@ object Graph {
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
              maxRounds: Int = 20): DataFrame = {
     require(k >= 3, "kTruss: k must be >= 3 (k-2 triangles per edge)")
-    var e: DataFrame = Blocks.copyOut(
-      undirected(edges, srcCol, dstCol), singleEval = true)
+    var e: DataFrame = Blocks.copyOut(undirected(edges, srcCol, dstCol))
     var nEdges = e.count()
     var rounds = 0
     var stable = false
@@ -494,10 +490,8 @@ object Graph {
         .groupBy("u", "v").agg(count(lit(1)).as("support"))
       val kept = Blocks.copyOut(
         e.select("u", "v").join(sup, Seq("u", "v"))
-          .filter(col("support") >= k - 2),
-        singleEval = true)
+          .filter(col("support") >= k - 2))
       val nNext = kept.count()
-      Blocks.release(e)
       e = kept
       stable = nNext == nEdges
       nEdges = nNext
@@ -529,7 +523,7 @@ object Graph {
       .unionAll(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
       .filter(col("src") =!= col("dst"))
       .distinct()
-    var e = Blocks.copyOut(und, singleEval = true)
+    var e = Blocks.copyOut(und)
     var nEdges = e.count()
     var rounds = 0
     var stable = false
@@ -540,9 +534,8 @@ object Graph {
         .join(alive.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(alive.select(col("id").as("dst")), Seq("dst"), "left_semi")
         .select("src", "dst")
-      val next = Blocks.copyOut(kept, singleEval = true)
+      val next = Blocks.copyOut(kept)
       val nNext = next.count()
-      Blocks.release(e)
       e = next
       stable = nNext == nEdges
       nEdges = nNext
@@ -551,10 +544,8 @@ object Graph {
     require(stable,
       s"kCore(k=$k): peel not stable after $maxRounds rounds — raise " +
         "maxRounds; truncating would over-report the core")
-    val out = Blocks.copyOut(
+    Blocks.copyOut(
       e.groupBy(col("src").as("id")).agg(count(lit(1)).as("core_degree")))
-    Blocks.release(e)
-    out
   }
 
   /** DETERMINISTIC RANDOM WALKS over a ranked edge list (e.g. the k-NN
@@ -574,7 +565,7 @@ object Graph {
     val e = rankedEdges.select(col(srcCol).as("e_src"),
       col(dstCol).as("e_dst"), col(rankCol).cast("long").as("e_rank"))
     val deg = e.groupBy("e_src").agg(count(lit(1)).as("e_deg"))
-    val edges = Blocks.copyOut(e.join(deg, "e_src"), singleEval = true)
+    val edges = Blocks.copyOut(e.join(deg, "e_src"))
     var frontier = edges.select(col("e_src").as("walk_id"))
       .distinct().withColumn("node", col("walk_id"))
     var path = frontier.withColumn("step", lit(0))
@@ -587,8 +578,6 @@ object Graph {
         .select(col("walk_id"), col("e_dst").as("node"))
       path = path.unionByName(frontier.withColumn("step", lit(s)))
     }
-    val out = Blocks.copyOut(path.select(col("walk_id"), col("step"), col("node")))
-    Blocks.release(edges)
-    out
+    Blocks.copyOut(path.select(col("walk_id"), col("step"), col("node")))
   }
 }

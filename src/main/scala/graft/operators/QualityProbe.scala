@@ -63,7 +63,7 @@ object QualityProbe {
     * corpus-scale tokenize pass runs exactly once. */
   private def featureFrame(docs: DataFrame, idCol: String,
                            textCol: String): DataFrame =
-    Blocks.copyOut(featureFrameRaw(docs, idCol, textCol), singleEval = true)
+    Blocks.copyOut(featureFrameRaw(docs, idCol, textCol))
 
   /** Linear prediction under weights `w`, rounded to 9 dp — the term
     * order is FIXED (left-assoc chain) so the double arithmetic is
@@ -153,8 +153,7 @@ object QualityProbe {
       featureFrameRaw(docs, idCol, textCol)
         .withColumnRenamed("y", "y_rule")
         .join(labels.select(col("doc_id"),
-          col("y").cast("double").as("y")), "doc_id"),
-      singleEval = true)
+          col("y").cast("double").as("y")), "doc_id"))
     val w = trainWeights(joined.filter(!holdout), iterations, lr)
     joined.filter(holdout).select(col("doc_id"),
       (col("y") === 1.0).as("label_keep"),

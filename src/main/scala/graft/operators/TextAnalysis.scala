@@ -330,11 +330,8 @@ object TextAnalysis {
     // join, the prefix aggregate, the surprisal join) — without a
     // materialization each reference replays the corpus tokenize+explode
     // lineage (measured 4 corpus passes → 9.3 s at sf0.1). It is
-    // VOCAB-scale (distinct bigrams), so the checkpoint is tiny; corpus
-    // passes drop to the minimum two (count pass + scoring pass).
-    val bc = Blocks.copyOut(
-      grams.groupBy(col("bg")).agg(count(lit(1)).as("cnt")),
-      singleEval = true)
+    // VOCAB-scale (distinct bigrams), so the checkpoint is tiny
+    val bc = Blocks.copyOut(grams.groupBy(col("bg")).agg(count(lit(1)).as("cnt")))
     // prefix counts: c(w1 •) = Σ over bigrams sharing the first token —
     // derived FROM the bigram counts (vocab-scale, not corpus-scale)
     val prefix = bc
@@ -383,12 +380,10 @@ object TextAnalysis {
       .select(TF.words(col(textCol)).as("__toks"))
       .select(explode(TF.shingles(col("__toks"), 2)).as("bg"))
     val bc = Blocks.copyOut(
-      refBigrams.groupBy(col("bg")).agg(count(lit(1)).as("c12")),
-      singleEval = true)
+      refBigrams.groupBy(col("bg")).agg(count(lit(1)).as("c12")))
     val uni = Blocks.copyOut(
       ref.select(explode(TF.words(col(textCol))).as("w2"))
-        .groupBy("w2").agg(count(lit(1)).as("cu")),
-      singleEval = true)
+        .groupBy("w2").agg(count(lit(1)).as("cu")))
     scoreAgainstLm(docs, idCol, textCol, bc, uni, discount, threshold)
   }
 
@@ -484,10 +479,10 @@ object TextAnalysis {
     val spark = docs.sparkSession
     val bc = Blocks.copyOut(
       graft.sources.TransactionalLake.readCommitted(spark, lmBigramRoot(lmRoot))
-        .groupBy("bg").agg(sum(col("c12")).as("c12")), singleEval = true)
+        .groupBy("bg").agg(sum(col("c12")).as("c12")))
     val uni = Blocks.copyOut(
       graft.sources.TransactionalLake.readCommitted(spark, lmUnigramRoot(lmRoot))
-        .groupBy("w2").agg(sum(col("cu")).as("cu")), singleEval = true)
+        .groupBy("w2").agg(sum(col("cu")).as("cu")))
     scoreAgainstLm(docs, idCol, textCol, bc, uni, discount, threshold)
   }
 

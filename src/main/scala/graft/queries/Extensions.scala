@@ -295,8 +295,7 @@ object Extensions {
           // (endpoint scan + label join) — mirrors the streaming path,
           // where the canonical maintenance reads the COMMITTED pair epoch
           () => Blocks.copyOut(Dedup.incrementalNearDupPairs(batch, corpus,
-            index, "doc_id", "text", newIndex = Some(batchIndex)),
-            singleEval = true),
+            index, "doc_id", "text", newIndex = Some(batchIndex))),
           () => fold(map, prev))
         (corpus.unionByName(batch), nextIndex, nextMap, Some((batch, pairs)))
     }
@@ -344,8 +343,7 @@ object Extensions {
         val mass = graft.operators.Blocks.copyOut(
           TransactionalLake.readCommitted(s,
             graft.streaming.StreamingDedup.corpusRoot(base))
-            .select(col("doc_id"), length(col("text")).cast("long").as("mass")),
-          singleEval = true)
+            .select(col("doc_id"), length(col("text")).cast("long").as("mass")))
         todo.foreach { e =>
           val te = System.nanoTime()
           val delta = TransactionalLake.readCommitted(s, croot)
@@ -359,7 +357,6 @@ object Extensions {
           System.err.println(f"[chain]   mirror-$e merge ${(tm - te) / 1e9}%.2f" +
             f" s view ${(System.nanoTime() - tm) / 1e9}%.2f s")
         }
-        graft.operators.Blocks.release(mass)
       }
     }
     // per-stage wall times to stderr: the entry's bench spread is
@@ -1143,8 +1140,7 @@ object Extensions {
     import graft.operators.{Blocks, Graph}
     val edges = Blocks.copyOut(
       Similarity.knnGraphIvf(embs(s, d), "vec_id", "embedding",
-        k = 3, nCells = 16).select(col("vec_id"), col("neighbor_id")),
-      singleEval = true)
+        k = 3, nCells = 16).select(col("vec_id"), col("neighbor_id")))
     val slice = abs(xxhash64(col("vec_id") + col("neighbor_id"))) % 3
     val batches = (0 until 3).map(i => edges.filter(slice === i))
     // accumulated-edge seed carries the canonical (u, v) shape
@@ -1155,16 +1151,15 @@ object Extensions {
       .limit(0)
     // fold the three epochs; epoch 1 is delivered TWICE (replay) — the
     // anti-join against the accumulated edge set must no-op it.
-    val (state, acc) = (batches :+ batches(1)).foldLeft((emptyState, empty)) {
+    val (state, _) = (batches :+ batches(1)).foldLeft((emptyState, empty)) {
       case ((st, ed), b) =>
         val (st2, ed2) = Graph.incrementalTriangles(st, ed, b,
           "vec_id", "neighbor_id")
         val Seq(stOut, edOut) = Overlap.all(
-          () => Blocks.copyOut(st2, singleEval = true),
-          () => Blocks.copyOut(ed2, singleEval = true))
+          () => Blocks.copyOut(st2),
+          () => Blocks.copyOut(ed2))
         (stOut, edOut)
     }
-    Blocks.release(acc)
     Graph.triangleStateView(state)
       .select(col("id").as("vec_id"), col("degree"), col("tri_count"),
         col("clustering"))
@@ -1569,8 +1564,7 @@ object Extensions {
     // clean survives into two consumers (metrics + the text join) and the
     // packers — materialize it once (small: surviving ids + text)
     val clean = Blocks.copyOut(
-      reps.join(broadcast(contaminated), Seq("doc_id"), "left_anti"),
-      singleEval = true)
+      reps.join(broadcast(contaminated), Seq("doc_id"), "left_anti"))
     // checkpoint the metrics BEFORE filtering on `keep`: a filter on a
     // projected flag is pushed through the projection by SUBSTITUTION,
     // re-running the quality counting kernel once per rule reference
@@ -1583,8 +1577,7 @@ object Extensions {
     val metrics = Blocks.copyOut(
       TextAnalysis.qualityFilter(
         clean.withColumn("lang", TF.langId(col("text"))),
-        "doc_id", "text", carryCols = Seq("lang", "text")),
-      singleEval = true)
+        "doc_id", "text", carryCols = Seq("lang", "text")))
     val kept = metrics.filter(col("keep") && col("lang") === "en")
       .select(col("doc_id"), col("text"),
         graft.operators.Sampling.contentSplit(col("text")).as("split"))
@@ -1659,17 +1652,15 @@ object Extensions {
     import graft.functions.{TextFunctions => TF}
     val masked = Blocks.copyOut(
       Dedup.maskRepeatedSpans(reps, "doc_id", "text", k = 8, minOccurrences = 2)
-        .select(col("doc_id"), col("clean_text").as("text")),
-      singleEval = true)
+        .select(col("doc_id"), col("clean_text").as("text")))
     val contaminated = Blocks.copyOut(
       Dedup.decontaminate(masked, evalSet, "doc_id", "text", k = 8)
-        .select(col("train_id").as("doc_id")), singleEval = true)
+        .select(col("train_id").as("doc_id")))
     val clean = masked.join(broadcast(contaminated), Seq("doc_id"), "left_anti")
     val metrics = Blocks.copyOut(
       TextAnalysis.qualityFilter(
         clean.withColumn("lang", TF.langId(col("text"))),
-        "doc_id", "text", carryCols = Seq("lang", "text")),
-      singleEval = true)
+        "doc_id", "text", carryCols = Seq("lang", "text")))
     val kept = metrics.filter(col("keep")).select("doc_id", "lang", "text")
     val sampled = graft.operators.Sampling
       .temperatureSample(kept, "lang", "text", alpha = 0.5)

@@ -807,8 +807,7 @@ object PipelineQueries {
     // reads materialized columns instead of re-parsing raw.
     val parsed = graft.operators.Blocks.copyOut(raw
       .withColumn("__env", Ingest.parse(col("raw")))
-      .withColumn(Ingest.ErrorTypeCol, Ingest.errorTypeOf(col("__env"))),
-      singleEval = true)
+      .withColumn(Ingest.ErrorTypeCol, Ingest.errorTypeOf(col("__env"))))
     val (valid, errors) = Ingest.splitParsed(parsed, "raw")
     val repairedRaw = errors
       .filter(col(Ingest.ErrorTypeCol) === "validation-error")
@@ -822,8 +821,7 @@ object PipelineQueries {
     // union both consume it)
     val repParsed = graft.operators.Blocks.copyOut(repairedRaw
       .withColumn("__env", Ingest.parse(col("raw")))
-      .withColumn(Ingest.ErrorTypeCol, Ingest.errorTypeOf(col("__env"))),
-      singleEval = true)
+      .withColumn(Ingest.ErrorTypeCol, Ingest.errorTypeOf(col("__env"))))
     val (replayed, unrepaired) = Ingest.splitParsed(repParsed, "raw")
     require(unrepaired.limit(1).count() == 0L,
       "replay must clear the validation-error class — the repair policy " +

@@ -165,7 +165,7 @@ object MaterializedView {
           .select(gcols: _*).distinct()
       }
     val touched = graft.operators.Blocks.copyOut(
-      newGroups.unionByName(oldGroups).distinct(), singleEval = true)
+      newGroups.unionByName(oldGroups).distinct())
     // recompute the touched groups from the resolved HEAD state: resolve
     // only keys with >= 1 version in a touched group (a superset of the
     // keys whose winner lands there), then keep winners in touched groups
@@ -188,9 +188,7 @@ object MaterializedView {
       else read(spark, viewRoot)
         .join(broadcast(touched), groupCols, "left_anti")
         .unionByName(recomputed)
-    val committed = commitState(spark, viewRoot, state, head, cur)
-    graft.operators.Blocks.release(touched)
-    committed
+    commitState(spark, viewRoot, state, head, cur)
     }
   }
 

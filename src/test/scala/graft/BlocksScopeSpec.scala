@@ -47,6 +47,13 @@ class BlocksScopeSpec extends SparkSpec {
     assert(!resident(id))
   }
 
+  test("scoped with no open scope throws, names the thread and releases the frame") {
+    val (df, id) = checkpointed()
+    val e = intercept[IllegalStateException](Blocks.scoped(df))
+    assert(e.getMessage.contains(Thread.currentThread().getName))
+    assert(!resident(id), "the frame enrolled nowhere still holds its blocks")
+  }
+
   test("a clean scope returns the body's value and releases its frames") {
     val (df, id) = checkpointed()
     assert(Blocks.scope { Blocks.scoped(df).count() } == 10L)

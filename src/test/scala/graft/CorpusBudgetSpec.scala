@@ -23,9 +23,6 @@ class CorpusBudgetSpec extends SparkSpec {
     spark.read.parquet(dir)
   }
 
-  private def toResult(df: => DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
   private def sorted(df: DataFrame): Seq[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
 
@@ -46,6 +43,31 @@ class CorpusBudgetSpec extends SparkSpec {
     val n = jobsIn(toResult(TextAnalysis.qualityFilter(docs, "doc_id", "text")))
     info(s"qualityFilter: $n jobs")
     assert(n <= 3, s"qualityFilter ran $n jobs")
+  }
+
+  test("ngramJaccardPairs runs at most 12 jobs") {
+    // copyOut's former two-step path (local, then reliable checkpoint) ran 13 here
+    val docs = corpus
+    val n = jobsIn(toResult(Dedup.ngramJaccardPairs(docs, "doc_id", "text")))
+    info(s"ngramJaccardPairs: $n jobs")
+    assert(n <= 12, s"ngramJaccardPairs ran $n jobs")
+  }
+
+  test("thresholdSweep runs at most 18 jobs") {
+    // copyOut's former two-step path (local, then reliable checkpoint) ran 19 here
+    val docs = corpus
+    val n = jobsIn(toResult(Dedup.thresholdSweep(docs, "doc_id", "text")))
+    info(s"thresholdSweep: $n jobs")
+    assert(n <= 18, s"thresholdSweep ran $n jobs")
+  }
+
+  test("perplexityFilter runs at most 14 jobs") {
+    // copyOut's former two-step path (local, then reliable checkpoint) ran 16 here
+    val docs = corpus
+    val ref = docs.filter(col("doc_id") % 3 === 0)
+    val n = jobsIn(toResult(TextAnalysis.perplexityFilter(docs, ref, "doc_id", "text")))
+    info(s"perplexityFilter: $n jobs")
+    assert(n <= 14, s"perplexityFilter ran $n jobs")
   }
 
   test("canonicalize's pair plan reuses its exchanges") {

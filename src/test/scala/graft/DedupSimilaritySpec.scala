@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Blocks, Dedup, Similarity}
 import org.apache.spark.sql.functions._
 
 class DedupSimilaritySpec extends SparkSpec {
@@ -358,7 +358,11 @@ class DedupSimilaritySpec extends SparkSpec {
     // ngram: the stop-shingle-aware PPJoin+ prefix join
     val sets = Dedup.withShingleSets(d, "doc_id", "text", 3)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ngramCands = Dedup.ngramJaccardCandidates(sets, "doc_id", 0.8).count()
+    // the candidate generator enrolls its dfreq checkpoint in the
+    // caller's release scope
+    val ngramCands = Blocks.scope {
+      Dedup.ngramJaccardCandidates(sets, "doc_id", 0.8).count()
+    }
     sets.unpersist(blocking = true)
     // minhash: band-bucket collisions
     val idx = Dedup.minhashBandIndex(d, "doc_id", "text")

@@ -196,6 +196,22 @@ class GraphSpec extends SparkSpec {
       s"leaked blocks: ${spark.sparkContext.getPersistentRDDs.keys}")
   }
 
+  test("pageRank runs at most 33 jobs to its whole result") {
+    // copyOut's former two-step path (local, then reliable checkpoint) ran 35 here
+    val e = edges(1L -> 99L, 2L -> 99L, 3L -> 99L, 99L -> 1L, 99L -> 2L, 99L -> 3L)
+    val n = jobsIn(toResult(Graph.pageRank(e, "src", "dst")))
+    info(s"pageRank: $n jobs")
+    assert(n <= 33, s"pageRank ran $n jobs")
+  }
+
+  test("kCore runs at most 22 jobs to its whole result") {
+    // copyOut's former two-step path (local, then reliable checkpoint) ran 26 here
+    val e = edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L, 4L -> 5L)
+    val n = jobsIn(toResult(Graph.kCore(e, "src", "dst", k = 2)))
+    info(s"kCore: $n jobs")
+    assert(n <= 22, s"kCore ran $n jobs")
+  }
+
   test("kCore: empty core and fail-loud on insufficient rounds") {
     // pure chain: 2-core is empty (converges to zero edges)
     assert(Graph.kCore(edges(1L -> 2L, 2L -> 3L, 3L -> 4L), "src", "dst",

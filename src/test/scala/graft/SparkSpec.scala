@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test run, under the timed
@@ -52,6 +52,9 @@ abstract class SparkSpec extends AnyFunSuite {
         java.nio.file.Paths.get(GraftSession.scratchRoot)), prefix)
     d.toString
   }
+
+  /** Run `df` to its whole result: every row and column, no collect. */
+  def toResult(df: => DataFrame): Unit = { Bench.timeToResult(df); () }
 
   /** Spark jobs `body` starts on this thread (and threads it creates),
     * counted by job group. A streaming query's jobs run in its own group
