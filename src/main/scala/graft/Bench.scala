@@ -215,15 +215,17 @@ object Bench {
     val headErrs = results.collect { case (k, Left(msg)) =>
       jsonStr(k) + ":" + jsonStr(msg.take(60))
     }.take(3).mkString("{", ",", "}")
-    val compact = s"""{"metric":"total","value":${f"$tot%.3f"},"unit":"sec","timed_to":"noop","queries":$headQs,"n_queries":${medians.size},"errors":$headErrs,"n_errors":${results.count(_._2.isLeft)},"ingest_records_per_s":${f"$ingestRate%.0f"},"freshness_sec":${f"$freshness%.3f"},"sf":"$sfDir","full":"target/bench_last.json"}"""
-    println(compact)
-    // belt-and-braces for log-prefix-mangled stdout: the same line on disk.
     // Every run gets its own timestamped artifact so isolated
     // SPARK_GRAFT_ONLY debugging runs can't clobber a full-suite record;
-    // bench_last.json is only written by full runs.
-    val stamped = java.nio.file.Paths.get(
-      s"${GraftSession.scratchRoot}/bench_${System.currentTimeMillis()}.json")
-    java.nio.file.Files.writeString(stamped, json + "\n")
+    // bench_last.json is only written by full runs. `full` names the
+    // record THIS run writes.
+    val stamped = s"bench_${System.currentTimeMillis()}.json"
+    val full = if (only.isEmpty) "bench_last.json" else stamped
+    val compact = s"""{"metric":"total","value":${f"$tot%.3f"},"unit":"sec","timed_to":"noop","queries":$headQs,"n_queries":${medians.size},"errors":$headErrs,"n_errors":${results.count(_._2.isLeft)},"ingest_records_per_s":${f"$ingestRate%.0f"},"freshness_sec":${f"$freshness%.3f"},"sf":"$sfDir","full":"target/$full"}"""
+    println(compact)
+    // belt-and-braces for log-prefix-mangled stdout: the same line on disk.
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"${GraftSession.scratchRoot}/$stamped"), json + "\n")
     if (only.isEmpty) {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"${GraftSession.scratchRoot}/bench_last.json"), json + "\n")

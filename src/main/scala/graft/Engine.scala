@@ -1,6 +1,5 @@
 package graft
 
-import graft.ingest.Ingest
 import graft.operators.{TenantContext, TenantQueries}
 import graft.sources.Lake
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -19,25 +18,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 final case class Engine(spark: SparkSession, lakeRoot: String, table: String) {
 
-  /** Batch ingest: validate → project → enrich → partitioned write +
-    * error routing. Returns (validCount, errorCount). */
+  /** Batch ingest through the stream's sink body
+    * ([[graft.streaming.StreamingIngest.writeBatch]]): validate → project
+    * → enrich → partitioned append + error routing, a null tenant
+    * dead-lettered as `missing-tenant-key`, and the batch's partitions
+    * and error types registered incrementally (a lake written before
+    * the table existed is surfaced by [[refreshCatalog]]). Returns
+    * (validCount, errorCount), read from the write's own observation. */
   def ingestBatch(raw: DataFrame, rawCol: String, tenant: Column,
-                  ingestTs: Column = unix_timestamp()): (Long, Long) = {
-    val cached = raw.persist()
-    try {
-      val (valid, errors) = Ingest.validateAndSplit(cached, rawCol)
-      val enriched = Ingest.derivePartitions(Ingest.enrich(valid, tenant, ingestTs))
-        .drop(rawCol)
-      Lake.writeValid(enriched, lakeRoot)
-      val nErr = errors.count()
-      if (nErr > 0) Lake.writeErrors(errors, lakeRoot)
-      Lake.registerExternal(spark, table, s"$lakeRoot/data")
-      // error registration only when this batch produced errors — a full
-      // re-crawl of an unchanged error prefix per batch is pure churn
-      if (nErr > 0) Lake.registerErrors(spark, table, lakeRoot)
-      (enriched.count(), nErr)
-    } finally { cached.unpersist(); () }
-  }
+                  ingestTs: Column = unix_timestamp()): (Long, Long) =
+    graft.streaming.StreamingIngest.writeBatch(spark, raw, rawCol, tenant, ingestTs,
+      lakeRoot, Some(table)) { valid => Lake.writeValid(valid, lakeRoot); true }
 
   /** Streaming ingest with the reference's 60 s freshness floor. The sink
     * maintains the catalog per micro-batch — streamed data is queryable

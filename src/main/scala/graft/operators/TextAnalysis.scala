@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{TextFunctions => TF}
-import graft.plans.QualityExpressions
+import graft.plans.{QualityExpressions, QualityRules}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -131,59 +131,32 @@ object TextAnalysis {
     *  - duplicate 2-gram fraction under maxDupBigramFrac (boilerplate /
     *    generated spam).
     * Every signal is integer counts + one double division — bit-exact
-    * against the oracle. The counts come from ONE compiled pass per doc
-    * ([[graft.plans.QualityCounts]]: tokenize, count, bigram-dedup),
-    * so the whole filter is one codegen'd projection at scan speed.
-    *
-    * Composition note: a downstream `.filter(col("keep"))` gets pushed
-    * through this projection BY SUBSTITUTION — the optimizer inlines the
-    * counting kernel into each of the ~16 rule references in the
-    * predicate (no common-subexpression reuse in a pushed filter),
-    * measured ~8× the unfiltered pass on the sf0.001 documents. In long
-    * pipelines, materialize the metrics frame before filtering on `keep`
-    * (see `Extensions.trainCorpusPrepV2`). */
+    * against the oracle. The counts and `keep` come from ONE compiled
+    * pass per doc ([[graft.plans.QualityCounts]]: tokenize, count,
+    * bigram-dedup, judge), so the whole filter is one codegen'd
+    * projection at scan speed. A downstream `.filter(col("keep"))`
+    * pushed below the projection by substitution inlines that one
+    * struct field, so a filtered pass costs two kernel calls per row
+    * (`PlanSpec`). */
   def qualityFilter(docs: DataFrame, idCol: String, textCol: String,
                     minWords: Int = 20, maxWords: Int = 10000,
                     minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
                     maxTopWordFrac: Double = 0.2,
                     maxDupBigramFrac: Double = 0.1,
                     carryCols: Seq[String] = Nil): DataFrame = {
-    // one codegen'd pass per doc yields every count the rules need; the
-    // rule columns below are the same double arithmetic on those exact
-    // integers as the declarative form (QualityKernelSpec keeps it as the
-    // reference). The counts sit behind a PROJECT BOUNDARY: the struct is
-    // read ~10 times, and CollapseProject does not inline an expensive
-    // alias consumed more than once.
-    val q = col("__q")
-    val n = q.getField("n_tokens")
-    val nD = n.cast("double")
-    val nBigrams = q.getField("n_bigrams")
-    // `carryCols` ride through the metrics projection so a caller can
-    // fuse downstream per-row derivations (language id, the text itself)
-    // into this pass instead of re-joining on id afterwards
-    docs.select(col(idCol) +: carryCols.map(col) :+
-        QualityExpressions.qualityCounts(lower(col(textCol)),
-          TF.langMarkers.flatMap(_._2)).as("__q"): _*)
-      .select((col(idCol) +: carryCols.map(col)) ++ Seq(
-        n.as("n_words"),
-        // zero-token guard: 0/0 is null in Spark and an error in DuckDB's
-        // list_reduce — pin empty docs to 0-metrics so `keep` is
-        // deterministically false (never null) in both engines
-        when(n > 0, q.getField("n_chars").cast("double") / nD)
-          .otherwise(lit(0.0)).as("mean_word_len"),
-        (q.getField("n_markers") >= 1).as("has_stopword"),
-        when(n > 0, q.getField("top_count").cast("double") / nD).otherwise(lit(0.0))
-          .as("top_word_frac"),
-        (when(nBigrams > 0,
-          lit(1.0) - q.getField("n_distinct_bigrams").cast("double") / nBigrams.cast("double"))
-          .otherwise(lit(0.0))).as("dup_bigram_frac")): _*)
-      .withColumn("keep",
-        col("n_words") > 0 &&
-          col("n_words").between(minWords, maxWords) &&
-          col("mean_word_len").between(minMeanLen, maxMeanLen) &&
-          col("has_stopword") &&
-          col("top_word_frac") <= maxTopWordFrac &&
-          col("dup_bigram_frac") <= maxDupBigramFrac)
+    // one codegen'd pass per doc yields every rule column (QualityKernelSpec
+    // keeps the declarative form as the reference). The struct sits
+    // behind a PROJECT BOUNDARY: it is read once per rule column, and
+    // CollapseProject does not inline an expensive alias consumed more
+    // than once. `carryCols` ride through the pass so a caller can fuse
+    // downstream per-row derivations (language id, the text itself) into
+    // it instead of re-joining on id afterwards
+    val keys = col(idCol) +: carryCols.map(col)
+    docs.select(keys :+
+        QualityExpressions.qualityCounts(lower(col(textCol)), TF.langMarkers.flatMap(_._2),
+          QualityRules(minWords, maxWords, minMeanLen, maxMeanLen, maxTopWordFrac,
+            maxDupBigramFrac)).as("__q"): _*)
+      .select(keys :+ col("__q.*"): _*)
   }
 
   /** QUALITY-CLASSIFIER scoring — the model-based stage that follows the

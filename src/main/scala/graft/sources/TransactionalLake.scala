@@ -101,14 +101,15 @@ object TransactionalLake {
       f.exists(new Path(s"${foldedMarkerDir(root)}/$epochId"))
   }
 
-  /** Write + commit one epoch (idempotent — see the protocol above).
-    * `df` must already carry `partitionCols` (default: the standard
-    * event-lake layout; pass Nil for an unpartitioned epoch payload —
-    * e.g. a dedup index or pair log). */
+  /** Write + commit one epoch (idempotent — see the protocol above) in
+    * one write. `df` must already carry `partitionCols` (default: the
+    * standard event-lake layout; pass Nil for an unpartitioned epoch
+    * payload — e.g. a dedup index or pair log). Returns false, having
+    * written nothing, for an epoch that is already committed. */
   def commitEpoch(df: DataFrame, root: String, epochId: Long,
-                  partitionCols: Seq[String] = Schemas.partitionCols): Unit = {
+                  partitionCols: Seq[String] = Schemas.partitionCols): Boolean = {
     val spark = df.sparkSession
-    if (isCommitted(spark, root, epochId)) return // replayed post-commit epoch
+    if (isCommitted(spark, root, epochId)) return false // replayed post-commit epoch
     val target = epochDir(root, epochId)
     val n = spark.sessionState.conf.numShufflePartitions
     val distributed =
@@ -145,7 +146,7 @@ object TransactionalLake {
         ("epoch" +: partitionCols).map(c =>
           org.apache.spark.sql.types.StructField(c,
             org.apache.spark.sql.types.StringType))))
-    ()
+    true
   }
   private val epochSchemaHints = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()

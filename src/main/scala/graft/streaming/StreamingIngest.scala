@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.ingest.Ingest
 import graft.model.Schemas
-import graft.sources.Lake
+import graft.sources.{Lake, TransactionalLake}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -24,7 +24,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *  - dynamic partition write tenant/year/month/day/hour ≡ Firehose
   *    dynamic partitioning (kinesis-stack.ts:137-161)
   *  - corrupt/invalid records land under error/<error-type>/ per
-  *    micro-batch (S6) — both outputs from ONE pass via foreachBatch.
+  *    micro-batch (S6) — both outputs from ONE pass via foreachBatch,
+  *    through the one sink body ([[writeBatch]]) that the exactly-once
+  *    stream and `Engine.ingestBatch` run too.
   *
   * The Flink job is stateless, so micro-batch semantics are a strict
   * superset; no watermark is needed for parity (ingest-time, not
@@ -37,26 +39,69 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingIngest {
 
-  /** Raw-string stream → enriched, partition-derived stream + error split,
-    * written per micro-batch. `tenantFromCol` mirrors C3: the tenant comes
-    * from the transport key column, never the payload.
-    *
-    * `table`: when set, the sink maintains the catalog TRANSACTIONALLY per
-    * micro-batch (SURVEY §3.2) — after each commit it registers exactly the
-    * batch's partition tuples (incremental ADD PARTITION, O(batch
-    * partitions), one statement per batch) so the streamed data is
-    * queryable through `spark.table`/`TenantQueries` immediately, with
-    * zero crawler lag (the reference needs a 5-min Glue crawl,
-    * multi-tenant-glue-stack.ts:41-43).
-    *
-    * One pass per batch: [[Ingest.stage]] parses, classifies and enriches
-    * each record once, and the valid rows' write carries an `observe`
-    * that collects the batch's partition tuples and error types inside
-    * the write's own job. Registration and the dead-letter branch read
-    * those observed sets (metadata-scale: tenants × hours, error types),
-    * so the partitions registered are exactly the partitions written, and
-    * the only other Spark job is the dead-letter write itself — none runs
-    * for an error-free batch. */
+  /** The one ingest sink, run per batch by [[start]], [[startTransactional]]
+    * and `Engine.ingestBatch`: [[Ingest.stage]] parses, classifies and
+    * enriches each record once, `commit` writes the valid rows, and an
+    * `observe` on that write collects the batch's partition tuples, error
+    * types and row counts inside the write's own job. Registration in
+    * `table` (incremental ADD PARTITION) and the dead-letter branch read
+    * those values, so the partitions registered are exactly the
+    * partitions written. Job budget: 3 per batch with dead letters, 2
+    * without. `commit` returns whether it wrote: an already-committed
+    * epoch writes nothing, no action delivers the observation, and one
+    * aggregate over the batch stands in. Returns (valid, error) rows. */
+  private[graft] def writeBatch(spark: SparkSession, batch: DataFrame, rawCol: String,
+                                tenant: Column, ingestTs: Column, lakeRoot: String,
+                                table: Option[String])
+                               (commit: DataFrame => Boolean): (Long, Long) = {
+    val pcols = Schemas.partitionCols
+    val isValid = col(Ingest.ErrorTypeCol).isNull
+    val metrics = Seq(
+      collect_set(when(isValid, struct(pcols.map(col): _*))).as("parts"),
+      collect_set(col(Ingest.ErrorTypeCol)).as("error_types"),
+      count(when(isValid, lit(1))).as("valid"),
+      count(col(Ingest.ErrorTypeCol)).as("errors"))
+    val written = new Observation()
+    // the observation also fences the stage: a filter on error_type
+    // cannot be pushed below it, so each side's plan parses the
+    // envelope once instead of inlining from_json into the filter
+    val staged = Ingest.stage(batch, rawCol, tenant, ingestTs)
+    val (valid, errors) = Ingest.splitStaged(
+      staged.observe(written, metrics.head, metrics.tail: _*), rawCol)
+    // a write that returned completed its job and delivers the
+    // observation; a failed write threw above instead. When no row is
+    // valid, AQE replaces the emptied shuffle stage, and the metrics
+    // observed in it are lost: aggregate the same values over the batch.
+    val observed = (if (commit(valid)) written.get else Map.empty[String, Any]) match {
+      case m if m.nonEmpty => m
+      case _ => staged.agg(metrics.head, metrics.tail: _*).head()
+        .getValuesMap[Any](Seq("parts", "error_types", "valid", "errors"))
+    }
+    table.foreach { t =>
+      val parts = observed("parts").asInstanceOf[collection.Seq[Row]].toSeq
+        .map(r => pcols.map(c => c -> r.getAs[String](c)).toMap)
+      // catalog ops run on the CALLER's session, not batch
+      // .sparkSession: foreachBatch hands a cloned session whose
+      // relation cache is isolated — refreshing the clone would
+      // leave the session users actually query through stale.
+      Lake.registerPartitions(spark, t, s"$lakeRoot/data", parts, schema = Some(valid.schema))
+    }
+    val errorTypes = observed("error_types").asInstanceOf[collection.Seq[String]].toSeq
+    if (errorTypes.nonEmpty) {
+      Lake.writeErrors(errors, lakeRoot)
+      // dead letters are SQL-queryable like the data; INCREMENTAL
+      // registration never drops `<table>_errors` mid-stream
+      table.foreach(Lake.registerErrorPartitions(spark, _, lakeRoot, errorTypes))
+    }
+    (observed("valid").asInstanceOf[Long], observed("errors").asInstanceOf[Long])
+  }
+
+  /** Raw-string stream → [[writeBatch]] per micro-batch as a plain append
+    * ([[Lake.writeValid]]). `tenantCol` mirrors C3: the tenant comes from
+    * the transport key column, never the payload. `table`: when set, each
+    * batch's partitions are registered after its commit, so streamed data
+    * is queryable with zero crawler lag (the reference needs a 5-min Glue
+    * crawl, multi-tenant-glue-stack.ts:41-43). */
   def start(spark: SparkSession, raw: DataFrame, rawCol: String,
             tenantCol: String, lakeRoot: String, checkpoint: String,
             trigger: Trigger = Trigger.ProcessingTime("60 seconds"),
@@ -66,67 +111,28 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val pcols = Schemas.partitionCols
-        val partSet = collect_set(when(col(Ingest.ErrorTypeCol).isNull,
-          struct(pcols.map(col): _*))).as("parts")
-        val errorTypeSet = collect_set(col(Ingest.ErrorTypeCol)).as("error_types")
-        val written = new Observation()
-        // the observation also fences the stage: a filter on error_type
-        // cannot be pushed below it, so each side's plan parses the
-        // envelope once instead of inlining from_json into the filter
-        val staged = Ingest.stage(batch, rawCol, col(tenantCol), ingestTs)
-        val (valid, errors) = Ingest.splitStaged(
-          staged.observe(written, partSet, errorTypeSet), rawCol)
-        val path = Lake.writeValid(valid, lakeRoot)
-        // the write returned, so its job completed and delivers the
-        // observation; a failed write threw above instead. When no row is
-        // valid, AQE replaces the emptied shuffle stage, and the metrics
-        // observed in it are lost: aggregate the same sets over the batch.
-        val observed = written.get match {
-          case m if m.nonEmpty => m
-          case _ => staged.agg(partSet, errorTypeSet).head()
-            .getValuesMap[Any](Seq("parts", "error_types"))
-        }
-        table.foreach { t =>
-          val parts = observed("parts").asInstanceOf[collection.Seq[Row]].toSeq
-            .map(r => pcols.map(c => c -> r.getAs[String](c)).toMap)
-          // catalog ops run on the CALLER's session, not batch
-          // .sparkSession: foreachBatch hands a cloned session whose
-          // relation cache is isolated — refreshing the clone would
-          // leave the session users actually query through stale.
-          Lake.registerPartitions(spark, t, path, parts, schema = Some(valid.schema))
-        }
-        val errorTypes = observed("error_types").asInstanceOf[collection.Seq[String]].toSeq
-        if (errorTypes.nonEmpty) {
-          Lake.writeErrors(errors, lakeRoot)
-          // dead letters are SQL-queryable like the data (the crawler
-          // indexes the whole bucket in the reference). INCREMENTAL
-          // registration of the batch's error types only — a full
-          // re-crawl here would DROP+CREATE `<table>_errors` on every
-          // errored batch (transient missing-table window mid-stream)
-          // and pay O(error-prefix partitions) per batch.
-          table.foreach(Lake.registerErrorPartitions(spark, _, lakeRoot, errorTypes))
+        writeBatch(spark, batch, rawCol, col(tenantCol), ingestTs, lakeRoot, table) { valid =>
+          Lake.writeValid(valid, lakeRoot); true
         }
         ()
       }
       .start()
 
-  /** EXACTLY-ONCE variant of [[start]]: each epoch's valid rows are
-    * delivered through [[graft.sources.TransactionalLake.commitEpoch]] —
-    * idempotent epoch-directory overwrite + atomic manifest publish — so
-    * a replayed epoch (crash between data write and checkpoint commit,
-    * the at-least-once hazard of the append path) rewrites its own
-    * directory or skips, never duplicates. Readers use
+  /** EXACTLY-ONCE variant of [[start]]: the same [[writeBatch]] body, but
+    * each epoch's valid rows are delivered through
+    * [[graft.sources.TransactionalLake.commitEpoch]] — idempotent
+    * epoch-directory overwrite + atomic manifest publish — so a replayed
+    * epoch (crash between data write and checkpoint commit, the
+    * at-least-once hazard of the append path) rewrites its own directory
+    * or skips, never duplicates. Readers use
     * `TransactionalLake.readCommitted`. Dead letters keep the append
     * path (diagnostics: replay may re-log an error, it cannot corrupt
     * the data). Catalog registration is the reader's `readCommitted`
     * view rather than per-partition ALTERs — epoch dirs come and go with
     * the replay window, the manifest is the source of truth.
-    *
-    * Same [[Ingest.stage]]d frame as [[start]], cached, and the
-    * dead-letter branch keeps an `isEmpty` probe: `commitEpoch` may run
-    * more than one action on the valid rows, and an observation reports
-    * only the first. */
+    * `onEpochCommitted` (e.g. MaterializedView.refresh) runs after the
+    * sink body on every epoch, a replayed one included, so it must be
+    * idempotent. */
   def startTransactional(spark: SparkSession, raw: DataFrame, rawCol: String,
                          tenantCol: String, lakeRoot: String, checkpoint: String,
                          trigger: Trigger = Trigger.ProcessingTime("60 seconds"),
@@ -137,19 +143,9 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val staged = Ingest.stage(batch, rawCol, col(tenantCol), ingestTs).persist()
-        try {
-          val (valid, errors) = Ingest.splitStaged(staged, rawCol)
-          graft.sources.TransactionalLake.commitEpoch(valid, lakeRoot, epochId)
-          // post-commit hook — e.g. MaterializedView.refresh for
-          // continuous incremental view maintenance. Runs AFTER the
-          // epoch is durable; a crash between commit and hook replays
-          // the epoch as a no-op and re-fires the hook, so the hook
-          // must be (and MaterializedView.refresh is) idempotent.
-          onEpochCommitted(batch.sparkSession, epochId)
-          if (!errors.isEmpty) { Lake.writeErrors(errors, lakeRoot); () }
-          ()
-        } finally { staged.unpersist(); () }
+        writeBatch(spark, batch, rawCol, col(tenantCol), ingestTs, lakeRoot, None)(
+          TransactionalLake.commitEpoch(_, lakeRoot, epochId))
+        onEpochCommitted(batch.sparkSession, epochId)
       }
       .start()
 

@@ -33,6 +33,48 @@ class EngineSpec extends SparkSpec {
     assert(engine.errors.select("error_type").as[String].head() == "parse-error")
   }
 
+  test("ingestBatch runs the stream's sink budget: 3 jobs with dead letters, 2 without") {
+    def run(tag: String, rows: Seq[(String, String)]): Int = {
+      val engine = Engine(spark, tmpDir(s"engine_budget_$tag"), s"engine_budget_$tag")
+      Seq("", "_errors").foreach(t => spark.sql(s"DROP TABLE IF EXISTS engine_budget_$tag$t"))
+      val raw = rows.toDF("raw", "tenant_key")
+      var counts = (0L, 0L)
+      val jobs = jobsIn { counts = engine.ingestBatch(raw, "raw", col("tenant_key")) }
+      val nValid = rows.count(_._1.startsWith("{")).toLong
+      assert(counts == (nValid, rows.size - nValid))
+      assert(spark.table(s"engine_budget_$tag").count() == nValid)
+      jobs
+    }
+    val mixed = run("mixed", Seq(
+      ("""{"Data":{"event":"e1","region":"US","device":"TV"}}""", "acme"),
+      ("""{"Data":{"event":"e2","region":"EU","device":"web"}}""", "globex"),
+      ("broken", "acme")))
+    assert(mixed >= 1 && mixed <= 3, s"a batch with dead letters ran $mixed jobs") // parent: 10
+    val clean = run("clean", Seq(
+      ("""{"Data":{"event":"e1","region":"US","device":"TV"}}""", "acme"),
+      ("""{"Data":{"event":"e2","region":"EU","device":"web"}}""", "globex")))
+    assert(clean >= 1 && clean <= 2, s"an error-free batch ran $clean jobs") // parent: 8
+    info(s"ingestBatch jobs: $mixed with dead letters, $clean without")
+  }
+
+  test("ingestBatch dead-letters a null tenant key; it never becomes a partition") {
+    val root = tmpDir("engine_null")
+    val engine = Engine(spark, root, "engine_null_events")
+    Seq("", "_errors").foreach(t => spark.sql(s"DROP TABLE IF EXISTS engine_null_events$t"))
+    val raw = Seq(
+      ("""{"Data":{"event":"e1","region":"US","device":"TV"}}""", "acme"),
+      ("""{"Data":{"event":"e2","region":"EU","device":"web"}}""", null))
+      .toDF("raw", "tenant_key")
+    assert(engine.ingestBatch(raw, "raw", col("tenant_key")) == ((1L, 1L)))
+    val data = java.nio.file.Paths.get(root, "data")
+    assert(!java.nio.file.Files.exists(data.resolve("tenant=__HIVE_DEFAULT_PARTITION__")))
+    assert(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get(root, "error", "error_type=missing-tenant-key")))
+    assert(engine.errors.select("error_type").as[String].collect().toSeq ==
+      Seq(graft.ingest.Ingest.MissingTenantKey))
+    assert(engine.query(TenantContext("acme")).count() == 1)
+  }
+
   test("engine streaming: streamed rows queryable through the facade immediately") {
     val engine = Engine(spark, tmpDir("engine_s"), "engine_stream_events")
     spark.sql("DROP TABLE IF EXISTS engine_stream_events")

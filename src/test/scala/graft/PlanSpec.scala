@@ -122,6 +122,16 @@ class PlanSpec extends SparkSpec {
     assert(!r.contains("Exchange"), r)
   }
 
+  test("a pushed quality `keep` filter calls the kernel at most twice per row") {
+    val docs = Tables.load(spark, sf0001, "documents")
+    val plan = graft.operators.TextAnalysis.qualityFilter(docs, "doc_id", "text")
+      .filter(col("keep")).queryExecution.optimizedPlan
+    val calls = plan.collect { case n =>
+      n.expressions.map(_.collect { case _: graft.plans.QualityCounts => 1 }.sum).sum
+    }.sum
+    assert(calls >= 1 && calls <= 2, s"$calls quality_counts calls in\n$plan") // parent: 17
+  }
+
   test("argmax-latest is one aggregate pair, no ranking window") {
     val p = plan("q_argmax_latest")
     assert(!p.contains("Window"), "latest-per-key must not rank")

@@ -4,6 +4,7 @@ import graft.sources.TransactionalLake
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Manifest-committed sink: exactly-once delivery under BOTH crash
   * points of the epoch protocol (the driver-gated
@@ -60,6 +61,56 @@ class TransactionalSpec extends SparkSpec {
     run(in, lake, ckpt)
     assert(snapshot(lake) == baseline, "mid-write replay must rewrite in place")
     assert(TransactionalLake.committedEpochs(spark, lake) == Seq(0L))
+  }
+
+  private def readStream(in: String) = spark.readStream
+    .schema("value STRING, tenant_key STRING").json(in)
+
+  test("sink job budget: 3 jobs per micro-batch with dead letters, 2 without") {
+    def run(tag: String, rows: Seq[(String, String)]): Int = {
+      val in = tmpDir(s"tx_budget_${tag}_in"); val lake = tmpDir(s"tx_budget_${tag}_lake")
+      rows.toDF("value", "tenant_key").repartition(1).write.mode("append").json(in)
+      val q = StreamingIngest.startTransactional(spark, readStream(in), "value", "tenant_key",
+        lake, tmpDir(s"tx_budget_${tag}_ckpt"), Trigger.AvailableNow())
+      assert(q.awaitTermination(120000), "stream must finish within the timeout")
+      assert(TransactionalLake.readCommitted(spark, lake).count() ==
+        rows.count(_._1.startsWith("{")))
+      val batches = q.recentProgress.map(_.batchId).distinct
+      assert(batches.length == 1, s"one micro-batch expected: ${batches.mkString(",")}")
+      JobsByGroup.of(q.runId.toString)
+    }
+    val mixed = run("mixed", Seq(
+      ("""{"Data":{"event":"e1","region":"US","device":"TV"}}""", "acme"),
+      ("""{"Data":{"event":"e2","region":"EU","device":"web"}}""", "globex"),
+      ("broken", "acme")))
+    assert(mixed >= 1 && mixed <= 3, s"a batch with dead letters ran $mixed jobs") // parent: 5
+    val clean = run("clean", Seq(
+      ("""{"Data":{"event":"e1","region":"US","device":"TV"}}""", "acme"),
+      ("""{"Data":{"event":"e2","region":"EU","device":"web"}}""", "globex")))
+    assert(clean >= 1 && clean <= 2, s"an error-free batch ran $clean jobs") // parent: 4
+    info(s"jobs per micro-batch: $mixed with dead letters, $clean without")
+  }
+
+  test("a post-commit replay skips the data, re-fires the hook and re-logs the dead letters") {
+    val in = tmpDir("tx_dl_in"); val lake = tmpDir("tx_dl_lake"); val ckpt = tmpDir("tx_dl_ckpt")
+    Seq(("""{"Data":{"event":"e1","region":"US","device":"TV"}}""", "acme"),
+      ("broken", "acme")).toDF("value", "tenant_key").repartition(1).write.mode("append").json(in)
+    val fired = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    def run(): Unit = StreamingIngest.awaitWithRestartRetry { () =>
+      StreamingIngest.startTransactional(spark, readStream(in), "value", "tenant_key",
+        lake, ckpt, Trigger.AvailableNow(), ingestTs = lit(1704067200L),
+        onEpochCommitted = (_, e) => { fired.add(e); () })
+    }
+    def deadLetters() = spark.read.parquet(s"$lake/error").count()
+    run()
+    val baseline = snapshot(lake)
+    assert(baseline.size == 1 && deadLetters() == 1)
+    // crash A: the epoch is committed, its checkpoint commit is lost
+    StreamingIngest.dropCommit(spark, ckpt, 0)
+    run()
+    assert(snapshot(lake) == baseline, "post-commit replay must skip")
+    assert(fired.asScala.toSeq == Seq(0L, 0L), "the hook fires on the replay too")
+    assert(deadLetters() == 2, "dead letters keep the append path: the replay re-logs them")
   }
 
   test("uncommitted epochs are invisible to readers") {
