@@ -42,21 +42,19 @@ object Ingest {
       envelope.getField("Data").getField("event").isNotNull &&
       envelope.getField("Data").getField("region").isNotNull
 
-  /** Error classification over an ALREADY-PARSED envelope column —
-    * [[errorType]] with the parse factored out. Exists so a caller that
-    * materializes the parse once can derive the class without a textual
-    * re-parse: Catalyst inlines alias definitions into pushed-down
-    * filter conditions, and the r17 plan audit found pipe_error_replay's
-    * filter carrying SEVEN inlined copies of the same `from_json`
-    * (~140 µs/row measured — guide §4.4's expression-duplication class). */
+  /** Error classification (null = valid) over an ALREADY-PARSED
+    * envelope column, mirroring the reference's two failure classes:
+    * unparsable bytes vs schema-invalid. Takes the parse, not the raw
+    * string, so a caller that materializes the parse once can derive the
+    * class without a textual re-parse: Catalyst inlines alias definitions
+    * into pushed-down filter conditions, and the r17 plan audit found
+    * pipe_error_replay's filter carrying SEVEN inlined copies of the
+    * same `from_json` (~140 µs/row measured — guide §4.4's
+    * expression-duplication class). */
   def errorTypeOf(env: Column): Column =
     when(env.isNull || env.getField("Data").isNull, lit("parse-error"))
       .when(!isValid(env), lit("validation-error"))
       .otherwise(lit(null).cast("string"))
-
-  /** Classify a raw string into an error type (null = valid). Mirrors the
-    * reference's two failure classes: unparsable bytes vs schema-invalid. */
-  def errorType(raw: Column): Column = errorTypeOf(parse(raw))
 
   /** The split half of [[validateAndSplit]] over a frame that already
     * carries `__env` (parsed envelope) and [[ErrorTypeCol]] — factored

@@ -716,33 +716,31 @@ object PipelineQueries {
       .orderBy("event_type")
   }
 
-  /** GROUP-RECOMPUTE merged view, driver-gated end-to-end: the same
-    * three merge epochs and fold as [[keyedView]], maintained by
-    * [[graft.sources.MaterializedView.refreshMerged]] instead — the
-    * O(groups)-state strategy (no per-key index; each refresh recomputes
-    * exactly the touched groups from the resolved head). Epoch 2's
-    * event_type rewrite exercises both directions: 'promo' is a NEW
-    * group and every origin group must shrink via the changed keys'
-    * PRIOR resolved placement. Identical oracle as the keyed variant —
-    * two maintenance strategies, one recompute ground truth. */
+  /** FIRST REFRESH OVER A FOLDED MERGE HISTORY, driver-gated end-to-end:
+    * the same three merge epochs and retention fold as [[keyedView]],
+    * but the [[graft.sources.KeyedView]] is built by ONE refresh after
+    * all of them. That is the path [[keyedView]]'s per-epoch refreshes
+    * never reach: an empty view (no cursor, no old key-index buckets)
+    * whose delta spans a fold generation plus a live epoch and resolves
+    * the epoch-1 tombstones (keys not re-inserted by epoch 2) as
+    * winners that must contribute nothing. A second refresh is asserted
+    * a no-op. Identical oracle as [[keyedView]]: one refresh ≡ three. */
   def mergedView(spark: SparkSession, dir: String): DataFrame = {
     val root = freshDir(spark, "mvlake", dir)
     val view = freshDir(spark, "mvview", dir)
     val T = graft.sources.TransactionalLake
-    val V = graft.sources.MaterializedView
+    val K = graft.sources.KeyedView
     val base = events(spark, dir).filter(col("event_id") <= 3000)
       .select("event_id", "event_type", "value")
     val none = base.filter(lit(false)).select("event_id")
-    def refresh(): Long = V.refreshMerged(spark, root, view,
-      Seq("event_id"), Seq("event_type"), "value")
+    def refresh(): Long =
+      K.refresh(spark, root, view, "event_id", "event_type", "value")
     T.mergeCommit(base, none, root, 0L, Seq("event_id"))
-    require(refresh() == 0L)
     T.mergeCommit(
       base.filter(col("event_id") % 5 === 0 && col("event_id") % 7 =!= 0)
         .withColumn("value", col("value") + 1000.0),
       base.filter(col("event_id") % 7 === 0).select("event_id"),
       root, 1L, Seq("event_id"))
-    require(refresh() == 1L)
     require(T.foldCommittedEpochs(spark, root, upTo = 1L,
       partitionCols = Nil) == 2)
     T.mergeCommit(
@@ -752,8 +750,8 @@ object PipelineQueries {
       none, root, 2L, Seq("event_id"))
     require(refresh() == 2L)
     require(refresh() == 2L) // head unchanged — refresh is a no-op
-    V.read(spark, view)
-      .select(col("event_type"), col("cnt"),
+    K.read(spark, view)
+      .select(col("g").as("event_type"), col("cnt"),
         col("total").cast("double").as("total_value"))
       .orderBy("event_type")
   }
@@ -1826,8 +1824,8 @@ object PipelineQueries {
         |  min(value) AS min_v, max(value) AS max_v
         |FROM final GROUP BY 1
         |ORDER BY event_type""".stripMargin,
-    // group-recompute strategy over the identical fixture — same
-    // resolved-state ground truth as the keyed variant
+    // one keyed-view refresh over the identical fixture's folded history
+    // — same resolved-state ground truth as the per-epoch refreshes
     "pipe_merged_view" ->
       """WITH final AS (
         |  SELECT event_id,

@@ -41,8 +41,7 @@ object KeyedView {
     org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
 
-  private def stateDir(root: String, c: Long) = s"$root/state_v$c"
-  private def cursorDir(root: String) = new Path(s"$root/_cursor")
+  import MaterializedView.stateDir
   private def bucketRoot(root: String, b: Long) = s"$root/keyidx/kb=$b"
   private def bucketDir(root: String, b: Long, v: Long) =
     s"${bucketRoot(root, b)}/v$v"
@@ -50,13 +49,8 @@ object KeyedView {
     pmod(xxhash64(key), lit(buckets.toLong))
 
   /** Highest committed cursor; -1 = empty view. */
-  def cursor(spark: SparkSession, root: String): Long = {
-    val f = fs(spark, root)
-    if (!f.exists(cursorDir(root))) -1L
-    else f.listStatus(cursorDir(root)).map(_.getPath.getName)
-      .filter(_.forall(_.isDigit)).map(_.toLong)
-      .foldLeft(-1L)(math.max)
-  }
+  def cursor(spark: SparkSession, root: String): Long =
+    MaterializedView.cursor(spark, root)
 
   /** The committed grouped view. Extrema states carry a `__rc`
     * recompute flag: a flagged row was superseded by an appended
@@ -202,11 +196,7 @@ object KeyedView {
       buckets: Int)(
       stateFn: (Long, Long, DataFrame, DataFrame) => Unit): Long = {
     val cur = cursor(spark, viewRoot)
-    val epochs = TransactionalLake.committedEpochs(spark, lakeRoot) ++
-      TransactionalLake.foldView(spark, lakeRoot).map(_._2.flatMap(_._2))
-        .getOrElse(Seq.empty)
-    if (epochs.isEmpty) return cur
-    val head = epochs.max
+    val head = TransactionalLake.headEpoch(spark, lakeRoot)
     if (head <= cur) return cur
     // size the refresh's shuffles (and drop AQE's per-stage job
     // dispatch) to what it can actually READ — delta epochs + the whole
@@ -315,16 +305,8 @@ object KeyedView {
       }
       f.delete(new Path(staging), true)
       // COMMIT: one marker file flips state + every touched bucket
-      f.mkdirs(cursorDir(viewRoot))
-      val tmp = new Path(s"${cursorDir(viewRoot)}/.tmp-$head")
-      val fin = new Path(s"${cursorDir(viewRoot)}/$head")
-      val out = f.create(tmp, true)
-      try out.write(head.toString.getBytes("UTF-8")) finally out.close()
-      if (!f.rename(tmp, fin) && !f.exists(fin))
-        throw new java.io.IOException(s"keyed view commit failed for $viewRoot")
+      MaterializedView.commitCursor(spark, viewRoot, head, cur)
       if (cur >= 0) { // cleanup — crash here is harmless
-        f.delete(new Path(s"${cursorDir(viewRoot)}/$cur"), false)
-        f.delete(new Path(stateDir(viewRoot, cur)), true)
         touched.foreach { b =>
           liveBucketDir(spark, viewRoot, b, cur).filter(_ != bucketDir(viewRoot, b, head))
             .foreach(d => f.delete(new Path(d), true))

@@ -114,10 +114,6 @@ object Lake {
     spark.catalog.recoverPartitions(table)
   }
 
-  /** Alias with the crawler's name, for API parity with SURVEY §3.2. */
-  def refreshCatalog(spark: SparkSession, table: String, path: String): Unit =
-    registerExternal(spark, table, path)
-
   /** Register the error prefix as `<table>_errors` — the reference's
     * crawler indexes the whole bucket, so `error/<error-type>/` records
     * are queryable through Athena too (kinesis-stack.ts:139,

@@ -119,14 +119,8 @@ object TransactionalLake {
       .write.mode("overwrite") // replayed MID-WRITE epoch rewrites, never appends
       .partitionBy(partitionCols: _*)
       .parquet(target)
-    val f = fs(spark, root)
-    f.mkdirs(new Path(manifestDir(root)))
-    val tmp = new Path(s"${manifestDir(root)}/.tmp-$epochId")
-    val fin = new Path(s"${manifestDir(root)}/$epochId")
-    val out = f.create(tmp, true)
-    try out.write(target.getBytes("UTF-8")) finally out.close()
-    if (!f.rename(tmp, fin) && !f.exists(fin))
-      throw new java.io.IOException(s"manifest commit failed for epoch $epochId")
+    val fin = publishMarker(spark, manifestDir(root), epochId,
+      epochId.toString, target)
     // commit-time schema hint: this process is the only writer of this
     // epoch dir, so the read-side schema of the live view is derivable
     // without a footer-inference job — data columns (partition cols are
@@ -139,7 +133,7 @@ object TransactionalLake {
     // instead of silently reading with a stale schema.
     if (epochSchemaHints.size > 4096) epochSchemaHints.clear()
     epochSchemaHints.put(
-      s"$root|$epochId|${f.getFileStatus(fin).getModificationTime}",
+      s"$root|$epochId|${fs(spark, root).getFileStatus(fin).getModificationTime}",
       org.apache.spark.sql.types.StructType(
         df.schema.fields.filterNot(fd => partitionCols.contains(fd.name))
           .map(_.copy(nullable = true)) ++
@@ -150,6 +144,25 @@ object TransactionalLake {
   }
   private val epochSchemaHints = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
+
+  /** Atomically publish marker `dir/<name>` holding `content`: write the
+    * `.tmp-<id>` sibling, then rename it in. The rename is the commit; a
+    * rename that fails but finds the marker present lost to an identical
+    * replayed publish. A crash leaves only the temp file, which
+    * [[vacuum]] sweeps once aged. Returns the marker's path. */
+  private[sources] def publishMarker(spark: SparkSession, dir: String,
+                                     id: Long, name: String,
+                                     content: String): Path = {
+    val f = fs(spark, dir)
+    f.mkdirs(new Path(dir))
+    val tmp = new Path(s"$dir/.tmp-$id")
+    val fin = new Path(s"$dir/$name")
+    val out = f.create(tmp, true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+    if (!f.rename(tmp, fin) && !f.exists(fin))
+      throw new java.io.IOException(s"marker commit failed for $fin")
+    fin
+  }
 
   /** Upper bound on the on-disk bytes holding change rows in
     * `(fromExclusive, toInclusive]` — the live epoch dirs in range plus
@@ -178,6 +191,12 @@ object TransactionalLake {
   /** Committed epoch ids, ascending. */
   def committedEpochs(spark: SparkSession, root: String): Seq[Long] =
     manifestEntries(spark, root).map(_._1)
+
+  /** Highest committed epoch, live or folded; -1 = nothing committed. */
+  private[sources] def headEpoch(spark: SparkSession, root: String): Long =
+    (committedEpochs(spark, root) ++
+      foldState(spark, root).map(_._2).getOrElse(Seq.empty))
+      .foldLeft(-1L)(math.max)
 
   /** Committed `(epochId, manifest-entry mtime)` pairs, ascending by id —
     * the mtime keys the epoch-schema hints (a re-created root's entries
@@ -245,16 +264,11 @@ object TransactionalLake {
   private def commitViewFile(spark: SparkSession, root: String, v: Long,
                              view: Seq[(Long, Seq[Long])],
                              horizon: Long): Unit = {
-    val f = fs(spark, root)
-    f.mkdirs(new Path(foldPointerDir(root)))
-    val tmp = new Path(s"${foldPointerDir(root)}/.tmp-$v")
-    val fin = new Path(s"${foldPointerDir(root)}/gen-$v")
     val lines = view.map { case (g, es) => s"$g:${es.mkString(",")}" } ++
       (if (horizon >= 0) Seq(s"#compact:$horizon") else Nil)
-    val out = f.create(tmp, true)
-    try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
-    if (!f.rename(tmp, fin) && !f.exists(fin))
-      throw new java.io.IOException(s"fold-view commit failed for view $v")
+    publishMarker(spark, foldPointerDir(root), v, s"gen-$v",
+      lines.mkString("\n"))
+    val f = fs(spark, root)
     // superseded view files — crash here is harmless, never wrong
     f.listStatus(new Path(foldPointerDir(root))).map(_.getPath)
       .filter(p => p.getName.startsWith("gen-") &&
@@ -706,15 +720,21 @@ object TransactionalLake {
     * resolution survives [[foldCommittedEpochs]] unchanged. */
   def readMerged(spark: SparkSession, root: String,
                  keyCols: Seq[String]): DataFrame = {
+    require(keyCols.nonEmpty, "readMerged: keyCols must be non-empty")
+    latestWins(readCommitted(spark, root), keyCols).drop(OpCol, "epoch")
+  }
+
+  /** Per key, the change row from the highest epoch; a winning tombstone
+    * vanishes. The one merge-resolution rule of this lake. */
+  private def latestWins(changes: DataFrame, keyCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.row_number
-    require(keyCols.nonEmpty, "readMerged: keyCols must be non-empty")
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col("epoch").cast("long").desc)
-    readCommitted(spark, root)
+    changes
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1 && col(OpCol) === "u")
-      .drop("__rn", OpCol, "epoch")
+      .drop("__rn")
   }
 
   /** MERGED view AS OF `epoch`: latest-wins resolution over only the
@@ -725,15 +745,9 @@ object TransactionalLake {
     * exactly as consumers saw it after epoch N". */
   def readMergedAsOf(spark: SparkSession, root: String, keyCols: Seq[String],
                      epoch: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.row_number
     require(keyCols.nonEmpty, "readMergedAsOf: keyCols must be non-empty")
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col("epoch").cast("long").desc)
-    readCommittedAsOf(spark, root, epoch)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col(OpCol) === "u")
-      .drop("__rn", OpCol, "epoch")
+    latestWins(readCommittedAsOf(spark, root, epoch), keyCols)
+      .drop(OpCol, "epoch")
   }
 
   /** SNAPSHOT DIFF (reconciliation audit): keyed full-outer compare of
@@ -835,8 +849,7 @@ object TransactionalLake {
                     keyCols: Seq[String],
                     targetRecordsPerFile: Long = 5000000L,
                     partitionCols: Seq[String] = Nil): Int = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{lit, row_number}
+    import org.apache.spark.sql.functions.lit
     require(keyCols.nonEmpty, "compactMerged: keyCols must be non-empty")
     val horizon = compactionHorizon(spark, root)
     require(upTo >= horizon,
@@ -863,12 +876,7 @@ object TransactionalLake {
       else all.withColumn(OpCol, lit("u"))
     val below = withOp.filter(col("epoch").cast("long") <= upTo)
     val above = withOp.filter(col("epoch").cast("long") > upTo)
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col("epoch").cast("long").desc)
-    val resolved = below // one winner per key; a winning tombstone vanishes
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col(OpCol) === "u")
-      .drop("__rn")
+    val resolved = latestWins(below, keyCols)
     val partCols = "epoch" +: partitionCols
     val n = spark.sessionState.conf.numShufflePartitions
     resolved.unionByName(above)

@@ -62,6 +62,52 @@ class KeyedViewSpec extends SparkSpec {
     assert(stateOf(view) == oneShot(lake))
   }
 
+  private def mcommit(root: String, e: Long,
+                      ups: Seq[(Long, String, Double)],
+                      dels: Seq[Long]): Unit =
+    T.mergeCommit(ups.toDF("k", "grp", "value"), dels.toDF("k"), root, e,
+      Seq("k"))
+
+  test("group moves, tombstones, vanishing and untouched groups") {
+    val lake = tmpDir("mv_lake"); val view = tmpDir("mv_view")
+    mcommit(lake, 0L, Seq((1L, "gA", 1.00), (2L, "gA", 2.00),
+      (3L, "gB", 3.00), (4L, "gC", 4.00)), Nil)
+    assert(refresh(lake, view) == 0L)
+    assert(stateOf(view) == Map(
+      "gA" -> ((2L, BigDecimal("3.00"))),
+      "gB" -> ((1L, BigDecimal("3.00"))),
+      "gC" -> ((1L, BigDecimal("4.00")))))
+    // epoch 1: k1 MOVES gA->gB with a new value; k3 tombstoned; gC untouched
+    mcommit(lake, 1L, Seq((1L, "gB", 10.00)), Seq(3L))
+    assert(refresh(lake, view) == 1L)
+    assert(stateOf(view) == Map(
+      "gA" -> ((1L, BigDecimal("2.00"))), // shrank via k1's OLD placement
+      "gB" -> ((1L, BigDecimal("10.00"))), // k3 gone, k1 moved in
+      "gC" -> ((1L, BigDecimal("4.00"))))) // carried forward
+    // epoch 2: delete-only — gB empties and must VANISH from the state
+    mcommit(lake, 2L, Nil, Seq(1L))
+    assert(refresh(lake, view) == 2L)
+    assert(stateOf(view) == Map(
+      "gA" -> ((1L, BigDecimal("2.00"))),
+      "gC" -> ((1L, BigDecimal("4.00")))))
+  }
+
+  test("batched refreshes equal the one-shot over the resolved lake") {
+    val lake = tmpDir("mvf_lake")
+    val inc = tmpDir("mvf_inc"); val one = tmpDir("mvf_one")
+    mcommit(lake, 0L, Seq((1L, "gA", 1.00), (2L, "gB", 2.00)), Nil)
+    refresh(lake, inc)
+    mcommit(lake, 1L, Seq((1L, "gB", 5.00), (3L, "gA", 7.00)), Seq(2L))
+    refresh(lake, inc)
+    mcommit(lake, 2L, Seq((2L, "gA", 9.00)), Nil) // re-insert deleted key
+    assert(refresh(lake, inc) == 2L)
+    assert(refresh(lake, one) == 2L) // one refresh over the whole history
+    assert(stateOf(inc) == stateOf(one))
+    assert(stateOf(inc) == Map(
+      "gA" -> ((2L, BigDecimal("16.00"))), // k3 7.00 + k2 9.00
+      "gB" -> ((1L, BigDecimal("5.00"))))) // k1 moved in
+  }
+
   test("key index equals the resolved merge state after refreshes") {
     val lake = tmpDir("kv_idx_lake"); val view = tmpDir("kv_idx_view")
     T.mergeCommit(rows(1L to 40L: _*), noDeletes, lake, 0L, Seq("k"))
