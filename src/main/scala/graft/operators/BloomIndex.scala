@@ -64,8 +64,11 @@ object BloomIndex {
     * probe value AS the build-side type — recording it in the index
     * makes that cast automatic and makes a non-castable probe fail
     * loud instead of silently missing files. Append-only layouts only
-    * ever ADD rows here — see [[appendEpochIndex]] for the per-epoch
-    * form. */
+    * ever ADD rows here. Over a [[graft.sources.TransactionalLake]] the
+    * per-epoch, per-fold and tenant-purge maintenance is
+    * [[graft.sources.FileIndexLake]]'s, with `buildIndex(spark, _, keyCol)`
+    * as its builder: folding rewrites FILE BOUNDARIES, so a generation's
+    * membership is rebuilt from its files, never merged. */
   def buildIndex(spark: SparkSession, path: String, keyCol: String): DataFrame = {
     val data = spark.read.parquet(path)
     val keyType = data.schema(keyCol).dataType
@@ -78,124 +81,6 @@ object BloomIndex {
         // within one key's probe array still yield K exploded rows)
         (count(lit(1)) / K).cast("long").as("n"))
       .withColumn("key_type", lit(keyType.sql))
-  }
-
-  /** INCREMENTAL index maintenance for a [[graft.sources
-    * .TransactionalLake]]-backed table — the bloom twin of
-    * [[ZoneMap.appendEpochStats]]: per committed data epoch the index
-    * rows are computed from THAT EPOCH'S files alone (O(batch), never
-    * O(lake)) and committed to an index lake under the SAME epoch id,
-    * inheriting the data lake's idempotent-replay contract.
-    *
-    * Fold interaction (same contract [[ZoneMap.appendEpochStats]]
-    * documents): a retention fold (`TransactionalLake
-    * .foldCommittedEpochs`) rewrites live epochs into `data_folded/
-    * gen=*` and DELETES the originals — index rows for folded epochs
-    * then point at dead files, and a later [[prunedInRead]] fails AT
-    * READ TIME (loud, never a silent wrong answer: pruning only ever
-    * narrows the listing, so a stale row can only name a missing file,
-    * not hide a live one). After a fold, run [[refoldIndex]] and read
-    * through [[indexFoldAware]] — the bloom twins of
-    * [[ZoneMap.refoldStats]]/[[ZoneMap.statsIndexFoldAware]]. */
-  def appendEpochIndex(spark: SparkSession, lakeRoot: String,
-                       indexRoot: String, epoch: Long, keyCol: String): Unit = {
-    val idx = buildIndex(spark, s"$lakeRoot/data/epoch=$epoch", keyCol)
-    graft.sources.TransactionalLake.commitEpoch(idx, indexRoot, epoch,
-      partitionCols = Nil)
-  }
-
-  /** The accumulated per-file index across all committed maintenance
-    * epochs (bookkeeping epoch column dropped — consumers key on file). */
-  def index(spark: SparkSession, indexRoot: String): DataFrame =
-    graft.sources.TransactionalLake.readCommitted(spark, indexRoot)
-      .drop("epoch")
-
-  /** FOLD-AWARE index maintenance — the bloom twin of
-    * [[ZoneMap.refoldStats]]: a retention fold rewrites aged epochs
-    * into a generation dir and deletes their files, staling every index
-    * row keyed on those paths. This hook re-INDEXES exactly the
-    * generations that lack one. Unlike zone-map stats there is no
-    * merge shortcut — folding rewrites FILE BOUNDARIES and per-file
-    * membership must be recomputed from the new files' contents — but
-    * the cost bound is the same O(fresh) one scan per new generation
-    * the fold itself already paid. Idempotent via the generation dir's
-    * _SUCCESS marker; absorbed generations' index dirs are dropped.
-    * Returns the number of generations indexed this call. */
-  def refoldIndex(spark: SparkSession, lakeRoot: String, indexRoot: String,
-                  keyCol: String): Int = {
-    val T = graft.sources.TransactionalLake
-    val fsys = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexRoot), spark.sparkContext.hadoopConfiguration)
-    val gens = T.foldView(spark, lakeRoot).map(_._2).getOrElse(Seq.empty)
-      .filter(_._2.nonEmpty).map(_._1)
-    var indexed = 0
-    gens.foreach { g =>
-      val out = s"$indexRoot/gen/v=$g"
-      if (!fsys.exists(new org.apache.hadoop.fs.Path(s"$out/_SUCCESS"))) {
-        buildIndex(spark, T.foldGenDataDir(lakeRoot, g), keyCol)
-          .write.mode("overwrite").parquet(out)
-        indexed += 1
-      }
-    }
-    val genRoot = new org.apache.hadoop.fs.Path(s"$indexRoot/gen")
-    if (fsys.exists(genRoot)) {
-      val live = gens.map(g => s"v=$g").toSet
-      fsys.listStatus(genRoot).map(_.getPath)
-        .filter(p => p.getName.startsWith("v=") && !live.contains(p.getName))
-        .foreach(p => fsys.delete(p, true))
-    }
-    indexed
-  }
-
-  /** OFFBOARDING CASCADE for the bloom index — the bloom twin of
-    * [[ZoneMap.purgeTenantStats]]: drop every index row whose indexed
-    * file lives under the purged tenant's partition subtree (committed
-    * index epochs via [[graft.sources.TransactionalLake
-    * .purgeRowsWhere]], refold generations via `purgeRowsInDir`). Run
-    * AFTER the data lake's `purgeTenant`; metadata-scale. */
-  def purgeTenantRows(spark: SparkSession, indexRoot: String,
-                      tenant: String): Int = {
-    val T = graft.sources.TransactionalLake
-    val pred = col("file").contains(s"/tenant=$tenant/")
-    var n = T.purgeRowsWhere(spark, indexRoot, pred)
-    val fsys = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexRoot), spark.sparkContext.hadoopConfiguration)
-    val genRoot = new org.apache.hadoop.fs.Path(s"$indexRoot/gen")
-    if (fsys.exists(genRoot))
-      fsys.listStatus(genRoot).map(_.getPath)
-        .filter(_.getName.startsWith("v=")).foreach { p =>
-          if (T.purgeRowsInDir(spark, p.toString, pred)) n += 1
-        }
-    n
-  }
-
-  /** The bloom index of a lake that has been through retention folds:
-    * per-epoch rows for LIVE epochs plus the per-generation index
-    * [[refoldIndex]] maintains. Fails loud if a fold happened but its
-    * generation was never re-indexed — a silently stale index is the
-    * failure mode this layer exists to prevent. */
-  def indexFoldAware(spark: SparkSession, lakeRoot: String,
-                     indexRoot: String): DataFrame = {
-    val T = graft.sources.TransactionalLake
-    val fsys = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexRoot), spark.sparkContext.hadoopConfiguration)
-    val foldedIds = T.foldState(spark, lakeRoot).map(_._2)
-      .getOrElse(Seq.empty).toSet
-    val liveEpochIndex = T.readCommitted(spark, indexRoot)
-      .filter(!col("epoch").cast("long")
-        .isin(foldedIds.toSeq.map(Long.box): _*))
-      .drop("epoch")
-    val gens = T.foldView(spark, lakeRoot).map(_._2).getOrElse(Seq.empty)
-      .filter(_._2.nonEmpty).map(_._1)
-    val genDirs = gens.map { g =>
-      val d = s"$indexRoot/gen/v=$g"
-      require(fsys.exists(new org.apache.hadoop.fs.Path(s"$d/_SUCCESS")),
-        s"bloom index missing for fold generation $g of $lakeRoot — " +
-          "run BloomIndex.refoldIndex after every foldCommittedEpochs")
-      d
-    }
-    if (genDirs.isEmpty) liveEpochIndex
-    else liveEpochIndex.unionByName(spark.read.parquet(genDirs: _*))
   }
 
   /** The key DataType the index was built with, parsed from its
@@ -212,8 +97,8 @@ object BloomIndex {
         "the probe VALUE's type, so a probe of a different type than the " +
         "build-side key column silently misses the owning files (a false " +
         "negative, the one failure class this index promises away); " +
-        "rebuild the index with buildIndex/appendEpochIndex (they stamp " +
-        "key_type) before planning point reads against it"
+        "rebuild the index with buildIndex (it stamps key_type) before " +
+        "planning point reads against it"
     require(index.columns.contains("key_type"), rebuildMsg)
     val types = index.select(col("key_type")).distinct().collect()
       .map(r => if (r.isNullAt(0)) null else r.getString(0))
@@ -255,7 +140,7 @@ object BloomIndex {
       val total = idx.count()
       require(total > 0,
         "bloom index is empty — nothing has been indexed; run " +
-          "buildIndex/appendEpochIndex before planning point reads against it")
+          "buildIndex before planning point reads against it")
       // fail-loud driver budget (same discipline as ZoneMap's planning
       // reads): per-file rows are bounded by the compaction invariant —
       // an over-budget index means fold/compact maintenance is overdue,
@@ -324,15 +209,10 @@ object BloomIndex {
         s"bloom pruning eliminated nothing ($total files all admit the " +
           s"probe set) — the index is saturated for '$keyCol'; raise MBits " +
           "or write smaller files")
-    if (keep.isEmpty)
-      // provably no file contains any probe (no-false-negative guarantee)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        spark.read.parquet(FileListing.readablePath(
-          index.select(col("file")).head.getString(0))).schema)
-    else
-      spark.read.parquet(keep.toSeq.map(FileListing.readablePath): _*)
-        .filter(exactInPredicate(index, keyCol, values))
+    // no survivor: provably no file holds a probe (no false negatives)
+    FileListing.readSurvivors(spark, keep.toSeq,
+      index.select(col("file")).head.getString(0),
+      exactInPredicate(index, keyCol, values))
   }
 
   /** The exact IN re-filter with probes cast to the indexed key type —

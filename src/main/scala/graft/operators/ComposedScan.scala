@@ -66,15 +66,9 @@ object ComposedScan {
           s"zone ${zoneKeep.length}, composed ${keep.length} of $total " +
           "files) — the bloom is saturated AND the layout is not " +
           s"range-clustered on '$rangeCol'")
-    val exact = BloomIndex.exactInPredicate(bloomIndex, keyCol, values) &&
-      col(rangeCol).between(lo, hi)
-    if (keep.isEmpty) {
-      val schema = spark.read.parquet(FileListing.readablePath(
-        stats.select(col("file")).head.getString(0))).schema
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema)
-    } else
-      spark.read.parquet(keep.map(FileListing.readablePath): _*)
-        .filter(exact)
+    FileListing.readSurvivors(spark, keep,
+      stats.select(col("file")).head.getString(0),
+      BloomIndex.exactInPredicate(bloomIndex, keyCol, values) &&
+        col(rangeCol).between(lo, hi))
   }
 }

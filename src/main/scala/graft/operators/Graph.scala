@@ -11,25 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** TRIANGLE COUNT + local clustering coefficient per node over an
-    * edge list (directions ignored) — the graph-cohesion signal: in a
-    * near-dup similarity graph, high clustering marks tight duplicate
-    * communities, low clustering marks hub/template artifacts.
-    *
-    * DEGREE-ORDERED ORIENTATION (the MapReduce-classic hub killer):
-    * each undirected edge is oriented from its lower-(degree, id)
-    * endpoint to the higher one, so every triangle is generated exactly
-    * once — as a wedge at its LOWEST-ordered vertex — and the wedge
-    * join's per-node fanout is bounded by the ORIENTED out-degree
-    * (O(√m) worst case), giving the O(m^1.5) total bound instead of the
-    * O(Σ deg²) a naive wedge join pays on a hub. At 100 TB-graph scale
-    * this is the difference between the hot key exploding and not
-    * existing. Composite (degree, id) ordering is encoded as one
-    * overflow-safe BIGINT (degree·10¹² + id) so the tiebreak is a plain
-    * integer compare in any engine. Four shuffles total: symmetrize
-    * +distinct, degree count, wedge self-join on the pivot, closure
-    * equi-join. Pure integer arithmetic until the final coefficient
-    * (rounded to 6 dp). */
   /** Canonical undirected edge set (u < v, loops dropped, directions
     * merged). */
   private def undirected(edges: DataFrame, srcCol: String,
@@ -38,6 +19,15 @@ object Graph {
       .select(least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v")).distinct()
+
+  /** Symmetric directed edge set (src, dst): both directions of every
+    * edge, loops dropped, duplicates merged. */
+  private def symmetric(edges: DataFrame, srcCol: String,
+                        dstCol: String): DataFrame =
+    edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .unionAll(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
+      .filter(col("src") =!= col("dst"))
+      .distinct()
 
   /** Degree-ordered triangle enumeration over a canonical (u < v) edge
     * set: each triangle exactly once as (x, y, z) in ascending
@@ -71,6 +61,24 @@ object Graph {
       .select(col("a.lo").as("x"), col("a.hi").as("y"), col("b.hi").as("z"))
   }
 
+  /** TRIANGLE COUNT + local clustering coefficient per node over an
+    * edge list (directions ignored) — the graph-cohesion signal: in a
+    * near-dup similarity graph, high clustering marks tight duplicate
+    * communities, low clustering marks hub/template artifacts.
+    *
+    * DEGREE-ORDERED ORIENTATION (the MapReduce-classic hub killer):
+    * each undirected edge is oriented from its lower-(degree, id)
+    * endpoint to the higher one, so every triangle is generated exactly
+    * once — as a wedge at its LOWEST-ordered vertex — and the wedge
+    * join's per-node fanout is bounded by the ORIENTED out-degree
+    * (O(√m) worst case), giving the O(m^1.5) total bound instead of the
+    * O(Σ deg²) a naive wedge join pays on a hub. At 100 TB-graph scale
+    * this is the difference between the hot key exploding and not
+    * existing. Composite (degree, id) ordering compares as a struct —
+    * lexicographic, exact for any id range and degree. Four shuffles
+    * total: symmetrize +distinct, degree count, wedge self-join on the
+    * pivot, closure equi-join. Pure integer arithmetic until the final
+    * coefficient (rounded to 6 dp). */
   def triangles(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val und = undirected(edges, srcCol, dstCol)
     val dg = und.select(explode(array(col("u"), col("v"))).as("id"))
@@ -323,11 +331,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iterations: Int = 5): DataFrame = {
     require(iterations >= 1, "labelPropagation: iterations must be >= 1")
-    val und = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .unionAll(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-    val e = Blocks.copyOut(und)
+    val e = Blocks.copyOut(symmetric(edges, srcCol, dstCol))
     val nodes = Blocks.copyOut(e.select(col("src").as("id")).distinct())
     var labels = nodes.select(col("id"), col("id").as("label"))
       .localCheckpoint(true)
@@ -427,11 +431,7 @@ object Graph {
               sources: DataFrame, sourceIdCol: String,
               maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, "bfsHops: maxDepth must be >= 0")
-    val und = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .unionAll(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-    val e = Blocks.copyOut(und)
+    val e = Blocks.copyOut(symmetric(edges, srcCol, dstCol))
     // loop state is localCheckpoint-backed (memory blocks, freed per
     // level) like the pageRank ranks vector; only the FINAL dist set is
     // copied out to disk — per-level reliable checkpoints would write
@@ -519,11 +519,7 @@ object Graph {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxRounds: Int = 20): DataFrame = {
     require(k >= 1, "kCore: k must be >= 1")
-    val und = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .unionAll(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-    var e = Blocks.copyOut(und)
+    var e = Blocks.copyOut(symmetric(edges, srcCol, dstCol))
     var nEdges = e.count()
     var rounds = 0
     var stable = false

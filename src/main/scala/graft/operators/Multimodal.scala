@@ -193,6 +193,21 @@ object Multimodal {
       dir
     }
 
+  /** The files in `dir` matching `glob`, via Spark's binaryFile source
+    * with the glob as a `pathGlobFilter` (see [[pngMediaTable]] for why),
+    * retried up to 3 times while the listing transiently reports the
+    * directory as missing. */
+  private def binaryFiles(spark: SparkSession, dir: java.io.File,
+                          glob: String, attempt: Int = 0): DataFrame =
+    try spark.read.format("binaryFile")
+      .option("pathGlobFilter", glob).load(dir.toString)
+    catch {
+      case e: Throwable if attempt < 3 &&
+          Option(e.getMessage).exists(_.contains("does not exist")) =>
+        Thread.sleep(200L * (attempt + 1))
+        binaryFiles(spark, dir, glob, attempt + 1)
+    }
+
   /** The fixture PNGs as a media table (Spark's binaryFile source: at
     * scale this is the "parquet of blobs" scan — here, the file-per-blob
     * variant). Width/height are -1: unknown until decode.
@@ -209,15 +224,7 @@ object Multimodal {
     val pngDir = new java.io.File(dir, "png")
     require(pngDir.isDirectory && Option(pngDir.list()).exists(_.nonEmpty),
       s"multimodal fixture missing or empty at $pngDir — run ensurePngFixture")
-    def load(attempt: Int): DataFrame =
-      try spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png").load(pngDir.toString)
-      catch {
-        case e: Throwable if attempt < 3 &&
-            Option(e.getMessage).exists(_.contains("does not exist")) =>
-          Thread.sleep(200L * (attempt + 1)); load(attempt + 1)
-      }
-    load(0)
+    binaryFiles(spark, pngDir, "*.png")
       .select(
         regexp_extract(col("path"), "img_(\\d+)\\.png", 1).cast("long").as("media_id"),
         col("content").as("payload"),
@@ -384,15 +391,7 @@ object Multimodal {
     require(imgDir.isDirectory && Option(imgDir.list()).exists(_.nonEmpty),
       s"mixed-codec fixture missing or empty at $imgDir — run " +
         "ensureMixedCodecFixture")
-    def load(attempt: Int): DataFrame =
-      try spark.read.format("binaryFile")
-        .option("pathGlobFilter", "img_*.*").load(imgDir.toString)
-      catch {
-        case e: Throwable if attempt < 3 &&
-            Option(e.getMessage).exists(_.contains("does not exist")) =>
-          Thread.sleep(200L * (attempt + 1)); load(attempt + 1)
-      }
-    load(0)
+    binaryFiles(spark, imgDir, "img_*.*")
       .select(
         regexp_extract(col("path"), "img_(\\d+)\\.", 1).cast("long")
           .as("media_id"),

@@ -771,6 +771,19 @@ object TextAnalysis {
         explode(filter(col("__toks"), t => t.isInCollection(terms))).as("term"))
       .groupBy(col(idCol), col("dl"), col("term"))
       .agg(count(lit(1)).cast("long").as("tf"))
+    bm25Rank(posting, stats, idCol, idCol, topK, k1, b)
+  }
+
+  /** The BM25 ranker shared by [[bm25]] and [[TextIndex.bm25FromIndex]]:
+    * `posting` holds one (`idCol`, dl, term, tf) row per matching
+    * (doc, term), `stats` the 1-row corpus (n_docs, sum_dl). Per-term df,
+    * Lucene's +1 idf, then each per-(doc, term) contribution rounded to
+    * 6 dp and cast DECIMAL(18,6) so the per-doc sum is exact in any order;
+    * the top-k is TakeOrderedAndProject. Output (`outId`, doc_len,
+    * n_terms_matched, score), best first, id ascending on ties. */
+  private[operators] def bm25Rank(posting: DataFrame, stats: DataFrame,
+                                  idCol: String, outId: String, topK: Int,
+                                  k1: Double, b: Double): DataFrame = {
     val dfreq = posting.groupBy(col("term"))
       .agg(count(lit(1)).cast("long").as("df"))
     val scored = posting
@@ -792,12 +805,12 @@ object TextAnalysis {
         count(lit(1)).cast("long").as("n_terms_matched"))
       .orderBy(col("__score_x").desc, col(idCol))
       .limit(topK)
-      .select(col(idCol), col("dl").as("doc_len"), col("n_terms_matched"),
-        col("__score_x").cast("double").as("score"))
+      .select(col(idCol).as(outId), col("dl").as("doc_len"),
+        col("n_terms_matched"), col("__score_x").cast("double").as("score"))
       // re-assert the output order over the projected columns (the 6-dp
       // double collides only if two distinct decimal sums round together;
       // the id tie-break keeps the order total either way)
-      .orderBy(col("score").desc, col(idCol))
+      .orderBy(col("score").desc, col(outId))
   }
 
   /** URL CANONICALIZATION — the unification step before URL-keyed corpus

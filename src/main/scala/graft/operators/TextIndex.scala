@@ -119,9 +119,9 @@ object TextIndex {
       .orderBy(col("phrase_tf").desc, col("doc_id"))
   }
 
-  /** BM25 top-k from the committed index — identical semantics (and the
-    * identical 6-dp DECIMAL determinism contract) to
-    * [[TextAnalysis.bm25]], but document text is never read: the
+  /** BM25 top-k from the committed index — the same ranker
+    * ([[TextAnalysis.bm25Rank]], with its 6-dp DECIMAL determinism
+    * contract) as [[TextAnalysis.bm25]], but document text is never read: the
     * posting scan prunes to the query terms' hash buckets, corpus stats
     * aggregate the O(docs) doclen lake, and df counts each term's
     * posting list. */
@@ -146,29 +146,6 @@ object TextIndex {
       .filter(col("tbucket").cast("long").isInCollection(buckets) &&
         col("term").isInCollection(terms))
       .select(col("doc"), col("dl"), col("term"), col("tf"))
-    val dfreq = posting.groupBy(col("term"))
-      .agg(count(lit(1)).cast("long").as("df"))
-    val scored = posting
-      .join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("avgdl",
-        col("sum_dl").cast("double") / col("n_docs").cast("double"))
-      .withColumn("idf",
-        log((col("n_docs").cast("double") - col("df").cast("double") + lit(0.5)) /
-          (col("df").cast("double") + lit(0.5)) + lit(1.0)))
-      .withColumn("contrib",
-        round(col("idf") * (col("tf").cast("double") * lit(k1 + 1.0)) /
-          (col("tf").cast("double") +
-            lit(k1) * (lit(1.0) - lit(b) +
-              lit(b) * col("dl").cast("double") / col("avgdl"))), 6)
-          .cast("decimal(18,6)"))
-    scored.groupBy(col("doc"), col("dl"))
-      .agg(sum(col("contrib")).as("__score_x"),
-        count(lit(1)).cast("long").as("n_terms_matched"))
-      .orderBy(col("__score_x").desc, col("doc"))
-      .limit(topK)
-      .select(col("doc").as("doc_id"), col("dl").as("doc_len"),
-        col("n_terms_matched"), col("__score_x").cast("double").as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
+    TextAnalysis.bm25Rank(posting, stats, "doc", "doc_id", topK, k1, b)
   }
 }

@@ -46,131 +46,15 @@ object ZoneMap {
   /** One (file, min_v, max_v, n) row per parquet file under `path`.
     * Persist next to the table and refresh per ingest batch (append-only
     * layouts only ever ADD rows here — a new file's stats row is
-    * computed from that file alone). */
+    * computed from that file alone). Over a
+    * [[graft.sources.TransactionalLake]] the per-epoch, per-fold and
+    * tenant-purge maintenance is [[graft.sources.FileIndexLake]]'s, with
+    * `buildStats(spark, _, statCol)` as its builder. */
   def buildStats(spark: SparkSession, path: String, statCol: String): DataFrame =
     spark.read.parquet(path)
       .groupBy(input_file_name().as("file"))
       .agg(min(col(statCol)).as("min_v"), max(col(statCol)).as("max_v"),
         count(lit(1)).as("n"))
-
-  /** INCREMENTAL index maintenance for a [[graft.sources
-    * .TransactionalLake]]-backed table: per committed data epoch, stats
-    * are computed from THAT EPOCH'S files alone — O(batch), never
-    * O(lake) — and committed to a stats lake under the SAME epoch id,
-    * inheriting the data lake's idempotent-replay contract (a replayed
-    * maintenance pass re-commits the same epoch and contracts to a
-    * no-op). Run it post-commit, exactly like the canonical-map and
-    * keyed-view maintenance hooks. INVALIDATION: a retention fold
-    * rewrites aged files into a generation dir, so fold maintenance
-    * must re-stat the new generation (cost O(fresh), the same bound as
-    * the fold itself) — stats rows are keyed by file path and a stale
-    * index fails loud at read time (missing file), never silently. */
-  def appendEpochStats(spark: SparkSession, lakeRoot: String,
-                       statsRoot: String, epoch: Long, statCol: String): Unit = {
-    val stats = buildStats(spark, s"$lakeRoot/data/epoch=$epoch", statCol)
-    graft.sources.TransactionalLake.commitEpoch(stats, statsRoot, epoch,
-      partitionCols = Nil)
-  }
-
-  /** The accumulated per-file stats index across all committed
-    * maintenance epochs (drop the bookkeeping epoch column — the index
-    * consumer keys on file). */
-  def statsIndex(spark: SparkSession, statsRoot: String): DataFrame =
-    graft.sources.TransactionalLake.readCommitted(spark, statsRoot)
-      .drop("epoch")
-
-  /** FOLD-AWARE index maintenance: a retention fold
-    * ([[graft.sources.TransactionalLake.foldCommittedEpochs]]) rewrites
-    * aged epochs into a generation dir and deletes their files — every
-    * stats row keyed on those paths goes stale. This hook re-stats
-    * exactly the generations that lack stats (ONE scan per new
-    * generation — O(fresh), the same bound as the fold itself; folds
-    * with `rangeClusterCols` keep the rewritten files prunable) and
-    * drops stats dirs of generations a later merge-fold absorbed.
-    * Idempotent: a generation's stats write is an overwrite detected by
-    * its _SUCCESS marker, so a crashed pass just re-runs. Returns the
-    * number of generations statted this call. */
-  def refoldStats(spark: SparkSession, lakeRoot: String, statsRoot: String,
-                  statCol: String): Int = {
-    val T = graft.sources.TransactionalLake
-    val fsys = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statsRoot), spark.sparkContext.hadoopConfiguration)
-    val gens = T.foldView(spark, lakeRoot).map(_._2).getOrElse(Seq.empty)
-      .filter(_._2.nonEmpty).map(_._1)
-    var statted = 0
-    gens.foreach { g =>
-      val out = s"$statsRoot/gen/v=$g"
-      if (!fsys.exists(new org.apache.hadoop.fs.Path(s"$out/_SUCCESS"))) {
-        buildStats(spark, T.foldGenDataDir(lakeRoot, g), statCol)
-          .write.mode("overwrite").parquet(out)
-        statted += 1
-      }
-    }
-    // a merge-fold absorbed older generations: their stats dirs go too
-    val genRoot = new org.apache.hadoop.fs.Path(s"$statsRoot/gen")
-    if (fsys.exists(genRoot)) {
-      val live = gens.map(g => s"v=$g").toSet
-      fsys.listStatus(genRoot).map(_.getPath)
-        .filter(p => p.getName.startsWith("v=") && !live.contains(p.getName))
-        .foreach(p => fsys.delete(p, true))
-    }
-    statted
-  }
-
-  /** OFFBOARDING CASCADE for the stats lake: drop every stats row whose
-    * indexed file lives under the purged tenant's partition subtree.
-    * The stats artifact is SHARED across tenants (keyed by file path,
-    * not tenant-partitioned), so the cascade is a row-level rewrite —
-    * [[graft.sources.TransactionalLake.purgeRowsWhere]] over the
-    * committed stats epochs plus the same rewrite over any refold
-    * generations. Run AFTER the data lake's `purgeTenant` (the dropped
-    * rows name the files that purge deleted); metadata-scale — per-file
-    * rows, never data rows. Returns subtrees rewritten. */
-  def purgeTenantStats(spark: SparkSession, statsRoot: String,
-                       tenant: String): Int = {
-    val T = graft.sources.TransactionalLake
-    val pred = col("file").contains(s"/tenant=$tenant/")
-    var n = T.purgeRowsWhere(spark, statsRoot, pred)
-    val fsys = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statsRoot), spark.sparkContext.hadoopConfiguration)
-    val genRoot = new org.apache.hadoop.fs.Path(s"$statsRoot/gen")
-    if (fsys.exists(genRoot))
-      fsys.listStatus(genRoot).map(_.getPath)
-        .filter(_.getName.startsWith("v=")).foreach { p =>
-          if (T.purgeRowsInDir(spark, p.toString, pred)) n += 1
-        }
-    n
-  }
-
-  /** The stats index of a lake that has been through retention folds:
-    * per-epoch stats for LIVE epochs (a folded epoch's rows point at
-    * deleted files) plus the per-generation stats [[refoldStats]]
-    * maintains. Fails loud if a fold happened but its generation was
-    * never re-statted — a silently stale index is the failure mode this
-    * layer exists to prevent. */
-  def statsIndexFoldAware(spark: SparkSession, lakeRoot: String,
-                          statsRoot: String): DataFrame = {
-    val T = graft.sources.TransactionalLake
-    val fsys = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statsRoot), spark.sparkContext.hadoopConfiguration)
-    val foldedIds = T.foldState(spark, lakeRoot).map(_._2)
-      .getOrElse(Seq.empty).toSet
-    val liveEpochStats = T.readCommitted(spark, statsRoot)
-      .filter(!col("epoch").cast("long")
-        .isin(foldedIds.toSeq.map(Long.box): _*))
-      .drop("epoch")
-    val gens = T.foldView(spark, lakeRoot).map(_._2).getOrElse(Seq.empty)
-      .filter(_._2.nonEmpty).map(_._1)
-    val genDirs = gens.map { g =>
-      val d = s"$statsRoot/gen/v=$g"
-      require(fsys.exists(new org.apache.hadoop.fs.Path(s"$d/_SUCCESS")),
-        s"zone-map stats missing for fold generation $g of $lakeRoot — " +
-          "run ZoneMap.refoldStats after every foldCommittedEpochs")
-      d
-    }
-    if (genDirs.isEmpty) liveEpochStats
-    else liveEpochStats.unionByName(spark.read.parquet(genDirs: _*))
-  }
 
   /** MULTI-COLUMN stats: one (file, min_<c>, max_<c>…, n) row per parquet
     * file under `path`, for box pruning over a Z-ordered layout
@@ -226,25 +110,10 @@ object ZoneMap {
           s"intersect the box on every dimension) — the layout is not " +
           s"clustered on (${box.map(_._1).mkString(", ")}); zOrder the " +
           "table first")
-    val exact = box.map { case (c, lo, hi) => col(c).between(lo, hi) }
-      .reduce(_ && _)
-    if (keep.isEmpty) {
-      val schema = spark.read.parquet(
-        FileListing.readablePath(all.head.getString(0))).schema
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema)
-    } else
-      spark.read.parquet(keep.toSeq.map(FileListing.readablePath): _*)
-        .filter(exact)
+    FileListing.readSurvivors(spark, keep.toSeq, all.head.getString(0),
+      box.map { case (c, lo, hi) => col(c).between(lo, hi) }.reduce(_ && _))
   }
 
-  /** Range read `lo <= statCol <= hi` planned against the stats index:
-    * only files whose [min, max] envelope intersects the range are
-    * LISTED, then the exact predicate re-filters inside them (zone maps
-    * prune envelopes, they never answer predicates). Returns the
-    * surviving file count alongside so callers can assert/monitor the
-    * skipping rate (`requirePruned` fails loud if the layout gave no
-    * pruning — the misconfiguration this index exists to surface). */
   /** Files whose [min, max] envelope intersects [lo, hi], plus the
     * total file count — the listing step of [[prunedRangeRead]],
     * factored for [[ComposedScan]]'s index intersection. */
@@ -255,7 +124,7 @@ object ZoneMap {
     require(all.length <= MaxPlannedFiles, plannerBudgetMsg)
     require(all.nonEmpty,
       "zone-map stats index is empty — nothing has been indexed; run " +
-        "appendEpochStats before planning range reads against it")
+        "buildStats before planning range reads against it")
     // a null [min, max] envelope means the file's stat column is all
     // NULL: no row there can satisfy `statCol BETWEEN lo AND hi`
     // (comparisons with NULL never hold), so pruning it is exact
@@ -264,6 +133,12 @@ object ZoneMap {
       .map(_.getString(0)), all.length.toLong)
   }
 
+  /** Range read `lo <= statCol <= hi` planned against the stats index:
+    * only files whose [min, max] envelope intersects the range are
+    * LISTED, then the exact predicate re-filters inside them (zone maps
+    * prune envelopes, they never answer predicates). `requirePruned`
+    * fails loud if the layout gave no pruning — the misconfiguration
+    * this index exists to surface. */
   def prunedRangeRead(spark: SparkSession, stats: DataFrame, statCol: String,
                       lo: Long, hi: Long,
                       requirePruned: Boolean = false): DataFrame = {
@@ -273,15 +148,7 @@ object ZoneMap {
         s"zone-map pruning eliminated nothing ($nAll files all " +
           "intersect the range) — the layout is not range-clustered on " +
           s"'$statCol'; repartitionByRange/zOrder the table first")
-    if (keep.isEmpty) {
-      val schema = spark.read.parquet(FileListing.readablePath(
-        stats.select(col("file")).head.getString(0))).schema
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema)
-    } else
-      // file names came from input_file_name() (URI-encoded) and the
-      // reader treats them as globs — decode/escape for an exact re-read
-      spark.read.parquet(keep.toSeq.map(FileListing.readablePath): _*)
-        .filter(col(statCol).between(lo, hi))
+    FileListing.readSurvivors(spark, keep.toSeq,
+      stats.select(col("file")).head.getString(0), col(statCol).between(lo, hi))
   }
 }

@@ -1763,7 +1763,7 @@ object Extensions {
     * crashes the replay — the reason the purge keeps commit markers). */
   def tenantPurgeDerived(s: SparkSession, d: String): DataFrame = {
     import graft.operators.{BloomIndex, TextIndex, ZoneMap}
-    import graft.sources.{TenantArtifacts, TransactionalLake}
+    import graft.sources.{FileIndexLake, TenantArtifacts, TransactionalLake}
     val base = freshDir(s, "purgederiv", d)
     val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
     val all = docs(s, d).select(col("doc_id"), col("text"),
@@ -1792,8 +1792,10 @@ object Extensions {
             length(col("text")).cast("long").as("n_chars"),
             col("tenant")),
         lroot, e.toLong, partitionCols = Seq("tenant"))
-      ZoneMap.appendEpochStats(s, lroot, zroot, e.toLong, "doc_id")
-      BloomIndex.appendEpochIndex(s, lroot, broot, e.toLong, "doc_id")
+      FileIndexLake.append(s, lroot, zroot, e.toLong)(
+        ZoneMap.buildStats(s, _, "doc_id"))
+      FileIndexLake.append(s, lroot, broot, e.toLong)(
+        BloomIndex.buildIndex(s, _, "doc_id"))
     }): _*)
 
     // ---- OFFBOARD t2 across every derived artifact: five disjoint roots ----
@@ -1803,9 +1805,9 @@ object Extensions {
       () => require(TenantArtifacts.purgeTenant(s, bmBase, "t2") > 0,
         "bm25-index purge must scrub data subtrees"),
       () => TransactionalLake.purgeTenant(s, lroot, "t2"),
-      () => require(ZoneMap.purgeTenantStats(s, zroot, "t2") > 0,
+      () => require(FileIndexLake.purgeTenant(s, zroot, "t2") > 0,
         "zone-map cascade must rewrite the stats epochs"),
-      () => require(BloomIndex.purgeTenantRows(s, broot, "t2") > 0,
+      () => require(FileIndexLake.purgeTenant(s, broot, "t2") > 0,
         "bloom cascade must rewrite the index epochs"))
 
     // crash-replay after the purge: epoch 0 is committed in every lake,
@@ -1818,16 +1820,16 @@ object Extensions {
         TenantArtifacts.tenantRoot(subBase, "t2"), 0L),
       () => TextIndex.commitPostings(t2docs, "doc_id", "text",
         TenantArtifacts.tenantRoot(bmBase, "t2"), 0L),
-      () => require(ZoneMap.statsIndex(s, zroot)
+      () => require(FileIndexLake.read(s, zroot)
         .filter(col("file").contains("/tenant=t2/")).isEmpty,
         "no zone-map row may reference a purged tenant file"),
-      () => require(BloomIndex.index(s, broot)
+      () => require(FileIndexLake.read(s, broot)
         .filter(col("file").contains("/tenant=t2/")).isEmpty,
         "no bloom row may reference a purged tenant file"),
       () => {
         val lakeFiles = TransactionalLake.readCommitted(s, lroot)
           .select(input_file_name().as("file")).distinct()
-        val statFiles = ZoneMap.statsIndex(s, zroot).select("file").distinct()
+        val statFiles = FileIndexLake.read(s, zroot).select("file").distinct()
         require(statFiles.exceptAll(lakeFiles).isEmpty &&
           lakeFiles.exceptAll(statFiles).isEmpty,
           "zone-map rows must cover exactly the surviving lake files")

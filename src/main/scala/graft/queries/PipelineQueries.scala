@@ -863,8 +863,8 @@ object PipelineQueries {
 
   /** INCREMENTAL ZONE-MAP gate: three committed epochs, each
     * range-clustered on event_id at write time, each followed by an
-    * O(batch) stats append ([[graft.operators.ZoneMap
-    * .appendEpochStats]] — only that epoch's files are scanned). A
+    * O(batch) stats append ([[graft.sources.FileIndexLake.append]] —
+    * only that epoch's files are scanned). A
     * selective range query then plans against the ACCUMULATED index and
     * must prune at the file level (requirePruned) while answering
     * exactly the plain filtered scan (the oracle). The lake is never
@@ -876,14 +876,15 @@ object PipelineQueries {
     val base = events(spark, dir).filter(col("event_id") <= 2000)
       .select(col("event_id"), col("event_type"), col("value"))
     val T = graft.sources.TransactionalLake
+    val I = graft.sources.FileIndexLake
     val Z = graft.operators.ZoneMap
     (0 until 3).foreach { i =>
       T.commitEpoch(base.filter(col("event_id") % 3 === i)
         .repartitionByRange(4, col("event_id")), root, i.toLong,
         partitionCols = Nil)
-      Z.appendEpochStats(spark, root, statsRoot, i.toLong, "event_id")
+      I.append(spark, root, statsRoot, i.toLong)(Z.buildStats(spark, _, "event_id"))
     }
-    Z.prunedRangeRead(spark, Z.statsIndex(spark, statsRoot), "event_id",
+    Z.prunedRangeRead(spark, I.read(spark, statsRoot), "event_id",
       lo = 100L, hi = 500L, requirePruned = true)
       .select("event_id", "event_type", "value")
       .orderBy("event_id")
@@ -902,15 +903,16 @@ object PipelineQueries {
     val base = events(spark, dir).filter(col("event_id") <= 2000)
       .select(col("event_id"), col("event_type"), col("value"))
     val T = graft.sources.TransactionalLake
+    val I = graft.sources.FileIndexLake
     val B = graft.operators.BloomIndex
     (0 until 3).foreach { i =>
       T.commitEpoch(base.filter(col("event_id") % 3 === i)
         .repartition(4, col("event_id")), root, i.toLong, partitionCols = Nil)
-      B.appendEpochIndex(spark, root, indexRoot, i.toLong, "event_id")
+      I.append(spark, root, indexRoot, i.toLong)(B.buildIndex(spark, _, "event_id"))
     }
     // replayed maintenance pass: same epoch id → idempotent no-op
-    B.appendEpochIndex(spark, root, indexRoot, 1L, "event_id")
-    B.prunedInRead(spark, B.index(spark, indexRoot), "event_id",
+    I.append(spark, root, indexRoot, 1L)(B.buildIndex(spark, _, "event_id"))
+    B.prunedInRead(spark, I.read(spark, indexRoot), "event_id",
       Seq(123L, 457L, 791L), requirePruned = true)
       .select("event_id", "event_type", "value")
       .orderBy("event_id")
@@ -920,7 +922,7 @@ object PipelineQueries {
     * continued through retention: three indexed epochs, a retention
     * fold rewrites the two aged epochs into a generation (deleting
     * their files and staling their index rows),
-    * `BloomIndex.refoldIndex` re-indexes exactly that generation (one
+    * `FileIndexLake.refold` re-indexes exactly that generation (one
     * O(fresh) scan — folding rewrites file boundaries, so per-file
     * membership is recomputed, not merged), and the fold-aware index
     * must (a) never point at a deleted file and (b) still prune the
@@ -932,21 +934,23 @@ object PipelineQueries {
     val base = events(spark, dir).filter(col("event_id") <= 2000)
       .select(col("event_id"), col("event_type"), col("value"))
     val T = graft.sources.TransactionalLake
+    val I = graft.sources.FileIndexLake
     val B = graft.operators.BloomIndex
+    val build = B.buildIndex(spark, _: String, "event_id")
     (0 until 3).foreach { i =>
       T.commitEpoch(base.filter(col("event_id") % 3 === i)
         .repartition(4, col("event_id")), root, i.toLong, partitionCols = Nil)
-      B.appendEpochIndex(spark, root, indexRoot, i.toLong, "event_id")
+      I.append(spark, root, indexRoot, i.toLong)(build)
     }
     val folded = T.foldCommittedEpochs(spark, root, upTo = 1L,
       partitionCols = Nil)
     require(folded == 2, s"retention fold must absorb epochs 0-1, got $folded")
-    require(B.refoldIndex(spark, root, indexRoot, "event_id") == 1,
+    require(I.refold(spark, root, indexRoot)(build) == 1,
       "exactly the new generation must be re-indexed")
     // replayed maintenance pass: generation already indexed → no-op
-    require(B.refoldIndex(spark, root, indexRoot, "event_id") == 0,
+    require(I.refold(spark, root, indexRoot)(build) == 0,
       "a replayed refold pass must contract to a no-op")
-    B.prunedInRead(spark, B.indexFoldAware(spark, root, indexRoot),
+    B.prunedInRead(spark, I.readFoldAware(spark, root, indexRoot),
       "event_id", Seq(123L, 457L, 791L), requirePruned = true)
       .select("event_id", "event_type", "value")
       .orderBy("event_id")
@@ -955,7 +959,7 @@ object PipelineQueries {
   /** FOLD-AWARE ZONE-MAP gate — the index-survives-retention lifecycle:
     * three statted epochs, then a RANGE-CLUSTERED retention fold
     * rewrites the two aged epochs into a generation (deleting their
-    * files and staling their stats rows), `ZoneMap.refoldStats`
+    * files and staling their stats rows), `FileIndexLake.refold`
     * re-stats exactly that generation (O(fresh)), and the fold-aware
     * index must (a) never point at a deleted file and (b) still PRUNE
     * at the file level — the range-clustered fold keeps per-file
@@ -968,19 +972,21 @@ object PipelineQueries {
     val base = events(spark, dir).filter(col("event_id") <= 2000)
       .select(col("event_id"), col("event_type"), col("value"))
     val T = graft.sources.TransactionalLake
+    val I = graft.sources.FileIndexLake
     val Z = graft.operators.ZoneMap
+    val build = Z.buildStats(spark, _: String, "event_id")
     (0 until 3).foreach { i =>
       T.commitEpoch(base.filter(col("event_id") % 3 === i)
         .repartitionByRange(4, col("event_id")), root, i.toLong,
         partitionCols = Nil)
-      Z.appendEpochStats(spark, root, statsRoot, i.toLong, "event_id")
+      I.append(spark, root, statsRoot, i.toLong)(build)
     }
     val folded = T.foldCommittedEpochs(spark, root, upTo = 1L,
       partitionCols = Nil, rangeClusterCols = Seq("event_id"))
     require(folded == 2, s"retention fold must absorb epochs 0-1, got $folded")
-    require(Z.refoldStats(spark, root, statsRoot, "event_id") == 1,
+    require(I.refold(spark, root, statsRoot)(build) == 1,
       "exactly the new generation must be re-statted")
-    Z.prunedRangeRead(spark, Z.statsIndexFoldAware(spark, root, statsRoot),
+    Z.prunedRangeRead(spark, I.readFoldAware(spark, root, statsRoot),
       "event_id", lo = 100L, hi = 500L, requirePruned = true)
       .select("event_id", "event_type", "value")
       .orderBy("event_id")

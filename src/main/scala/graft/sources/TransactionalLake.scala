@@ -77,20 +77,17 @@ import org.apache.spark.sql.functions.col
   */
 object TransactionalLake {
 
-  private def fs(spark: SparkSession, path: String) =
+  private[sources] def fs(spark: SparkSession, path: String) =
     org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
 
   private def manifestDir(root: String) = s"$root/_manifest"
-  private def epochDir(root: String, epochId: Long) = s"$root/data/epoch=$epochId"
+  private[sources] def epochDir(root: String, epochId: Long) =
+    s"$root/data/epoch=$epochId"
   private def foldPointerDir(root: String) = s"$root/_fold"
   private def foldedMarkerDir(root: String) = s"$root/_folded"
-  private def foldGenDir(root: String, gen: Long) = s"$root/data_folded/gen=$gen"
-
-  /** A fold generation's data dir — for index-maintenance hooks
-    * (zone-map re-stat) that must scan exactly one generation. */
-  private[graft] def foldGenDataDir(root: String, gen: Long): String =
-    foldGenDir(root, gen)
+  private[sources] def foldGenDir(root: String, gen: Long) =
+    s"$root/data_folded/gen=$gen"
 
   /** True iff `epochId` has been committed — directly (manifest entry) or
     * via a fold (its rows live in the consolidated generation; the
@@ -379,20 +376,6 @@ object TransactionalLake {
       .filter(col("epoch").cast("long") <= epoch)
   }
 
-  /** Tenant OFFBOARDING across the transactional lake — the epoch-aware
-    * twin of [[Lake.purgeTenant]]: deletes the tenant's partition subtree
-    * from EVERY live committed epoch directory and EVERY fold
-    * generation, so the tenant is gone from the entire committed history,
-    * not just the newest view. Commit/fold markers are untouched, which
-    * is what makes the purge replay-stable:
-    *  - a crash-replayed COMMITTED epoch stays a no-op ([[isCommitted]]
-    *    still true) — the purged tenant cannot resurrect from replay;
-    *  - a later [[foldCommittedEpochs]] stages from the purged live dirs,
-    *    carrying the purge into the consolidated generation.
-    * Requires the tenant-partitioned layout (`tenant` in partitionCols);
-    * single-writer maintenance — never run concurrently with a fold of
-    * the same root. Returns the number of epoch/generation subtrees
-    * removed. */
   /** VACUUM: reclaim debris the crash-tolerant protocols deliberately
     * leave behind (every crash window above says "cleanup later is
     * harmless" — this is that cleanup, safe to run at any maintenance
@@ -471,6 +454,20 @@ object TransactionalLake {
     removed
   }
 
+  /** Tenant OFFBOARDING across the transactional lake — the epoch-aware
+    * twin of [[Lake.purgeTenant]]: deletes the tenant's partition subtree
+    * from EVERY live committed epoch directory and EVERY fold
+    * generation, so the tenant is gone from the entire committed history,
+    * not just the newest view. Commit/fold markers are untouched, which
+    * is what makes the purge replay-stable:
+    *  - a crash-replayed COMMITTED epoch stays a no-op ([[isCommitted]]
+    *    still true) — the purged tenant cannot resurrect from replay;
+    *  - a later [[foldCommittedEpochs]] stages from the purged live dirs,
+    *    carrying the purge into the consolidated generation.
+    * Requires the tenant-partitioned layout (`tenant` in partitionCols);
+    * single-writer maintenance — never run concurrently with a fold of
+    * the same root. Returns the number of epoch/generation subtrees
+    * removed. */
   def purgeTenant(spark: SparkSession, root: String, tenant: String): Int = {
     val f = fs(spark, root)
     var removed = 0
@@ -520,19 +517,18 @@ object TransactionalLake {
     rewritten
   }
 
-  /** One-directory unit of [[purgeRowsWhere]] — public so refold
-    * generations living OUTSIDE a transactional root (`ZoneMap
-    * .refoldStats` / `BloomIndex.refoldIndex` write `gen/v=<g>` plain
-    * dirs) can cascade with the same tmp/delete/rename crash protocol.
-    * Live epoch dirs are flat (stats/index lakes commit with
+  /** One-directory unit of [[purgeRowsWhere]] — shared so plain dirs
+    * living OUTSIDE a transactional root (the refold generations of
+    * [[FileIndexLake]]) cascade with the same tmp/delete/rename crash
+    * protocol. Live epoch dirs are flat (stats/index lakes commit with
     * partitionCols = Nil); fold generations keep `epoch` as their one
     * partition level and are rewritten preserving it. Deeper hive
     * layouts (tenant-partitioned DATA lakes) are out of scope — those
     * purge by subtree ([[purgeTenant]]), not by row. Returns true iff
-    * the dir was rewritten (false = absent). */
-  def purgeRowsInDir(spark: SparkSession, dir: String,
-                     pred: org.apache.spark.sql.Column,
-                     epochPartitioned: Boolean = false): Boolean = {
+    * the dir was rewritten (false = absent, or no row matched). */
+  private[graft] def purgeRowsInDir(spark: SparkSession, dir: String,
+                                    pred: org.apache.spark.sql.Column,
+                                    epochPartitioned: Boolean = false): Boolean = {
     val f = fs(spark, dir)
     val orig = new Path(dir)
     val tmp = new Path(dir + ".purge_tmp")

@@ -1,10 +1,13 @@
 package graft
 
 import graft.operators.{BloomIndex, ZoneMap}
+import graft.sources.FileIndexLake
 import org.apache.spark.sql.functions._
 
 class BloomIndexSpec extends SparkSpec {
   import spark.implicits._
+
+  private def bloom(path: String) = BloomIndex.buildIndex(spark, path, "k")
 
   // hash-scattered layout: the case zone maps CANNOT prune
   private def writeScattered(root: String): Unit =
@@ -139,13 +142,13 @@ class BloomIndexSpec extends SparkSpec {
     (0 until 2).foreach { i =>
       T.commitEpoch((1L to 400L).filter(_ % 2 == i).toDF("k")
         .repartition(2, col("k")), root, i.toLong, partitionCols = Nil)
-      BloomIndex.appendEpochIndex(spark, root, indexRoot, i.toLong, "k")
+      FileIndexLake.append(spark, root, indexRoot, i.toLong)(bloom)
     }
-    val idx = BloomIndex.index(spark, indexRoot)
+    val idx = FileIndexLake.read(spark, indexRoot)
     assert(idx.count() === 4) // 2 epochs x 2 files
     // replayed maintenance pass: same epoch id -> idempotent no-op
-    BloomIndex.appendEpochIndex(spark, root, indexRoot, 1L, "k")
-    assert(BloomIndex.index(spark, indexRoot).count() === 4)
+    FileIndexLake.append(spark, root, indexRoot, 1L)(bloom)
+    assert(FileIndexLake.read(spark, indexRoot).count() === 4)
     // one probe per epoch parity — both resolved against the union index
     val got = BloomIndex.prunedInRead(spark, idx, "k", Seq(100L, 101L),
       requirePruned = true).select("k").as[Long].collect().sorted.toSeq
@@ -159,18 +162,18 @@ class BloomIndexSpec extends SparkSpec {
     (0 until 3).foreach { i =>
       T.commitEpoch((1L to 600L).filter(_ % 3 == i).toDF("k")
         .repartition(2, col("k")), root, i.toLong, partitionCols = Nil)
-      BloomIndex.appendEpochIndex(spark, root, indexRoot, i.toLong, "k")
+      FileIndexLake.append(spark, root, indexRoot, i.toLong)(bloom)
     }
     assert(T.foldCommittedEpochs(spark, root, upTo = 1L,
       partitionCols = Nil) === 2)
     // pre-refold: the fold-aware view refuses (generation un-indexed) —
     // a stale index must fail loud, never silently drop folded files
     assert(intercept[IllegalArgumentException] {
-      BloomIndex.indexFoldAware(spark, root, indexRoot)
-    }.getMessage.contains("refoldIndex"))
-    assert(BloomIndex.refoldIndex(spark, root, indexRoot, "k") === 1)
-    assert(BloomIndex.refoldIndex(spark, root, indexRoot, "k") === 0) // replay
-    val idx = BloomIndex.indexFoldAware(spark, root, indexRoot)
+      FileIndexLake.readFoldAware(spark, root, indexRoot)
+    }.getMessage.contains("FileIndexLake.refold"))
+    assert(FileIndexLake.refold(spark, root, indexRoot)(bloom) === 1)
+    assert(FileIndexLake.refold(spark, root, indexRoot)(bloom) === 0) // replay
+    val idx = FileIndexLake.readFoldAware(spark, root, indexRoot)
     // probes spanning folded (100, 101) and live (2) parities read exactly
     val got = BloomIndex.prunedInRead(spark, idx, "k", Seq(100L, 101L, 102L),
       requirePruned = true).select("k").as[Long].collect().sorted.toSeq

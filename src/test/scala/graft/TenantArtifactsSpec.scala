@@ -1,7 +1,7 @@
 package graft
 
-import graft.operators.Dedup
-import graft.sources.{TenantArtifacts, TransactionalLake}
+import graft.operators.{BloomIndex, Dedup, ZoneMap}
+import graft.sources.{FileIndexLake, TenantArtifacts, TransactionalLake}
 import org.apache.spark.sql.functions._
 
 /** Tenant-purge CASCADE over derived artifacts
@@ -128,6 +128,39 @@ class TenantArtifactsSpec extends SparkSpec {
     val back = spark.read.option("basePath", s"$root/gen").parquet(s"$root/gen")
     assert(back.count() === 0)
     assert(back.columns.toSet === Set("file", "epoch", "n"))
+  }
+
+  test("per-file index purge reaches refold generations, for both builders") {
+    val root = tmpDir("ta_fidx_")
+    val lake = s"$root/lake"
+    val builders = Seq[(String, String => org.apache.spark.sql.DataFrame)](
+      "zstats" -> (ZoneMap.buildStats(spark, _, "k")),
+      "bloom" -> (BloomIndex.buildIndex(spark, _, "k")))
+    (0 until 3).foreach { e =>
+      TransactionalLake.commitEpoch((1L to 60L).filter(_ % 3 == e).toDF("k")
+        .withColumn("tenant", concat(lit("t"), (col("k") % 2).cast("string"))),
+        lake, e.toLong, partitionCols = Seq("tenant"))
+      builders.foreach { case (n, b) =>
+        FileIndexLake.append(spark, lake, s"$root/$n", e.toLong)(b) }
+    }
+    assert(TransactionalLake.foldCommittedEpochs(spark, lake, upTo = 1L,
+      partitionCols = Seq("tenant")) === 2)
+    builders.foreach { case (n, b) =>
+      assert(FileIndexLake.refold(spark, lake, s"$root/$n")(b) === 1) }
+    assert(TransactionalLake.purgeTenant(spark, lake, "t1") > 0)
+    val purged = col("file").contains("/tenant=t1/")
+    builders.foreach { case (n, _) =>
+      val idx = s"$root/$n"
+      // before: t1 rows in every epoch dir and in the generation dir
+      assert(!FileIndexLake.readFoldAware(spark, lake, idx).filter(purged).isEmpty)
+      // three epoch dirs + one generation dir rewritten
+      assert(FileIndexLake.purgeTenant(spark, idx, "t1") === 4, n)
+      assert(FileIndexLake.read(spark, idx).filter(purged).isEmpty, n)
+      val live = FileIndexLake.readFoldAware(spark, lake, idx)
+      assert(live.filter(purged).isEmpty, n)
+      assert(!live.isEmpty, s"$n: the surviving tenant keeps its rows")
+      assert(FileIndexLake.purgeTenant(spark, idx, "t1") === 0, s"$n replay")
+    }
   }
 
   test("streaming-ANN roots offboard through the same cascade") {

@@ -1,10 +1,13 @@
 package graft
 
 import graft.operators.ZoneMap
+import graft.sources.FileIndexLake
 import org.apache.spark.sql.functions._
 
 class ZoneMapSpec extends SparkSpec {
   import spark.implicits._
+
+  private def stat(path: String) = ZoneMap.buildStats(spark, path, "k")
 
   private def writeRanged(root: String): Unit =
     (1L to 1000L).toDF("k").withColumn("v", col("k") * 2)
@@ -38,13 +41,13 @@ class ZoneMapSpec extends SparkSpec {
     (0 until 2).foreach { i =>
       T.commitEpoch((1L to 100L).filter(_ % 2 == i).toDF("k")
         .repartitionByRange(2, col("k")), root, i.toLong, partitionCols = Nil)
-      ZoneMap.appendEpochStats(spark, root, statsRoot, i.toLong, "k")
+      FileIndexLake.append(spark, root, statsRoot, i.toLong)(stat)
     }
-    val idx1 = ZoneMap.statsIndex(spark, statsRoot)
+    val idx1 = FileIndexLake.read(spark, statsRoot)
     assert(idx1.count() === 4) // 2 epochs x 2 range files
     // replayed maintenance pass: same epoch id -> idempotent no-op
-    ZoneMap.appendEpochStats(spark, root, statsRoot, 1L, "k")
-    assert(ZoneMap.statsIndex(spark, statsRoot).count() === 4)
+    FileIndexLake.append(spark, root, statsRoot, 1L)(stat)
+    assert(FileIndexLake.read(spark, statsRoot).count() === 4)
     // the accumulated index answers exactly
     val got = ZoneMap.prunedRangeRead(spark, idx1, "k", 10L, 20L)
       .select("k").as[Long].collect().sorted.toSeq
@@ -58,20 +61,20 @@ class ZoneMapSpec extends SparkSpec {
     (0 until 3).foreach { i =>
       T.commitEpoch((1L to 999L).filter(_ % 3 == i).toDF("k")
         .repartitionByRange(2, col("k")), root, i.toLong, partitionCols = Nil)
-      ZoneMap.appendEpochStats(spark, root, statsRoot, i.toLong, "k")
+      FileIndexLake.append(spark, root, statsRoot, i.toLong)(stat)
     }
     // fold-aware read BEFORE any fold ≡ the plain index
-    assert(ZoneMap.statsIndexFoldAware(spark, root, statsRoot).count() === 6)
+    assert(FileIndexLake.readFoldAware(spark, root, statsRoot).count() === 6)
     assert(T.foldCommittedEpochs(spark, root, upTo = 1L, partitionCols = Nil,
       rangeClusterCols = Seq("k")) === 2)
     // stale index now points at deleted files; the fold-aware read
     // REFUSES until the generation is re-statted
     intercept[IllegalArgumentException] {
-      ZoneMap.statsIndexFoldAware(spark, root, statsRoot)
+      FileIndexLake.readFoldAware(spark, root, statsRoot)
     }
-    assert(ZoneMap.refoldStats(spark, root, statsRoot, "k") === 1)
-    assert(ZoneMap.refoldStats(spark, root, statsRoot, "k") === 0) // idempotent
-    val idx = ZoneMap.statsIndexFoldAware(spark, root, statsRoot)
+    assert(FileIndexLake.refold(spark, root, statsRoot)(stat) === 1)
+    assert(FileIndexLake.refold(spark, root, statsRoot)(stat) === 0) // idempotent
+    val idx = FileIndexLake.readFoldAware(spark, root, statsRoot)
     // every indexed file exists (no stale rows)
     val f = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
