@@ -62,14 +62,6 @@ final case class Engine(spark: SparkSession, lakeRoot: String, table: String) {
         org.apache.spark.sql.types.StructField("error_type",
           org.apache.spark.sql.types.StringType))))
 
-  /** Crawler-cadence maintenance for externally-written DATA (the
-    * streaming sink keeps its own catalog current, and both engine ingest
-    * paths register `<table>_errors` whenever they write errors; an
-    * external error writer needs its own `Maintenance.scheduleRefresh`
-    * over `$lakeRoot/error`). */
-  def scheduleCatalogRefresh(intervalSeconds: Long = 300L): graft.sources.Maintenance.RefreshHandle =
-    graft.sources.Maintenance.scheduleRefresh(spark, table, s"$lakeRoot/data", intervalSeconds)
-
   /** Tenant-scoped table handle — the only query entry point; the engine
     * appends the tenant predicate from the authenticated context (C3). */
   def query(implicit ctx: TenantContext): DataFrame =

@@ -93,9 +93,4 @@ object TextFunctions {
       filter(split(text, ""), ch => length(ch) > 0),
       lit(0L),
       (acc, ch) => (acc * lit(31L) + ascii(ch).cast("long")) % lit(1000000007L))
-
-  /** SimHash bit vote for one bit position given a 64-bit token hash:
-    * +1 if the bit is set, else -1. */
-  def simhashVote(tokenHash: Column, bit: Int): Column =
-    when(shiftright(tokenHash, bit).bitwiseAND(lit(1L)) === 1L, lit(1)).otherwise(lit(-1))
 }

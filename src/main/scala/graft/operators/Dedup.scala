@@ -810,15 +810,6 @@ object Dedup {
     } finally { sets.unpersist(blocking = true); () }
   }
 
-  /** MinHash signatures: one codegen'd pass per row (no explode, no
-    * shuffle) — one xxhash per shingle + universal-hash permutations per
-    * hash index (graft.plans.MinHashSignature). */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int = 3, nHashes: Int = 64): DataFrame =
-    withShingleSets(docs, idCol, textCol, k)
-      .select(col(idCol),
-        SketchExpressions.minhashSignature(col("sh"), nHashes).as("sig"))
-
   /** Banded MinHash index rows for a document set:
     * (id, band, bucket, bands, rows_per_band) — the PERSISTED artifact of
     * incremental dedup. Build once over the corpus, store as a table

@@ -28,12 +28,6 @@ object Sampling {
       .otherwise(lit("test"))
   }
 
-  /** Deterministic per-stratum sample: keep ~pct% of each stratum by
-    * content bucket — proportions hold within every stratum without a
-    * shuffle or a sort (stratified sampling as a filter). */
-  def stratifiedSample(df: DataFrame, textCol: String, pct: Int): DataFrame =
-    df.filter(contentBucket(col(textCol), 100) < pct)
-
   /** Domain-MIXTURE sampling: down-sample each stratum (source/domain)
     * so the output approaches the target mixture `weights` (relative,
     * un-normalized) by DELETION ONLY — no stratum is up-sampled, so the

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, X
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass sketch signatures as native codegen'd expressions.
   *
@@ -27,20 +26,6 @@ object Sketches {
 
   def permuteA(j: Int): Long = (j * 2 + 1) * GoldenGamma | 1L // odd multiplier
   def permuteB(j: Int): Long = XXH64.hashLong(j.toLong, 7L)
-
-  def minhashRef(shingles: Seq[String], n: Int): Array[Long] = {
-    val mins = Array.fill(n)(Long.MaxValue)
-    shingles.foreach { s =>
-      val h = XXH64.hashUTF8String(UTF8String.fromString(s), 42L)
-      var j = 0
-      while (j < n) {
-        val hj = permuteA(j) * h + permuteB(j)
-        if (hj < mins(j)) mins(j) = hj
-        j += 1
-      }
-    }
-    mins
-  }
 }
 
 /** array<string> shingles → array<long> of `nHashes` min-hash values. */

@@ -47,13 +47,14 @@ object FileIndexLake {
   /** INCREMENTAL maintenance: index data epoch `epoch` from THAT EPOCH'S
     * files alone — O(batch), never O(lake) — and commit the rows under
     * the same epoch id, inheriting the data lake's idempotent replay (a
-    * replayed pass re-commits the same epoch and contracts to a no-op).
+    * replayed pass finds the epoch committed and builds nothing).
     * Run it post-commit, like the canonical-map and keyed-view hooks. */
   def append(spark: SparkSession, lakeRoot: String, indexRoot: String,
              epoch: Long)(build: String => DataFrame): Unit =
-    TransactionalLake.commitEpoch(
-      build(TransactionalLake.epochDir(lakeRoot, epoch)), indexRoot, epoch,
-      partitionCols = Nil)
+    if (!TransactionalLake.isCommitted(spark, indexRoot, epoch))
+      TransactionalLake.commitEpoch(
+        build(TransactionalLake.epochDir(lakeRoot, epoch)), indexRoot, epoch,
+        partitionCols = Nil)
 
   /** The accumulated index across all committed epochs (the bookkeeping
     * `epoch` column dropped — consumers key on `file`). */

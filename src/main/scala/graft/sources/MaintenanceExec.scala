@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Execution sizing for O(changes) maintenance actions (incremental
   * view refresh, retention folds): size the SHUFFLE to the DELTA, not
@@ -96,5 +96,17 @@ private[graft] object MaintenanceExec {
         conf.set(cKey, c0)
       }
     }
+  }
+
+  /** [[sizedByBytes]] on `batch`'s session, for a micro-batch body that
+    * reads `batch` and the lakes under `dirs`: the batch's plan bytes (a
+    * file source's plan stats are its real bytes) plus the dirs'
+    * footprints. A stream's cloned batch session keeps the conf flip to
+    * that stream. */
+  def sizedByBatch[T](batch: DataFrame, dirs: Seq[String])(body: => T): T = {
+    val spark = batch.sparkSession
+    val batchBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+      .min(BigInt(Long.MaxValue)).toLong
+    sizedByBytes(spark, batchBytes + dirs.map(dirFootprintBytes(spark, _)).sum)(body)
   }
 }

@@ -189,11 +189,14 @@ object TransactionalLake {
   def committedEpochs(spark: SparkSession, root: String): Seq[Long] =
     manifestEntries(spark, root).map(_._1)
 
+  /** Every committed epoch id, live or folded, ascending and distinct. */
+  def allEpochs(spark: SparkSession, root: String): Seq[Long] =
+    (committedEpochs(spark, root) ++
+      foldState(spark, root).map(_._2).getOrElse(Seq.empty)).distinct.sorted
+
   /** Highest committed epoch, live or folded; -1 = nothing committed. */
   private[sources] def headEpoch(spark: SparkSession, root: String): Long =
-    (committedEpochs(spark, root) ++
-      foldState(spark, root).map(_._2).getOrElse(Seq.empty))
-      .foldLeft(-1L)(math.max)
+    (-1L +: allEpochs(spark, root)).max
 
   /** Committed `(epochId, manifest-entry mtime)` pairs, ascending by id —
     * the mtime keys the epoch-schema hints (a re-created root's entries

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.sources.TransactionalLake
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -17,13 +16,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * anyone notices. Quarantined batches keep their epoch ids, so after
   * the upstream is fixed they can be replayed through the same gate.
   *
-  * Exactly-once: both destinations are epoch-committed
-  * ([[TransactionalLake.commitEpoch]] idempotence), and the routing
+  * Exactly-once: the gate runs through [[EpochSink]], and the routing
   * decision is a deterministic function of the batch contents, so a
-  * crash-replayed micro-batch re-derives the SAME verdict and its
-  * commit contracts to a no-op. The per-batch cost is one cached pass:
-  * a 2-value conditional aggregate for the verdict, then one write —
-  * O(batch), no corpus access. */
+  * crash-replayed micro-batch re-derives the SAME verdict, its one epoch
+  * commit contracts to a no-op, and `onDecision` fires again. The
+  * per-batch cost is one cached pass: a 2-value conditional aggregate
+  * for the verdict, then one write — O(batch), no corpus access. */
 object QualityGate {
 
   /** `violation`: boolean column over the stream's schema (true = row
@@ -36,25 +34,17 @@ object QualityGate {
   : StreamingQuery = {
     require(maxViolationFrac >= 0.0 && maxViolationFrac <= 1.0,
       "maxViolationFrac must be in [0, 1]")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val cached = batch.persist()
-        try {
-          val row = cached.agg(count(lit(1)).as("n"),
-            sum(when(violation, 1L).otherwise(0L)).as("v")).head()
-          val n = row.getLong(0)
-          val v = if (row.isNullAt(1)) 0L else row.getLong(1)
-          val quarantine = n > 0 && v.toDouble / n > maxViolationFrac
-          if (n > 0) {
-            val dest = if (quarantine) quarantineRoot else lakeRoot
-            TransactionalLake.commitEpoch(cached, dest, epochId,
-              partitionCols = Nil)
-          }
-          onDecision(epochId, n, v, quarantine)
-        } finally { cached.unpersist(); () }
-      }
-      .start()
+    EpochSink.start(stream, checkpoint, trigger) { ep =>
+      val cached = ep.batch.persist()
+      try {
+        val row = cached.agg(count(lit(1)).as("n"),
+          sum(when(violation, 1L).otherwise(0L)).as("v")).head()
+        val n = row.getLong(0)
+        val v = if (row.isNullAt(1)) 0L else row.getLong(1)
+        val quarantine = n > 0 && v.toDouble / n > maxViolationFrac
+        if (n > 0) ep.commit(if (quarantine) quarantineRoot else lakeRoot, cached)
+        onDecision(ep.id, n, v, quarantine)
+      } finally { cached.unpersist(); () }
+    }
   }
 }

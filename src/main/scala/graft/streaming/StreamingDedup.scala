@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import graft.sources.TransactionalLake
+import graft.sources.{MaintenanceExec, TransactionalLake}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -25,13 +25,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * At 100 TB-of-corpus this is the crawl-ingest shape: per-batch cost
   * scales with the batch and its collisions, not the corpus.
   *
-  * EXACTLY-ONCE: each artifact commits through the
-  * [[TransactionalLake]] idempotent-epoch protocol, and the reads that
-  * feed a batch's computation EXCLUDE the batch's own epoch id — so a
-  * crash-replayed epoch recomputes from the same pre-batch state,
-  * rewrites the same directories, and the pair log never duplicates.
-  * The union of the committed pair-log epochs equals the ONE-SHOT
-  * near-dup pairs of the full corpus (every pair has a later-arriving
+  * EXACTLY-ONCE: every stream here runs through [[EpochSink]], whose
+  * replay rule keeps each artifact epoch-committed once and each
+  * pre-batch read free of the batch's own epoch, so the pair log never
+  * duplicates. The union of the committed pair-log epochs equals the
+  * ONE-SHOT near-dup pairs of the full corpus (every pair has a later-arriving
   * side; set equality is batching-independent) — which is exactly what
   * the driver gate's plain-SQL oracle checks.
   */
@@ -47,55 +45,28 @@ object StreamingDedup {
             checkpoint: String, trigger: Trigger, k: Int = 3,
             threshold: Double = 0.8, bands: Int = 16,
             rowsPerBand: Int = 4): StreamingQuery =
-    docs.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val s = batch.sparkSession // the cloned micro-batch session
-        // micro-delta mode for the whole batch body: a micro-batch's
-        // dedup work reads the batch (file-source plan stats = real
-        // bytes) + the prior artifacts (file metadata); at lake-scale
-        // session settings each sub-step is scheduler-dispatch-bound.
-        // The cloned session isolates the conf flip to this stream.
-        val batchBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-          .min(BigInt(Long.MaxValue)).toLong
-        val inputBytes = batchBytes +
-          Seq(corpusRoot(root), indexRoot(root), pairsRoot(root))
-            .map(graft.sources.MaintenanceExec.dirFootprintBytes(s, _)).sum
-        graft.sources.MaintenanceExec.sizedByBytes(s, inputBytes) {
-        // pre-batch state: committed epochs EXCLUDING a half-committed
-        // copy of THIS epoch (crash replay must recompute from the same
-        // inputs it saw the first time)
-        def priorRead(r: String): Option[DataFrame] = {
-          // prior state lives in live epoch dirs AND (after retention)
-          // the consolidated fold generation — consult both
-          val live = TransactionalLake.committedEpochs(s, r).filter(_ != epochId)
-          val folded = TransactionalLake.foldState(s, r)
-            .map(_._2).getOrElse(Seq.empty).filter(_ != epochId)
-          if (live.isEmpty && folded.isEmpty) None
-          else Some(TransactionalLake.readCommitted(s, r)
-            .filter(col("epoch") =!= epochId.toString).drop("epoch"))
-        }
+    EpochSink.start(docs, checkpoint, trigger) { ep =>
+      val batch = ep.batch
+      // micro-delta mode for the whole batch body: at lake-scale session
+      // settings each dedup sub-step is scheduler-dispatch-bound
+      MaintenanceExec.sizedByBatch(batch,
+          Seq(corpusRoot(root), indexRoot(root), pairsRoot(root))) {
         val batchIndex = Dedup.minhashBandIndex(batch, idCol, textCol,
           k, bands, rowsPerBand)
         val emptyIndex = Dedup.minhashBandIndex(batch.filter(lit(false)),
           idCol, textCol, k, bands, rowsPerBand)
         val pairs = Dedup.incrementalNearDupPairs(
           batch,
-          priorRead(corpusRoot(root)).getOrElse(batch.filter(lit(false))),
-          priorRead(indexRoot(root)).getOrElse(emptyIndex),
+          ep.prior(corpusRoot(root)).getOrElse(batch.filter(lit(false))),
+          ep.prior(indexRoot(root)).getOrElse(emptyIndex),
           idCol, textCol, k, threshold, bands, rowsPerBand,
           newIndex = Some(batchIndex))
-        // corpus and index first, the pair log LAST: the pair epoch is
-        // the consumer-visible commit point, and every artifact commit
-        // is individually idempotent
-        TransactionalLake.commitEpoch(batch, corpusRoot(root), epochId, Nil)
-        TransactionalLake.commitEpoch(batchIndex, indexRoot(root), epochId, Nil)
-        TransactionalLake.commitEpoch(pairs, pairsRoot(root), epochId, Nil)
-        }
-        ()
+        // the pair log LAST: it is the consumer-visible commit
+        ep.commit(corpusRoot(root), batch)
+        ep.commit(indexRoot(root), batchIndex)
+        ep.commit(pairsRoot(root), pairs)
       }
-      .start()
+    }
 
   /** The accumulated near-dup pair log (exactly-once across replays). */
   def pairLog(spark: org.apache.spark.sql.SparkSession, root: String): DataFrame =
@@ -124,12 +95,8 @@ object StreamingDedup {
   def maintainCanonical(spark: org.apache.spark.sql.SparkSession, root: String,
                         idCol: String): Seq[Long] = {
     val croot = canonicalRoot(root)
-    val done = TransactionalLake.committedEpochs(spark, croot).toSet ++
-      TransactionalLake.foldState(spark, croot).map(_._2).getOrElse(Seq.empty)
-    val pairEpochs = (TransactionalLake.committedEpochs(spark, pairsRoot(root)) ++
-      TransactionalLake.foldState(spark, pairsRoot(root)).map(_._2).getOrElse(Seq.empty))
-      .distinct.sorted
-    val todo = pairEpochs.filterNot(done)
+    val done = TransactionalLake.allEpochs(spark, croot).toSet
+    val todo = TransactionalLake.allEpochs(spark, pairsRoot(root)).filterNot(done)
     // each epoch's delta maintenance reads: the pair/corpus rows of THIS
     // epoch (partition-pruned) + the whole canonical map (the as-of
     // window) — size its shuffles to that footprint (micro-delta mode:
@@ -140,7 +107,7 @@ object StreamingDedup {
         TransactionalLake.changeFootprintBytes(spark, corpusRoot(root), e - 1, e) +
         TransactionalLake.changeFootprintBytes(spark, croot, -1L, Long.MaxValue)
     todo.foreach { e =>
-      graft.sources.MaintenanceExec.sizedByBytes(spark, epochFootprint(e)) {
+      MaintenanceExec.sizedByBytes(spark, epochFootprint(e)) {
       val newDocs = TransactionalLake.readCommitted(spark, corpusRoot(root))
         .filter(col("epoch").cast("long") === e).select(col(idCol))
       val pairs = TransactionalLake.readCommitted(spark, pairsRoot(root))
@@ -149,11 +116,9 @@ object StreamingDedup {
       // one (so a resumed maintenance pass sees exactly the state the
       // first attempt saw); before any canonical epoch exists the prior
       // map is empty
-      val anyPrior = (TransactionalLake.committedEpochs(spark, croot) ++
-        TransactionalLake.foldState(spark, croot).map(_._2).getOrElse(Seq.empty))
-        .exists(_ < e)
+      val anyPrior = TransactionalLake.allEpochs(spark, croot).exists(_ < e)
       val prev =
-        if (anyPrior) canonicalMapAsOf(spark, root, idCol, e - 1)
+        if (anyPrior) latestAsOf(spark, croot, idCol, e - 1)
         else newDocs.select(col(idCol), col(idCol).as("canonical_id"))
           .filter(lit(false))
       val delta = Dedup.canonicalizeIncrementalDelta(prev, newDocs, pairs, idCol)
@@ -170,14 +135,17 @@ object StreamingDedup {
     * per-epoch maintenance write path. */
   def canonicalMap(spark: org.apache.spark.sql.SparkSession,
                    root: String, idCol: String): DataFrame =
-    canonicalMapAsOf(spark, root, idCol, Long.MaxValue)
+    latestAsOf(spark, canonicalRoot(root), idCol, Long.MaxValue)
 
-  private def canonicalMapAsOf(spark: org.apache.spark.sql.SparkSession,
-                               root: String, idCol: String,
-                               epoch: Long): DataFrame = {
+  /** Latest-entry-wins per `keyCol` over the committed epochs up to
+    * `epoch` of the delta lake at `lakeRoot`: the as-of read of the
+    * canonical map and of the graph-metric state. */
+  private def latestAsOf(spark: org.apache.spark.sql.SparkSession,
+                         lakeRoot: String, keyCol: String,
+                         epoch: Long): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("epoch").cast("long").desc)
-    TransactionalLake.readCommitted(spark, canonicalRoot(root))
+      .partitionBy(col(keyCol)).orderBy(col("epoch").cast("long").desc)
+    TransactionalLake.readCommitted(spark, lakeRoot)
       .filter(col("epoch").cast("long") <= epoch)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn", "epoch")
@@ -190,28 +158,21 @@ object StreamingDedup {
     * word-k-gram overlap against a STATIC benchmark/eval set, and the
     * flagged doc ids accumulate in a transactionally-committed
     * quarantine log (training jobs anti-join against it). Flagging is
-    * per-doc against fixed eval postings — no cross-epoch state — so a
-    * crash-replayed epoch recomputes identical rows and the idempotent
-    * epoch commit keeps the log exactly-once; the committed union
+    * per-doc against fixed eval postings — no cross-epoch state — and
+    * its one commit rides [[EpochSink]]'s replay rule; the committed union
     * equals the one-shot batch decontamination of everything ingested
     * (the driver gate's oracle). The eval postings broadcast per batch:
     * per-batch cost scales with the batch, never the corpus. */
   def startDecontaminate(docs: DataFrame, evalSet: DataFrame, idCol: String,
                          textCol: String, root: String, checkpoint: String,
                          trigger: Trigger, k: Int = 8): StreamingQuery =
-    docs.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        // eval suite is static and broadcast-sized by construction here;
-        // pinning the path skips decontaminate's auto-select count job
-        // that would otherwise run once per micro-batch
-        val flagged = Dedup.decontaminate(batch, evalSet, idCol, textCol, k,
-          broadcastEval = Some(true))
-        TransactionalLake.commitEpoch(flagged, quarantineRoot(root), epochId, Nil)
-        ()
-      }
-      .start()
+    EpochSink.start(docs, checkpoint, trigger) { ep =>
+      // eval suite is static and broadcast-sized by construction here;
+      // pinning the path skips decontaminate's auto-select count job
+      // that would otherwise run once per micro-batch
+      ep.commit(quarantineRoot(root), Dedup.decontaminate(ep.batch, evalSet,
+        idCol, textCol, k, broadcastEval = Some(true)))
+    }
 
   /** The accumulated quarantine log (exactly-once across replays). */
   def quarantineLog(spark: org.apache.spark.sql.SparkSession,
@@ -227,8 +188,7 @@ object StreamingDedup {
     * pairs under the batch epoch. Each train doc arrives in exactly one
     * batch and candidates always pair a batch doc with an eval doc, so
     * the accumulated log equals the one-shot fuzzy pass over everything
-    * ingested — exactly-once across crash replays via the idempotent
-    * epoch commit. Per-batch cost: one batch-scale signature pass plus
+    * ingested — exactly-once across crash replays via [[EpochSink]]. Per-batch cost: one batch-scale signature pass plus
     * the suite-scale (broadcast) eval side — never a corpus re-scan. */
   def startDecontaminateFuzzy(docs: DataFrame, evalSet: DataFrame,
                               idCol: String, textCol: String, root: String,
@@ -236,17 +196,10 @@ object StreamingDedup {
                               k: Int = 3, threshold: Double = 0.5,
                               bands: Int = 32,
                               rowsPerBand: Int = 2): StreamingQuery =
-    docs.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val flagged = Dedup.decontaminateFuzzy(batch, evalSet, idCol,
-          textCol, k, threshold, bands, rowsPerBand)
-        TransactionalLake.commitEpoch(flagged, fuzzyQuarantineRoot(root),
-          epochId, Nil)
-        ()
-      }
-      .start()
+    EpochSink.start(docs, checkpoint, trigger) { ep =>
+      ep.commit(fuzzyQuarantineRoot(root), Dedup.decontaminateFuzzy(ep.batch,
+        evalSet, idCol, textCol, k, threshold, bands, rowsPerBand))
+    }
 
   /** The accumulated fuzzy quarantine log (exactly-once across
     * replays). */
@@ -257,11 +210,12 @@ object StreamingDedup {
 
   /** STREAMING substring-dedup index maintenance: every micro-batch
     * advances the gram-postings lake and the per-doc best-repeat state
-    * through [[Dedup.commitSubstringBatch]] — both commits are keyed on
-    * the micro-batch epoch, so a crash-replayed batch recomputes from
-    * the identical committed state (the grams epoch read INCLUDES the
-    * batch's own, already-idempotent epoch) and rewrites the same
-    * directories: the served answer stays exactly the one-shot
+    * through [[Dedup.commitSubstringBatch]], which keeps its own three
+    * epoch commits: its later commits read the first, so its reads
+    * INCLUDE the batch's own, already-committed gram epoch (the one
+    * exception to [[EpochSink]]'s prior-state rule). A crash-replayed
+    * batch recomputes from the identical committed state, and the served
+    * answer stays exactly the one-shot
     * [[Dedup.longestDupSubstrings]] of everything ingested. Micro-delta
     * execution sizing, like the near-dup stream: per-batch cost scales
     * with the batch and its gram collisions, never the corpus scan. */
@@ -269,22 +223,12 @@ object StreamingDedup {
                           root: String, checkpoint: String, trigger: Trigger,
                           minWords: Int = 8,
                           maxAnchorPairs: Long = 10000000L): StreamingQuery =
-    docs.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val s = batch.sparkSession
-        val batchBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-          .min(BigInt(Long.MaxValue)).toLong
-        val inputBytes = batchBytes +
-          graft.sources.MaintenanceExec.dirFootprintBytes(s, root)
-        graft.sources.MaintenanceExec.sizedByBytes(s, inputBytes) {
-          Dedup.commitSubstringBatch(batch, idCol, textCol, root, epochId,
-            minWords, maxAnchorPairs)
-        }
-        ()
+    EpochSink.start(docs, checkpoint, trigger) { ep =>
+      MaintenanceExec.sizedByBatch(ep.batch, Seq(root)) {
+        Dedup.commitSubstringBatch(ep.batch, idCol, textCol, root, ep.id,
+          minWords, maxAnchorPairs)
       }
-      .start()
+    }
 
   def graphMetricsRoot(root: String): String = s"$root/graphmetrics"
 
@@ -303,12 +247,8 @@ object StreamingDedup {
                            root: String): Seq[Long] = {
     import org.apache.spark.sql.functions.{greatest, least}
     val groot = graphMetricsRoot(root)
-    val done = TransactionalLake.committedEpochs(spark, groot).toSet ++
-      TransactionalLake.foldState(spark, groot).map(_._2).getOrElse(Seq.empty)
-    val pairEpochs = (TransactionalLake.committedEpochs(spark, pairsRoot(root)) ++
-      TransactionalLake.foldState(spark, pairsRoot(root)).map(_._2).getOrElse(Seq.empty))
-      .distinct.sorted
-    val todo = pairEpochs.filterNot(done)
+    val done = TransactionalLake.allEpochs(spark, groot).toSet
+    val todo = TransactionalLake.allEpochs(spark, pairsRoot(root)).filterNot(done)
     var applied = done
     todo.foreach { e =>
       val pairsAll = TransactionalLake.readCommitted(spark, pairsRoot(root))
@@ -323,7 +263,7 @@ object StreamingDedup {
       // expensive op on object stores)
       val anyPrior = applied.exists(_ < e)
       val prevState =
-        if (anyPrior) graphMetricStateAsOf(spark, root, e - 1)
+        if (anyPrior) latestAsOf(spark, groot, "id", e - 1)
         else batch.select(col("id_a").as("id"))
           .withColumn("degree", lit(0L)).withColumn("tri_count", lit(0L))
           .filter(lit(false))
@@ -341,17 +281,7 @@ object StreamingDedup {
     * contract as [[canonicalMap]]). */
   def graphMetricState(spark: org.apache.spark.sql.SparkSession,
                        root: String): DataFrame =
-    graphMetricStateAsOf(spark, root, Long.MaxValue)
-
-  private def graphMetricStateAsOf(spark: org.apache.spark.sql.SparkSession,
-                                   root: String, epoch: Long): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("epoch").cast("long").desc)
-    val all = TransactionalLake.readCommitted(spark, graphMetricsRoot(root))
-    all.filter(col("epoch").cast("long") <= epoch)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn", "epoch")
-  }
+    latestAsOf(spark, graphMetricsRoot(root), "id", Long.MaxValue)
 
   /** Retention for the stage's artifact lakes — they gain one epoch per
     * micro-batch forever otherwise: fold all but the newest `keepLast`

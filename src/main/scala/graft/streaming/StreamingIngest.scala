@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.ingest.Ingest
 import graft.model.Schemas
-import graft.sources.{Lake, TransactionalLake}
+import graft.sources.Lake
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -15,17 +15,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    (kinesis-stack.ts:140-142)
   *  - checkpointLocation ≡ Flink checkpointing every 60 s
   *    (kinesis-stack.ts:200-205). Delivery: processed-offset tracking
-  *    makes restarts replay-free, but foreachBatch itself is
+  *    makes restarts replay-free, but the append sink ([[start]]) is
   *    AT-LEAST-ONCE on mid-batch failure (an epoch that crashed between
   *    data write and checkpoint commit re-appends on replay) — the same
   *    envelope as the reference's Flink→Firehose→S3 chain. Exactly-once
-  *    readers dedup on a record key (Dedup.exact) or use a
-  *    transactional table format for the sink.
+  *    readers dedup on a record key (Dedup.exact) or read the epoch
+  *    commits of [[startTransactional]].
   *  - dynamic partition write tenant/year/month/day/hour ≡ Firehose
   *    dynamic partitioning (kinesis-stack.ts:137-161)
   *  - corrupt/invalid records land under error/<error-type>/ per
-  *    micro-batch (S6) — both outputs from ONE pass via foreachBatch,
-  *    through the one sink body ([[writeBatch]]) that the exactly-once
+  *    micro-batch (S6) — both outputs from ONE pass per batch of the
+  *    one epoch sink ([[EpochSink]]), through the one sink body ([[writeBatch]]) that the exactly-once
   *    stream and `Engine.ingestBatch` run too.
   *
   * The Flink job is stateless, so micro-batch semantics are a strict
@@ -107,24 +107,18 @@ object StreamingIngest {
             trigger: Trigger = Trigger.ProcessingTime("60 seconds"),
             ingestTs: Column = unix_timestamp(),
             table: Option[String] = None): StreamingQuery =
-    raw.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        writeBatch(spark, batch, rawCol, col(tenantCol), ingestTs, lakeRoot, table) { valid =>
-          Lake.writeValid(valid, lakeRoot); true
-        }
-        ()
+    EpochSink.start(raw, checkpoint, trigger) { ep =>
+      writeBatch(spark, ep.batch, rawCol, col(tenantCol), ingestTs, lakeRoot, table) { valid =>
+        Lake.writeValid(valid, lakeRoot); true
       }
-      .start()
+      ()
+    }
 
   /** EXACTLY-ONCE variant of [[start]]: the same [[writeBatch]] body, but
-    * each epoch's valid rows are delivered through
-    * [[graft.sources.TransactionalLake.commitEpoch]] — idempotent
-    * epoch-directory overwrite + atomic manifest publish — so a replayed
-    * epoch (crash between data write and checkpoint commit, the
-    * at-least-once hazard of the append path) rewrites its own directory
-    * or skips, never duplicates. Readers use
+    * each epoch's valid rows are delivered through [[EpochSink]]'s epoch
+    * commit, so a replayed epoch (crash between data write and checkpoint
+    * commit, the at-least-once hazard of the append path) rewrites its
+    * own directory or skips, never duplicates. Readers use
     * `TransactionalLake.readCommitted`. Dead letters keep the append
     * path (diagnostics: replay may re-log an error, it cannot corrupt
     * the data). Catalog registration is the reader's `readCommitted`
@@ -139,15 +133,11 @@ object StreamingIngest {
                          ingestTs: Column = unix_timestamp(),
                          onEpochCommitted: (SparkSession, Long) => Unit =
                            (_, _) => ()): StreamingQuery =
-    raw.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        writeBatch(spark, batch, rawCol, col(tenantCol), ingestTs, lakeRoot, None)(
-          TransactionalLake.commitEpoch(_, lakeRoot, epochId))
-        onEpochCommitted(batch.sparkSession, epochId)
-      }
-      .start()
+    EpochSink.start(raw, checkpoint, trigger) { ep =>
+      writeBatch(spark, ep.batch, rawCol, col(tenantCol), ingestTs, lakeRoot, None)(
+        ep.commit(lakeRoot, _, Schemas.partitionCols))
+      onEpochCommitted(ep.batch.sparkSession, ep.id)
+    }
 
   private val RestartAttempts = 40
 

@@ -26,11 +26,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * if any corpus row is missing an assignment (a stale index can shrink
   * the search space silently otherwise).
   *
-  * EXACTLY-ONCE: all three artifacts ride the [[TransactionalLake]]
-  * idempotent-epoch protocol; reads inside a batch EXCLUDE the batch's own
-  * epoch id, so a crash-replayed epoch recomputes from the same pre-batch
-  * state (same generation, same assignments) and rewrites the same
-  * directories. The index commits LAST — it is the consumer-visible
+  * EXACTLY-ONCE: the stream runs through [[EpochSink]], so all three
+  * artifacts are epoch-committed once and a crash-replayed epoch resolves
+  * the same pre-batch generation (its own epoch excluded) and the same
+  * assignments. The index commits LAST — it is the consumer-visible
   * commit point.
   *
   * PERIODIC CENTROID REFINEMENT ([[refineAndReindex]]) is the maintenance
@@ -62,33 +61,24 @@ object StreamingSimilarity {
   def start(embs: DataFrame, idCol: String, vecCol: String, root: String,
             checkpoint: String, trigger: Trigger,
             nCells: Int = 16): StreamingQuery =
-    embs.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val s = batch.sparkSession // the cloned micro-batch session
-        // pre-batch generation: committed generations EXCLUDING a
-        // half-committed copy of THIS epoch (crash replay must see the
-        // same generation it saw the first time)
-        val gens = TransactionalLake.committedEpochs(s, centroidsRoot(root))
-          .filter(_ != epochId)
-        val (gen, cents) =
-          if (gens.isEmpty)
-            (epochId, Similarity.seedCentroids(batch, idCol, vecCol, nCells))
-          else
-            (gens.max, centroidGeneration(s, root, gens.max))
-        val assignments = Similarity.ivfAssignments(cents, batch, idCol, vecCol)
-          .withColumn("gen", lit(gen))
-        TransactionalLake.commitEpoch(batch.select(col(idCol), col(vecCol)),
-          corpusRoot(root), epochId, Nil)
+    EpochSink.start(embs, checkpoint, trigger) { ep =>
+      val batch = ep.batch
+      // pre-batch generation: every committed one but THIS epoch's (a
+      // replayed first epoch re-seeds the centroids it committed)
+      val gens = TransactionalLake.allEpochs(batch.sparkSession, centroidsRoot(root))
+        .filter(_ != ep.id)
+      val (gen, cents) =
         if (gens.isEmpty)
-          TransactionalLake.commitEpoch(cents, centroidsRoot(root), epochId, Nil)
-        // index LAST: the consumer-visible commit point; every artifact
-        // commit is individually idempotent
-        TransactionalLake.commitEpoch(assignments, indexRoot(root), epochId, Nil)
-        ()
-      }
-      .start()
+          (ep.id, Similarity.seedCentroids(batch, idCol, vecCol, nCells))
+        else
+          (gens.max, centroidGeneration(batch.sparkSession, root, gens.max))
+      val assignments = Similarity.ivfAssignments(cents, batch, idCol, vecCol)
+        .withColumn("gen", lit(gen))
+      ep.commit(corpusRoot(root), batch.select(col(idCol), col(vecCol)))
+      if (gens.isEmpty) ep.commit(centroidsRoot(root), cents)
+      // index LAST: the consumer-visible commit
+      ep.commit(indexRoot(root), assignments)
+    }
 
   /** One committed centroid generation (tiny: nCells rows). */
   def centroidGeneration(spark: SparkSession, root: String, gen: Long): DataFrame =

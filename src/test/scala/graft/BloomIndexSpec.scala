@@ -210,4 +210,17 @@ class BloomIndexSpec extends SparkSpec {
     assert(BloomIndex.prunedPointRead(spark, idx, "k", 1L)
       .filter(col("k") === 1L).count() === 1L)
   }
+
+  test("a replayed append finds the epoch committed and never runs the builder") {
+    val root = tmpDir("bl_replay")
+    val indexRoot = s"$root/bloomidx"
+    graft.sources.TransactionalLake.commitEpoch((1L to 100L).toDF("k")
+      .repartition(2, col("k")), root, 0L, partitionCols = Nil)
+    var builds = 0
+    def counting(path: String) = { builds += 1; bloom(path) }
+    FileIndexLake.append(spark, root, indexRoot, 0L)(counting)
+    FileIndexLake.append(spark, root, indexRoot, 0L)(counting)
+    assert(builds === 1, "a replayed epoch must not list or infer its files again")
+    assert(FileIndexLake.read(spark, indexRoot).count() === 2)
+  }
 }

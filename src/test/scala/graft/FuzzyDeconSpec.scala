@@ -87,4 +87,19 @@ class FuzzyDeconSpec extends SparkSpec {
       evalSet, "doc_id", "text", k = 3, threshold = 0.5).collect()
     assert(got.isEmpty)
   }
+
+  test("sink job budget: startDecontaminateFuzzy's micro-batch") {
+    val base = tmpDir("fuzzy_decon_budget")
+    train.coalesce(1).write.mode("append").json(s"$base/in")
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val jobs = jobsOfOneBatch(() => graft.streaming.StreamingDedup.startDecontaminateFuzzy(
+      spark.readStream.schema(StructType(Seq(
+        StructField("doc_id", LongType), StructField("text", StringType)))).json(s"$base/in"),
+      evalSet, "doc_id", "text", base, s"$base/ckpt",
+      org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+    info(s"jobs per micro-batch: $jobs")
+    assert(graft.streaming.StreamingDedup.fuzzyQuarantineLog(spark, base)
+      .select("train_id").as[Long].collect().toSeq == Seq(1L))
+    assert(jobs == 10) // parent: 10
+  }
 }

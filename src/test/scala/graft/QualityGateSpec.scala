@@ -62,4 +62,20 @@ class QualityGateSpec extends SparkSpec {
     assert(TransactionalLake.readCommitted(spark, s"$base/lake").count() === 2L)
     assert(TransactionalLake.readCommitted(spark, s"$base/quar").count() === 2L)
   }
+
+  test("sink job budget: one micro-batch, its batch persisted and read once") {
+    val base = tmpDir("qgate_budget")
+    Seq((1L, "ok"), (2L, "bad"), (3L, "ok"), (4L, "ok")).toDF("id", "s")
+      .coalesce(1).write.mode("append").json(s"$base/in")
+    val ds = collection.mutable.Buffer.empty[(Long, Long, Long, Boolean)]
+    val jobs = jobsOfOneBatch(() => QualityGate.start(
+      spark.readStream.schema(schema).json(s"$base/in"),
+      violation = col("s") === "bad", maxViolationFrac = 0.5,
+      s"$base/lake", s"$base/quar", s"$base/ckpt", Trigger.AvailableNow(),
+      onDecision = (e, n, v, q) => { ds += ((e, n, v, q)); () }))
+    info(s"jobs per micro-batch: $jobs")
+    assert(ds.toSeq == Seq((0L, 4L, 1L, false)))
+    assert(TransactionalLake.readCommitted(spark, s"$base/lake").count() == 4L)
+    assert(jobs == 4) // parent: 4
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test run, under the timed
@@ -65,5 +66,30 @@ abstract class SparkSpec extends AnyFunSuite {
     sc.setJobGroup(group, group)
     try body finally sc.clearJobGroup()
     JobsByGroup.of(group)
+  }
+
+  /** Spark jobs of one run of the query `start` makes, which must
+    * process exactly one micro-batch (its `runId` group holds every job
+    * it starts). A restart on an earlier run's checkpoint is retried
+    * past the same-JVM lock race. */
+  def jobsOfOneBatch(start: () => StreamingQuery): Int = {
+    var q: StreamingQuery = null
+    graft.streaming.StreamingIngest.awaitWithRestartRetry { () => q = start(); q }
+    val batches = q.recentProgress.map(_.batchId).distinct
+    assert(batches.length == 1, s"one micro-batch expected: ${batches.mkString(",")}")
+    JobsByGroup.of(q.runId.toString)
+  }
+
+  /** Stage a crash of a stream's micro-batch `epoch` after some of its
+    * lake commits: each lake in `uncommitted` loses the epoch (manifest
+    * entry and data dir), and the checkpoint loses the batch's commit, so
+    * a restart re-delivers the batch under the same epoch id. */
+  def crashAfterCommits(ckpt: String, epoch: Long, uncommitted: Seq[String]): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    uncommitted.foreach { lake =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$lake/_manifest/$epoch"), false)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$lake/data/epoch=$epoch"), true)
+    }
+    graft.streaming.StreamingIngest.dropCommit(spark, ckpt, epoch)
   }
 }

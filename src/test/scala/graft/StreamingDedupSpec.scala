@@ -16,6 +16,22 @@ class StreamingDedupSpec extends SparkSpec {
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
 
+  // planted near-dups SPANNING batches: (1,101) land in different
+  // micro-batches, (2,102) in the same one — both must surface
+  private val docsSeq = Seq(
+    (1L, "the quick brown fox jumps over the lazy dog again and again"),
+    (2L, "pack my box with five dozen liquor jugs for the long winter"),
+    (3L, "completely unrelated text about spark catalyst optimizer rules"),
+    (101L, "the quick brown fox jumps over the lazy dog again and again today"),
+    (102L, "pack my box with five dozen liquor jugs for the long winter dup"),
+    (103L, "another unrelated document mentioning parquet row groups only"))
+
+  private def appendFile(base: String, rows: Seq[(Long, String)]): Unit =
+    rows.toDF("doc_id", "text").coalesce(1).write.mode("append").json(s"$base/in")
+
+  private def docStream(base: String) =
+    spark.readStream.schema(docSchema).option("maxFilesPerTrigger", 1).json(s"$base/in")
+
   test("graph-metric maintenance: O(touched) deltas, crash-resume, state equals one-shot") {
     val base = tmpDir("gsm_spec")
     // K4 {1,2,3,4} + pendant, delivered as three pair epochs
@@ -56,23 +72,11 @@ class StreamingDedupSpec extends SparkSpec {
   test("streaming pair log equals one-shot pairs; index accumulates; replay is exactly-once") {
     val base = tmpDir("sdedup")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    // planted near-dups SPANNING batches: (1,101) land in different
-    // micro-batches, (2,102) in the same one — both must surface
-    val docsSeq = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog again and again"),
-      (2L, "pack my box with five dozen liquor jugs for the long winter"),
-      (3L, "completely unrelated text about spark catalyst optimizer rules"),
-      (101L, "the quick brown fox jumps over the lazy dog again and again today"),
-      (102L, "pack my box with five dozen liquor jugs for the long winter dup"),
-      (103L, "another unrelated document mentioning parquet row groups only"))
     val full = docsSeq.toDF("doc_id", "text")
     // three single-file batches: ids 1..3 | 101,102 | 103
-    Seq(docsSeq.take(3), docsSeq.slice(3, 5), docsSeq.drop(5)).foreach(b =>
-      b.toDF("doc_id", "text").coalesce(1).write.mode("append").json(s"$base/in"))
+    Seq(docsSeq.take(3), docsSeq.slice(3, 5), docsSeq.drop(5)).foreach(appendFile(base, _))
     def run(): Unit = StreamingIngest.awaitWithRestartRetry(() =>
-      StreamingDedup.start(
-        spark.readStream.schema(docSchema)
-          .option("maxFilesPerTrigger", 1).json(s"$base/in"),
+      StreamingDedup.start(docStream(base),
         "doc_id", "text", base, s"$base/ckpt", Trigger.AvailableNow(),
         k = 3, threshold = 0.5))
     run()
@@ -144,5 +148,82 @@ class StreamingDedupSpec extends SparkSpec {
     val pairs = graft.queries.Extensions.queries("dedup_streaming_index")(spark, sf0001)
     graft.queries.PipelineQueries.queries("pipe_streaming_dedup")(spark, sf0001).collect()
     assert(pairs.collect().nonEmpty)
+  }
+
+  test("sink job budget: StreamingDedup.start's first and later micro-batch") {
+    val base = tmpDir("sdedup_budget")
+    def batch(): Int = jobsOfOneBatch(() => StreamingDedup.start(docStream(base),
+      "doc_id", "text", base, s"$base/ckpt", Trigger.AvailableNow(), k = 3, threshold = 0.5))
+    appendFile(base, docsSeq.take(3))
+    val first = batch()
+    appendFile(base, docsSeq.drop(3))
+    val later = batch()
+    info(s"jobs per micro-batch: $first on the first epoch, $later on a later one")
+    assert(StreamingDedup.pairLog(spark, base).count() == 2)
+    assert(first == 7 && later == 7) // parent: 7, 7
+  }
+
+  test("sink job budget: startDecontaminate's micro-batch") {
+    val base = tmpDir("sdecon_budget")
+    appendFile(base, docsSeq)
+    val evalSet = Seq((900L, "pack my box with five dozen liquor jugs for the long winter"))
+      .toDF("doc_id", "text")
+    val jobs = jobsOfOneBatch(() => StreamingDedup.startDecontaminate(docStream(base),
+      evalSet, "doc_id", "text", base, s"$base/ckpt", Trigger.AvailableNow()))
+    info(s"jobs per micro-batch: $jobs")
+    assert(StreamingDedup.quarantineLog(spark, base).select("train_id").as[Long]
+      .collect().sorted.toSeq == Seq(2L, 102L))
+    assert(jobs == 4) // parent: 4
+  }
+
+  test("a crash after the corpus commit, or after corpus + index, replays exactly-once") {
+    val full = docsSeq.toDF("doc_id", "text")
+    val oneShot = Dedup.ngramJaccardPairs(full, "doc_id", "text", k = 3,
+      threshold = 0.5).select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val idxOneShot = Dedup.minhashBandIndex(full, "doc_id", "text")
+      .as[(Long, Int, Int, Int, Int)].collect().toSeq
+    Seq("corpus" -> Seq("index", "pairs"), "corpus + index" -> Seq("pairs")).foreach {
+      case (committed, lost) =>
+        val base = tmpDir("sdedup_crash")
+        def run(): Unit = StreamingIngest.awaitWithRestartRetry(() =>
+          StreamingDedup.start(docStream(base), "doc_id", "text", base, s"$base/ckpt",
+            Trigger.AvailableNow(), k = 3, threshold = 0.5))
+        appendFile(base, docsSeq.take(3))
+        appendFile(base, docsSeq.slice(3, 5))
+        run()
+        // epoch 1 holds a same-batch and a cross-batch pair
+        crashAfterCommits(s"$base/ckpt", 1L, lost.map(a => s"$base/$a"))
+        assert(TransactionalLake.isCommitted(spark, StreamingDedup.corpusRoot(base), 1L))
+        assert(!TransactionalLake.isCommitted(spark, StreamingDedup.pairsRoot(base), 1L))
+        appendFile(base, docsSeq.drop(5))
+        run()
+        val log = StreamingDedup.pairLog(spark, base).select("id_a", "id_b")
+          .as[(Long, Long)].collect().toSeq
+        assert(log.toSet == oneShot, s"after $committed: pair log $log")
+        assert(log.size == log.distinct.size, s"after $committed: a pair counted twice")
+        val ids = TransactionalLake.readCommitted(spark, StreamingDedup.corpusRoot(base))
+          .select("doc_id").as[Long].collect().toSeq
+        assert(ids.sorted == docsSeq.map(_._1).sorted, s"after $committed: corpus $ids")
+        val idx = TransactionalLake.readCommitted(spark, StreamingDedup.indexRoot(base))
+          .drop("epoch").as[(Long, Int, Int, Int, Int)].collect().toSeq
+        assert(idx.sorted == idxOneShot.sorted, s"after $committed: band index")
+    }
+  }
+
+  test("EpochSink.prior reads live and folded epochs, never the batch's own") {
+    val root = tmpDir("epoch_prior")
+    (0L to 2L).foreach(e =>
+      TransactionalLake.commitEpoch(Seq(e).toDF("v"), root, e, partitionCols = Nil))
+    assert(TransactionalLake.foldCommittedEpochs(spark, root, upTo = 0L,
+      partitionCols = Nil) == 1)
+    val batch = Seq(9L).toDF("v")
+    def prior(id: Long) = new graft.streaming.EpochSink.Epoch(batch, id).prior(root)
+      .map(_.as[Long].collect().toSeq.sorted)
+    assert(prior(2L) == Some(Seq(0L, 1L)), "a replay must not read its own epoch")
+    assert(prior(3L) == Some(Seq(0L, 1L, 2L)))
+    val lone = tmpDir("epoch_prior_lone")
+    TransactionalLake.commitEpoch(Seq(5L).toDF("v"), lone, 5L, partitionCols = Nil)
+    assert(new graft.streaming.EpochSink.Epoch(batch, 5L).prior(lone).isEmpty)
+    assert(new graft.streaming.EpochSink.Epoch(batch, 6L).prior(s"$lone/absent").isEmpty)
   }
 }

@@ -31,6 +31,15 @@ class StreamingSimilaritySpec extends SparkSpec {
       TransactionalLake.commitEpoch(assignments, StreamingSimilarity.indexRoot(root), i.toLong, Nil)
     }
 
+  private def appendBatch(base: String, i: Int): Unit =
+    embs.filter(col("vec_id") % 3 === i).coalesce(1).write.mode("append").parquet(s"$base/in")
+
+  private def startStream(base: String) =
+    StreamingSimilarity.start(
+      spark.readStream.schema(embs.schema).option("maxFilesPerTrigger", 1).parquet(s"$base/in"),
+      "vec_id", "embedding", base, s"$base/ckpt",
+      org.apache.spark.sql.streaming.Trigger.AvailableNow())
+
   test("refineAndReindex flips to a new generation whose search equals the one-shot build") {
     val root = tmpDir("ssim_refine")
     ingest3(root)
@@ -129,5 +138,51 @@ class StreamingSimilaritySpec extends SparkSpec {
     val after = StreamingSimilarity.searchCommitted(spark, root,
       embs.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5).collect().toSet
     assert(after == before, "replayed commits must not change search results")
+  }
+
+  test("sink job budget: StreamingSimilarity.start's first and later micro-batch") {
+    val base = tmpDir("ssim_budget")
+    appendBatch(base, 0)
+    val first = jobsOfOneBatch(() => startStream(base))
+    appendBatch(base, 1)
+    val later = jobsOfOneBatch(() => startStream(base))
+    info(s"jobs per micro-batch: $first on the first epoch, $later on a later one")
+    assert(StreamingSimilarity.currentGeneration(spark, base) == 0L)
+    assert(first == 9 && later == 3) // parent: 9, 3
+  }
+
+  test("crashes between the stream's commits replay exactly-once") {
+    val probes = embs.filter(col("vec_id") < 10)
+    // (crashed epoch, lakes that lost it): the first epoch after the
+    // corpus commit and after corpus + centroids; a later epoch (no
+    // centroid commit) after the corpus commit
+    Seq((0L, Seq("centroids", "index")), (0L, Seq("index")), (1L, Seq("index"))).foreach {
+      case (epoch, lost) =>
+        val base = tmpDir("ssim_crash")
+        def run(i: Int): Unit = {
+          appendBatch(base, i)
+          graft.streaming.StreamingIngest.awaitWithRestartRetry(() => startStream(base))
+        }
+        (0 to epoch.toInt).foreach(run)
+        crashAfterCommits(s"$base/ckpt", epoch, lost.map(a => s"$base/$a"))
+        assert(TransactionalLake.isCommitted(spark, StreamingSimilarity.corpusRoot(base), epoch))
+        (epoch.toInt + 1 until 3).foreach(run)
+        val at = s"epoch $epoch without ${lost.mkString(" + ")}"
+        assert(TransactionalLake.allEpochs(spark, StreamingSimilarity.centroidsRoot(base)) ==
+          Seq(0L), at)
+        val cents = StreamingSimilarity.centroidGeneration(spark, base, 0L)
+        assert(cents.count() == 16, at)
+        def ids(df: org.apache.spark.sql.DataFrame, c: String) =
+          df.select(c).collect().map(_.getLong(0)).toSeq.sorted
+        val corpus = ids(TransactionalLake.readCommitted(spark,
+          StreamingSimilarity.corpusRoot(base)), "vec_id")
+        assert(corpus == ids(embs, "vec_id"), at)
+        assert(ids(TransactionalLake.readCommitted(spark,
+          StreamingSimilarity.indexRoot(base)), "id") == corpus, at)
+        val served = StreamingSimilarity.searchCommitted(
+          spark, base, probes, "vec_id", "embedding", k = 5)
+        val oneShot = Similarity.ivfTopKWith(cents, embs, probes, "vec_id", "embedding", k = 5)
+        assert(served.exceptAll(oneShot).isEmpty && oneShot.exceptAll(served).isEmpty, at)
+    }
   }
 }

@@ -75,20 +75,26 @@ class SubstringIndexSpec extends SparkSpec {
     assert(served(root) === before)
   }
 
-  test("streamed index (with forced crash replay) == one-shot") {
+  private def appendFile(base: String, i: Int): Unit =
+    corpus.filter(col("doc_id") % 3 === i).coalesce(1).write.mode("append").json(s"$base/in")
+
+  private def startStream(base: String) = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    graft.streaming.StreamingDedup.startSubstringIndex(
+      spark.readStream.schema(StructType(Seq(
+        StructField("doc_id", LongType), StructField("text", StringType))))
+        .option("maxFilesPerTrigger", 1).json(s"$base/in"),
+      "doc_id", "text", s"$base/idx", s"$base/ckpt",
+      org.apache.spark.sql.streaming.Trigger.AvailableNow())
+  }
+
+  test("streamed index (with forced crash replay) == one-shot") {
     val base = tmpDir("ssub_stream_")
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    (0 until 3).foreach(i => corpus.filter(col("doc_id") % 3 === i)
-      .coalesce(1).write.mode("append").json(s"$base/in"))
+    (0 until 3).foreach(appendFile(base, _))
     def run(): Unit = graft.streaming.StreamingIngest.awaitWithRestartRetry(() =>
-      graft.streaming.StreamingDedup.startSubstringIndex(
-        spark.readStream.schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-          .option("maxFilesPerTrigger", 1).json(s"$base/in"),
-        "doc_id", "text", s"$base/idx", s"$base/ckpt",
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+      startStream(base))
     run()
     // crash: drop the final stream commit; the replayed epoch must be
     // absorbed by the idempotent grams/best commits
@@ -159,5 +165,42 @@ class SubstringIndexSpec extends SparkSpec {
         maxAnchorPairs = 10L)
     }
     assert(e.getMessage != null && e.getMessage.contains("maxAnchorPairs"))
+  }
+
+  test("sink job budget: startSubstringIndex's first and later micro-batch") {
+    val base = tmpDir("ssub_budget_")
+    appendFile(base, 0)
+    val first = jobsOfOneBatch(() => startStream(base))
+    appendFile(base, 1)
+    val later = jobsOfOneBatch(() => startStream(base))
+    info(s"jobs per micro-batch: $first on the first epoch, $later on a later one")
+    assert(first == 6 && later == 6) // parent: 6, 6
+  }
+
+  test("a streamed epoch crashed after the gram commit, or after grams + df, recovers") {
+    Seq("grams" -> Seq("df", "best"), "grams + df" -> Seq("best")).foreach {
+      case (committed, lost) =>
+        val base = tmpDir("ssub_crash_")
+        def run(): Unit = graft.streaming.StreamingIngest.awaitWithRestartRetry(() =>
+          startStream(base))
+        (0 until 2).foreach(appendFile(base, _))
+        run()
+        crashAfterCommits(s"$base/ckpt", 1L, lost.map(l => s"$base/idx/$l"))
+        val T = graft.sources.TransactionalLake
+        assert(T.isCommitted(spark, s"$base/idx/grams", 1L))
+        assert(!T.isCommitted(spark, s"$base/idx/best", 1L))
+        appendFile(base, 2)
+        run()
+        assert(served(s"$base/idx") === oneShot, s"after $committed")
+        // no epoch counted twice: the additive df lake equals a recount
+        // of the postings, and no posting is duplicated
+        val grams = T.readCommitted(spark, s"$base/idx/grams").drop("epoch")
+        assert(grams.count() === grams.distinct().count(), s"after $committed")
+        val dfLake = T.readCommitted(spark, s"$base/idx/df").groupBy("gkey")
+          .agg(sum(col("cnt")).as("n")).as[(Long, Long)].collect().toMap
+        val recount = grams.groupBy("gkey").agg(count(lit(1)).as("n"))
+          .as[(Long, Long)].collect().toMap
+        assert(recount.nonEmpty && dfLake === recount, s"after $committed")
+    }
   }
 }

@@ -285,4 +285,15 @@ class TransactionalSpec extends SparkSpec {
       .select("event_id", "payload").orderBy("event_id").collect().toSeq == before)
     assert(TransactionalLake.foldState(spark, lake).map(_._2) == Some(Seq(0L, 1L)))
   }
+
+  test("allEpochs lists live and folded epochs once, ascending") {
+    val root = tmpDir("tx_all_epochs")
+    Seq(2L, 0L, 1L).foreach(e =>
+      TransactionalLake.commitEpoch(Seq(e).toDF("v"), root, e, partitionCols = Nil))
+    assert(TransactionalLake.allEpochs(spark, root) == Seq(0L, 1L, 2L))
+    assert(TransactionalLake.foldCommittedEpochs(spark, root, upTo = 1L,
+      partitionCols = Nil) == 2)
+    assert(TransactionalLake.allEpochs(spark, root) == Seq(0L, 1L, 2L))
+    assert(TransactionalLake.allEpochs(spark, s"$root/absent").isEmpty)
+  }
 }
