@@ -29,9 +29,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * replay rule keeps each artifact epoch-committed once and each
   * pre-batch read free of the batch's own epoch, so the pair log never
   * duplicates. The union of the committed pair-log epochs equals the
-  * ONE-SHOT near-dup pairs of the full corpus (every pair has a later-arriving
-  * side; set equality is batching-independent) — which is exactly what
-  * the driver gate's plain-SQL oracle checks.
+  * ONE-SHOT near-dup pairs of the full corpus (every pair has a
+  * later-arriving side; set equality is batching-independent) — which
+  * is exactly what the driver gate's plain-SQL oracle checks.
   */
 object StreamingDedup {
 
@@ -188,8 +188,9 @@ object StreamingDedup {
     * pairs under the batch epoch. Each train doc arrives in exactly one
     * batch and candidates always pair a batch doc with an eval doc, so
     * the accumulated log equals the one-shot fuzzy pass over everything
-    * ingested — exactly-once across crash replays via [[EpochSink]]. Per-batch cost: one batch-scale signature pass plus
-    * the suite-scale (broadcast) eval side — never a corpus re-scan. */
+    * ingested — exactly-once across crash replays via [[EpochSink]].
+    * Per-batch cost: one batch-scale signature pass plus the suite-scale
+    * (broadcast) eval side — never a corpus re-scan. */
   def startDecontaminateFuzzy(docs: DataFrame, evalSet: DataFrame,
                               idCol: String, textCol: String, root: String,
                               checkpoint: String, trigger: Trigger,

@@ -25,8 +25,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    dynamic partitioning (kinesis-stack.ts:137-161)
   *  - corrupt/invalid records land under error/<error-type>/ per
   *    micro-batch (S6) — both outputs from ONE pass per batch of the
-  *    one epoch sink ([[EpochSink]]), through the one sink body ([[writeBatch]]) that the exactly-once
-  *    stream and `Engine.ingestBatch` run too.
+  *    one epoch sink ([[EpochSink]]), through the one sink body
+  *    ([[writeBatch]]) that the exactly-once stream and
+  *    `Engine.ingestBatch` run too.
   *
   * The Flink job is stateless, so micro-batch semantics are a strict
   * superset; no watermark is needed for parity (ingest-time, not
@@ -111,7 +112,6 @@ object StreamingIngest {
       writeBatch(spark, ep.batch, rawCol, col(tenantCol), ingestTs, lakeRoot, table) { valid =>
         Lake.writeValid(valid, lakeRoot); true
       }
-      ()
     }
 
   /** EXACTLY-ONCE variant of [[start]]: the same [[writeBatch]] body, but
